@@ -92,11 +92,9 @@ object Ksql {
     repl(spark)
   }
 
-  /** One-shot snapshot refresh (ksql.js:280 parity): re-fetch, log what
-    * changed per table via SnapshotDiff, re-register the temp views
-    * (createOrReplaceTempView — downstream queries see the new data, no
-    * re-wiring). Returns the timer so callers/tests can cancel it; the
-    * task runs exactly once.
+  /** One-shot snapshot refresh (ksql.js:280 parity) on a timer thread:
+    * see `refreshOnce`. Returns the timer so callers/tests can cancel it;
+    * the task runs exactly once.
     */
   def scheduleRefresh(spark: SparkSession, source: Source,
       delayMs: Long): java.util.Timer = {
@@ -109,13 +107,20 @@ object Ksql {
     timer
   }
 
+  /** Re-fetch the snapshot, swap in the new generation and log what
+    * changed per table via SnapshotDiff. `K8sSnapshot.load` replaces all
+    * four views at once (createOrReplaceTempView under its write lock —
+    * downstream queries see the new data, no re-wiring), so it can land
+    * in the middle of REPL or `/api` queries: each answers wholly from
+    * the generation its analysis saw, old or new, never a mix.
+    */
   def refreshOnce(spark: SparkSession, source: Source): Unit = {
-    val before = Seq("pods", "nodes", "services")
-      .map(t => t -> spark.table(t).select("uid", "_raw").cache()).toMap
+    val before = K8sSnapshot.reading(Seq("pods", "nodes", "services")
+      .map(t => t -> spark.table(t).select("uid", "_raw").cache()).toMap)
     before.values.foreach(_.count()) // pin pre-refresh content
-    K8sSnapshot.load(spark, source.refetch()) // re-registers each view once
+    val after = K8sSnapshot.load(spark, source.refetch())
     before.foreach { case (name, old) =>
-      val counts = graft.sources.SnapshotDiff.summary(old, spark.table(name))
+      val counts = graft.sources.SnapshotDiff.summary(old, after(name))
         .collect().map(r => s"${r.getString(0)}=${r.getLong(1)}")
       println(s"refreshed $name: ${counts.mkString(" ")}")
       old.unpersist()
@@ -153,7 +158,27 @@ object Ksql {
 
   def handleLine(spark: SparkSession, line: String): Unit =
     if (line != null && line.trim.nonEmpty) {
-      try println(Render.toAscii(Render.process(KsqlDialect.sql(spark, line))))
+      try println(answer(spark, line)(Render.toAscii))
       catch { case e: Exception => println(e) }
     }
+
+  private val requests = new java.util.concurrent.atomic.AtomicLong
+
+  /** One request, REPL line or `GET /api`: analyse `query` against one
+    * snapshot generation (the read lock is held for analysis only, so a
+    * refresh never waits for an execution), then collect and `render`
+    * outside the lock. The request runs in its own Spark job group
+    * `ksql-<n>` with `interruptOnCancel`, so `cancelJobGroup` stops it
+    * as a unit; the group is cleared on exit, as pool threads are reused.
+    */
+  def answer(spark: SparkSession, query: String)(
+      render: Render.Result => String): String = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(s"ksql-${requests.incrementAndGet()}", query,
+      interruptOnCancel = true)
+    try {
+      val df = K8sSnapshot.reading(KsqlDialect.sql(spark, query))
+      render(Render.process(df))
+    } finally sc.clearJobGroup()
+  }
 }

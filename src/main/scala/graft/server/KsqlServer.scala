@@ -3,8 +3,9 @@ package graft.server
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import java.net.{InetSocketAddress, URLDecoder}
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.{Executors, ThreadFactory, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.SparkSession
-import graft.dialect.KsqlDialect
 import graft.sinks.Render
 
 /** HTTP API + static web terminal (SURVEY §3.2), reproducing the
@@ -19,14 +20,42 @@ import graft.sinks.Render
   *   - default port 8090 (ksql.js:358)
   *
   * Zero dependencies: com.sun.net.httpserver ships with the JDK.
+  *
+  * Documented divergence, identical answers: the reference serves one
+  * request at a time on Node's event loop; here requests run concurrently
+  * on a fixed pool of one thread per core of the session (`Par.width`).
+  * A request's time is mostly driver-side latency (job scheduling,
+  * collect), not core time, so requests overlap well. Each one analyses
+  * its query under `K8sSnapshot.reading` (see `Ksql.answer`), so it
+  * answers from one snapshot generation, as a serial server would
+  * between two refreshes.
   */
 class KsqlServer(spark: SparkSession, port: Int = 8090) {
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
+  private val pool = {
+    val name = s"ksql-http-${server.getAddress.getPort}-"
+    val n = new AtomicInteger
+    Executors.newFixedThreadPool(math.max(1, graft.Par.width(spark)),
+      new ThreadFactory {
+        def newThread(r: Runnable): Thread = {
+          val t = new Thread(r, name + n.incrementAndGet())
+          t.setDaemon(true)
+          t
+        }
+      })
+  }
   server.createContext("/", new Handler)
-  server.setExecutor(null) // serial, like the reference's event loop
+  server.setExecutor(pool)
 
   def start(): Int = { server.start(); server.getAddress.getPort }
-  def stop(): Unit = server.stop(0)
+
+  /** Stops listening, interrupts requests in flight and returns once
+    * every pool thread has exited. */
+  def stop(): Unit = {
+    server.stop(0)
+    pool.shutdownNow()
+    pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+  }
 
   private def respond(ex: HttpExchange, code: Int, body: Array[Byte],
       contentType: String): Unit = {
@@ -70,7 +99,7 @@ class KsqlServer(spark: SparkSession, port: Int = 8090) {
         case None => respond(ex, 400, "query parameter is required")
         case Some(q) =>
           try {
-            val json = Render.toJson(Render.process(KsqlDialect.sql(spark, q)))
+            val json = Ksql.answer(spark, q)(Render.toJson)
             respond(ex, 200, json, "application/json")
           } catch {
             case e: Exception => respond(ex, 500, "error: " + e.getMessage)

@@ -1,5 +1,6 @@
 package graft.sources
 
+import java.util.concurrent.locks.ReentrantReadWriteLock
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -81,9 +82,29 @@ object K8sSnapshot {
         col("uid"),
         col("col.s.restartCount").as("restarts"))
 
+  /** The four views as one snapshot generation: `load` writes, `reading`
+    * reads. Fair, so a pending refresh is not starved by a stream of
+    * readers.
+    */
+  private val generation = new ReentrantReadWriteLock(true)
+
+  /** Run `body` (the analysis of a query over the views) against one
+    * snapshot generation: no `load` can swap the views meanwhile.
+    * Analysis binds a query to the views it names, so the query then
+    * reads that generation only, however long it executes. Keep
+    * execution out of `body`, or a refresh waits for it.
+    */
+  def reading[T](body: => T): T = {
+    val lock = generation.readLock()
+    lock.lock()
+    try body finally lock.unlock()
+  }
+
   /** Load all four tables and register temp views — the equivalent of
     * create_tables + load + .data assignment (ksql.js:249-265). Returns
-    * the table map for direct DataFrame use.
+    * the table map for direct DataFrame use. The four views are replaced
+    * together under the generation write lock, so a query analysed under
+    * `reading` never sees some of them swapped and others not.
     *
     * Default path goes through the DataSource V2 connector
     * (graft.sources.v2.K8sSnapshotSource) so column pruning reaches the
@@ -106,7 +127,10 @@ object K8sSnapshot {
       "nodes" -> read("nodes"),
       "services" -> read("services"),
       "containers" -> containers(p))
-    all.foreach { case (n, df) => df.createOrReplaceTempView(n) }
+    val lock = generation.writeLock()
+    lock.lock()
+    try all.foreach { case (n, df) => df.createOrReplaceTempView(n) }
+    finally lock.unlock()
     all
   }
 }

@@ -1,7 +1,10 @@
 package graft
 
-import java.net.{HttpURLConnection, URI}
+import java.net.{HttpURLConnection, URI, URLEncoder}
+import java.util.concurrent.{ConcurrentLinkedQueue, Executors, TimeUnit}
 import scala.io.Source
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.server.KsqlServer
 import graft.sources.K8sSnapshot
 
@@ -147,6 +150,75 @@ class HttpServerSpec extends SparkSpec {
       java.net.URLEncoder.encode(
         "SELECT * FROM graft_op('no_such_op', '/tmp')", "UTF-8"))
     assert(code2 == 500 && body2.contains("graft_ops()"), body2)
+  }
+
+  private def poolThreads(port: Int): Set[Thread] =
+    Thread.getAllStackTraces.keySet.asScala.toSet
+      .filter(_.getName.startsWith(s"ksql-http-$port-"))
+
+  test("concurrent /api requests answer byte-identically to serial ones; " +
+      "stop() ends the pool") {
+    // the four README queries, plus an operator whose plan build runs
+    // Spark jobs while the query is analysed (sf0.001, as the operator
+    // specs read it)
+    val sf = java.nio.file.Paths.get(sys.props("user.home"), "testdata",
+      "sf0.001")
+    val queries = Seq(
+      "select count(*) from containers where containers.image like 'mysql%'",
+      "select count(*),image from containers where containers.image like " +
+        "'mysql%' group by image",
+      "select pods.metadata->name,pods.metadata->annotations->email,image " +
+        "from pods join containers using uid where image like 'mysql:5.5%'",
+      "select pods.metadata->name,image from pods left join containers " +
+        "using uid where image like 'mysql%' and not " +
+        "pods.metadata->annotations->email",
+      "SELECT doc_id, n_copies " +
+        s"FROM graft_op('dd02_dedup_exact_hash', '$sf') " +
+        "WHERE n_copies >= 2 ORDER BY doc_id LIMIT 5")
+    K8sSnapshot.load(spark, fixtureDir)
+    val srv = new KsqlServer(spark, 0)
+    val p = srv.start()
+    def api(q: String) =
+      get(s"http://localhost:$p/api?query=" + URLEncoder.encode(q, "UTF-8"))
+    try {
+      val serial = queries.map(q => q -> api(q)).toMap
+      serial.values.foreach { case (code, body) => assert(code == 200, body) }
+      val clients = Executors.newFixedThreadPool(16)
+      try {
+        val replies = Seq.tabulate(16)(i => queries(i % queries.size))
+          .map(q => clients.submit(() => q -> api(q)))
+          .map(_.get(5, TimeUnit.MINUTES))
+        replies.foreach { case (q, got) => assert(got == serial(q), q) }
+      } finally clients.shutdown()
+      assert(poolThreads(p).size == Par.width(spark)) // one per core
+    } finally srv.stop()
+    assert(poolThreads(p).isEmpty)
+  }
+
+  test("each /api request runs in its own cancellable job group") {
+    val groups = new ConcurrentLinkedQueue[(String, String)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          groups.add(p.getProperty("spark.jobGroup.id") ->
+            p.getProperty("spark.job.interruptOnCancel"))
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val q = "/api?query=" + URLEncoder.encode(
+        "select node, count(*) from pods group by node", "UTF-8")
+      assert(get(s"http://localhost:$port$q")._1 == 200)
+      assert(get(s"http://localhost:$port$q")._1 == 200)
+      // the listener bus is asynchronous: wait for both requests' jobs
+      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(30)
+      def ids = groups.asScala.map(_._1).filter(g =>
+        g != null && g.matches("ksql-\\d+")).toSet
+      while (ids.size < 2 && System.nanoTime() < deadline) Thread.sleep(50)
+      val requests = ids
+      assert(requests.size >= 2, groups)
+      assert(groups.asScala.filter(g => requests(g._1)).forall(_._2 == "true"))
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("static index.html served with content-type") {

@@ -1,10 +1,13 @@
 package graft
 
 import java.io.{BufferedReader, ByteArrayOutputStream, PrintStream, StringReader}
-import java.net.InetSocketAddress
+import java.net.{HttpURLConnection, InetSocketAddress, URI, URLEncoder}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
 import com.sun.net.httpserver.HttpServer
-import graft.server.Ksql
+import graft.server.{Ksql, KsqlServer}
+import graft.sinks.Render
 import graft.sources.K8sSnapshot
 
 /** Reference connect()-order parity (S3, `ksql.js:58-94`): with no
@@ -66,10 +69,8 @@ class KsqlConnectSpec extends SparkSpec {
     } finally srv.stop(0)
   }
 
-  test("one-shot refresh re-registers views with the new snapshot") {
-    // first load from the fixture dir; the refetch points at a MUTATED
-    // copy (one pod dropped) — after refreshOnce the registered view
-    // must serve the new content
+  /** A copy of the fixture snapshot with the first pod dropped. */
+  private def droppedPodCopy(): java.nio.file.Path = {
     val mutated = Files.createTempDirectory("snapshot-v2")
     Seq("pods", "nodes", "services").foreach { k =>
       Files.copy(Paths.get(fixtureDir, s"$k.json"),
@@ -77,7 +78,14 @@ class KsqlConnectSpec extends SparkSpec {
     }
     val pods = ujsonFree(Files.readString(mutated.resolve("pods.json")))
     Files.writeString(mutated.resolve("pods.json"), pods)
+    mutated
+  }
 
+  test("one-shot refresh re-registers views with the new snapshot") {
+    // first load from the fixture dir; the refetch points at a MUTATED
+    // copy (one pod dropped) — after refreshOnce the registered view
+    // must serve the new content
+    val mutated = droppedPodCopy()
     K8sSnapshot.load(spark, fixtureDir)
     val before = spark.table("pods").count()
     assert(before == 4)
@@ -88,6 +96,56 @@ class KsqlConnectSpec extends SparkSpec {
     Ksql.refreshOnce(spark,
       Ksql.Source(mutated.toString, () => fixtureDir))
     assert(spark.table("pods").count() == 4)
+  }
+
+  test("refreshes landing mid-query never answer from two generations") {
+    val dirs = Seq(fixtureDir, droppedPodCopy().toString)
+    // README query 4 joins pods and containers. The dropped pod is not in
+    // its answer, and with a one-pod drop a cross-generation join equals
+    // one generation's answer, so the second query, which reads both
+    // views, is the one that tells every mix apart
+    val queries = Seq(
+      "select pods.metadata->name,image from pods left join containers " +
+        "using uid where image like 'mysql%' and not " +
+        "pods.metadata->annotations->email",
+      "select (select count(*) from pods) as pods, " +
+        "(select count(*) from containers) as containers")
+    val answers = dirs.map { d =>
+      K8sSnapshot.load(spark, d)
+      queries.map(q => q -> Ksql.answer(spark, q)(Render.toJson)).toMap
+    }
+    K8sSnapshot.load(spark, dirs(0))
+    assert(answers(0)(queries(1)) != answers(1)(queries(1)))
+
+    val srv = new KsqlServer(spark, 0)
+    val port = srv.start()
+    val refreshing = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      (String, Int, String)]
+    def client(): Unit = while (refreshing.get) queries.foreach { q =>
+      val conn = URI.create(s"http://localhost:$port/api?query=" +
+        URLEncoder.encode(q, "UTF-8")).toURL.openConnection()
+        .asInstanceOf[HttpURLConnection]
+      val code = conn.getResponseCode
+      val in = if (code >= 400) conn.getErrorStream else conn.getInputStream
+      seen.add((q, code, new String(in.readAllBytes(), UTF_8)))
+    }
+    val clients = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val running = Seq.fill(4)(clients.submit[Unit](() => client()))
+      try (1 to 20).foreach { i => // alternate generations, ending on 0
+        Ksql.refreshOnce(spark, Ksql.Source(dirs(1 - i % 2),
+          () => dirs(i % 2)))
+      } finally refreshing.set(false)
+      running.foreach(_.get())
+    } finally { clients.shutdown(); srv.stop() }
+    val replies = seen.asScala.toSeq
+    val wrong = replies.filterNot { case (q, code, body) =>
+      code == 200 && answers.exists(_(q) == body)
+    }
+    assert(wrong.isEmpty, s"${wrong.size} of ${replies.size}: ${wrong.take(3)}")
+    // the queries did run across refreshes: both generations answered
+    assert(answers.forall(a => replies.exists(_._3 == a(queries(1)))))
   }
 
   /** Drop the first item from a K8s list JSON without a JSON library:

@@ -3,21 +3,31 @@
 
 Host contention swings absolute bench numbers 2-3x between sessions, so a
 "regression" vs a prior round's BENCH_r{N}.json means nothing without a
-back-to-back A/B of both commits in ONE session. This tool does exactly
-that: build each commit in its own git worktree, run the SAME query list
-through graft.Bench (SPARK_GRAFT_BENCH_ONLY) alternating A,B per round,
-and print a per-query table of medians.
+back-to-back A/B of both sides in ONE session. This tool does exactly
+that: check each side out into its own directory, run the same work on
+both, alternating A,B per round, and print a table of medians.
+(--workload rounds also alternate which side runs first.)
 
 Usage:
-  python3 tools/ab.py <commitA> <commitB> <q1,q2,...> \
+  python3 tools/ab.py <A> <B> <q1,q2,...> \
       [--sf /root/testdata/sf0.1] [--cpus 32] [--rounds 3]
+  python3 tools/ab.py <A> <B> --workload k8s_large \
+      [--seeds 1,2,3] [--seconds 10]
 
-Commits can be any git refs (HEAD, HEAD~1, a sha, a branch). Worktrees
-live under /tmp/graft_ab_<shortsha> and are reused across invocations
-(delete them to force a fresh checkout; `git worktree prune` afterwards).
+The first form runs the query list through graft.Bench
+(SPARK_GRAFT_BENCH_ONLY) and compares per-query seconds. The second runs
+`perfbench/run.py --workload <name> --seed <s> --trace 0` once per seed
+on each side and compares the medians of the end-to-end metrics.
+
+A side is a git ref (HEAD, HEAD~1, a sha, a branch), checked out in a
+git worktree under /tmp/graft_ab_<shortsha> that is reused across
+invocations (delete it to force a fresh checkout; `git worktree prune`
+afterwards), or a directory holding a checkout, used in place (e.g. `.`
+for the uncommitted working tree).
 """
 import argparse
 import json
+import os
 import re
 import statistics
 import subprocess
@@ -34,23 +44,26 @@ def sh(cmd, cwd=None, env=None, capture=False):
         stderr=subprocess.STDOUT if capture else None, text=True)
 
 
-def worktree_for(ref):
-    sha = sh(["git", "rev-parse", "--short", ref], cwd=REPO,
+def checkout(side):
+    """(label, directory) of one side: a directory as is, else a
+    worktree of the git ref."""
+    if Path(side).is_dir():
+        d = Path(side).resolve()
+        return d.name, d
+    sha = sh(["git", "rev-parse", "--short", side], cwd=REPO,
              capture=True).stdout.strip()
     wt = Path(f"/tmp/graft_ab_{sha}")
     if not wt.exists():
         sh(["git", "worktree", "add", "--detach", str(wt), sha], cwd=REPO)
-    print(f"[ab] compiling {ref} ({sha}) in {wt} ...", flush=True)
-    sh(["sbt", "-batch", "compile"], cwd=wt, capture=True)
     return sha, wt
 
 
 def run_bench(wt, queries, sf, cpus):
-    import os
     env = dict(os.environ,
-               SPARK_GRAFT_SF_DIR=sf,
                SPARK_GRAFT_CPUS=cpus,
                SPARK_GRAFT_BENCH_ONLY=",".join(queries))
+    if sf:
+        env["SPARK_GRAFT_SF_DIR"] = sf
     out = sh(["sbt", "-batch", "runMain graft.Bench"], cwd=wt, env=env,
              capture=True).stdout
     for line in out.splitlines():
@@ -62,19 +75,25 @@ def run_bench(wt, queries, sf, cpus):
     sys.exit(f"[ab] no bench JSON line in output from {wt}:\n{out[-3000:]}")
 
 
-def main():
-    ap = argparse.ArgumentParser()
-    ap.add_argument("commit_a")
-    ap.add_argument("commit_b")
-    ap.add_argument("queries", help="comma-separated SparkEntry query names")
-    ap.add_argument("--sf", default="/root/testdata/sf0.1")
-    ap.add_argument("--cpus", default="32")
-    ap.add_argument("--rounds", type=int, default=3)
-    args = ap.parse_args()
-    queries = args.queries.split(",")
+def run_workload(wt, workload, seed, seconds):
+    """The last stdout line of one perfbench run: {correct, attempted,
+    failed, metrics: {name: {value, unit}}}."""
+    r = subprocess.run(
+        [sys.executable, "perfbench/run.py", "--workload", workload,
+         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+        cwd=wt, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
+    lines = r.stdout.strip().splitlines()
+    if r.returncode != 0 or not lines:
+        sys.exit(f"[ab] perfbench failed in {wt}:\n{r.stderr[-3000:]}")
+    return json.loads(lines[-1])
 
-    sha_a, wt_a = worktree_for(args.commit_a)
-    sha_b, wt_b = worktree_for(args.commit_b)
+
+def queries_ab(args, a, b):
+    queries = args.queries.split(",")
+    (sha_a, wt_a), (sha_b, wt_b) = a, b
+    for sha, wt in (a, b):
+        print(f"[ab] compiling {sha} in {wt} ...", flush=True)
+        sh(["sbt", "-batch", "compile"], cwd=wt, capture=True)
 
     runs_a, runs_b = [], []
     for r in range(args.rounds):
@@ -100,6 +119,74 @@ def main():
           f"{(tot_b / tot_a if tot_a else float('nan')):5.2f}")
     print(f"[ab] medians of {args.rounds} interleaved rounds; "
           "within ±25% is host noise (CLAUDE.md r5 measurement)")
+
+
+def workload_ab(args, a, b):
+    seeds = [int(s) for s in args.seeds.split(",")]
+    runs = ([], [])
+    for i, seed in enumerate(seeds):
+        # A first in odd rounds, B first in even ones: drift of the host
+        # during a session does not favour one side
+        for side in (0, 1) if i % 2 == 0 else (1, 0):
+            label, wt = (a, b)[side]
+            print(f"[ab] round {i + 1}/{len(seeds)} seed {seed}: {label}",
+                  flush=True)
+            res = run_workload(wt, args.workload, seed, args.seconds)
+            runs[side].append(res)
+            print("[ab]   " + " ".join(
+                f"{k}={v['value']:.4g}" for k, v in res["metrics"].items())
+                + f" failed={res['failed']}/{res['attempted']}", flush=True)
+
+    names = list(runs[0][0]["metrics"])
+    wn = max(len(n) for n in names)
+    def quartiles(rs, n):
+        vals = [r["metrics"][n]["value"] for r in rs]
+        if len(vals) < 2:
+            return vals[0], vals[0], vals[0]
+        q1, _, q3 = statistics.quantiles(vals, n=4)
+        return q1, statistics.median(vals), q3
+
+    print(f"\n{args.workload}, seeds {args.seeds}: median [q1, q3]\n"
+          f"{'metric'.ljust(wn)}  {'A=' + a[0]:>27}  {'B=' + b[0]:>27}   B/A")
+    for n in names:
+        (a1, va, a3), (b1, vb, b3) = (quartiles(rs, n) for rs in runs)
+        unit = runs[0][0]["metrics"][n]["unit"]
+        ratio = vb / va if va else float("nan")
+        print(f"{n.ljust(wn)}  {va:8.4g} [{a1:7.4g}, {a3:7.4g}]  "
+              f"{vb:8.4g} [{b1:7.4g}, {b3:7.4g}]  {ratio:5.2f}  {unit}")
+    for label, rs in zip("AB", runs):
+        print(f"[ab] {label}: correct {sum(r['correct'] for r in rs)}/"
+              f"{len(rs)}, failed {sum(r['failed'] for r in rs)}/"
+              f"{sum(r['attempted'] for r in rs)}")
+    print(f"[ab] medians of {len(seeds)} interleaved rounds")
+
+
+def main():
+    ap = argparse.ArgumentParser()
+    ap.add_argument("commit_a", help="git ref or checkout directory")
+    ap.add_argument("commit_b", help="git ref or checkout directory")
+    ap.add_argument("queries", nargs="?",
+                    help="comma-separated SparkEntry query names")
+    ap.add_argument("--sf", help="tables dir (default: graft.Bench's, "
+                    "SPARK_GRAFT_SF_DIR or its built-in sf0.1 path)")
+    ap.add_argument("--cpus", default="32")
+    ap.add_argument("--rounds", type=int, default=3)
+    ap.add_argument("--workload",
+                    help="a perfbench workload, instead of a query list")
+    ap.add_argument("--seeds", default="1,2,3",
+                    help="one round per seed (--workload)")
+    ap.add_argument("--seconds", type=float, default=10,
+                    help="timed phase of each run (--workload)")
+    args = ap.parse_args()
+    if (args.queries is None) == (args.workload is None):
+        ap.error("give either a query list or --workload")
+
+    a = checkout(args.commit_a)
+    b = checkout(args.commit_b)
+    if args.workload:
+        workload_ab(args, a, b)
+    else:
+        queries_ab(args, a, b)
 
 
 if __name__ == "__main__":
