@@ -16,9 +16,18 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * bench at SPARK_GRAFT_CPUS=32 plans the identical 32-way exchange
   * while SPARK_GRAFT_CPUS=8 (the driver's scaling run) and a real
   * cluster get THEIR width instead of an 8-core box juggling 32 tasks.
+  *
+  * On a cluster master `defaultParallelism` counts only the executors
+  * registered so far: read right after session start it can be 2. A
+  * `spark.default.parallelism` setting is therefore a floor (Spark's own
+  * local and cluster schedulers already answer with it; the floor holds
+  * for any scheduler). It is read from the context's conf: the session's
+  * would build the whole session state on first use (~0.6 s), before
+  * the server can take requests.
   */
 object Par {
-  def width(s: SparkSession): Int = s.sparkContext.defaultParallelism
+  def width(s: SparkSession): Int = math.max(s.sparkContext.defaultParallelism,
+    s.sparkContext.getConf.getInt("spark.default.parallelism", 0))
   def width(df: Dataset[_]): Int = width(df.sparkSession)
 
   /** Round-robin spread to machine width — `.transform(Par.spread)`

@@ -113,17 +113,19 @@ object Ksql {
     * downstream queries see the new data, no re-wiring), so it can land
     * in the middle of REPL or `/api` queries: each answers wholly from
     * the generation its analysis saw, old or new, never a mix.
+    *
+    * The "before" frames are the old views as analysed: each is bound to
+    * its own immutable generation, so after the swap they still read the
+    * pre-refresh rows, with no copy pinned.
     */
   def refreshOnce(spark: SparkSession, source: Source): Unit = {
-    val before = K8sSnapshot.reading(Seq("pods", "nodes", "services")
-      .map(t => t -> spark.table(t).select("uid", "_raw").cache()).toMap)
-    before.values.foreach(_.count()) // pin pre-refresh content
+    val before = K8sSnapshot.reading(
+      Seq("pods", "nodes", "services").map(t => t -> spark.table(t)))
     val after = K8sSnapshot.load(spark, source.refetch())
     before.foreach { case (name, old) =>
       val counts = graft.sources.SnapshotDiff.summary(old, after(name))
         .collect().map(r => s"${r.getString(0)}=${r.getLong(1)}")
       println(s"refreshed $name: ${counts.mkString(" ")}")
-      old.unpersist()
     }
   }
 

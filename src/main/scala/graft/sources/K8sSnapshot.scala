@@ -2,8 +2,12 @@ package graft.sources
 
 import java.util.concurrent.locks.ReentrantReadWriteLock
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import graft.sources.v2.K8sSnapshotTable
 
 /** Snapshot loader: K8s list responses → the four reference tables
   * (`pods`, `nodes`, `services`, derived `containers`), registered as
@@ -102,31 +106,33 @@ object K8sSnapshot {
 
   /** Load all four tables and register temp views — the equivalent of
     * create_tables + load + .data assignment (ksql.js:249-265). Returns
-    * the table map for direct DataFrame use. The four views are replaced
-    * together under the generation write lock, so a query analysed under
-    * `reading` never sees some of them swapped and others not.
+    * the table map for direct DataFrame use.
     *
-    * Default path goes through the DataSource V2 connector
-    * (graft.sources.v2.K8sSnapshotSource) so column pruning reaches the
-    * JSON→row conversion; the `from_json`-based readers above remain as
-    * the independent implementation the DSv2 spec cross-checks against.
+    * Each list file is parsed once, here, into the compressed in-memory
+    * rows of a new [[K8sSnapshotTable]] (see `graft.sources.v2`), and the
+    * views are bound to those tables: queries read that generation, never
+    * the files again, until the next `load` swaps the views. The four
+    * views are replaced together under the generation write lock, so a
+    * query analysed under `reading` never sees some of them swapped and
+    * others not. A replaced generation is freed once no plan uses it.
+    *
+    * The `from_json` readers above are the independent implementation
+    * the specs cross-check this path against.
     */
-  def load(spark: SparkSession, dir: String,
-      useV2: Boolean = true): Map[String, DataFrame] = {
-    def read(kind: String): DataFrame =
-      if (useV2) spark.read.format("k8s-snapshot").option("kind", kind)
-        .load(s"$dir/$kind.json")
-      else kind match {
-        case "pods" => pods(spark, s"$dir/pods.json")
-        case "nodes" => nodes(spark, s"$dir/nodes.json")
-        case "services" => services(spark, s"$dir/services.json")
-      }
-    val p = read("pods")
-    val all = Map(
-      "pods" -> p,
-      "nodes" -> read("nodes"),
-      "services" -> read("services"),
-      "containers" -> containers(p))
+  def load(spark: SparkSession, dir: String): Map[String, DataFrame] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration.Duration
+    val tables = Seq("pods", "nodes", "services")
+      .map(k => k -> new K8sSnapshotTable(k, s"$dir/$k.json")).toMap
+    // materialize the three files now, side by side, not in the first
+    // query; the frames over them are built meanwhile
+    val parsed = Future.traverse(tables.values)(t => Future(t.generation))
+    val read = tables.map { case (k, t) => k -> GraftShim.ofRows(spark,
+      DataSourceV2Relation.create(t, None, None, CaseInsensitiveStringMap.empty()))
+    }
+    val all = read + ("containers" -> containers(read("pods")))
+    Await.result(parsed, Duration.Inf)
     val lock = generation.writeLock()
     lock.lock()
     try all.foreach { case (n, df) => df.createOrReplaceTempView(n) }

@@ -19,7 +19,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * }}}
   *
   * Tables delegate to [[K8sSnapshotTable]], so column pruning and the
-  * stamped-key filter pushdown ride along unchanged. Read-only by
+  * stamped-key filter pushdown ride along unchanged. Each lookup is a
+  * new table, so a query reads the files as they are when it is planned
+  * (materialized once for that query). Read-only by
   * design: the source of truth is the cluster (reference semantics —
   * `ksql.js` only ever GETs); DDL raises rather than pretending.
   */

@@ -1,9 +1,13 @@
 package graft.sources.v2
 
 import java.util
+import java.util.OptionalLong
 import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.core.JsonToken
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.catalyst.InternalRow
+import net.jpountz.lz4.LZ4Factory
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedUnsafeProjection, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -11,6 +15,7 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 import graft.sources.K8sSchemas
 
@@ -21,12 +26,21 @@ import graft.sources.K8sSchemas
   * `/root/reference/ksql.js:190-247`) as a properly-schemed DataFrame
   * with the same stamped columns as `graft.sources.K8sSnapshot`.
   *
-  * Column pruning is pushed into the reader (`SupportsPushDownRequiredColumns`):
-  * a query touching only `uid` never materializes `spec`/`status`/`_raw`
-  * — on a large cluster snapshot (or any list-shaped JSON source) the
-  * JSON→row conversion cost scales with the pruned schema, not the full
-  * object. A live-API implementation swaps the file read for an HTTPS
-  * list call; everything from parse to InternalRow is shared.
+  * Like the reference, which loads its snapshot into arrays once and
+  * answers every query from them (`ksql.js:249-265`), a table parses its
+  * list file once, on first use, into a [[K8sGeneration]]: full-schema
+  * `UnsafeRow`s in LZ4-compressed blocks that the table keeps for its
+  * lifetime. Every scan of the table reads those blocks, so a DataFrame
+  * over it answers from one point-in-time snapshot however often the
+  * file changes. The JSON→row conversion runs only at that step.
+  *
+  * Top-level column pruning (`SupportsPushDownRequiredColumns`) and the
+  * stamped-key filter pushdown (`SupportsPushDownFilters`) apply per row
+  * as the reader walks a decompressed block: the filters are checked on
+  * the stored row, and only matching rows are projected. The scan
+  * reports the generation's exact row count and in-memory byte size
+  * (`SupportsReportStatistics`), so joins over snapshot-sized tables
+  * plan as broadcast joins.
   */
 class K8sSnapshotSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "k8s-snapshot"
@@ -72,7 +86,10 @@ object K8sSnapshotTable {
   }
 }
 
-class K8sSnapshotTable(kind: String, path: String)
+/** One list file as a table. `path` names a list file for batch reads,
+  * or a directory of generation files for the micro-batch stream.
+  */
+class K8sSnapshotTable(val kind: String, val path: String)
     extends Table with SupportsRead {
   override def name(): String = s"k8s-snapshot:$kind:$path"
   override def schema(): StructType = K8sSnapshotTable.schemaFor(kind)
@@ -80,26 +97,38 @@ class K8sSnapshotTable(kind: String, path: String)
     util.EnumSet.of(TableCapability.BATCH_READ,
       TableCapability.MICRO_BATCH_READ)
 
+  /** The snapshot every batch scan of this table reads: `path` parsed on
+    * first use and kept until the table itself is unreachable (when the
+    * last plan bound to it is gone). Never re-read, so a file rewritten
+    * meanwhile is seen only by a new table.
+    */
+  lazy val generation: K8sGeneration = K8sGeneration.read(kind, path)
+
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new K8sScanBuilder(kind, path, schema())
+    new K8sScanBuilder(this)
 }
 
-class K8sScanBuilder(kind: String, path: String, full: StructType)
+class K8sScanBuilder(table: K8sSnapshotTable)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters {
   import org.apache.spark.sql.sources._
+  import table.{kind, path}
+  private val full = table.schema()
   private var required: StructType = full
   private var pushed: Array[Filter] = Array.empty
 
+  /** Top-level pruning: a requested column keeps its full type, since the
+    * stored rows are full-schema and the projection copies whole columns.
+    */
   override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
+    required = StructType(requiredSchema.fieldNames.map(full(_)))
 
-  /** Push simple predicates on the STAMPED key columns (uid/name/node —
-    * cheap text probes into the raw JSON) down to the reader: matching
-    * happens BEFORE item conversion, so on a large cluster snapshot a
-    * `WHERE node = 'x'` converts only x's pods, not the fleet (SURVEY §4
-    * checklist). The evaluation is exact, so accepted filters produce no
-    * residual for Spark to re-check.
+  /** Push simple predicates on the STAMPED key columns (uid/name/node)
+    * down to the reader: each stored row is checked before it is
+    * projected, so on a large cluster snapshot a `WHERE node = 'x'`
+    * projects only x's pods, not the fleet (SURVEY §4 checklist). The
+    * evaluation is exact, so accepted filters produce no residual for
+    * Spark to re-check.
     */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     val stampedCols = full.fieldNames.toSet
@@ -120,16 +149,30 @@ class K8sScanBuilder(kind: String, path: String, full: StructType)
 
   override def pushedFilters(): Array[Filter] = pushed
 
-  override def build(): Scan = new Scan with Batch {
+  override def build(): Scan = new Scan with Batch
+      with SupportsReportStatistics {
     override def readSchema(): StructType = required
     override def toBatch: Batch = this
     override def planInputPartitions(): Array[InputPartition] =
-      Array(K8sInputPartition(kind, path))
+      table.generation.partitions
     override def createReaderFactory(): PartitionReaderFactory =
-      new K8sReaderFactory(required, pushed)
+      new K8sReaderFactory(full, required, pushed)
+    /** The generation's exact size. A stream's table names a directory
+      * of generations, not one snapshot, and reports none.
+      */
+    override def estimateStatistics(): Statistics = {
+      val g = if (new java.io.File(path).isDirectory) None
+        else Some(table.generation)
+      new Statistics {
+        override def sizeInBytes(): OptionalLong =
+          g.fold(OptionalLong.empty())(x => OptionalLong.of(x.sizeInBytes))
+        override def numRows(): OptionalLong =
+          g.fold(OptionalLong.empty())(x => OptionalLong.of(x.numRows))
+      }
+    }
     override def toMicroBatchStream(checkpointLocation: String)
         : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-      new K8sMicroBatchStream(kind, path, required, pushed)
+      new K8sMicroBatchStream(kind, path, full, required, pushed)
     override def description(): String =
       s"k8s-snapshot kind=$kind path=$path cols=${required.fieldNames.mkString(",")}" +
         s" filters=${pushed.mkString(",")}"
@@ -150,15 +193,16 @@ class K8sScanBuilder(kind: String, path: String, full: StructType)
   * skipping another. A gen-range selection `(start, end]` is stable
   * under both, so restart-from-checkpoint replays exactly the right
   * snapshots. The listing is captured once per batch at `latestOffset`;
-  * column pruning and stamped-key filter pushdown apply per generation
-  * exactly as in the batch reader (same PartitionReader).
+  * each selected file is materialized as a [[K8sGeneration]] when the
+  * batch is planned, and read by the batch reader (same pruning and
+  * stamped-key filters).
   *
   * At scale each generation file is one API list response; a live
   * implementation swaps the directory listing for a watch bookmark —
   * the offset contract (monotone generation number) is unchanged.
   */
-class K8sMicroBatchStream(kind: String, dir: String, required: StructType,
-    filters: Array[org.apache.spark.sql.sources.Filter])
+class K8sMicroBatchStream(kind: String, dir: String, full: StructType,
+    required: StructType, filters: Array[org.apache.spark.sql.sources.Filter])
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
   import org.apache.spark.sql.connector.read.streaming.Offset
 
@@ -203,11 +247,11 @@ class K8sMicroBatchStream(kind: String, dir: String, required: StructType,
       if (captured.nonEmpty && captured.last._1 >= e) captured
       else listGenerations()
     src.filter { case (g, _) => g > s && g <= e }
-      .map { case (_, p) => K8sInputPartition(kind, p): InputPartition }
+      .flatMap { case (_, p) => K8sGeneration.read(kind, p).partitions }
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new K8sReaderFactory(required, filters)
+    new K8sReaderFactory(full, required, filters)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -218,66 +262,158 @@ case class K8sGenOffset(gen: Long)
   override def json(): String = gen.toString
 }
 
-case class K8sInputPartition(kind: String, path: String)
-    extends InputPartition
+/** The items of about [[K8sGeneration.ChunkBytes]] of list JSON as
+  * full-schema `UnsafeRow`s, each stored as a 4-byte length and its
+  * bytes, LZ4-compressed as a whole.
+  */
+final case class K8sChunk(rows: Int, rawBytes: Int, lz4: Array[Byte])
 
-class K8sReaderFactory(required: StructType,
-    filters: Array[org.apache.spark.sql.sources.Filter])
-    extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val part = p.asInstanceOf[K8sInputPartition]
-    new K8sPartitionReader(part.kind, part.path, required, filters)
+/** The chunks one task reads. */
+final case class K8sRowBlock(chunks: Array[K8sChunk]) {
+  def rows: Int = chunks.iterator.map(_.rows).sum
+  def sizeInBytes: Long = chunks.iterator.map(_.lz4.length.toLong).sum
+
+  /** The rows in order. Each chunk is decompressed into one buffer, and
+    * one `UnsafeRow` is re-pointed at each row in turn: copy a row to
+    * keep it past the next call.
+    */
+  def iterator(numFields: Int): Iterator[UnsafeRow] = {
+    val lz4 = LZ4Factory.fastestInstance().safeDecompressor()
+    val raw = new Array[Byte](chunks.iterator.map(_.rawBytes).maxOption.getOrElse(0))
+    val buf = java.nio.ByteBuffer.wrap(raw)
+    val row = new UnsafeRow(numFields)
+    chunks.iterator.flatMap { c =>
+      lz4.decompress(c.lz4, 0, c.lz4.length, raw, 0, c.rawBytes)
+      var off = 0
+      Iterator.fill(c.rows) {
+        val n = buf.getInt(off)
+        row.pointTo(raw, Platform.BYTE_ARRAY_OFFSET + off + 4, n)
+        off += 4 + n
+        row
+      }
+    }
   }
 }
 
-/** Parses the list file once and converts each item to an InternalRow of
-  * the PRUNED schema (fields never requested are never converted). Pushed
-  * filters on the stamped columns are evaluated against the raw JSON
-  * BEFORE item conversion, so non-matching items are never converted at
-  * all — the point of `SupportsPushDownFilters` here (SURVEY §4).
+/** One input partition per block: the task carries the rows it reads. */
+case class K8sInputPartition(block: K8sRowBlock) extends InputPartition
+
+/** One list file, materialized: its items as full-schema rows in
+  * compressed blocks. Immutable; it lives as long as its owner (a
+  * [[K8sSnapshotTable]], or one micro-batch's partitions).
   */
-class K8sPartitionReader(kind: String, path: String, required: StructType,
-    filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
-    extends PartitionReader[InternalRow] {
-  import org.apache.spark.sql.sources._
-  private val mapper = new ObjectMapper
-  private val items: Iterator[JsonNode] = {
-    val root = mapper.readTree(new java.io.File(path))
-    val arr = root.get("items")
-    if (arr == null) Iterator.empty else arr.elements().asScala
-  }
-  private var current: InternalRow = _
+final class K8sGeneration(val blocks: Array[K8sRowBlock]) {
+  def numRows: Long = blocks.iterator.map(_.rows.toLong).sum
+  /** Bytes held in memory: the compressed chunks. */
+  def sizeInBytes: Long = blocks.iterator.map(_.sizeInBytes).sum
+  def partitions: Array[InputPartition] = blocks.map(K8sInputPartition(_))
+}
 
-  /** Items converted to rows — observable from K8sDsv2Spec to prove the
-    * pushdown skips conversion, not just post-filters.
+object K8sGeneration {
+  /** List JSON per chunk: lz4-java's own stream block size. A chunk's
+    * rows take about twice that, which LZ4 compresses well and a reader
+    * decompresses into a buffer that stays in cache.
     */
-  var converted: Long = 0L
+  val ChunkBytes: Int = 1 << 16
 
-  private def matches(item: JsonNode, f: Filter): Boolean = f match {
-    case EqualTo(a, v) => stamped(item, a) == v
-    case In(a, vs) => vs.contains(stamped(item, a))
-    case IsNotNull(a) => stamped(item, a) != null
-    case IsNull(a) => stamped(item, a) == null
-    case StringStartsWith(a, p) =>
-      Option(stamped(item, a)).exists(_.startsWith(p))
-    case StringContains(a, s) =>
-      Option(stamped(item, a)).exists(_.contains(s))
-    case other => sys.error(s"k8s-snapshot: unpushable filter $other")
-  }
+  /** Most compressed bytes per block. A block rides inside its task, so
+    * this is Spark's recommended maximum task size (the scheduler warns
+    * above 1000 KiB): a snapshot under it scans as one task, a larger
+    * one in as many tasks as its compressed size needs.
+    */
+  val MaxBlockBytes: Int = 1000 * 1024
 
-  override def next(): Boolean = {
-    while (items.hasNext) {
-      val item = items.next()
-      if (filters.forall(matches(item, _))) {
-        current = convertItem(item); converted += 1
-        return true
-      }
+  /** Parse the list file at `path` once: each item becomes one row of the
+    * full `kind` schema. Items are parsed in file order and cut into
+    * chunks of about [[ChunkBytes]] of JSON; each chunk is converted and
+    * compressed on the global pool while parsing goes on, at most two
+    * chunks per core in flight.
+    */
+  def read(kind: String, path: String): K8sGeneration = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration.Duration
+    val full = K8sSnapshotTable.schemaFor(kind)
+    // interpreted: generating code for these nested schemas compiles for
+    // seconds, far longer than converting a large snapshot takes
+    val fields = full.fields.toSeq.zipWithIndex
+      .map { case (f, i) => BoundReference(i, f.dataType, f.nullable) }
+    val toUnsafe = ThreadLocal.withInitial(() =>
+      InterpretedUnsafeProjection.createProjection(fields))
+    val inFlight = 2 * Runtime.getRuntime.availableProcessors
+    val chunks = scala.collection.mutable.ArrayBuffer.empty[Future[K8sChunk]]
+    K8sItems.foreachChunk(path, ChunkBytes) { items =>
+      if (chunks.size >= inFlight) Await.ready(chunks(chunks.size - inFlight), Duration.Inf)
+      chunks += Future(chunk(items, full, toUnsafe.get))
     }
-    false
+    new K8sGeneration(pack(chunks.map(Await.result(_, Duration.Inf)).toSeq))
   }
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
 
+  private def chunk(items: Array[JsonNode], full: StructType,
+      toUnsafe: UnsafeProjection): K8sChunk = {
+    val raw = new java.io.ByteArrayOutputStream(4 * ChunkBytes)
+    val out = new java.io.DataOutputStream(raw)
+    val scratch = new Array[Byte](1 << 12)
+    items.foreach { item =>
+      val row = toUnsafe(K8sItems.toRow(item, full))
+      out.writeInt(row.getSizeInBytes)
+      row.writeToStream(out, scratch)
+    }
+    val bytes = raw.toByteArray
+    K8sChunk(items.length, bytes.length,
+      LZ4Factory.fastestInstance().fastCompressor().compress(bytes))
+  }
+
+  /** Consecutive chunks into blocks of at most [[MaxBlockBytes]]. */
+  private def pack(chunks: Seq[K8sChunk]): Array[K8sRowBlock] = {
+    val blocks = Array.newBuilder[K8sRowBlock]
+    var cur = Vector.empty[K8sChunk]
+    var bytes = 0L
+    chunks.foreach { c =>
+      if (cur.nonEmpty && bytes + c.lz4.length > MaxBlockBytes) {
+        blocks += K8sRowBlock(cur.toArray); cur = Vector.empty; bytes = 0L
+      }
+      cur :+= c; bytes += c.lz4.length
+    }
+    if (cur.nonEmpty) blocks += K8sRowBlock(cur.toArray)
+    blocks.result()
+  }
+}
+
+/** The JSON→row converter: list file items as `InternalRow`s of a table
+  * schema. It runs only when a generation is materialized.
+  */
+object K8sItems {
+  /** The elements of the list's `items` array in order, parsed one at a
+    * time and handed to `f` in runs that span about `bytes` of the file.
+    */
+  def foreachChunk(path: String, bytes: Int)(f: Array[JsonNode] => Unit): Unit = {
+    val mapper = new ObjectMapper
+    val p = mapper.getFactory.createParser(new java.io.File(path))
+    def offset = p.currentLocation().getByteOffset
+    try {
+      if (p.nextToken() == JsonToken.START_OBJECT)
+        while (p.nextToken() == JsonToken.FIELD_NAME) {
+          val isItems = p.currentName() == "items"
+          if (p.nextToken() == JsonToken.START_ARRAY && isItems) {
+            val run = Array.newBuilder[JsonNode]
+            var from = offset
+            while (p.nextToken() != JsonToken.END_ARRAY) {
+              run += mapper.readTree[JsonNode](p)
+              if (offset - from >= bytes) {
+                f(run.result()); run.clear(); from = offset
+              }
+            }
+            if (run.knownSize > 0) f(run.result())
+          } else p.skipChildren()
+        }
+    } finally p.close()
+  }
+
+  /** Compact JSON, the bytes of `JsonNode.toString` in UTF-8. */
+  private val json = new ObjectMapper().writer()
+
+  /** The stamped key columns, read from the item JSON. */
   private def stamped(item: JsonNode, field: String): String = field match {
     case "uid" => textAt(item, "metadata", "uid")
     case "name" => textAt(item, "metadata", "name")
@@ -291,12 +427,12 @@ class K8sPartitionReader(kind: String, path: String, required: StructType,
     else { val b = a.get(p2); if (b == null || b.isNull) null else b.asText }
   }
 
-  private def convertItem(item: JsonNode): InternalRow = {
-    val values = required.fields.map { f =>
+  def toRow(item: JsonNode, schema: StructType): InternalRow = {
+    val values = schema.fields.map { f =>
       f.name match {
         case "uid" | "name" | "node" =>
           Option(stamped(item, f.name)).map(UTF8String.fromString).orNull
-        case "_raw" => UTF8String.fromString(item.toString)
+        case "_raw" => UTF8String.fromBytes(json.writeValueAsBytes(item))
         case other => convert(item.get(other), f.dataType)
       }
     }
@@ -329,4 +465,67 @@ class K8sPartitionReader(kind: String, path: String, required: StructType,
       case other => sys.error(s"k8s-snapshot: unsupported type $other")
     }
   }
+}
+
+class K8sReaderFactory(full: StructType, required: StructType,
+    filters: Array[org.apache.spark.sql.sources.Filter])
+    extends PartitionReaderFactory {
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    new K8sPartitionReader(p.asInstanceOf[K8sInputPartition].block,
+      full, required, filters)
+}
+
+/** Reads one block: decompresses it, checks the pushed stamped-key
+  * filters against each stored row, and projects the matching rows to
+  * the required columns (a view over the stored row, no copy).
+  */
+class K8sPartitionReader(block: K8sRowBlock, full: StructType,
+    required: StructType,
+    filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
+    extends PartitionReader[InternalRow] {
+  import org.apache.spark.sql.sources._
+  private val rows = block.iterator(full.length)
+  private val out = ProjectingInternalRow(required,
+    required.fieldNames.toIndexedSeq.map(full.fieldIndex))
+  private val checks: Array[InternalRow => Boolean] = filters.map(check)
+
+  /** Rows that passed the filters and were projected — observable from
+    * K8sDsv2Spec to prove the pushdown skips rows, not just post-filters.
+    */
+  var converted: Long = 0L
+
+  private def check(f: Filter): InternalRow => Boolean = {
+    def key(a: String): InternalRow => UTF8String = {
+      val i = full.fieldIndex(a)
+      r => if (r.isNullAt(i)) null else r.getUTF8String(i)
+    }
+    def utf8(s: Any) = UTF8String.fromString(s.asInstanceOf[String])
+    f match {
+      case EqualTo(a, v) => val k = key(a); val u = utf8(v); r => u == k(r)
+      case In(a, vs) =>
+        val k = key(a); val us = vs.map(utf8).toSet; r => us.contains(k(r))
+      case IsNotNull(a) => val k = key(a); r => k(r) != null
+      case IsNull(a) => val k = key(a); r => k(r) == null
+      case StringStartsWith(a, p) =>
+        val k = key(a); val u = utf8(p)
+        r => { val s = k(r); s != null && s.startsWith(u) }
+      case StringContains(a, c) =>
+        val k = key(a); val u = utf8(c)
+        r => { val s = k(r); s != null && s.contains(u) }
+      case other => sys.error(s"k8s-snapshot: unpushable filter $other")
+    }
+  }
+
+  override def next(): Boolean = {
+    while (rows.hasNext) {
+      val row = rows.next()
+      if (checks.forall(_(row))) {
+        out.project(row); converted += 1
+        return true
+      }
+    }
+    false
+  }
+  override def get(): InternalRow = out
+  override def close(): Unit = ()
 }

@@ -12,18 +12,23 @@ import graft.sources.K8sSnapshot
   *   1. container row count = Σ size(spec.containers)
   *   2. restarts is null exactly where the index-aligned status entry
   *      (or its restartCount) is absent.
+  * And the block-backed DSv2 scan returns the `from_json` loader's rows
+  * on every column, `_raw` (as a JSON value) and absent (null) label
+  * maps included.
   */
 class FlattenPropertySpec extends SparkSpec {
 
   private case class GenPod(uid: String, nContainers: Int,
-      statusLens: Option[Int], missingRestartAt: Set[Int])
+      statusLens: Option[Int], missingRestartAt: Set[Int],
+      labels: Option[Int])
 
   private val podGen: Gen[GenPod] = for {
     uid <- Gen.uuid.map(_.toString.take(8))
     n <- Gen.choose(0, 4)
     statusLen <- Gen.option(Gen.choose(0, 6))
     missing <- Gen.listOf(Gen.choose(0, 5)).map(_.toSet)
-  } yield GenPod(uid, n, statusLen, missing)
+    labels <- Gen.option(Gen.choose(0, 2))
+  } yield GenPod(uid, n, statusLen, missing, labels)
 
   private def podJson(p: GenPod): String = {
     val containers = (0 until p.nContainers).map(i =>
@@ -36,8 +41,11 @@ class FlattenPropertySpec extends SparkSpec {
       }.mkString(",")
       s""","containerStatuses": [$entries]"""
     }.getOrElse("")
+    val labels = p.labels.map { k =>
+      (0 until k).map(i => s""""l$i": "v$i"""").mkString(""", "labels": {""", ", ", "}")
+    }.getOrElse("")
     s"""{
-       |  "metadata": {"name": "p-${p.uid}", "uid": "${p.uid}"},
+       |  "metadata": {"name": "p-${p.uid}", "uid": "${p.uid}"$labels},
        |  "spec": {"nodeName": "n1", "containers": [$containers]},
        |  "status": {"phase": "Running"$statuses}
        |}""".stripMargin
@@ -73,5 +81,19 @@ class FlattenPropertySpec extends SparkSpec {
       }.toSet
       assert(got == want, s"useV2=$useV2")
     }
+
+    // every column agrees. `_raw` holds the same JSON value: the
+    // from_json loader keeps the item's source text, the block-backed
+    // scan its compact form
+    val blocks = spark.read.format("k8s-snapshot").option("kind", "pods")
+      .load(file.getPath)
+    val fromJson = K8sSnapshot.pods(spark, file.getPath)
+    assert(blocks.schema == fromJson.schema)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.map { r =>
+      (r.toSeq.init, mapper.readTree(r.getString(r.fieldIndex("_raw"))))
+    }
+    assert(rows(blocks).size == samples.size)
+    assert(rows(blocks) == rows(fromJson))
   }
 }

@@ -1,7 +1,11 @@
 package graft
 
+import org.apache.spark.sql.connector.read.{SupportsPushDownFilters, SupportsReportStatistics}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import graft.dialect.KsqlDialect
 import graft.sources.K8sSnapshot
+import graft.sources.v2.K8sSnapshotTable
 
 /** DataSource V2 connector spec: same rows as the view-based loader,
   * column pruning reaches the reader, short name registered.
@@ -58,13 +62,17 @@ class K8sDsv2Spec extends SparkSpec {
         .filter(col("node") === "node-a")
         .collect().map(_.getString(0)).sorted.toSeq)
 
-    // the reader itself converts only matching items — the pushdown
-    // saves the JSON→row work, not just the downstream filter
+    // the reader itself projects only matching rows — the pushdown
+    // saves the per-row work, not just the downstream filter
     import org.apache.spark.sql.sources.EqualTo
-    val schema = dsv2("pods").schema
-    val reader = new graft.sources.v2.K8sPartitionReader(
-      "pods", s"$fixtureDir/pods.json", schema,
-      Array(EqualTo("node", "node-a")))
+    val builder = new K8sSnapshotTable("pods", s"$fixtureDir/pods.json")
+      .newScanBuilder(CaseInsensitiveStringMap.empty())
+      .asInstanceOf[SupportsPushDownFilters]
+    assert(builder.pushFilters(Array(EqualTo("node", "node-a"))).isEmpty)
+    val batch = builder.build().toBatch
+    val Array(part) = batch.planInputPartitions()
+    val reader = batch.createReaderFactory().createReader(part)
+      .asInstanceOf[graft.sources.v2.K8sPartitionReader]
     var n = 0
     while (reader.next()) n += 1
     assert(reader.converted == n && n < 4 && n > 0)
@@ -102,6 +110,25 @@ class K8sDsv2Spec extends SparkSpec {
     // unknown table is a clean analysis error
     intercept[org.apache.spark.sql.AnalysisException](
       spark.sql("SELECT * FROM k8s.snapshot.deployments").collect())
+  }
+
+  test("the scan reports the generation's exact row count; joins broadcast") {
+    for ((kind, items) <- Seq("pods" -> 4, "nodes" -> 3, "services" -> 2)) {
+      val table = new K8sSnapshotTable(kind, s"$fixtureDir/$kind.json")
+      val stats = table.newScanBuilder(CaseInsensitiveStringMap.empty())
+        .build().asInstanceOf[SupportsReportStatistics].estimateStatistics()
+      assert(stats.numRows().getAsLong == items, kind)
+      assert(stats.sizeInBytes().getAsLong == table.generation.sizeInBytes)
+    }
+    // README query 3 over the loaded views: with exact statistics the
+    // join plans as a broadcast hash join, not a sort-merge join
+    K8sSnapshot.load(spark, fixtureDir)
+    val plan = KsqlDialect.sql(spark,
+      "select pods.metadata->name,pods.metadata->annotations->email,image " +
+        "from pods join containers using uid where image like 'mysql:5.5%'")
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("BroadcastHashJoin") && !plan.contains("SortMergeJoin"),
+      plan)
   }
 
   test("_raw escape hatch carries the full item") {

@@ -98,6 +98,52 @@ class KsqlConnectSpec extends SparkSpec {
     assert(spark.table("pods").count() == 4)
   }
 
+  test("answers stay on the loaded generation until the next load") {
+    // a snapshot dir whose pods.json is rewritten in place after `load`:
+    // the views keep answering from what was loaded, as the reference
+    // answers from its in-memory arrays, until a refresh re-reads it
+    val dir = Files.createTempDirectory("snapshot-in-place")
+    Seq("pods", "nodes", "services").foreach { k =>
+      Files.copy(Paths.get(fixtureDir, s"$k.json"), dir.resolve(s"$k.json"))
+    }
+    val q = "select count(*) from pods"
+    def ask(): String = Ksql.answer(spark, q)(Render.toJson)
+    K8sSnapshot.load(spark, dir.toString)
+    val loaded = ask()
+    Files.writeString(dir.resolve("pods.json"),
+      ujsonFree(Files.readString(dir.resolve("pods.json"))))
+    assert(ask() == loaded)
+    assert(spark.table("containers").count() == 5)
+    Ksql.refreshOnce(spark, Ksql.Source(dir.toString, () => dir.toString))
+    assert(ask() != loaded && ask().contains("3"))
+    assert(spark.table("containers").count() == 4)
+    // and a plain load picks up the file as it now is
+    Files.copy(Paths.get(fixtureDir, "pods.json"), dir.resolve("pods.json"),
+      StandardCopyOption.REPLACE_EXISTING)
+    assert(ask() != loaded)
+    K8sSnapshot.load(spark, dir.toString)
+    assert(ask() == loaded)
+  }
+
+  test("a replaced generation is freed once no plan uses it") {
+    // the table owns its rows: after a refresh swaps the views, nothing
+    // JVM-wide keeps the old generation reachable
+    def loadAndWatch(): java.lang.ref.WeakReference[AnyRef] = {
+      val pods = K8sSnapshot.load(spark, fixtureDir)("pods")
+      pods.count()
+      val table = pods.queryExecution.analyzed.collectFirst {
+        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
+          r.table.asInstanceOf[graft.sources.v2.K8sSnapshotTable]
+      }.get
+      new java.lang.ref.WeakReference(table.generation)
+    }
+    val old = loadAndWatch()
+    Ksql.refreshOnce(spark, Ksql.Source(fixtureDir, () => fixtureDir))
+    var i = 0
+    while (old.get != null && i < 20) { System.gc(); Thread.sleep(50); i += 1 }
+    assert(old.get == null, "the pre-refresh generation is still reachable")
+  }
+
   test("refreshes landing mid-query never answer from two generations") {
     val dirs = Seq(fixtureDir, droppedPodCopy().toString)
     // README query 4 joins pods and containers. The dropped pod is not in

@@ -159,9 +159,9 @@ class LocalClusterParitySpec extends SparkSpec {
 
   test("local-cluster executors reproduce in-process results exactly") {
     assume(new java.io.File(sfDir).isDirectory, s"$sfDir missing")
-    val local = names.map(n =>
-      n -> ResultHash.hash(SparkEntry.queries(n)(spark, sfDir))).toMap
-
+    // The cluster half runs first, while this JVM has built no session
+    // yet (the spec is the first of its test group): the subprocess's
+    // three JVMs and this JVM's Spark heap are never resident together.
     val javaBin = new java.io.File(
       new java.io.File(System.getProperty("java.home"), "bin"), "java")
       .getAbsolutePath
@@ -169,11 +169,12 @@ class LocalClusterParitySpec extends SparkSpec {
     val cp = s"$classes:/opt/spark/jars/*"
     // the subprocess inherits this group's warehouse so its publish-
     // family pins never race a concurrently-forked test group's
-    // default ./spark-warehouse (r14 parallel test groups)
-    val pb = new ProcessBuilder(javaBin, "-cp", cp, "-Xmx2g",
-      "-Dspark.sql.warehouse.dir=" +
-        spark.conf.get("spark.sql.warehouse.dir"),
-      "graft.LocalClusterCheck", sfDir, names.mkString(","))
+    // default ./spark-warehouse (r14 parallel test groups). It is read
+    // from this JVM's system properties: asking `spark` builds the session
+    val pb = new ProcessBuilder((Seq(javaBin, "-cp", cp, "-Xmx2g") ++
+      sys.props.get("spark.sql.warehouse.dir")
+        .map(w => s"-Dspark.sql.warehouse.dir=$w") ++
+      Seq("graft.LocalClusterCheck", sfDir, names.mkString(","))): _*)
     pb.environment().put("SPARK_SCALA_VERSION", "2.13")
     pb.environment().putIfAbsent("SPARK_HOME", "/opt/spark")
     pb.redirectErrorStream(true)
@@ -181,6 +182,8 @@ class LocalClusterParitySpec extends SparkSpec {
     val out = scala.io.Source.fromInputStream(proc.getInputStream).getLines()
       .toList
     val code = proc.waitFor()
+    val local = names.map(n =>
+      n -> ResultHash.hash(SparkEntry.queries(n)(spark, sfDir))).toMap
     val cluster = out.collect {
       case l if l.startsWith("[lcc] ") =>
         val Array(_, n, h) = l.split(" "); n -> h

@@ -12,12 +12,14 @@ Usage:
   python3 tools/ab.py <A> <B> <q1,q2,...> \
       [--sf /root/testdata/sf0.1] [--cpus 32] [--rounds 3]
   python3 tools/ab.py <A> <B> --workload k8s_large \
-      [--seeds 1,2,3] [--seconds 10]
+      [--seeds 1,2,3] [--seconds 10] [--trace]
 
 The first form runs the query list through graft.Bench
 (SPARK_GRAFT_BENCH_ONLY) and compares per-query seconds. The second runs
 `perfbench/run.py --workload <name> --seed <s> --trace 0` once per seed
-on each side and compares the medians of the end-to-end metrics.
+on each side and compares the medians of the end-to-end metrics. With
+--trace it then makes one `--trace 1` run per side (first seed) and
+prints its engine and source counters side by side.
 
 A side is a git ref (HEAD, HEAD~1, a sha, a branch), checked out in a
 git worktree under /tmp/graft_ab_<shortsha> that is reused across
@@ -75,12 +77,19 @@ def run_bench(wt, queries, sf, cpus):
     sys.exit(f"[ab] no bench JSON line in output from {wt}:\n{out[-3000:]}")
 
 
-def run_workload(wt, workload, seed, seconds):
+# per-layer counters compared by --trace
+TRACE_COUNTERS = ["spark.jobs", "spark.tasks", "spark.shuffle_write_bytes",
+                  "sources.records_read", "sources.load_ms",
+                  "sources.refresh_ms"]
+
+
+def run_workload(wt, workload, seed, seconds, trace=0):
     """The last stdout line of one perfbench run: {correct, attempted,
     failed, metrics: {name: {value, unit}}}."""
     r = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
-         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+         "--seed", str(seed), "--seconds", str(seconds),
+         "--trace", str(trace)],
         cwd=wt, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
     lines = r.stdout.strip().splitlines()
     if r.returncode != 0 or not lines:
@@ -159,6 +168,20 @@ def workload_ab(args, a, b):
               f"{len(rs)}, failed {sum(r['failed'] for r in rs)}/"
               f"{sum(r['attempted'] for r in rs)}")
     print(f"[ab] medians of {len(seeds)} interleaved rounds")
+    if args.trace:
+        traced = [run_workload(wt, args.workload, seeds[0], args.seconds, 1)
+                  for _, wt in (a, b)]
+        wc = max(len(c) for c in TRACE_COUNTERS)
+        print(f"\n{args.workload}, seed {seeds[0]}, --trace 1\n"
+              f"{'counter'.ljust(wc)}  {'A=' + a[0]:>14}  {'B=' + b[0]:>14}   B/A")
+        for c in TRACE_COUNTERS:
+            va, vb = (t["metrics"][c]["value"] for t in traced)
+            ratio = vb / va if va else float("nan")
+            print(f"{c.ljust(wc)}  {va:14.6g}  {vb:14.6g}  {ratio:5.2f}  "
+                  f"{traced[0]['metrics'][c]['unit']}")
+        print("[ab] traced: " + ", ".join(
+            f"{label} correct {t['correct']} failed {t['failed']}/{t['attempted']}"
+            for label, t in zip("AB", traced)))
 
 
 def main():
@@ -177,9 +200,14 @@ def main():
                     help="one round per seed (--workload)")
     ap.add_argument("--seconds", type=float, default=10,
                     help="timed phase of each run (--workload)")
+    ap.add_argument("--trace", action="store_true",
+                    help="also one traced run per side; compare counters "
+                    "(--workload)")
     args = ap.parse_args()
     if (args.queries is None) == (args.workload is None):
         ap.error("give either a query list or --workload")
+    if args.trace and not args.workload:
+        ap.error("--trace needs --workload")
 
     a = checkout(args.commit_a)
     b = checkout(args.commit_b)
