@@ -40,4 +40,19 @@ object Par {
   def spreadBy(cols: org.apache.spark.sql.Column*)
       : org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
     df => df.repartition(width(df), cols: _*)
+
+  /** Partition count for the loop-carried frames of the iterative graph
+    * operators (`Graph.fwbwScc`, gr20's level loop,
+    * `Dedup.connectedComponents` / `connectedComponentsStar`), derived
+    * from the live row count: one partition per 50,000 rows, at least 1
+    * and at most 32. Those stages are scheduling-latency-bound over few
+    * bytes, so small frames run as one task while the divisor keeps
+    * parallelism growing with the graph. An edge-aware caller passes
+    * `max(nodes, edges / 2)`.
+    *
+    * The cap of 32 is the value these loops have always used, not a
+    * derived one; deriving it (from `width` or from bytes) is ROADMAP
+    * item 5's work and needs its own A/B. */
+  def loopWidth(rows: Long): Int =
+    math.max(1L, math.min(32L, rows / 50000L + 1L)).toInt
 }

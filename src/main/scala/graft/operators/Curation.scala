@@ -675,13 +675,7 @@ object Curation {
     */
   val tx38DeltaTextIndex: Q = (s, d) => {
     val docs = t(s, d, "documents")
-    val dropTok = expr(
-      """CASE WHEN instr(text, ' ') > 0
-        |     THEN substring(text, instr(text, ' ') + 1)
-        |     ELSE text END""".stripMargin)
-    val delta = docs.filter(col("doc_id") % 10 === 7)
-      .select((col("doc_id") + 20000000L).as("doc_id"),
-        dropTok.as("text"))
+    val delta = textDelta(docs)
     // gen 1: the base segment pair; gen 2: the delta APPENDS through a
     // carry-forward manifest — base bytes never rewritten, and the
     // pointer swap makes the segment-set change atomic (a reader

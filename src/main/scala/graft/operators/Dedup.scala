@@ -306,7 +306,7 @@ object Dedup {
     // over few bytes — dd22's profile showed 96-task rounds of trivial
     // data at 400-700 ms each — while the divisor keeps parallelism
     // growing with |V| on a fact-sized graph
-    val np = math.max(1L, math.min(32L, nodes.count() / 50000L + 1L)).toInt
+    val np = graft.Par.loopWidth(nodes.count())
     val sym = edges.select(col("a"), col("b"))
       .unionAll(edges.select(col("b").as("a"), col("a").as("b")))
       // NO pre-partition: A/B'd (r7) — a forced repartition(32, a) here
@@ -408,8 +408,7 @@ object Dedup {
     // ss31 discipline — contraction stages are scheduling-bound over few
     // bytes); the count job reads the just-checkpointed blocks, and each
     // round reuses its sig count for free
-    var np = math.max(1L,
-      math.min(32L, edges.count() / 50000L + 1L)).toInt
+    var np = graft.Par.loopWidth(edges.count())
     var prevSig = (-1L, -1L)
     var rounds = 0
     var converged = false
@@ -453,7 +452,7 @@ object Dedup {
       edges = next
       converged = s == prevSig
       prevSig = s
-      np = math.max(1L, math.min(32L, s._1 / 50000L + 1L)).toInt
+      np = graft.Par.loopWidth(s._1)
       rounds += 1
     }
     if (!converged) sys.error(

@@ -256,11 +256,7 @@ object Graph {
         .select(col("u").as("id"), col("mn")), Seq("id"), "left")
       .select(col("id"),
         least(col("id"), coalesce(col("mn"), col("id"))).as("scc_id"))
-    scc.join(scc.groupBy("scc_id").agg(count(lit(1)).as("scc_size")),
-        Seq("scc_id"))
-      .select(col("id"), col("scc_id"), col("scc_size"),
-        (col("scc_size") >= 2L).as("is_core"))
-      .orderBy("id")
+    withSccSize(scc)
   }
 
   /** Min-label FORWARD-BACKWARD SCC — the fact-scale algorithm gr17's
@@ -288,9 +284,16 @@ object Graph {
     * constant-size driver counts over eagerly checkpointed rounds (the
     * plan-nesting rule: every loop-carried frame is referenced more
     * than once per round).
+    *
+    * Edges are prepared along ONE path, whatever the caller holds:
+    * cast to bigint, self-loops dropped, `distinct`, checkpointed at the
+    * width the shuffle lands on, counted once, and re-widthed to the
+    * loop width only when that differs (one more checkpoint). A caller
+    * therefore never de-duplicates, counts or checkpoints edges itself:
+    * the returned [[Scc]] carries the labels (id, scc_id) together with
+    * that prepared edge frame and its count.
     */
-  private[graft] def fwbwScc(nodes0: DataFrame, edges0: DataFrame,
-      dedupedEdgeCount: Option[Long] = None): DataFrame = {
+  private[graft] def fwbwScc(nodes0: DataFrame, edges0: DataFrame): Scc = {
     // (AQE stays ON: an A/B with it disabled ran 2.2× slower — the
     // tiny hop joins degrade from broadcast to sort-merge without
     // runtime stats. The per-stage AQE replan latency is paid down by
@@ -300,62 +303,34 @@ object Graph {
     var remNodes = nodes0.select(col("id").cast("bigint").as("id"))
       .localCheckpoint()
     var remaining = remNodes.count()
+    val distinctEdges = edges0.select(col("u").cast("bigint").as("u"),
+        col("v").cast("bigint").as("v"))
+      .filter(col("u") =!= col("v")).distinct()
+      .localCheckpoint()
+    val edgeCount = distinctEdges.count() // one constant-size sizing job
     // Loop-frame partition count DERIVED from the live graph size (the
     // ss31 discipline), from nodes AND edges: the iterative stages are
     // scheduling-latency-bound over few bytes, and AQE re-plans every
     // one of the ~30 tiny stages — single-task frames at this scale cut
     // per-stage cost ~5×, while the divisors keep parallelism growing
-    // linearly with the graph. The edge term was added for the
-    // UNSAMPLED gr19 audit (16k nodes carrying ~700k live edges at
-    // sf0.1 — node count alone coalesced the whole loop to one
-    // partition); it is a constant upper bound from entry (counting
-    // shrinking edges every round would add a job per peel round for
-    // nothing — oversized late frames just schedule a few empty tasks).
-    // Only the loop frames coalesce; the fact-table edge DERIVATION
-    // below keeps full scan/join parallelism until its checkpoint.
-    def npNodes(n: Long): Int =
-      math.max(1L, math.min(32L, n / 50000L + 1L)).toInt
-    // dedupedEdgeCount (r14): gr19/gr20 already hold edges0 DISTINCT,
-    // self-loop-free, COUNTED and eagerly checkpointed for their own
-    // audit/condensation output — the unconditional re-distinct +
-    // coalesce(1) checkpoint + re-spread checkpoint here re-shuffled
-    // the same ~700k-edge frame three times, two of them through ONE
-    // task (measured ~3 s of gr19's ~11 s at sf0.1). With the hint the
-    // loop consumes the caller's checkpoint through a narrow coalesce —
-    // zero additional edge materializations (re-running a coalesce
-    // over cached partitions per reference is free; the multi-ref
-    // eager-checkpoint rule guards expensive BUILDS, not narrow reads
-    // of an already-materialized frame).
-    var (remEdges, edgeCount) = dedupedEdgeCount match {
-      case Some(c) => (edges0, c)
-      case None =>
-        val e = edges0.select(col("u").cast("bigint").as("u"),
-            col("v").cast("bigint").as("v"))
-          .filter(col("u") =!= col("v")).distinct()
-          .coalesce(npNodes(remaining)).localCheckpoint()
-        (e, e.count()) // one constant-size sizing job
-    }
-    def np(n: Long): Int =
-      math.max(1L, math.min(32L,
-        math.max(n / 50000L, edgeCount / 100000L) + 1L)).toInt
-    // edge-heavy + node-light (the gr19 shape): re-spread the loop-
-    // carried edge frame once, or every hop join runs near-serial
-    dedupedEdgeCount match {
-      case Some(_) =>
-        // ONE materialization at loop width (vs distinct + coalesce(1)
-        // + re-spread = three): the loop references this frame ~15×
-        // per round, so it must read np cached partitions, not
-        // re-coalesce the caller's 32 every time
-        val parts = remEdges.rdd.getNumPartitions
-        remEdges =
-          (if (np(remaining) < parts) remEdges.coalesce(np(remaining))
-           else if (np(remaining) > parts)
-             remEdges.repartition(np(remaining))
-           else remEdges).localCheckpoint()
-      case None =>
-        if (np(remaining) > npNodes(remaining))
-          remEdges = remEdges.repartition(np(remaining)).localCheckpoint()
-    }
+    // linearly with the graph. The edge term (an edge weighs half a
+    // node) was added for the UNSAMPLED gr19 audit (16k nodes carrying
+    // ~700k live edges at sf0.1 — node count alone coalesced the whole
+    // loop to one partition); it is a constant upper bound from entry
+    // (counting shrinking edges every round would add a job per peel
+    // round for nothing — oversized late frames just schedule a few
+    // empty tasks).
+    def np(n: Long): Int = graft.Par.loopWidth(math.max(n, edgeCount / 2L))
+    // the loop references the edge frame ~15× per round, so it must read
+    // np cached partitions, not re-coalesce the distinct's width each time
+    val parts = distinctEdges.rdd.getNumPartitions
+    val edges =
+      if (np(remaining) < parts)
+        distinctEdges.coalesce(np(remaining)).localCheckpoint()
+      else if (np(remaining) > parts)
+        distinctEdges.repartition(np(remaining)).localCheckpoint()
+      else distinctEdges
+    var remEdges = edges
     def ck(df: DataFrame): DataFrame =
       df.coalesce(np(remaining)).localCheckpoint()
     // start from an EMPTY typed frame (not null): an empty node set
@@ -409,7 +384,7 @@ object Graph {
           remaining -= trimmedN
         }
       }
-      if (remaining == 0L) return assigned
+      if (remaining == 0L) return Scc(assigned, edges, edgeCount)
       // 1. forward min-label fixpoint, TWO raw hops per round:
       // both hop joins broadcast the checkpointed edge frame under AQE
       // (no shuffle stage), so a round costs ~2 stages while covering 2
@@ -482,8 +457,68 @@ object Graph {
     if (remaining > 0L)
       sys.error(s"fwbwScc did not converge in $maxPeel peel rounds " +
         s"($remaining nodes unassigned)")
-    assigned
+    Scc(assigned, edges, edgeCount)
   }
+
+  /** [[fwbwScc]]'s result: the labels (id, scc_id), the prepared edge
+    * frame the loop started from (bigint u, v; distinct, no self-loops,
+    * checkpointed at loop width) and its row count. */
+  private[graft] case class Scc(labels: DataFrame, edges: DataFrame,
+      edgeCount: Long)
+
+  /** The entity trade graph gr18, gr19 and gr20 share: (nodes, edges)
+    * with hub-factored home edges — see [[gr18SccFwbw]]'s scaladoc for
+    * the construction and the hub-vs-clique scale argument. `sampled`
+    * keeps customers with c_custkey%50 = 0 and suppliers with
+    * s_suppkey%5 = 0 (gr18, gr20: the DuckDB oracle's closure stays
+    * tractable); unsampled is the whole fact graph (gr19). Edges are
+    * raw: duplicates stay for [[fwbwScc]] to drop. */
+  private def entityGraph(s: SparkSession, d: String, sampled: Boolean)
+      : (DataFrame, DataFrame) = {
+    def sample(df: DataFrame, key: String, m: Int): DataFrame =
+      if (sampled) df.filter(col(key) % m === 0) else df
+    val cust = sample(t(s, d, "customer"), "c_custkey", 50)
+      .select(col("c_custkey").cast("bigint").as("id"),
+        col("c_nationkey").as("nk"))
+    val sup = sample(t(s, d, "supplier"), "s_suppkey", 5)
+      .select((col("s_suppkey") + lit(10000000L)).as("id"),
+        col("s_nationkey").as("nk"))
+    // trade edges carry their node ids IN the fact columns, so the
+    // mod-sampling applies at the scans (lineitem 1/5, orders 1/50 —
+    // the pruned orders side broadcasts into the one fact join) and no
+    // dimension join is needed at all
+    val trade =
+      sample(t(s, d, "lineitem").select("l_orderkey", "l_suppkey"),
+          "l_suppkey", 5)
+        .join(sample(t(s, d, "orders").select("o_orderkey", "o_custkey"),
+            "o_custkey", 50),
+          col("l_orderkey") === col("o_orderkey"))
+        .select((col("l_suppkey") + lit(10000000L)).cast("bigint").as("u"),
+          col("o_custkey").cast("bigint").as("v"))
+    // domestic recirculation through per-nation hubs: O(|C|+|S|)
+    // edges, map-side projections only — no join, no 25-key
+    // parallelism cap, no quadratic clique (see scaladoc)
+    val hubOff = lit(20000000L)
+    val home = cust
+      .select(col("id").as("u"),
+        (col("nk") + hubOff).cast("bigint").as("v"))
+      .unionAll(sup.select((col("nk") + hubOff).cast("bigint").as("u"),
+        col("id").as("v")))
+    val hubs = t(s, d, "nation")
+      .select((col("n_nationkey") + hubOff).cast("bigint").as("id"))
+    val nodes = cust.select("id").unionAll(sup.select("id"))
+      .unionAll(hubs)
+    (nodes, trade.unionAll(home))
+  }
+
+  /** gr17's and gr18's output: per node (id, scc_id), the SCC's size and
+    * whether it is a multi-node core, ordered by id. */
+  private def withSccSize(scc: DataFrame): DataFrame =
+    scc.join(scc.groupBy("scc_id").agg(count(lit(1)).as("scc_size")),
+        Seq("scc_id"))
+      .select(col("id"), col("scc_id"), col("scc_size"),
+        (col("scc_size") >= 2L).as("is_core"))
+      .orderBy("id")
 
   /** gr18: SCC on the ENTITY-LEVEL directed trade graph via [[fwbwScc]]
     * — gr17's promised fact-scale algorithm, actually run at entity
@@ -509,63 +544,17 @@ object Graph {
     * unsampled at fact scale. `GraphSpec` also pins fwbwScc ≡ gr17's
     * closure-derived labels on the shared 3-NN nation graph.
     */
-  /** The SAMPLED entity trade graph gr18/gr20 share: (nodes, edges)
-    * with hub-factored home edges — see [[gr18SccFwbw]]'s scaladoc for
-    * the construction and the hub-vs-clique scale argument. */
-  private def sampledEntityGraph(s: SparkSession, d: String)
-      : (DataFrame, DataFrame) = {
-    val cust = t(s, d, "customer")
-      .filter(col("c_custkey") % 50 === 0)
-      .select(col("c_custkey").cast("bigint").as("id"),
-        col("c_nationkey").as("nk"))
-    val sup = t(s, d, "supplier")
-      .filter(col("s_suppkey") % 5 === 0)
-      .select((col("s_suppkey") + lit(10000000L)).as("id"),
-        col("s_nationkey").as("nk"), col("s_suppkey").as("sk"))
-    // trade edges carry their node ids IN the fact columns, so the
-    // mod-sampling applies at the scans (lineitem 1/5, orders 1/50 —
-    // the pruned orders side broadcasts into the one fact join) and no
-    // dimension join is needed at all
-    val trade = t(s, d, "lineitem").select("l_orderkey", "l_suppkey")
-      .filter(col("l_suppkey") % 5 === 0)
-      .join(t(s, d, "orders").select("o_orderkey", "o_custkey")
-          .filter(col("o_custkey") % 50 === 0),
-        col("l_orderkey") === col("o_orderkey"))
-      .select((col("l_suppkey") + lit(10000000L)).cast("bigint").as("u"),
-        col("o_custkey").cast("bigint").as("v"))
-    // domestic recirculation through per-nation hubs: O(|C|+|S|)
-    // edges, map-side projections only — no join, no 25-key
-    // parallelism cap, no quadratic clique (see scaladoc)
-    val hubOff = lit(20000000L)
-    val home = cust
-      .select(col("id").as("u"),
-        (col("nk") + hubOff).cast("bigint").as("v"))
-      .unionAll(sup.select((col("nk") + hubOff).cast("bigint").as("u"),
-        col("id").as("v")))
-    val hubs = t(s, d, "nation")
-      .select((col("n_nationkey") + hubOff).cast("bigint").as("id"))
-    val nodes = cust.select("id").unionAll(sup.select("id"))
-      .unionAll(hubs)
-    (nodes, trade.unionAll(home))
-  }
-
   val gr18SccFwbw: Q = (s, d) => {
-    val (nodes, edges) = sampledEntityGraph(s, d)
+    val (nodes, edges) = entityGraph(s, d, sampled = true)
     // hubs are plumbing, not entities: drop them BEFORE sizing so
     // scc_size counts real nodes exactly as the clique formulation did
-    val scc = fwbwScc(nodes, edges)
-      .filter(col("id") < 20000000L)
-    scc.join(scc.groupBy("scc_id").agg(count(lit(1)).as("scc_size")),
-        Seq("scc_id"))
-      .select(col("id"), col("scc_id"), col("scc_size"),
-        (col("scc_size") >= 2L).as("is_core"))
-      .orderBy("id")
+    withSccSize(fwbwScc(nodes, edges).labels.filter(col("id") < 20000000L))
   }
 
   /** gr20: CONDENSATION DAG LEVELS — the canonical consumer of an SCC
     * pass: contract every strongly-connected component of the sampled
     * entity graph (gr18's labels, hub-factored construction shared via
-    * [[sampledEntityGraph]]) to one node; the contracted graph is
+    * [[entityGraph]]) to one node; the contracted graph is
     * acyclic BY CONSTRUCTION, so a longest-path "level" is well-defined
     * and gives each component its position in the dependency order —
     * the number a curriculum/staging planner reads ("which trade
@@ -583,22 +572,21 @@ object Graph {
     * the longest path as a recursive CTE over the (tiny) condensed DAG.
     */
   val gr20Condensation: Q = (s, d) => {
-    val (nodes, edges0) = sampledEntityGraph(s, d)
-    val edges = edges0.filter(col("u") =!= col("v")).distinct()
-      .localCheckpoint() // 2 refs: the SCC loop + the condensation map
-    // one cheap count on the materialized frame buys the fwbwScc
-    // deduped-edges fast path (see the gr19 note)
-    val scc = fwbwScc(nodes, edges, Some(edges.count()))
+    val (nodes, edges) = entityGraph(s, d, sampled = true)
+    val r = fwbwScc(nodes, edges)
+    val scc = r.labels
       .localCheckpoint() // 4 refs: two condensation joins + sizing + ids
     val sccIds = scc.select(col("scc_id").as("n")).distinct()
       .localCheckpoint() // 2 refs: the width-sizing count + level seed
-    // loop-frame width DERIVES from the live condensation size (the
-    // fwbwScc np() rule): a near-acyclic graph condenses to ~|V|
-    // components and a hardcoded single-partition frame would run the
-    // whole level loop serial; at graded SFs this resolves to 1
+    // loop-frame width DERIVES from the live condensation size
+    // (Par.loopWidth, fwbwScc's rule): a near-acyclic graph condenses to
+    // ~|V| components and a hardcoded single-partition frame would run
+    // the whole level loop serial; at graded SFs this resolves to 1
     val nScc = sccIds.count()
-    val npC = npScc(nScc)
-    val ce0 = edges
+    val npC = graft.Par.loopWidth(nScc)
+    // the condensation map reads fwbwScc's prepared (distinct, self-
+    // loop-free, checkpointed) edge frame
+    val ce0 = r.edges
       .join(scc.select(col("id").as("u"), col("scc_id").as("cu")),
         Seq("u"))
       .join(scc.select(col("id").as("v"), col("scc_id").as("cv")),
@@ -623,11 +611,6 @@ object Graph {
         coalesce(col("out_deg"), lit(0L)).as("out_deg"))
       .orderBy("scc_id")
   }
-
-  /** Loop-frame width for an O(#SCC)-row condensation frame — the
-    * fwbwScc np() node rule applied to the live component count. */
-  private[graft] def npScc(n: Long): Int =
-    math.max(1L, math.min(32L, n / 50000L + 1L)).toInt
 
   /** Longest-path levels over a condensed (acyclic) edge list `ce`
     * (columns u, v) starting every node in `sccIds` (column n) at
@@ -681,7 +664,7 @@ object Graph {
     * runtime at sf0.1/local[32]: 12.0 s wall, Bench noop-sink
     * discipline (trim retires the acyclic fringe, one forward/backward
     * round captures the giant SCC, edge-aware loop frames keep the hop
-    * joins parallel — see the np() scaladoc). No SQL oracle CAN exist
+    * joins parallel — see fwbwScc's np()). No SQL oracle CAN exist
     * at this scale (a closure
     * is exactly what the algorithm avoids — 15000² reach pairs);
     * instead `GraphSpec` pins the audit counts against an in-JVM
@@ -689,46 +672,16 @@ object Graph {
     * where the whole edge set fits on the driver.
     */
   val gr19SccAudit: Q = (s, d) => {
-    val hubOff = lit(20000000L)
-    val cust = t(s, d, "customer")
-      .select(col("c_custkey").cast("bigint").as("id"),
-        col("c_nationkey").as("nk"))
-    val sup = t(s, d, "supplier")
-      .select((col("s_suppkey") + lit(10000000L)).cast("bigint").as("id"),
-        col("s_nationkey").as("nk"))
-    val trade = t(s, d, "lineitem").select("l_orderkey", "l_suppkey")
-      .join(t(s, d, "orders").select("o_orderkey", "o_custkey"),
-        col("l_orderkey") === col("o_orderkey"))
-      .select((col("l_suppkey") + lit(10000000L)).cast("bigint").as("u"),
-        col("o_custkey").cast("bigint").as("v"))
-    val home = cust
-      .select(col("id").as("u"),
-        (col("nk") + hubOff).cast("bigint").as("v"))
-      .unionAll(sup.select((col("nk") + hubOff).cast("bigint").as("u"),
-        col("id").as("v")))
-    val hubs = t(s, d, "nation")
-      .select((col("n_nationkey") + hubOff).cast("bigint").as("id"))
-    val nodes = cust.select("id").unionAll(sup.select("id"))
-      .unionAll(hubs)
-    // dedup + checkpoint ONCE here so the audit's n_edges count and the
-    // loop consume the same materialized frame (fwbwScc's internal
-    // distinct over an already-distinct checkpoint is a cheap no-op
-    // pass, not a second fact-join)
-    val edges = trade.unionAll(home)
-      .filter(col("u") =!= col("v")).distinct()
-      .localCheckpoint()
-    val nEdges = edges.count()
-    // deduped+counted+checkpointed here → the hint skips fwbwScc's own
-    // edge re-distinct and its two loop-width rematerializations (r14)
-    val scc = fwbwScc(nodes, edges, Some(nEdges))
-      .filter(col("id") < hubOff)
+    val (nodes, edges) = entityGraph(s, d, sampled = false)
+    val r = fwbwScc(nodes, edges)
+    val scc = r.labels.filter(col("id") < 20000000L)
       .localCheckpoint() // 2 consumers: the count agg + the size agg
     val flat = scc.agg(count(lit(1)).as("n_nodes"),
       countDistinct(col("scc_id")).as("n_scc"))
     val big = scc.groupBy("scc_id").agg(count(lit(1)).as("sz"))
       .agg(max("sz").as("max_scc"))
     flat.crossJoin(broadcast(big)) // 1×1 frames
-      .select(col("n_nodes"), lit(nEdges).as("n_edges"),
+      .select(col("n_nodes"), lit(r.edgeCount).as("n_edges"),
         col("n_scc"), col("max_scc"))
       .withColumn("giant_share_x10k",
         expr("max_scc * 10000 DIV n_nodes")) // DIV: stays BIGINT

@@ -1755,16 +1755,21 @@ object Similarity {
     * reuses ss18's bounded-scan plan unchanged. The final join touches
     * 30 id pairs.
     */
-  def ivfPqRecall(s: SparkSession, d: String): DataFrame = {
+  def ivfPqRecall(s: SparkSession, d: String): DataFrame =
+    recallAt3(s, d, ivfPqSearch(s, d))
+
+  /** The exact cosine top-3 (query_id, neighbor_id) of the 10 sampled
+    * queries (vec_id < 10) over `base` (vec_id, embedding, norm): the
+    * recall denominator of ss19, ss35 and ss36, one 10-query broadcast
+    * brute-force pass. */
+  private def exactTop3(base: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val base = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-      .withColumn("norm", l2norm(col("embedding")))
     val qs = base.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("norm").as("q_norm"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("cos_raw").desc, col("neighbor_id"))
-    val exact3 = base.crossJoin(broadcast(qs))
+    base.crossJoin(broadcast(qs))
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("neighbor_id", col("vec_id"))
       .withColumn("cos_raw",
@@ -1772,9 +1777,19 @@ object Similarity {
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 3)
       .select(col("query_id"), col("neighbor_id"))
-    val got3 = ivfPqSearch(s, d)
+  }
+
+  /** ss19's and ss35's per-query rollup (n_exact, n_hit, recall@3) of
+    * the answers `got` (query_id, neighbor_id) against [[exactTop3]]
+    * over the embeddings. */
+  private def recallAt3(s: SparkSession, d: String, got: DataFrame)
+      : DataFrame = {
+    val base = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
+      .withColumn("norm", l2norm(col("embedding")))
+    val got3 = got
       .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-    exact3.join(broadcast(got3), Seq("query_id", "neighbor_id"), "left")
+    exactTop3(base)
+      .join(broadcast(got3), Seq("query_id", "neighbor_id"), "left")
       .groupBy("query_id")
       .agg(count(lit(1)).as("n_exact"),
         sum(coalesce(col("hit"), lit(0))).cast("bigint").as("n_hit"))
@@ -1797,33 +1812,8 @@ object Similarity {
     * Scale: ss34's own plan plus one broadcast exact top-3 over the
     * 10 query rows — the audit costs one extra constant-size join.
     */
-  def ss35FrozenRecall(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val base = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-      .withColumn("norm", l2norm(col("embedding")))
-    val qs = base.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("norm").as("q_norm"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos_raw").desc, col("neighbor_id"))
-    val exact3 = base.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("neighbor_id", col("vec_id"))
-      .withColumn("cos_raw",
-        dot(col("embedding"), col("q_emb")) / (col("norm") * col("q_norm")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .select(col("query_id"), col("neighbor_id"))
-    val got3 = ss34DeltaIndex(s, d)
-      .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-    exact3.join(broadcast(got3), Seq("query_id", "neighbor_id"), "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0))).cast("bigint").as("n_hit"))
-      .withColumn("recall_at_3",
-        round(col("n_hit").cast("double") / col("n_exact"), 4))
-      .orderBy("query_id")
-  }
+  def ss35FrozenRecall(s: SparkSession, d: String): DataFrame =
+    recallAt3(s, d, ss34DeltaIndex(s, d))
 
   /** ss36: SEGMENT COMPACTION — the missing second half of the
     * ss33/ss34 index lifecycle (ingest → segment → COMPACT): rebuild
@@ -1848,7 +1838,6 @@ object Similarity {
     * The exact side is the 10-query broadcast recall denominator.
     */
   def ss36CompactedRecall(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // the frozen segmented path's answers (ss34's writes + probe)
     val frozen3 = ss34DeltaIndex(s, d)
       .select(col("query_id"), col("neighbor_id"), lit(1).as("fhit"))
@@ -1860,20 +1849,7 @@ object Similarity {
     val compact3 = ivfPqProbe(all, s.table(tbls("graft_ivf_compact")),
       s.table(tbls("graft_pq_compact")), probes)
       .select(col("query_id"), col("neighbor_id"), lit(1).as("chit"))
-    val qs = all.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("norm").as("q_norm"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos_raw").desc, col("neighbor_id"))
-    val exact3 = all.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("neighbor_id", col("vec_id"))
-      .withColumn("cos_raw",
-        dot(col("embedding"), col("q_emb")) / (col("norm") * col("q_norm")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .select(col("query_id"), col("neighbor_id"))
-    exact3
+    exactTop3(all)
       .join(broadcast(frozen3), Seq("query_id", "neighbor_id"), "left")
       .join(broadcast(compact3), Seq("query_id", "neighbor_id"), "left")
       .groupBy("query_id")

@@ -44,12 +44,19 @@ object Render {
         .mkString("{", ",", "}")
     case a: scala.collection.Seq[_] =>
       a.map(jsonValue).mkString("[", ",", "]")
+    // binary before the generic array case, which would match it too
+    case b: Array[Byte] => jsonString(base64(b))
     case a: Array[_] => a.toSeq.map(jsonValue).mkString("[", ",", "]")
-    case b: Array[Byte] => jsonString(java.util.Base64.getEncoder.encodeToString(b))
     case other => jsonString(other.toString)
   }
 
-  private def jsonString(s: String): String =
+  /** Binary cells render as base64 in both sinks. */
+  private def base64(b: Array[Byte]): String =
+    java.util.Base64.getEncoder.encodeToString(b)
+
+  /** JSON string literal: escapes the quote, the backslash and every
+    * control character (< 0x20). */
+  private[graft] def jsonString(s: String): String =
     "\"" + s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"
@@ -78,6 +85,7 @@ object Render {
     case r: Row => jsonValue(r)
     case m: scala.collection.Map[_, _] => jsonValue(m)
     case a: scala.collection.Seq[_] => jsonValue(a)
+    case b: Array[Byte] => base64(b)
     case x => x.toString
   }
 

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 import java.util.Base64
 import scala.jdk.CollectionConverters._
 import org.yaml.snakeyaml.Yaml
@@ -148,15 +148,5 @@ object K8sApi {
         fetchList(cfg, http, kind))
     }
     outDir
-  }
-
-  /** CLI seam: a path that is a kubeconfig file → live snapshot into a
-    * temp dir; a directory → fixture snapshot as-is.
-    */
-  def resolveSnapshotDir(arg: String): String = {
-    val p = Paths.get(arg)
-    if (Files.isDirectory(p)) arg
-    else snapshot(fromKubeconfig(p),
-      Files.createTempDirectory("k8s-snapshot")).toString
   }
 }

@@ -310,7 +310,7 @@ class GraphSpec extends SparkSpec {
         col("dst").cast("bigint").as("v"))
     val nodes = Tables.t(spark, sf, "nation")
       .select(col("n_nationkey").cast("bigint").as("id"))
-    val fwbw = Graph.fwbwScc(nodes, dirE)
+    val fwbw = Graph.fwbwScc(nodes, dirE).labels
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val closure = Graph.queries("gr17_scc")(spark, sf)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -347,7 +347,7 @@ class GraphSpec extends SparkSpec {
       .join(sup.select(col("id").as("v"), col("nk")), Seq("nk"))
       .select("u", "v")
     val nodes = cust.select("id").unionAll(sup.select("id"))
-    val truth = Graph.fwbwScc(nodes, trade.unionAll(clique))
+    val truth = Graph.fwbwScc(nodes, trade.unionAll(clique)).labels
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val got = Graph.queries("gr18_scc_fwbw")(spark, sf)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -363,9 +363,34 @@ class GraphSpec extends SparkSpec {
     val nodes = Tables.t(spark, sf, "nation")
       .select(col("n_nationkey").cast("bigint").as("id")).limit(0)
     val out = Graph.fwbwScc(nodes,
-      nodes.select(col("id").as("u"), col("id").as("v")))
+      nodes.select(col("id").as("u"), col("id").as("v"))).labels
     assert(out.columns.toSeq == Seq("id", "scc_id"))
     assert(out.count() == 0L)
+  }
+
+  test("fwbwScc prepares raw edges itself: duplicates, self-loops and " +
+      "int ids give the labels and edge count of the cleaned edge set") {
+    import spark.implicits._
+    // two 3-cycles joined one way, a feeder, an isolated node; every
+    // edge duplicated, self-loops on 0, 4 and 7, ids typed INT
+    val clean = Seq((0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 5),
+      (5, 3), (6, 0))
+    val raw = (clean ++ clean ++ Seq((0, 0), (4, 4), (7, 7), (4, 4)))
+      .toDF("u", "v")
+    val nodes = (0 to 7).toDF("id")
+    val got = Graph.fwbwScc(nodes, raw)
+    val truth = Graph.fwbwScc(nodes.select(col("id").cast("bigint")),
+      clean.map { case (u, v) => (u.toLong, v.toLong) }.toDF("u", "v"))
+    def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labels(got.labels) == labels(truth.labels))
+    assert(labels(got.labels) == Map(0L -> 0L, 1L -> 0L, 2L -> 0L,
+      3L -> 3L, 4L -> 3L, 5L -> 3L, 6L -> 6L, 7L -> 7L))
+    assert(got.edgeCount == clean.size.toLong)
+    assert(got.edges.schema.map(f => f.name -> f.dataType.sql) ==
+      Seq("u" -> "BIGINT", "v" -> "BIGINT"))
+    assert(got.edges.as[(Long, Long)].collect().toSet ==
+      clean.map { case (u, v) => (u.toLong, v.toLong) }.toSet)
   }
 
   test("gr19: unsampled audit counts match an in-JVM Tarjan SCC on " +
@@ -554,15 +579,30 @@ class GraphSpec extends SparkSpec {
     assert(got.values.exists(_._2 >= 2L), "DAG depth < 2 — fixture flat")
   }
 
-  test("gr20 loop frames: width derives from the live SCC count " +
-      "(npScc), and dagLevels carries exactly that width") {
-    // the np() rule applied to the condensation size: 1 partition up
-    // to 50k components, then linear growth, capped at 32
-    assert(Graph.npScc(1L) == 1)
-    assert(Graph.npScc(49999L) == 1)
-    assert(Graph.npScc(50000L) == 2)
-    assert(Graph.npScc(500000L) == 11)
-    assert(Graph.npScc(10000000L) == 32)
+  test("Par.loopWidth keeps the loop widths: 1 partition per 50k rows, " +
+      "capped at 32, and max(n, e / 2) is the edge-aware rule") {
+    // the node rule gr20 applies to the condensation size: 1 partition
+    // up to 50k components, then linear growth, capped at 32
+    assert(Par.loopWidth(0L) == 1)
+    assert(Par.loopWidth(1L) == 1)
+    assert(Par.loopWidth(49999L) == 1)
+    assert(Par.loopWidth(50000L) == 2)
+    assert(Par.loopWidth(500000L) == 11)
+    assert(Par.loopWidth(10000000L) == 32)
+    // fwbwScc's edge-aware width was max(1, min(32, max(n / 50000,
+    // e / 100000) + 1)); loopWidth(max(n, e / 2)) must equal it
+    def oldNp(n: Long, e: Long): Int =
+      math.max(1L, math.min(32L,
+        math.max(n / 50000L, e / 100000L) + 1L)).toInt
+    for ((n, e) <- Seq((0L, 0L), (16000L, 700000L), (49999L, 99999L),
+        (49999L, 100000L), (50000L, 1L), (1L, 199999L), (120000L, 99999L),
+        (3L, 3300001L), (10000000L, 5L), (1L, 1L << 40)))
+      assert(Par.loopWidth(math.max(n, e / 2L)) == oldNp(n, e),
+        s"n=$n e=$e")
+  }
+
+  test("gr20 loop frames: dagLevels carries exactly the width it is " +
+      "given") {
     // dagLevels' loop-carried frame is coalesced to the requested
     // width — the r9 hardcoded coalesce(1) is gone (a chain DAG
     // 0→1→2→3→4 at npC=4 must come back 4-way AND correctly leveled)

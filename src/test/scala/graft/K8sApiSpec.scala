@@ -1,9 +1,11 @@
 package graft
 
+import java.io.{BufferedReader, OutputStream, PrintStream, StringReader}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 import com.sun.net.httpserver.HttpServer
+import graft.server.Ksql
 import graft.sources.{K8sApi, K8sSnapshot}
 
 /** Live-API connection layer (S1-S3): kubeconfig resolution, bearer
@@ -67,7 +69,10 @@ class K8sApiSpec extends SparkSpec {
       val port = srv.getAddress.getPort
       val f = Files.createTempFile("kubeconfig", ".yaml")
       Files.writeString(f, kubeconfigYaml(s"http://localhost:$port"))
-      val dir = K8sApi.resolveSnapshotDir(f.toString)
+      // a kubeconfig path (not a directory) → live snapshot into a temp dir
+      val dir = Ksql.resolveSource(Some(f.toString),
+        new BufferedReader(new StringReader("")),
+        new PrintStream(OutputStream.nullOutputStream())).dir
       assert(sawAuth.contains("Bearer sekrit-token"))
       val tables = K8sSnapshot.load(spark, dir)
       assert(tables("pods").count() == 4)

@@ -1,9 +1,11 @@
 package graft
 
+import java.io.{BufferedReader, OutputStream, PrintStream, StringReader}
 import java.net.InetSocketAddress
 import java.nio.file.{Files, Paths}
 import java.util.Base64
 import com.sun.net.httpserver.{HttpsConfigurator, HttpsParameters, HttpsServer}
+import graft.server.Ksql
 import graft.sources.{K8sApi, K8sSnapshot, Pem}
 import graft.sources.K8sApi.ClusterConfig
 
@@ -83,7 +85,10 @@ class K8sTlsSpec extends SparkSpec {
       val port = srv.getAddress.getPort
       val f = Files.createTempFile("kubeconfig-tls", ".yaml")
       Files.writeString(f, kubeconfigYaml(s"https://localhost:$port"))
-      val dir = K8sApi.resolveSnapshotDir(f.toString)
+      // a kubeconfig path (not a directory) → live snapshot into a temp dir
+      val dir = Ksql.resolveSource(Some(f.toString),
+        new BufferedReader(new StringReader("")),
+        new PrintStream(OutputStream.nullOutputStream())).dir
       // the server saw (and authenticated) the client certificate
       assert(sawPeer.contains("CN=graft-client"), sawPeer)
       val tables = K8sSnapshot.load(spark, dir)

@@ -36,4 +36,10 @@ class RenderSpec extends SparkSpec {
     assert(json.contains("[1,2]"))
     assert(json.contains("null"))
   }
+
+  test("binary cells render as base64 in the JSON and the ASCII table") {
+    val r = Render.process(spark.sql("select unhex('cafe') as b"))
+    assert(Render.toJson(r).contains("[\"yv4=\"]"))
+    assert(Render.toAscii(r).contains("| yv4= |"))
+  }
 }
