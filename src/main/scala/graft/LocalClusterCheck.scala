@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Deterministic result digest for cross-session/cross-topology parity
   * checks: every SparkEntry query ends in a total ORDER BY, so the
@@ -33,13 +33,9 @@ object LocalClusterCheck {
   def main(args: Array[String]): Unit = {
     val (sfDir, names) = (args(0), args(1).split(","))
     val classes = new java.io.File("target/scala-2.13/classes").getAbsolutePath
-    val spark = Tables.configure(SparkSession.builder()
-      .master("local-cluster[2,4,2048]")
+    val spark = Tables.batchSession("local-cluster[2,4,2048]", "8")
       .appName("graft-local-cluster-check")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.executor.extraClassPath", classes))
+      .config("spark.executor.extraClassPath", classes)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { n =>

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev/audit tool: print the formatted physical plan and wall time of one
   * SparkEntry query (the .explain("formatted") loop the scale design work
   * runs per operator — SURVEY §8 "Scale design decisions").
@@ -14,13 +12,8 @@ object PlanDump {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val mode = if (args.length > 2) args(2) else "both"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = Tables.batchSession(s"local[$cpus]", cpus)
+      .appName("graft-plandump").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val fn = SparkEntry.queries(name)
     if (mode != "time") fn(spark, sfDir).explain("formatted")

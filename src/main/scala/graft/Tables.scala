@@ -33,6 +33,19 @@ object Tables {
   def configure(b: SparkSession.Builder): SparkSession.Builder =
     sessionConfs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
 
+  /** The batch-session builder shared by Verify, Bench, PlanDump,
+    * Scratch, LocalClusterCheck and the test suites: [[sessionConfs]]
+    * plus `partitions` shuffle partitions, the UTC session zone every
+    * oracle's date math assumes, and no UI. (The ksql REPL builds its
+    * own session: it does not set UTC.) */
+  def batchSession(master: String, partitions: String)
+      : SparkSession.Builder =
+    configure(SparkSession.builder()
+      .master(master)
+      .config("spark.sql.shuffle.partitions", partitions)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false"))
+
   /** One parquet-backed DataFrame; pushdown-friendly (no cache). Requires
     * a session built with [[configure]] (for the nanos-events read).
     *

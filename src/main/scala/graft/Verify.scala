@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -17,11 +16,7 @@ object Verify {
     // class of bug local[*] structurally cannot catch). Executors launch
     // from SPARK_HOME and need only our compiled classes added.
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val b = Tables.configure(SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
+    val b = Tables.batchSession(master, cpus)
     if (master.startsWith("local-cluster")) {
       val classes = new java.io.File("target/scala-2.13/classes").getAbsolutePath
       b.config("spark.executor.extraClassPath", classes)

@@ -30,6 +30,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *      in-flight reader that resolved just before the swap keeps its
   *      files), generations before it are dropped.
   *
+  * SEGMENTS: each family has ONE segment writer returning its parts —
+  * `Curation.textSegment` (postings by token + the (n_docs, sum_dl)
+  * sidecar), `Dedup.bandSegment` (band postings by bandkey + shingle
+  * store by base_id), `Similarity.ivfSegment` (lists by cluster + PQ
+  * codes by neighbor_id) — and ONE serve over every segment of a
+  * published map (`textServe`, `bandServe`, `ivfServe`). A build,
+  * compaction or purge publishes one segment in full; an append
+  * publishes one more with `carryForward`; the serve never names a
+  * base or delta segment.
+  *
   * CONCURRENCY: two writers of the SAME family+namespace still race on
   * the generation counter (last swap wins; both write valid
   * generations, so readers are never broken — the loser's work is

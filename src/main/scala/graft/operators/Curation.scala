@@ -610,8 +610,40 @@ object Curation {
 
   private[graft] val bm25Terms = Seq("query", "table", "stream")
 
+  /** The text index's segment writer: token-bucketed postings `post`
+    * plus the 1-row (n_docs, sum_dl) sidecar `stats` of `docs` — the
+    * parts every text build, append, compaction and purge publishes. */
+  private[graft] def textSegment(post: String, stats: String,
+      docs: DataFrame): Seq[Bucketing.Part] = Seq(
+    Bucketing.Part(post, bm25Postings(docs), Some("token")),
+    Bucketing.Part(stats, bm25Stats(docs)))
+
+  /** BM25 served over EVERY segment of one published map: the postings
+    * parts named `post*` are each probed with the term filter (pushed
+    * into its bucketed scan) and unioned, the `stats*` sidecars are
+    * summed, and [[bm25Serve]] scores — merge at scoring, exact because
+    * a doc lives in one segment (df = Σ per-segment df; avgdl =
+    * Σsum_dl / Σn_docs in integers). A single segment's sidecar is
+    * read as is, so the one-segment serve plans no stats aggregate. */
+  private[graft] def textServe(s: SparkSession, tbls: Map[String, String],
+      post: String, stats: String): DataFrame = {
+    def arm(prefix: String): Seq[DataFrame] = tbls.toSeq.collect {
+      case (p, t) if p.startsWith(prefix) => t
+    }.sorted.map(s.table)
+    val probed = arm(post)
+      .map(_.filter(col("token").isin(bm25Terms: _*)))
+      .reduce(_.unionAll(_))
+    val sidecars = arm(stats)
+    val merged =
+      if (sidecars.size == 1) sidecars.head
+      else sidecars.reduce(_.unionAll(_))
+        .agg(sum("n_docs").as("n_docs"), sum("sum_dl").as("sum_dl"))
+    bm25Serve(probed, merged)
+  }
+
   /** tx19's in-plan formulation over an arbitrary (doc_id, text)
-    * frame — the truth side of tx38's segment-merge spec. */
+    * frame — the truth side of tx38's segment-merge spec and tx40's
+    * unpurged ranks. */
   private[graft] def bm25InPlan(docs: DataFrame): DataFrame =
     bm25Serve(
       bm25Postings(docs).filter(col("token").isin(bm25Terms: _*)),
@@ -640,17 +672,9 @@ object Curation {
     * rule).
     */
   val tx37PersistedTextIndex: Q = (s, d) => {
-    val docs = t(s, d, "documents")
-    // atomic versioned publication: postings + stats sidecar flip
-    // together behind one manifest swap (Bucketing's contract)
-    val tbls = Bucketing.publish(s, "tx37", Seq(
-      Bucketing.Part("graft_text_postings", bm25Postings(docs),
-        Some("token")),
-      Bucketing.Part("graft_text_stats", bm25Stats(docs))))
-    bm25Serve(
-      s.table(tbls("graft_text_postings"))
-        .filter(col("token").isin(bm25Terms: _*)),
-      s.table(tbls("graft_text_stats")))
+    val tbls = Bucketing.publish(s, "tx37", textSegment(
+      "graft_text_postings", "graft_text_stats", t(s, d, "documents")))
+    textServe(s, tbls, "graft_text_postings", "graft_text_stats")
   }
 
   /** tx38: DELTA-SEGMENT TEXT INDEX — the dd36 move for the text
@@ -675,29 +699,12 @@ object Curation {
     */
   val tx38DeltaTextIndex: Q = (s, d) => {
     val docs = t(s, d, "documents")
-    val delta = textDelta(docs)
-    // gen 1: the base segment pair; gen 2: the delta APPENDS through a
-    // carry-forward manifest — base bytes never rewritten, and the
-    // pointer swap makes the segment-set change atomic (a reader
-    // resolves base-only or base∪delta, never a torn set)
-    Bucketing.publish(s, "tx38", Seq(
-      Bucketing.Part("graft_tpost_base", bm25Postings(docs),
-        Some("token")),
-      Bucketing.Part("graft_tstats_base", bm25Stats(docs))))
-    val tbls = Bucketing.publish(s, "tx38", Seq(
-      Bucketing.Part("graft_tpost_delta", bm25Postings(delta),
-        Some("token")),
-      Bucketing.Part("graft_tstats_delta", bm25Stats(delta))),
+    Bucketing.publish(s, "tx38",
+      textSegment("graft_tpost_base", "graft_tstats_base", docs))
+    val tbls = Bucketing.publish(s, "tx38", textSegment(
+        "graft_tpost_delta", "graft_tstats_delta", textDelta(docs)),
       carryForward = true)
-    // per-segment probes (each bucket-aligned); merge at scoring
-    val probed = s.table(tbls("graft_tpost_base"))
-      .filter(col("token").isin(bm25Terms: _*))
-      .unionAll(s.table(tbls("graft_tpost_delta"))
-        .filter(col("token").isin(bm25Terms: _*)))
-    val stats = s.table(tbls("graft_tstats_base"))
-      .unionAll(s.table(tbls("graft_tstats_delta")))
-      .agg(sum("n_docs").as("n_docs"), sum("sum_dl").as("sum_dl"))
-    bm25Serve(probed, stats)
+    textServe(s, tbls, "graft_tpost_", "graft_tstats_")
   }
 
   /** pp41: END-TO-END RAG CURATION FLAGSHIP — the r11 verdict's
@@ -927,17 +934,10 @@ object Curation {
     */
   val tx39CompactedTextIndex: Q = (s, d) => {
     val docs = t(s, d, "documents")
-    val delta = textDelta(docs)
-    val tbls = Bucketing.publish(s, "tx39", Seq(
-      Bucketing.Part("graft_tpost_compact",
-        bm25Postings(docs).unionAll(bm25Postings(delta)), Some("token")),
-      Bucketing.Part("graft_tstats_compact",
-        bm25Stats(docs).unionAll(bm25Stats(delta))
-          .agg(sum("n_docs").as("n_docs"), sum("sum_dl").as("sum_dl")))))
-    bm25Serve(
-      s.table(tbls("graft_tpost_compact"))
-        .filter(col("token").isin(bm25Terms: _*)),
-      s.table(tbls("graft_tstats_compact")))
+    val tbls = Bucketing.publish(s, "tx39", textSegment(
+      "graft_tpost_compact", "graft_tstats_compact",
+      docs.select("doc_id", "text").unionAll(textDelta(docs))))
+    textServe(s, tbls, "graft_tpost_compact", "graft_tstats_compact")
   }
 
   /** pp42: THE PUBLICATION LIFECYCLE, ORACLE-GATED — r13's atomic
@@ -974,20 +974,13 @@ object Curation {
         // eager: gen-1 tables leave the grace window when gen 3
         // publishes — the census must hold its bytes (≤4 rows)
         .localCheckpoint()
-    val g1 = B.publish(s, "pp42", Seq(
-      B.Part("post_base", bm25Postings(docs), Some("token")),
-      B.Part("stats_base", bm25Stats(docs))))
+    val g1 = B.publish(s, "pp42", textSegment("post_base", "stats_base", docs))
     val c1 = census(1L, g1)
-    val g2 = B.publish(s, "pp42", Seq(
-      B.Part("post_delta", bm25Postings(delta), Some("token")),
-      B.Part("stats_delta", bm25Stats(delta))), carryForward = true)
+    val g2 = B.publish(s, "pp42",
+      textSegment("post_delta", "stats_delta", delta), carryForward = true)
     val c2 = census(2L, g2)
-    val g3 = B.publish(s, "pp42", Seq(
-      B.Part("post_compact",
-        bm25Postings(docs.unionAll(delta)), Some("token")),
-      B.Part("stats_compact",
-        bm25Stats(docs).unionAll(bm25Stats(delta))
-          .agg(sum("n_docs").as("n_docs"), sum("sum_dl").as("sum_dl")))))
+    val g3 = B.publish(s, "pp42",
+      textSegment("post_compact", "stats_compact", docs.unionAll(delta)))
     val c3 = census(3L, g3)
     c1.unionAll(c2).unionAll(c3).orderBy("gen", "part")
   }
@@ -1027,19 +1020,12 @@ object Curation {
       .withColumn("owner", pmod(col("doc_id"), lit(1000L)))
       .join(erased, Seq("owner"), "left_anti")
       .drop("owner")
-    val tbls = Bucketing.publish(s, "tx40", Seq(
-      Bucketing.Part("graft_tpost_live", bm25Postings(live),
-        Some("token")),
-      Bucketing.Part("graft_tstats_live", bm25Stats(live))))
-    val purged = bm25Serve(
-      s.table(tbls("graft_tpost_live"))
-        .filter(col("token").isin(bm25Terms: _*)),
-      s.table(tbls("graft_tstats_live")))
+    val tbls = Bucketing.publish(s, "tx40",
+      textSegment("graft_tpost_live", "graft_tstats_live", live))
+    val purged = textServe(s, tbls, "graft_tpost_live", "graft_tstats_live")
     // the unpurged top-5 (tx38's union corpus, in-plan) — consumed
     // twice (old-rank join + erased-in-old-top5 census)
-    val oldRanked = bm25Serve(
-        bm25Postings(union).filter(col("token").isin(bm25Terms: _*)),
-        bm25Stats(union))
+    val oldRanked = bm25InPlan(union)
       .select(col("token"), col("doc_id"), col("rnk").as("old_rnk"))
       .localCheckpoint()
     val erasedAbove = oldRanked
@@ -1373,10 +1359,8 @@ object Curation {
     // interleaving one query's plan-build write with the other's
     // deferred collection — into silent cross-contamination.
     val docs = t(s, d, "documents")
-    val tbls = Bucketing.publish(s, "ss43", Seq(
-      Bucketing.Part("graft_s43_postings", bm25Postings(docs),
-        Some("token")),
-      Bucketing.Part("graft_s43_stats", bm25Stats(docs))))
+    val tbls = Bucketing.publish(s, "ss43",
+      textSegment("graft_s43_postings", "graft_s43_stats", docs))
     val embIds = t(s, d, "embeddings").select(col("vec_id"))
     val qtok = docs.filter(col("doc_id") < 10)
       .join(embIds.withColumnRenamed("vec_id", "doc_id"), Seq("doc_id"),

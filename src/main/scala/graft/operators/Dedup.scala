@@ -692,12 +692,6 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** verify + decide against a single shingle store — the dd29/dd35
-    * shape. */
-  private def admissionVerdict(newBatch: DataFrame, batch: DataFrame,
-      cand: DataFrame, baseSh: DataFrame): DataFrame =
-    admissionDecision(newBatch, admissionVerify(batch, cand, baseSh))
-
   private val dd29IncrementalAdmission: Q = (s, d) => {
     val docs = t(s, d, "documents").select("doc_id", "text")
     val newBatch = admissionBatch(docs)
@@ -706,9 +700,9 @@ object Dedup {
     val cand = admissionBands(batch, "new_id")
       .join(admissionBands(index, "base_id"), Seq("band", "bkey"))
       .select("new_id", "base_id").distinct()
-    admissionVerdict(newBatch, batch, cand,
+    admissionDecision(newBatch, admissionVerify(batch, cand,
       index.select(col("doc_id").as("base_id"),
-        col("shingles").as("sh_b")))
+        col("shingles").as("sh_b"))))
   }
 
   /** dd35: PERSISTED BAND INDEX — dd29's admission run against an index
@@ -730,32 +724,16 @@ object Dedup {
     * every nightly batch in production; rebuilt per run here — the
     * honest benchmark cost, the ss33 note). Buckets = 8 at fixture
     * scale; production sizes them from the corpus (the pp37 rule).
-    * Published through Bucketing's atomic versioned manifest (r13):
-    * postings + shingle store flip together, crash-safe, namespaced
-    * under the TVF surface.
     */
   private val dd35PersistedBands: Q = (s, d) => {
     val docs = t(s, d, "documents").select("doc_id", "text")
     val newBatch = admissionBatch(docs)
-    val index = admissionSig(docs)
-    // atomic versioned publication: postings + shingle store flip
-    // together behind one manifest swap (Bucketing's contract)
-    val tbls = Bucketing.publish(s, "dd35", Seq(
-      Bucketing.Part("graft_dedup_bands",
-        admissionBands(index, "base_id")
-          .select(concat_ws(":", col("band"), col("bkey")).as("bandkey"),
-            col("base_id")), Some("bandkey")),
-      Bucketing.Part("graft_dedup_shingles",
-        index.select(col("doc_id").as("base_id"),
-          col("shingles").as("sh_b")), Some("base_id"))))
+    val tbls = Bucketing.publish(s, "dd35", bandSegment(
+      "graft_dedup_bands", "graft_dedup_shingles", admissionSig(docs)))
     val batch = admissionSig(newBatch)
-    val cand = admissionBands(batch, "new_id")
-      .select(concat_ws(":", col("band"), col("bkey")).as("bandkey"),
-        col("new_id"))
-      .join(s.table(tbls("graft_dedup_bands")), Seq("bandkey"))
-      .select("new_id", "base_id").distinct()
-    admissionVerdict(newBatch, batch, cand,
-      s.table(tbls("graft_dedup_shingles")))
+    admissionDecision(newBatch, bandServe(s, tbls, batch,
+      bandPostings(batch, "new_id"), "graft_dedup_bands",
+      "graft_dedup_shingles"))
   }
 
   /** dd36: DELTA-SEGMENT BAND INDEX — the ss34 move for the dedup
@@ -789,6 +767,33 @@ object Dedup {
       .select(concat_ws(":", col("band"), col("bkey")).as("bandkey"),
         col(idc))
 
+  /** The band index's segment writer: the band postings of `sigs`
+    * bucketed by `bandkey` (part `bands`) plus their shingle store
+    * bucketed by `base_id` (part `sh`) — the parts every band build,
+    * append, compaction and purge publishes. */
+  private[graft] def bandSegment(bands: String, sh: String,
+      sigs: DataFrame): Seq[Bucketing.Part] = Seq(
+    Bucketing.Part(bands, bandPostings(sigs, "base_id"), Some("bandkey")),
+    Bucketing.Part(sh, sigs.select(col("doc_id").as("base_id"),
+      col("shingles").as("sh_b")), Some("base_id")))
+
+  /** The verified (new_id, base_id, j_x10k) pairs of a probe batch
+    * (`sigs` + its band postings `bands`) over EVERY segment of one
+    * published map: each postings part named `bandPart*` pairs with
+    * the shingle part of the same suffix under `shPart`. Per segment
+    * the probe joins its postings bucket-aligned, takes distinct
+    * candidates and verifies against that segment's shingles; the
+    * segments merge only at the verified-pair stream. */
+  private def bandServe(s: SparkSession, tbls: Map[String, String],
+      sigs: DataFrame, bands: DataFrame, bandPart: String, shPart: String)
+      : DataFrame =
+    tbls.keys.filter(_.startsWith(bandPart)).toSeq.sorted.map { p =>
+      admissionVerify(sigs,
+        bands.join(s.table(tbls(p)), Seq("bandkey"))
+          .select("new_id", "base_id").distinct(),
+        s.table(tbls(shPart + p.stripPrefix(bandPart))))
+    }.reduce(_.unionAll(_))
+
   /** dd36/dd37 shared scaffold: writes the base segment, runs day-1's
     * novel ingest and its admission against it, builds day-2's batch
     * and band postings. Returns (base sigs, day-1 ADMITTED sigs
@@ -798,24 +803,16 @@ object Dedup {
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
     val docs = t(s, d, "documents").select("doc_id", "text")
     val base = admissionSig(docs)
-    // generation 1 of the caller's family: the base segment pair
-    // (family-qualified names — dd36 and dd37 each own their segments)
-    val tbls = Bucketing.publish(s, family, Seq(
-      Bucketing.Part("graft_band_base", bandPostings(base, "base_id"),
-        Some("bandkey")),
-      Bucketing.Part("graft_sh_base",
-        base.select(col("doc_id").as("base_id"),
-          col("shingles").as("sh_b")), Some("base_id"))))
+    // generation 1 of the caller's family: the base segment
+    val tbls = Bucketing.publish(s, family,
+      bandSegment("graft_band_base", "graft_sh_base", base))
     // day 1: novel ingest, admitted against the base segment only
     val day1 = docs.filter(col("doc_id") % 10 === 3)
       .select((col("doc_id") + 30000000L).as("doc_id"),
         array_join(reverse(split(col("text"), " ")), " ").as("text"))
     val sig1 = admissionSig(day1)
-    val cand1 = bandPostings(sig1, "new_id")
-      .join(s.table(tbls("graft_band_base")), Seq("bandkey"))
-      .select("new_id", "base_id").distinct()
-    val admitted1 = admissionVerdict(day1, sig1, cand1,
-        s.table(tbls("graft_sh_base")))
+    val admitted1 = admissionDecision(day1, bandServe(s, tbls, sig1,
+        bandPostings(sig1, "new_id"), "graft_band_", "graft_sh_"))
       .filter(col("admitted")).select("doc_id")
     val sig1adm = sig1.join(admitted1, Seq("doc_id")).localCheckpoint()
     // day 2: re-encodes of base docs AND of the day-1 novel docs
@@ -839,29 +836,13 @@ object Dedup {
 
   private val dd36DeltaBandIndex: Q = (s, d) => {
     val (_, sig1adm, day2, sig2, bands2) = deltaScaffold(s, d, "dd36")
-    // the admitted docs BECOME the delta segment — published as an
-    // APPEND generation: the manifest carries the base tables forward
-    // UN-rewritten (ingest cost O(admitted), the LSM contract now
-    // crash-atomic: a reader resolves gen-1's base-only set or gen-2's
-    // base∪delta set, never a torn state)
-    val tbls = Bucketing.publish(s, "dd36", Seq(
-      Bucketing.Part("graft_band_delta", bandPostings(sig1adm, "base_id"),
-        Some("bandkey")),
-      Bucketing.Part("graft_sh_delta",
-        sig1adm.select(col("doc_id").as("base_id"),
-          col("shingles").as("sh_b")), Some("base_id"))),
+    // the admitted docs BECOME the delta segment, appended
+    // (carry-forward) beside the untouched base
+    val tbls = Bucketing.publish(s, "dd36",
+      bandSegment("graft_band_delta", "graft_sh_delta", sig1adm),
       carryForward = true)
-    // per-SEGMENT candidates and verifies (each join bucket-aligned on
-    // its own segment tables); segments merge only at the verified-pair
-    // stream — the ss34 per-segment-search shape
-    def segVerified(bandPart: String, shPart: String): DataFrame =
-      admissionVerify(sig2,
-        bands2.join(s.table(tbls(bandPart)), Seq("bandkey"))
-          .select("new_id", "base_id").distinct(),
-        s.table(tbls(shPart)))
     admissionDecision(day2,
-        segVerified("graft_band_base", "graft_sh_base")
-          .unionAll(segVerified("graft_band_delta", "graft_sh_delta")))
+        bandServe(s, tbls, sig2, bands2, "graft_band_", "graft_sh_"))
       .withColumn("matched_seg", matchedSeg)
       .orderBy("doc_id")
   }
@@ -885,23 +866,10 @@ object Dedup {
     */
   private val dd37CompactedBands: Q = (s, d) => {
     val (base, sig1adm, day2, sig2, bands2) = deltaScaffold(s, d, "dd37")
-    // compact: ONE postings table, ONE shingle store over base ∪ delta
-    // — a FULL publish, so the manifest flips the family from the
-    // segment set to the compacted pair in one pointer swap and the
-    // obsolete segments age out through the GC grace window
-    val tbls = Bucketing.publish(s, "dd37", Seq(
-      Bucketing.Part("graft_band_compact",
-        bandPostings(base, "base_id")
-          .unionAll(bandPostings(sig1adm, "base_id")), Some("bandkey")),
-      Bucketing.Part("graft_sh_compact",
-        base.select(col("doc_id").as("base_id"), col("shingles").as("sh_b"))
-          .unionAll(sig1adm.select(col("doc_id").as("base_id"),
-            col("shingles").as("sh_b"))), Some("base_id"))))
+    val tbls = Bucketing.publish(s, "dd37", bandSegment(
+      "graft_band_compact", "graft_sh_compact", base.unionByName(sig1adm)))
     admissionDecision(day2,
-        admissionVerify(sig2,
-          bands2.join(s.table(tbls("graft_band_compact")), Seq("bandkey"))
-            .select("new_id", "base_id").distinct(),
-          s.table(tbls("graft_sh_compact"))))
+        bandServe(s, tbls, sig2, bands2, "graft_band_", "graft_sh_"))
       .withColumn("matched_seg", matchedSeg)
       .orderBy("doc_id")
   }
@@ -960,21 +928,14 @@ object Dedup {
       .drop("owner")
       .localCheckpoint() // 4 refs: two purged writes + erased verify pair
     val liveSigs = tagged.filter(!col("is_erased")).drop("is_erased")
-    // the purge IS the rewrite: live-only postings + shingle store,
-    // published as a FULL generation — the pointer swap is the moment
-    // the erased postings stop being servable, and a crash mid-purge
-    // leaves the old generation intact rather than a half-purged index
-    val tbls = Bucketing.publish(s, "dd38", Seq(
-      Bucketing.Part("graft_band_purged", bandPostings(liveSigs, "base_id"),
-        Some("bandkey")),
-      Bucketing.Part("graft_sh_purged",
-        liveSigs.select(col("doc_id").as("base_id"),
-          col("shingles").as("sh_b")), Some("base_id"))))
+    // the purge IS the rewrite: a full publish of the live-only
+    // segment — the pointer swap is the moment the erased postings
+    // stop being servable
+    val tbls = Bucketing.publish(s, "dd38",
+      bandSegment("graft_band_purged", "graft_sh_purged", liveSigs))
     // purged verdict: probe the WRITTEN tables (the production path)
-    val verLive = admissionVerify(sig2,
-      bands2.join(s.table(tbls("graft_band_purged")), Seq("bandkey"))
-        .select("new_id", "base_id").distinct(),
-      s.table(tbls("graft_sh_purged")))
+    val verLive = bandServe(s, tbls, sig2, bands2, "graft_band_",
+      "graft_sh_")
     (day2, sig2, bands2, erased, tagged, verLive)
   }
 

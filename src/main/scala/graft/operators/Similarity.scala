@@ -1494,7 +1494,8 @@ object Similarity {
     */
   def ivfPqSearch(s: SparkSession, d: String): DataFrame = {
     val (base, assigned, codes, probes) = ivfPqBuild(s, d)
-    ivfPqProbe(base, assigned, codes, probes)
+    refineTop3(base,
+      adcTop10(base, pqCentroids(base), assigned, codes, probes))
   }
 
   /** ss18's BUILD stage, split at the index boundary (the two
@@ -1572,14 +1573,28 @@ object Similarity {
       .withColumn("c_cc", dot(col("c_sub"), col("c_sub")))
   }
 
-  /** ss18's PROBE stage: candidate generation from the inverted
-    * lists, ADC over the codes, exact refine — agnostic to whether
-    * `assigned`/`codes` are in-plan frames (ss18) or reloaded bucketed
-    * tables (ss33). */
-  private def ivfPqProbe(base: DataFrame, assigned: DataFrame,
-      codes: DataFrame, probes: DataFrame): DataFrame =
-    refineTop3(base,
-      adcTop10(base, pqCentroids(base), assigned, codes, probes))
+  /** The vector index's segment writer: inverted lists bucketed by
+    * `cluster` (part `lists`) plus PQ codes bucketed by `neighbor_id`
+    * (part `codes`) — the parts every IVF-PQ build, append and
+    * compaction publishes. */
+  private def ivfSegment(lists: String, codes: String,
+      assigned: DataFrame, codesDf: DataFrame): Seq[Bucketing.Part] = Seq(
+    Bucketing.Part(lists, assigned, Some("cluster")),
+    Bucketing.Part(codes, codesDf, Some("neighbor_id")))
+
+  /** IVF-PQ top-3 over EVERY segment of one published map: each lists
+    * part named `lists*` pairs with the codes part of the same suffix
+    * under `codes`; each segment runs its own candidate→ADC top-10
+    * under the codebook `cents`, and the segments merge only at the
+    * exact refine (the LSM per-segment-search shape). */
+  private def ivfServe(s: SparkSession, tbls: Map[String, String],
+      corpus: DataFrame, cents: DataFrame, probes: DataFrame,
+      lists: String, codes: String): DataFrame =
+    refineTop3(corpus,
+      tbls.keys.filter(_.startsWith(lists)).toSeq.sorted.map { p =>
+        adcTop10(corpus, cents, s.table(tbls(p)),
+          s.table(tbls(codes + p.stripPrefix(lists))), probes)
+      }.reduce(_.unionAll(_)))
 
   /** Candidate generation + ADC top-10 for ONE index segment (its
     * inverted lists + codes) under a possibly-frozen codebook;
@@ -1661,14 +1676,10 @@ object Similarity {
     */
   val ss33PersistedIndex: Q = (s, d) => {
     val (base, assigned, codes, probes) = ivfPqBuild(s, d)
-    // atomic versioned publication (r12 verdict item 1): lists + codes
-    // flip together behind one manifest swap; the probe reads the
-    // generation it just wrote (pinned via the returned names)
-    val tbls = Bucketing.publish(s, "ss33", Seq(
-      Bucketing.Part("graft_ivf_lists", assigned, Some("cluster")),
-      Bucketing.Part("graft_pq_codes", codes, Some("neighbor_id"))))
-    ivfPqProbe(base, s.table(tbls("graft_ivf_lists")),
-      s.table(tbls("graft_pq_codes")), probes)
+    val tbls = Bucketing.publish(s, "ss33",
+      ivfSegment("graft_ivf_lists", "graft_pq_codes", assigned, codes))
+    ivfServe(s, tbls, base, pqCentroids(base), probes, "graft_ivf_lists",
+      "graft_pq_codes")
   }
 
   /** ss34: DELTA INGEST + SEGMENTED SEARCH — the step after ss33's
@@ -1723,20 +1734,12 @@ object Similarity {
       .filter(col("crn") <= 2)
       .select(col("vec_id").as("query_id"), col("ccid").as("cluster"))
     val cents = pqCentroids(baseSeg)
-    // all four segment tables publish as ONE family generation — a
-    // reader never sees a base/delta (or lists/codes) mix
-    val tbls = Bucketing.publish(s, "ss34", Seq(
-      Bucketing.Part("graft_ivf_base", assign(baseSeg), Some("cluster")),
-      Bucketing.Part("graft_ivf_delta", assign(deltaSeg), Some("cluster")),
-      Bucketing.Part("graft_pq_base", codesFor(baseSeg, cents),
-        Some("neighbor_id")),
-      Bucketing.Part("graft_pq_delta", codesFor(deltaSeg, cents),
-        Some("neighbor_id"))))
-    val adcB = adcTop10(all, cents, s.table(tbls("graft_ivf_base")),
-      s.table(tbls("graft_pq_base")), probes)
-    val adcD = adcTop10(all, cents, s.table(tbls("graft_ivf_delta")),
-      s.table(tbls("graft_pq_delta")), probes)
-    refineTop3(all, adcB.unionAll(adcD))
+    val tbls = Bucketing.publish(s, "ss34",
+      ivfSegment("graft_ivf_base", "graft_pq_base", assign(baseSeg),
+        codesFor(baseSeg, cents)) ++
+      ivfSegment("graft_ivf_delta", "graft_pq_delta", assign(deltaSeg),
+        codesFor(deltaSeg, cents)))
+    ivfServe(s, tbls, all, cents, probes, "graft_ivf_", "graft_pq_")
       .withColumn("from_delta", col("neighbor_id") % 10 === 7)
   }
 
@@ -1843,11 +1846,10 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), lit(1).as("fhit"))
     // COMPACT: retrained single-segment rebuild over base ∪ delta
     val (all, assigned, codes, probes) = ivfPqBuild(s, d)
-    val tbls = Bucketing.publish(s, "ss36", Seq(
-      Bucketing.Part("graft_ivf_compact", assigned, Some("cluster")),
-      Bucketing.Part("graft_pq_compact", codes, Some("neighbor_id"))))
-    val compact3 = ivfPqProbe(all, s.table(tbls("graft_ivf_compact")),
-      s.table(tbls("graft_pq_compact")), probes)
+    val tbls = Bucketing.publish(s, "ss36",
+      ivfSegment("graft_ivf_compact", "graft_pq_compact", assigned, codes))
+    val compact3 = ivfServe(s, tbls, all, pqCentroids(all), probes,
+        "graft_ivf_compact", "graft_pq_compact")
       .select(col("query_id"), col("neighbor_id"), lit(1).as("chit"))
     exactTop3(all)
       .join(broadcast(frozen3), Seq("query_id", "neighbor_id"), "left")

@@ -334,26 +334,6 @@ object EventsStreaming {
       .select("doc_id", "text")
   }
 
-  /** BM25 serve over EVERY segment currently in `family`'s manifest —
-    * segment-count-agnostic (tx38's merge-at-scoring: union the probed
-    * postings, Σ the per-segment sidecars), so the batch face's single
-    * delta and a stream's N micro-batch deltas serve IDENTICAL bytes.
-    * One pinned manifest resolution (the never-a-mix rule). */
-  private[graft] def handoffServe(s: SparkSession, family: String)
-      : DataFrame = {
-    val tbls = graft.operators.Bucketing.publishedTables(s, family)
-    def arm(prefix: String): Seq[DataFrame] = tbls.toSeq.collect {
-      case (p, t) if p.startsWith(prefix) => t
-    }.sorted.map(s.table)
-    val probed = arm("tpost_")
-      .map(_.filter(col("token").isin(
-        graft.operators.Curation.bm25Terms: _*)))
-      .reduce(_.unionAll(_))
-    val stats = arm("tstats_").reduce(_.unionAll(_))
-      .agg(sum("n_docs").as("n_docs"), sum("sum_dl").as("sum_dl"))
-    graft.operators.Curation.bm25Serve(probed, stats)
-  }
-
   /** st26: STREAMING INGEST → PERSISTED-INDEX HAND-OFF — the seam
     * between the st family's admission gates and the index families'
     * delta-segment lifecycle (the r12 verdict's stretch item): today's
@@ -384,9 +364,7 @@ object EventsStreaming {
     val base = graft.Tables.t(s, d, "documents")
       .filter(pmod(col("doc_id"), lit(10L)) =!= 7L)
       .select("doc_id", "text")
-    B.publish(s, "st26", Seq(
-      B.Part("tpost_base", C.bm25Postings(base), Some("token")),
-      B.Part("tstats_base", C.bm25Stats(base))))
+    B.publish(s, "st26", C.textSegment("tpost_base", "tstats_base", base))
     val nTokens = (length(col("text")) -
       length(regexp_replace(col("text"), " ", "")) + 1).cast("bigint")
     val w = Window.partitionBy("fp").orderBy("ts", "doc_id")
@@ -397,11 +375,13 @@ object EventsStreaming {
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select("doc_id", "text")
-    B.publish(s, "st26", Seq(
-      B.Part("tpost_delta0", C.bm25Postings(admitted), Some("token")),
-      B.Part("tstats_delta0", C.bm25Stats(admitted))),
+    B.publish(s, "st26",
+      C.textSegment("tpost_delta0", "tstats_delta0", admitted),
       carryForward = true)
-    handoffServe(s, "st26")
+    // every segment the manifest lists, from ONE pointer read (the
+    // never-a-mix rule), so a stream's N micro-batch deltas serve the
+    // same bytes as this face's single delta
+    C.textServe(s, B.publishedTables(s, "st26"), "tpost_", "tstats_")
   }
 
   /** st06: the outer interval join's batch face (driver-checkable).

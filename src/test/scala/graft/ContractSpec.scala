@@ -80,10 +80,19 @@ class ContractSpec extends SparkSpec {
     }
   }
 
+  /** Every query built ONCE at smoke scale — a build runs real driver
+    * loops and index writes — as (name, output columns, physical plan
+    * string); both whole-surface checks below read this one build
+    * (analysis and planning only — no execution). */
+  private lazy val surface: Seq[(String, Seq[String], String)] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val df = fn(spark, sf)
+      (name, df.schema.fields.map(_.name).toSeq,
+        df.queryExecution.sparkPlan.toString)
+    }
+
   test("every query analyzes at smoke scale with a hash-safe schema") {
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val schema = fn(spark, sf).schema // analysis only — no execution
-      val names = schema.fields.map(_.name)
+    surface.foreach { case (name, names, _) =>
       assert(names.distinct.length == names.length,
         s"$name: duplicate output columns ${names.mkString(",")}")
       assert(names.forall(n => n == n.toLowerCase),
@@ -104,8 +113,7 @@ class ContractSpec extends SparkSpec {
     // interpreted Python stage fails the build, not the judge's eye.
     // CartesianProduct only ever appears when BOTH sides are estimated
     // unbroadcastable — any constant-size frame broadcasts instead.
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val plan = fn(spark, sf).queryExecution.sparkPlan.toString
+    surface.foreach { case (name, _, plan) =>
       assert(!plan.contains("CartesianProduct"),
         s"$name plans a CartesianProduct:\n$plan")
       assert(!plan.contains("BatchEvalPython") &&

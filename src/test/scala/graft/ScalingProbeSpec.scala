@@ -96,11 +96,8 @@ class ScalingProbeSpec extends SparkSpec {
       "publish) scales ≲ linearly over a decade") {
     def rebuild(n: Long): Unit = {
       val sig = Dedup.admissionSig(synthDocs(n))
-      val tbls = Bucketing.publish(spark, "probe38", Seq(
-        Bucketing.Part("bands", Dedup.bandPostings(sig, "base_id"),
-          Some("bandkey")),
-        Bucketing.Part("sh", sig.select(col("doc_id").as("base_id"),
-          col("shingles").as("sh_b")), Some("base_id"))))
+      val tbls = Bucketing.publish(spark, "probe38",
+        Dedup.bandSegment("bands", "sh", sig))
       assert(spark.table(tbls("bands")).count() == n * 4)
     }
     val t1 = timed(rebuild(5000L))

@@ -5,13 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites (one JVM-wide session via getOrCreate). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = Tables.configure(SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = Tables.batchSession("local[4]", "4")
     .appName("graft-test")
     .withExtensions(new graft.functions.GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false"))
     .getOrCreate()
 
   /** Fixture dir as a plain filesystem path (forked tests run in the

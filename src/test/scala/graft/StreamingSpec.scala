@@ -181,9 +181,7 @@ class StreamingSpec extends SparkSpec {
     val base = Tables.t(spark, sf, "documents")
       .filter(pmod(col("doc_id"), lit(10L)) =!= 7L)
       .select("doc_id", "text")
-    B.publish(spark, "st26s", Seq(
-      B.Part("tpost_base", C.bm25Postings(base), Some("token")),
-      B.Part("tstats_base", C.bm25Stats(base))))
+    B.publish(spark, "st26s", C.textSegment("tpost_base", "tstats_base", base))
     // today's crawl in arrival order, streamed in 3 real micro-batches
     val corpus = EventsStreaming.handoffCorpus(spark, sf)
       .orderBy("ts", "doc_id")
@@ -198,9 +196,8 @@ class StreamingSpec extends SparkSpec {
         // the hand-off: each micro-batch's admissions append as their
         // own delta segment through the atomic carry-forward manifest
         if (!batch.isEmpty) {
-          B.publish(spark, "st26s", Seq(
-            B.Part(s"tpost_d$id", C.bm25Postings(batch), Some("token")),
-            B.Part(s"tstats_d$id", C.bm25Stats(batch))),
+          B.publish(spark, "st26s",
+            C.textSegment(s"tpost_d$id", s"tstats_d$id", batch),
             carryForward = true)
           ()
         }
@@ -212,7 +209,8 @@ class StreamingSpec extends SparkSpec {
     assert(parts.count(_.startsWith("tpost_d")) >= 2, parts)
     // and invisible to the serve: byte-identical to the batch face's
     // single-delta publish (collect order is bm25Serve's own total sort)
-    val got = EventsStreaming.handoffServe(spark, "st26s")
+    val got = C.textServe(spark, B.publishedTables(spark, "st26s"),
+        "tpost_", "tstats_")
       .collect().toSeq
     val want = SparkEntry.queries("st26_index_handoff")(spark, sf)
       .collect().toSeq

@@ -2,11 +2,20 @@
 """Local stand-in for the driver's correctness gate: run each oracle SQL in
 DuckDB over the sf tables, compare against the Verify parquet dumps
 (columns sorted by name, rows sorted, exact values)."""
-import sys, json, glob, math
+import sys, json, glob, math, atexit, shutil, tempfile
 import duckdb, pandas as pd
 
 sfdir, outdir = sys.argv[1], sys.argv[2]
 con = duckdb.connect()
+# Bounded memory: DuckDB defaults to 80 % of RAM, and one full-surface
+# run reached 13.5 GB on a 16 GB box. Half of MemTotal, with a temp
+# directory to spill into, leaves room for the rest of the machine.
+mem_kb = next(int(l.split()[1]) for l in open("/proc/meminfo")
+              if l.startswith("MemTotal:"))
+spill = tempfile.mkdtemp(prefix="selfcheck-duckdb-", dir="/tmp")
+atexit.register(shutil.rmtree, spill, True)
+con.execute(f"SET memory_limit = '{mem_kb // 2 // 1024}MB'")
+con.execute(f"SET temp_directory = '{spill}'")
 for t in ["region","nation","customer","supplier","part","orders",
           "lineitem","events","documents","embeddings"]:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
