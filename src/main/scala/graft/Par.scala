@@ -51,8 +51,8 @@ object Par {
     * `max(nodes, edges / 2)`.
     *
     * The cap of 32 is the value these loops have always used, not a
-    * derived one; deriving it (from `width` or from bytes) is ROADMAP
-    * item 5's work and needs its own A/B. */
+    * derived one; deriving it (from `width` or from bytes) is open
+    * work that needs its own A/B. */
   def loopWidth(rows: Long): Int =
     math.max(1L, math.min(32L, rows / 50000L + 1L)).toInt
 }

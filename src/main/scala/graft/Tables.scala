@@ -34,7 +34,7 @@ object Tables {
     sessionConfs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
 
   /** The batch-session builder shared by Verify, Bench, PlanDump,
-    * Scratch, LocalClusterCheck and the test suites: [[sessionConfs]]
+    * LocalClusterCheck and the test suites: [[sessionConfs]]
     * plus `partitions` shuffle partitions, the UTC session zone every
     * oracle's date math assumes, and no UI. (The ksql REPL builds its
     * own session: it does not set UTC.) */

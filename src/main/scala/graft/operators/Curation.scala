@@ -371,30 +371,18 @@ object Curation {
     * recall is measurable and the oracle replays everything.
     */
   val dd12SemanticDedup: Q = (s, d) => {
-    import org.apache.spark.sql.expressions.Window
     val base = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-    val twins = base.select((col("vec_id") + lit(10000000L)).as("vec_id"),
-      expr("""transform(embedding, (x, i) -> CAST(x + 0.001 *
-             |  ((((vec_id * 131071) + (i * 524287)) % 1000) / 500.0 - 1.0)
-             |  AS FLOAT))""".stripMargin).as("embedding"))
-    val corpus = base.unionAll(twins)
+    val corpus = base.unionAll(Similarity.plantTwins(base, "0.001"))
       .withColumn("norm", Similarity.l2norm(col("embedding")))
       // lazy persist: A/B'd vs eager checkpoint (r7) — consumers here
       // materialize sequentially, and the extra eager job measured
       // +0.15 s; the ss20/CC round-0 race does not bite
       .persist() // lazy-ok: eager A/B'd (r7) +0.15 s — sequential consumers, see comment above
-    val cents = Similarity.coarseSeeds(corpus.filter(col("vec_id") < 10000000L))
-      .select(col("vec_id").as("centroid_vec"), col("embedding").as("c_emb"),
-        col("norm").as("c_norm"))
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("cos_raw").desc, col("centroid_vec"))
-    val assigned = corpus.crossJoin(broadcast(cents))
-      .withColumn("cos_raw", Similarity.dot(col("embedding"), col("c_emb")) /
-        (col("norm") * col("c_norm")))
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") === 1)
+    val assigned = Similarity
+      .coarseRanked(corpus, corpus.filter(col("vec_id") < 10000000L))
+      .filter(col("crn") === 1)
       .select(col("vec_id"), col("embedding"), col("norm"),
-        col("centroid_vec").as("cluster"))
+        col("cid").as("cluster"))
     val a = assigned.select(col("cluster"), col("vec_id").as("a_id"),
       col("embedding").as("a_emb"), col("norm").as("a_norm"))
     val b = assigned.select(col("cluster"), col("vec_id").as("b_id"),
@@ -420,21 +408,11 @@ object Curation {
     * changes. Output: refined centroid coordinates + member counts.
     */
   val ss08KmeansIter: Q = (s, d) => {
-    import org.apache.spark.sql.expressions.Window
     val corpus = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
       .withColumn("norm", Similarity.l2norm(col("embedding")))
-    val cents = Similarity.coarseSeeds(corpus)
-      .select(col("vec_id").as("centroid_vec"), col("embedding").as("c_emb"),
-        col("norm").as("c_norm"))
-    val w = Window.partitionBy("vec_id")
-      .orderBy(col("cos_raw").desc, col("centroid_vec"))
-    val assigned = corpus.crossJoin(broadcast(cents))
-      .withColumn("cos_raw", Similarity.dot(col("embedding"), col("c_emb")) /
-        (col("norm") * col("c_norm")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("embedding"),
-        col("centroid_vec").as("cluster"))
+    val assigned = Similarity.coarseRanked(corpus, corpus)
+      .filter(col("crn") === 1)
+      .select(col("vec_id"), col("embedding"), col("cid").as("cluster"))
     assigned
       .select(col("cluster"), posexplode(col("embedding")))
       .select(col("cluster"), (col("pos") + 1).cast("bigint").as("dim"),
@@ -571,7 +549,7 @@ object Curation {
     * counters remain the only downstream shuffle (ADVICE r13). */
   private[graft] def bm25Postings(docs: DataFrame): DataFrame = docs
     // spread the 1-partition documents scan before tokenize+explode
-    // (r13 Scratch on ss43: the whole corpus tokenized in ONE task —
+    // (r13 stage profile of ss43: the whole corpus tokenized in ONE task —
     // the dd20 explicit-count rule)
     .transform(graft.Par.spread)
     .withColumn("toks", split(col("text"), " "))

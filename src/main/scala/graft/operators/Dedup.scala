@@ -45,6 +45,19 @@ object Dedup {
     docs.unionAll(mutated)
   }
 
+  /** A two-step re-crawl of `docs(doc_id, text)`: docs ∪ first token
+    * dropped (`doc_id + COPY_OFFSET`) ∪ first two tokens dropped
+    * (`doc_id + 2·COPY_OFFSET`) — duplicate chains of up to 3 docs whose
+    * pairwise Jaccards differ. Single-token texts stay identical.
+    */
+  private def recrawlChain(docs: DataFrame): DataFrame = {
+    val m1 = docs.select((col("doc_id") + COPY_OFFSET).as("doc_id"),
+      dropTok.as("text"))
+    val m2 = m1.select((col("doc_id") + COPY_OFFSET).as("doc_id"),
+      dropTok.as("text"))
+    docs.unionAll(m1).unionAll(m2)
+  }
+
   /** dd01: exact dedup on the raw corpus — group on the full text, keep the
     * smallest doc_id as representative. SQL-expressible → DuckDB oracle.
     */
@@ -486,15 +499,7 @@ object Dedup {
   private[operators] def nearDupGraph(
       s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val docs = t(s, d, "documents").select("doc_id", "text")
-    val dropTok = expr(
-      """CASE WHEN instr(text, ' ') > 0
-        |     THEN substring(text, instr(text, ' ') + 1)
-        |     ELSE text END""".stripMargin)
-    val m1 = docs.select((col("doc_id") + COPY_OFFSET).as("doc_id"),
-      dropTok.as("text"))
-    val m2 = m1.select((col("doc_id") + COPY_OFFSET).as("doc_id"),
-      dropTok.as("text"))
-    val corpus = docs.unionAll(m1).unionAll(m2)
+    val corpus = recrawlChain(docs)
     // Edge verify runs on HASHED shingle sets (one-pass codegen kernel +
     // sorted-merge intersect) while the oracle uses string shingle sets:
     // Jaccard over the two is identical up to 64-bit hash collisions
@@ -616,7 +621,8 @@ object Dedup {
   // ——— the dd29/dd35 admission machinery, ONE set of definitions so
   //     the in-plan and persisted-index formulations cannot drift ———
 
-  /** The dd22 re-encode perturbation (drop the first token) — the
+  /** The re-encode perturbation (drop the first token; single-token
+    * texts stay identical) — each step of `recrawlChain` and the
     * near-dup half of every admission batch. */
   private val dropTok: Column = expr(
     """CASE WHEN instr(text, ' ') > 0
@@ -984,15 +990,7 @@ object Dedup {
     val groups = dedupGroupsVia(connectedComponents)(s, d)
       .select("doc_id", "group_rep", "group_size")
     val docs = t(s, d, "documents").select("doc_id", "text")
-    val dropTok = expr(
-      """CASE WHEN instr(text, ' ') > 0
-        |     THEN substring(text, instr(text, ' ') + 1)
-        |     ELSE text END""".stripMargin)
-    val m1 = docs.select((col("doc_id") + COPY_OFFSET).as("doc_id"),
-      dropTok.as("text"))
-    val m2 = m1.select((col("doc_id") + COPY_OFFSET).as("doc_id"),
-      dropTok.as("text"))
-    val toks = docs.unionAll(m1).unionAll(m2)
+    val toks = recrawlChain(docs)
       .select(col("doc_id"),
         (size(split(col("text"), " "))).cast("bigint").as("n_tokens"))
     val w = Window.partitionBy("group_rep")
@@ -1144,7 +1142,7 @@ object Dedup {
     * replays discovery, verification AND the label fixpoint (recursive
     * CTE), so the keep-set is pinned cross-engine end-to-end.
     *
-    * Measured stage breakdown (r8, sf0.1, graft.Scratch listener):
+    * Measured stage breakdown (r8, sf0.1, per-stage listener):
     * shingle build+checkpoint ~0.26 s; band self-join + array verify
     * ~0.4 + 0.44 s on the pinned 32-task stages (CPU-bound kernel work
     * — the intended cost); the former bottleneck was the CC loop at
@@ -1156,15 +1154,7 @@ object Dedup {
     */
   private val dd22FuzzyKeepset: Q = (s, d) => {
     val docs = t(s, d, "documents").select("doc_id", "text")
-    val dropTok = expr(
-      """CASE WHEN instr(text, ' ') > 0
-        |     THEN substring(text, instr(text, ' ') + 1)
-        |     ELSE text END""".stripMargin)
-    val m1 = docs.select((col("doc_id") + COPY_OFFSET).as("doc_id"),
-      dropTok.as("text"))
-    val m2 = m1.select((col("doc_id") + COPY_OFFSET).as("doc_id"),
-      dropTok.as("text"))
-    val corpus = docs.unionAll(m1).unionAll(m2)
+    val corpus = recrawlChain(docs)
     // two shingle encodings from one pass over the corpus: md5-laned
     // STRING shingles feed the (portable) banding; sorted 64-bit HASHED
     // shingles feed the verify via the SortedIntersectCard merge kernel
@@ -1562,11 +1552,7 @@ object Dedup {
     * kernel build's own plan. */
   private[graft] def dd19Signed(s: SparkSession, d: String): DataFrame = {
     val base = t(s, d, "embeddings").select("vec_id", "embedding")
-    val dup = base.select((col("vec_id") + lit(COPY_OFFSET)).as("vec_id"),
-      expr("""transform(embedding, (x, i) -> CAST(x + 0.001 *
-             |  ((((vec_id * 131071) + (i * 524287)) % 1000) / 500.0 - 1.0)
-             |  AS FLOAT))""".stripMargin).as("embedding"))
-    base.unionAll(dup)
+    base.unionAll(Similarity.plantTwins(base, "0.001"))
       .withColumn("norm", Similarity.l2norm(col("embedding")))
       .withColumn("sig", Similarity.signBucket(col("embedding")))
   }
@@ -1842,10 +1828,6 @@ object Dedup {
     //       drop-1-token (J ≈ 0.97 — both thresholds merge);
     //  m2 = drop the first ⌊n/3⌋ tokens (J ≈ 0.66 — inside (0.5, 0.8):
     //       only the loose threshold merges it).
-    val dropTok = expr(
-      """CASE WHEN instr(text, ' ') > 0
-        |     THEN substring(text, instr(text, ' ') + 1)
-        |     ELSE text END""".stripMargin)
     val m1 = docs.select((col("doc_id") + COPY_OFFSET).as("doc_id"),
       when(col("doc_id") % 5 === 0, col("text"))
         .otherwise(dropTok).as("text"))
@@ -2128,25 +2110,12 @@ object Dedup {
     * broadcast.
     */
   private val dd24SemDedup: Q = (s, d) => {
-    import org.apache.spark.sql.expressions.Window
     val base = t(s, d, "embeddings").select("vec_id", "embedding")
-    val dup = base.select((col("vec_id") + lit(COPY_OFFSET)).as("vec_id"),
-      expr("""transform(embedding, (x, i) -> CAST(x + 0.001 *
-             |  ((((vec_id * 131071) + (i * 524287)) % 1000) / 500.0 - 1.0)
-             |  AS FLOAT))""".stripMargin).as("embedding"))
-    val all = base.unionAll(dup)
+    val all = base.unionAll(Similarity.plantTwins(base, "0.001"))
       .withColumn("norm", Similarity.l2norm(col("embedding")))
       .persist() // lazy-ok: cheap norm projection; centroid sample + assignment (the dd07 lesson)
-    val cents = Similarity.coarseSeeds(all.filter(col("vec_id") < COPY_OFFSET))
-      .select(col("vec_id").as("cid"), col("embedding").as("c_emb"),
-        col("norm").as("c_norm"))
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("ccos").desc, col("cid"))
-    val assigned = all.crossJoin(broadcast(cents))
-      .withColumn("ccos",
-        Similarity.dot(col("embedding"), col("c_emb")) /
-          (col("norm") * col("c_norm")))
-      .withColumn("crn", row_number().over(wAssign))
+    val assigned = Similarity
+      .coarseRanked(all, all.filter(col("vec_id") < COPY_OFFSET))
       .filter(col("crn") === 1)
       .select(col("vec_id"), col("cid").as("cluster"),
         col("embedding"), col("norm"), col("ccos"))

@@ -45,6 +45,26 @@ object Graph {
       .groupBy(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
       .agg(count(lit(1)).as("w"))
 
+  /** The 3-NN sparsified trade graph: each nation's three heaviest
+    * outgoing non-self edges (ties broken by `dst`), as `(src, dst)`.
+    * The condensed trade graph is near-complete, so the graph queries run
+    * on this support to get real degree spread.
+    */
+  private def tradeKnn3(s: SparkSession, d: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val wTop = Window.partitionBy("src").orderBy(col("w").desc, col("dst"))
+    tradeEdges(s, d)
+      .filter(col("src") =!= col("dst"))
+      .withColumn("rn", row_number().over(wTop))
+      .filter(col("rn") <= 3)
+      .select("src", "dst")
+  }
+
+  /** `(src, dst)` edges ∪ their reverses, deduplicated. */
+  private def symmetrize(e: DataFrame): DataFrame =
+    e.unionAll(e.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct()
+
   /** gr01: weighted PageRank, 3 power iterations, damping 0.85, in
     * micro-unit fixed point: r0 = 1,000,000 per node;
     * r_{k+1}(v) = 150,000 + Σ_{u→v} ((r_k(u)*850 div 1000) * w(u,v))
@@ -226,12 +246,7 @@ object Graph {
     * rule). Output per nation: scc_id, scc_size, is_core.
     */
   val gr17Scc: Q = (s, d) => {
-    import org.apache.spark.sql.expressions.Window
-    val wTop = Window.partitionBy("src").orderBy(col("w").desc, col("dst"))
-    val dirE = tradeEdges(s, d)
-      .filter(col("src") =!= col("dst"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= 3)
+    val dirE = tradeKnn3(s, d)
       .select(col("src").cast("bigint").as("u"),
         col("dst").cast("bigint").as("v"))
       .localCheckpoint() // referenced by the doubling loop's base
@@ -688,18 +703,9 @@ object Graph {
   }
 
   val gr16RichClub: Q = (s, d) => {
-    import org.apache.spark.sql.expressions.Window
-    // the condensed trade graph is near-complete (every nation trades
-    // with every nation => one degree value, no club to measure) — run
-    // on the 3-NN sparsified support gr03/gr05 use, whose asymmetric
+    // run on the 3-NN support gr03/gr05 use, whose asymmetric
     // symmetrization produces real degree spread
-    val wTop = Window.partitionBy("src").orderBy(col("w").desc, col("dst"))
-    val knn = tradeEdges(s, d)
-      .filter(col("src") =!= col("dst"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= 3)
-      .select("src", "dst")
-    val und = knn
+    val und = tradeKnn3(s, d)
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .distinct()
@@ -807,21 +813,12 @@ object Graph {
   private def lpaPartition(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
-    val wTop = Window.partitionBy("src")
-      .orderBy(col("w").desc, col("dst"))
-    val knn = tradeEdges(s, d)
-      .filter(col("src") =!= col("dst"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= 3)
-      .select("src", "dst")
     // EAGER (the dd20/ss20 rule, single-job form): the 3 LPA rounds are
     // UNROLLED into one plan that references sym once per round — and
     // gr11 adds 3 more references (degrees, both internal sides, m) —
     // so a lazy persist re-ran the 4-table trade join per reference
     // before the cache filled
-    val sym = knn.unionAll(knn.select(col("dst").as("src"),
-        col("src").as("dst")))
-      .distinct()
+    val sym = symmetrize(tradeKnn3(s, d))
       .coalesce(1) // ≤75 condensed edges; broadcast rebuilds per round
       .localCheckpoint()
     var labels = t(s, d, "nation")
@@ -917,17 +914,7 @@ object Graph {
     * Galois) builds on.
     */
   val gr04Kcore: Q = (s, d) => {
-    import org.apache.spark.sql.expressions.Window
-    val wTop = Window.partitionBy("src")
-      .orderBy(col("w").desc, col("dst"))
-    val knn = tradeEdges(s, d)
-      .filter(col("src") =!= col("dst"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= 3)
-      .select("src", "dst")
-    val sym = knn.unionAll(knn.select(col("dst").as("src"),
-        col("src").as("dst")))
-      .distinct()
+    val sym = symmetrize(tradeKnn3(s, d))
       .persist() // lazy-ok: loop-carried edges; re-joined every peel round
     val nodes = t(s, d, "nation")
       .select(col("n_nationkey").as("id"), col("n_name"))
@@ -969,17 +956,7 @@ object Graph {
     * other round (the gr04 cadence).
     */
   val gr05BfsLevels: Q = (s, d) => {
-    import org.apache.spark.sql.expressions.Window
-    val wTop = Window.partitionBy("src")
-      .orderBy(col("w").desc, col("dst"))
-    val knn = tradeEdges(s, d)
-      .filter(col("src") =!= col("dst"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= 3)
-      .select("src", "dst")
-    val sym = knn.unionAll(knn.select(col("dst").as("src"),
-        col("src").as("dst")))
-      .distinct()
+    val sym = symmetrize(tradeKnn3(s, d))
       .persist() // lazy-ok: loop-carried edges; re-joined every propagation round
     val nodes = t(s, d, "nation")
       .select(col("n_nationkey").as("id"), col("n_name"))
@@ -1021,17 +998,7 @@ object Graph {
     * on the gr05 cadence.
     */
   val gr07Closeness: Q = (s, d) => {
-    import org.apache.spark.sql.expressions.Window
-    val wTop = Window.partitionBy("src")
-      .orderBy(col("w").desc, col("dst"))
-    val knn = tradeEdges(s, d)
-      .filter(col("src") =!= col("dst"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= 3)
-      .select("src", "dst")
-    val sym = knn.unionAll(knn.select(col("dst").as("src"),
-        col("src").as("dst")))
-      .distinct()
+    val sym = symmetrize(tradeKnn3(s, d))
       .persist() // lazy-ok: loop-carried edges; re-joined every propagation round
     val nodes = t(s, d, "nation")
       .select(col("n_nationkey").as("id"), col("n_name"))
@@ -1126,17 +1093,7 @@ object Graph {
     * plan-nesting rule at 3 refs).
     */
   val gr06Ktruss: Q = (s, d) => {
-    import org.apache.spark.sql.expressions.Window
-    val wTop = Window.partitionBy("src")
-      .orderBy(col("w").desc, col("dst"))
-    val knn = tradeEdges(s, d)
-      .filter(col("src") =!= col("dst"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= 3)
-      .select("src", "dst")
-    val und = knn.unionAll(knn.select(col("dst").as("src"),
-        col("src").as("dst")))
-      .distinct()
+    val und = symmetrize(tradeKnn3(s, d))
       .filter(col("src") < col("dst"))
       .select(col("src").cast("bigint").as("a"),
         col("dst").cast("bigint").as("b"))

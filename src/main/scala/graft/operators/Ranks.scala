@@ -224,11 +224,12 @@ object Ranks {
 
   private val HIST_CELLS = 65536L
 
-  /** Search state for one boundary rank of one spec. Phase M refines
+  /** Search state for one boundary target of one spec. Phase M refines
     * the metric range; on convergence it records v (the boundary
     * metric) and re-arms over the tiebreak range predicated on
-    * metric = v, carrying the residual rank within the equal-metric
-    * group. Phase T's convergence yields c (the boundary tiebreak).
+    * metric = v, carrying the residual target `t` within the
+    * equal-metric group. Phase T's convergence yields c (the boundary
+    * tiebreak).
     */
   private case class BState(spec: Int, phaseT: Boolean, lo: Long,
       hi: Long, t: Long, v: Long, done: Boolean, c: Long) {
@@ -287,23 +288,48 @@ object Ranks {
     val q = n / buckets
     val rem = n % buckets
     val targets = (1 until buckets).map(k => k * q + math.min(k, rem))
-    var states: Seq[BState] = for {
-      i <- specs.indices; t <- targets
-    } yield {
+    val inits = for { i <- specs.indices; t <- targets } yield {
       val (lo, hi) = statOf(s"__gm$i")
       BState(i, phaseT = false, lo, hi, t, 0L, done = false, 0L)
     }
+    val states = boundarySearch(work, Nil, count(lit(1)),
+      i => statOf(s"__gt$i"), "ntileBoundary", inits)
+    val bySpec = states.groupBy(_.spec)
+    val out = specs.zipWithIndex.foldLeft(work) { case (d, (sp, i)) =>
+      val bumps = bySpec(i).map { st =>
+        when(col(s"__gm$i") > lit(st.v) ||
+          (col(s"__gm$i") === lit(st.v) && col(s"__gt$i") > lit(st.c)),
+          1L).otherwise(0L)
+      }
+      d.withColumn(sp.out, bumps.reduce(_ + _) + lit(1L))
+    }
+    out.drop(helperCols: _*)
+  }
+
+  /** The histogram refinement both boundary selections run: each
+    * search in `inits` finds the smallest (`__gm<spec>`, `__gt<spec>`)
+    * key of `work` whose inclusive running mass in (metric asc,
+    * tiebreak asc) order reaches its target. A round's ONE aggregate
+    * histograms every active search's range into ≤65536 cells; `mass`
+    * is a cell's mass over the rows' `carry` columns (`count(lit(1))`
+    * for ranks, `sum(__gw)` for weights). `tRange(spec)` is the tiebreak
+    * range a converged metric search re-arms over. Returns the searches
+    * in order, all done.
+    */
+  private def boundarySearch(work: DataFrame, carry: Seq[Column],
+      mass: Column, tRange: Int => (Long, Long), who: String,
+      inits: Seq[BState]): Seq[BState] = {
     // a search whose range is already a point converges without a
     // round; phase M convergence re-arms phase T immediately
     def settle(st: BState): BState =
       if (st.done || st.lo < st.hi) st
       else if (st.phaseT) st.copy(done = true, c = st.lo)
       else {
-        val (tlo, thi) = statOf(s"__gt${st.spec}")
+        val (tlo, thi) = tRange(st.spec)
         settle(BState(st.spec, phaseT = true, tlo, thi, st.t, st.lo,
           done = false, 0L))
       }
-    states = states.map(settle)
+    var states = inits.map(settle)
     while (states.exists(!_.done)) {
       // distinct active (key, pred, range) — boundary searches moving
       // through the same range share one histogram (q81's four
@@ -326,10 +352,11 @@ object Ranks {
       }
       // counter rows only shuffle + collect — ≤ searches × 65536,
       // independent of the corpus size
-      val hist = work.select(explode(array(entries: _*)).as("e"))
+      val hist = work
+        .select(carry :+ explode(array(entries: _*)).as("e"): _*)
         .filter(col("e.cell").isNotNull)
         .groupBy(col("e.rid").as("rid"), col("e.cell").as("cell"))
-        .agg(count(lit(1)).as("cnt"))
+        .agg(mass.as("mass"))
         .collect()
         .groupBy(_.getInt(0))
         .map { case (rid, rs) =>
@@ -345,29 +372,20 @@ object Ranks {
           var next: Option[BState] = None
           val it = hist.getOrElse(rid, Seq.empty).iterator
           while (it.hasNext && next.isEmpty) {
-            val (cell, cnt) = it.next()
-            if (cum + cnt >= st.t) {
+            val (cell, m) = it.next()
+            if (cum + m >= st.t) {
               val newLo = st.lo + cell * width
               next = Some(st.copy(lo = newLo,
                 hi = math.min(st.hi, newLo + width - 1), t = st.t - cum))
-            } else cum += cnt
+            } else cum += m
           }
           settle(next.getOrElse(throw new IllegalStateException(
-            s"ntileBoundary: rank ${st.t} exceeds rows in range " +
+            s"$who: target ${st.t} exceeds the mass in range " +
               s"[${st.lo},${st.hi}] of ${st.keyCol}")))
         }
       }
     }
-    val bySpec = states.groupBy(_.spec)
-    val out = specs.zipWithIndex.foldLeft(work) { case (d, (sp, i)) =>
-      val bumps = bySpec(i).map { st =>
-        when(col(s"__gm$i") > lit(st.v) ||
-          (col(s"__gm$i") === lit(st.v) && col(s"__gt$i") > lit(st.c)),
-          1L).otherwise(0L)
-      }
-      d.withColumn(sp.out, bumps.reduce(_ + _) + lit(1L))
-    }
-    out.drop(helperCols: _*)
+    states
   }
 
   /** WEIGHTED boundary selection — [[ntileBoundary]]'s two-phase
@@ -395,13 +413,13 @@ object Ranks {
   def keysAtWeightedRanks(df: DataFrame, metric: Column,
       tiebreak: Column, weight: Column,
       targetsOf: Long => Seq[Long]): (Long, Map[Long, (Long, Long)]) = {
-    val work = df.select(metric.cast("bigint").as("__gm"),
-      tiebreak.cast("bigint").as("__gt"),
+    val work = df.select(metric.cast("bigint").as("__gm0"),
+      tiebreak.cast("bigint").as("__gt0"),
       weight.cast("bigint").as("__gw"))
     val stat = work.agg(sum(col("__gw")).as("__w"),
-      min(col("__gm")).as("__mlo"), max(col("__gm")).as("__mhi"),
-      min(col("__gt")).as("__tlo"), max(col("__gt")).as("__thi"),
-      sum(when(col("__gm").isNull || col("__gt").isNull ||
+      min(col("__gm0")).as("__mlo"), max(col("__gm0")).as("__mhi"),
+      min(col("__gt0")).as("__tlo"), max(col("__gt0")).as("__thi"),
+      sum(when(col("__gm0").isNull || col("__gt0").isNull ||
         col("__gw").isNull || col("__gw") < 0L, 1L).otherwise(0L))
         .as("__bad")).head()
     require(!stat.isNullAt(0), "keysAtWeightedRanks: empty frame")
@@ -416,72 +434,11 @@ object Ranks {
     val targets = targetsOf(totW)
     require(targets.forall(t => t >= 1L && t <= totW),
       s"keysAtWeightedRanks: targets $targets outside [1, $totW]")
-    // search state per target: phase M refines the metric range; on
-    // convergence v is recorded and the search re-arms over the
-    // tiebreak range predicated on metric = v with the residual weight
-    case class WState(t: Long, phaseT: Boolean, lo: Long, hi: Long,
-        resid: Long, v: Long, done: Boolean, c: Long)
-    def settle(st: WState): WState =
-      if (st.done || st.lo < st.hi) st
-      else if (st.phaseT) st.copy(done = true, c = st.lo)
-      else settle(WState(st.t, phaseT = true, tlo, thi, st.resid,
-        st.lo, done = false, 0L))
-    var states: Seq[WState] = targets.distinct.map(t =>
-      settle(WState(t, phaseT = false, mlo, mhi, t, 0L,
+    val uniq = targets.distinct
+    val states = boundarySearch(work, Seq(col("__gw")), sum(col("__gw")),
+      _ => (tlo, thi), "keysAtWeightedRanks",
+      uniq.map(t => BState(0, phaseT = false, mlo, mhi, t, 0L,
         done = false, 0L)))
-    while (states.exists(!_.done)) {
-      val ranges = states.collect { case st if !st.done =>
-        (st.phaseT, st.v, st.lo, st.hi)
-      }.distinct
-      val widths = ranges.map { case (_, _, lo, hi) =>
-        val span = hi - lo
-        span / math.min(HIST_CELLS, span + 1) + 1
-      }
-      val entries = ranges.zipWithIndex.map {
-        case ((phaseT, v, lo, hi), rid) =>
-          val keyc = if (phaseT) "__gt" else "__gm"
-          val pred = if (phaseT) s"__gm = CAST($v AS BIGINT)" else "true"
-          struct(lit(rid).as("rid"), expr(
-            s"""CASE WHEN ($pred)
-               |  AND $keyc BETWEEN CAST($lo AS BIGINT)
-               |    AND CAST($hi AS BIGINT)
-               |THEN ($keyc - CAST($lo AS BIGINT)) div ${widths(rid)}
-               |END""".stripMargin).as("cell"))
-      }
-      val hist = work
-        .select(col("__gw"), explode(array(entries: _*)).as("e"))
-        .filter(col("e.cell").isNotNull)
-        .groupBy(col("e.rid").as("rid"), col("e.cell").as("cell"))
-        .agg(sum(col("__gw")).as("w"))
-        .collect()
-        .groupBy(_.getInt(0))
-        .map { case (rid, rs) =>
-          rid -> rs.map(r => (r.getLong(1), r.getLong(2)))
-            .sortBy(_._1).toSeq
-        }
-      states = states.map { st =>
-        if (st.done) st
-        else {
-          val rid = ranges.indexOf((st.phaseT, st.v, st.lo, st.hi))
-          val width = widths(rid)
-          var cum = 0L
-          var next: Option[WState] = None
-          val it = hist.getOrElse(rid, Seq.empty).iterator
-          while (it.hasNext && next.isEmpty) {
-            val (cell, w) = it.next()
-            if (cum + w >= st.resid) {
-              val newLo = st.lo + cell * width
-              next = Some(st.copy(lo = newLo,
-                hi = math.min(st.hi, newLo + width - 1),
-                resid = st.resid - cum))
-            } else cum += w
-          }
-          settle(next.getOrElse(throw new IllegalStateException(
-            s"keysAtWeightedRanks: residual ${st.resid} exceeds " +
-              s"weight in [${st.lo},${st.hi}] (phaseT=${st.phaseT})")))
-        }
-      }
-    }
-    (totW, states.map(st => st.t -> (st.v, st.c)).toMap)
+    (totW, uniq.zip(states).map { case (t, st) => t -> (st.v, st.c) }.toMap)
   }
 }

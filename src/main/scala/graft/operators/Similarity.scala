@@ -70,6 +70,26 @@ object Similarity {
       seedStep: Long = 97L): DataFrame =
     corpus.filter(col("vec_id") % seedStep === 0).orderBy("vec_id").limit(k)
 
+  /** IVF coarse ranking: every row of `corpus` (vec_id, embedding, norm
+    * plus whatever else it carries) crossed with the [[coarseSeeds]] of
+    * `seedsFrom` as broadcast centroids `cid`, with cosine `ccos` and
+    * rank `crn` (1 = the assigned list; ties → lowest cid). Callers pick
+    * their own assigned/probed rows.
+    */
+  private[operators] def coarseRanked(corpus: DataFrame,
+      seedsFrom: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val cents = coarseSeeds(seedsFrom)
+      .select(col("vec_id").as("cid"), col("embedding").as("c_emb"),
+        col("norm").as("c_norm"))
+    val wAssign = Window.partitionBy("vec_id")
+      .orderBy(col("ccos").desc, col("cid"))
+    corpus.crossJoin(broadcast(cents))
+      .withColumn("ccos",
+        dot(col("embedding"), col("c_emb")) / (col("norm") * col("c_norm")))
+      .withColumn("crn", row_number().over(wAssign))
+  }
+
   /** TRAINED coarse quantizer: [[coarseSeeds]] refined by `rounds`
     * relational Lloyd iterations (the ss15 trained-codebook machinery
     * applied to the FULL vector instead of PQ subvectors): assign every
@@ -227,11 +247,7 @@ object Similarity {
     def dd(a: String, b: String) =
       graft.functions.GraftFunctions.double_dot(col(a), col(b))
     val raw = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-    val twins = raw.select((col("vec_id") + lit(10000000L)).as("vec_id"),
-      expr("""transform(embedding, (x, i) -> CAST(x + 0.001 *
-             |  ((((vec_id * 131071) + (i * 524287)) % 1000) / 500.0 - 1.0)
-             |  AS FLOAT))""".stripMargin).as("embedding"))
-    val base = raw.unionAll(twins)
+    val base = raw.unionAll(plantTwins(raw, "0.001"))
       .select(col("vec_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("e"))
       .withColumn("nrm", sqrt(dd("e", "e")))
@@ -373,13 +389,9 @@ object Similarity {
   def hardNegatives(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val base = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-    val twins = base.select((col("vec_id") + lit(10000000L)).as("vec_id"),
-      expr("""transform(embedding, (x, i) -> CAST(x + 0.001 *
-             |  ((((vec_id * 131071) + (i * 524287)) % 1000) / 500.0 - 1.0)
-             |  AS FLOAT))""".stripMargin).as("embedding"))
     // consumed by the anchor projection AND the scan side — eager
     // checkpoint (the multi-consumer rule)
-    val corpus = base.unionAll(twins)
+    val corpus = base.unionAll(plantTwins(base, "0.001"))
       .withColumn("norm", l2norm(col("embedding")))
       .localCheckpoint()
     val anchors = corpus.filter(col("vec_id") < 10)
@@ -650,11 +662,7 @@ object Similarity {
   def sqRecall(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val base = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-    val twins = base.select((col("vec_id") + lit(10000000L)).as("vec_id"),
-      expr("""transform(embedding, (x, i) -> CAST(x + 0.001 *
-             |  ((((vec_id * 131071) + (i * 524287)) % 1000) / 500.0 - 1.0)
-             |  AS FLOAT))""".stripMargin).as("embedding"))
-    val corpus = base.unionAll(twins)
+    val corpus = base.unionAll(plantTwins(base, "0.001"))
       .withColumn("e", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
       .withColumn("nrm", l2norm(col("embedding")))
       .withColumn("amax", expr("array_max(transform(e, x -> abs(x)))"))
@@ -779,16 +787,26 @@ object Similarity {
     */
   private def pqTwinCorpus(s: SparkSession, d: String): DataFrame = {
     val base = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-    def twins(off: Long, m1: Long, m2: Long) =
-      base.filter(col("vec_id") < 50).select(
-        (col("vec_id") + lit(off)).as("vec_id"),
-        expr(s"""transform(embedding, (x, i) -> CAST(x + 0.15 *
-               |  ((((vec_id * $m1) + (i * $m2)) % 1000) / 500.0 - 1.0)
-               |  AS FLOAT))""".stripMargin).as("embedding"))
-    base.unionAll(twins(10000000L, 131071L, 524287L))
-      .unionAll(twins(20000000L, 262147L, 196613L))
-      .unionAll(twins(30000000L, 524287L, 786433L))
+    val eligible = base.filter(col("vec_id") < 50)
+    base.unionAll(plantTwins(eligible, "0.15"))
+      .unionAll(plantTwins(eligible, "0.15", 20000000L, 262147L, 196613L))
+      .unionAll(plantTwins(eligible, "0.15", 30000000L, 524287L, 786433L))
   }
+
+  /** Planted near-twins of a `(vec_id, embedding)` corpus: id
+    * `vec_id + off`, and each dimension moved by `noise` times a fixed
+    * integer stream of the (base id, dimension) pair,
+    * `x + noise·((vec_id·m1 + i·m2) % 1000 / 500 − 1)`. Pure integer
+    * arithmetic (no engine-specific hash), so the oracle replays it
+    * verbatim. `noise` is spliced into the SQL as a decimal literal.
+    */
+  private[operators] def plantTwins(base: DataFrame, noise: String,
+      off: Long = 10000000L, m1: Long = 131071L, m2: Long = 524287L)
+      : DataFrame =
+    base.select((col("vec_id") + lit(off)).as("vec_id"),
+      expr(s"""transform(embedding, (x, i) -> CAST(x + $noise *
+              |  ((((vec_id * $m1) + (i * $m2)) % 1000) / 500.0 - 1.0)
+              |  AS FLOAT))""".stripMargin).as("embedding"))
 
   /** ss15 with a training knob — `rounds = 0` evaluates the raw
     * 16-sample codebook, letting the spec pin trained > untrained.
@@ -950,15 +968,7 @@ object Similarity {
     val corpus = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
       .withColumn("norm", l2norm(col("embedding")))
       .persist() // lazy-ok: cheap norm projection (see 138)
-    val cents = coarseSeeds(corpus)
-      .select(col("vec_id").as("cid"), col("embedding").as("c_emb"),
-        col("norm").as("c_norm"))
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("ccos").desc, col("cid"))
-    val ranked = corpus.crossJoin(broadcast(cents))
-      .withColumn("ccos",
-        dot(col("embedding"), col("c_emb")) / (col("norm") * col("c_norm")))
-      .withColumn("crn", row_number().over(wAssign))
+    val ranked = coarseRanked(corpus, corpus)
     val assigned = ranked.filter(col("crn") === 1)
       .select(col("vec_id"), col("embedding"), col("norm"),
         col("cid").as("cluster"))
@@ -1014,7 +1024,6 @@ object Similarity {
     * counters only on the wire, dims are the parallelism unit.
     */
   def embeddingHealth(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val dims = t(s, d, "embeddings")
       .select(posexplode(col("embedding")).as(Seq("dim", "x")))
       .select(col("dim").cast("bigint").as("dim"),
@@ -1119,15 +1128,7 @@ object Similarity {
     val corpus = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
       .withColumn("norm", l2norm(col("embedding")))
       .persist() // lazy-ok: cheap norm projection (see 138)
-    val cents = coarseSeeds(corpus)
-      .select(col("vec_id").as("cid"), col("embedding").as("c_emb"),
-        col("norm").as("c_norm"))
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("ccos").desc, col("cid"))
-    val ranked = corpus.crossJoin(broadcast(cents))
-      .withColumn("ccos",
-        dot(col("embedding"), col("c_emb")) / (col("norm") * col("c_norm")))
-      .withColumn("crn", row_number().over(wAssign))
+    val ranked = coarseRanked(corpus, corpus)
     val assigned = ranked.filter(col("crn") === 1)
       .select(col("vec_id"), col("embedding"), col("norm"),
         col("cid").as("cluster"))
@@ -1205,15 +1206,7 @@ object Similarity {
       .withColumn("norm", l2norm(col("embedding")))
       .withColumn("dead", (col("vec_id") % 10 === 3).cast("int"))
       .persist() // lazy-ok: cheap norm+dead-flag projection (see 138)
-    val cents = coarseSeeds(corpus)
-      .select(col("vec_id").as("cid"), col("embedding").as("c_emb"),
-        col("norm").as("c_norm"))
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("ccos").desc, col("cid"))
-    val ranked = corpus.crossJoin(broadcast(cents))
-      .withColumn("ccos",
-        dot(col("embedding"), col("c_emb")) / (col("norm") * col("c_norm")))
-      .withColumn("crn", row_number().over(wAssign))
+    val ranked = coarseRanked(corpus, corpus)
     val assigned = ranked.filter(col("crn") === 1)
       .select(col("vec_id"), col("embedding"), col("norm"), col("dead"),
         col("cid").as("cluster"))
@@ -1264,19 +1257,10 @@ object Similarity {
     * list metadata and only the delta is computed per cycle.
     */
   def ivfMaintain(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val all = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
       .withColumn("norm", l2norm(col("embedding")))
       .withColumn("is_new", (col("vec_id") % 10 === 7).cast("int"))
-    val cents = coarseSeeds(all.filter(col("is_new") === 0))
-      .select(col("vec_id").as("cid"), col("embedding").as("c_emb"),
-        col("norm").as("c_norm"))
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("ccos").desc, col("cid"))
-    val assigned = all.crossJoin(broadcast(cents))
-      .withColumn("ccos",
-        dot(col("embedding"), col("c_emb")) / (col("norm") * col("c_norm")))
-      .withColumn("crn", row_number().over(wAssign))
+    val assigned = coarseRanked(all, all.filter(col("is_new") === 0))
       .filter(col("crn") === 1)
       .select(col("vec_id"), col("is_new"), col("cid").as("cluster"))
     val lists = assigned.groupBy("cluster")
@@ -1312,15 +1296,7 @@ object Similarity {
     val corpus = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
       .withColumn("norm", l2norm(col("embedding")))
       .persist() // lazy-ok: cheap norm projection (see 138)
-    val cents = coarseSeeds(corpus)
-      .select(col("vec_id").as("cid"), col("embedding").as("c_emb"),
-        col("norm").as("c_norm"))
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("ccos").desc, col("cid"))
-    val ranked = corpus.crossJoin(broadcast(cents))
-      .withColumn("ccos",
-        dot(col("embedding"), col("c_emb")) / (col("norm") * col("c_norm")))
-      .withColumn("crn", row_number().over(wAssign))
+    val ranked = coarseRanked(corpus, corpus)
     val assigned = ranked.filter(col("crn") === 1)
       .select(col("vec_id"), col("embedding"), col("norm"),
         col("cid").as("cluster"))
@@ -1505,8 +1481,6 @@ object Similarity {
     * through BUCKETED tables first. */
   private def ivfPqBuild(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    val m = 8
     // (a repartition(32) spread here was A/B'd in r13 and REVERTED:
     // ss33/ss18/ss19 measured flat — the probe windows, not the build
     // passes, dominate — and the changed size estimates flipped AQE's
@@ -1518,19 +1492,11 @@ object Similarity {
       .persist() // lazy-ok: cheap norm projection (see 138)
     // stage 1 — coarse IVF: cosine argmax over 16 sampled centroids,
     // queries probe their top-2 lists (ss16's knee)
-    val coarse = coarseSeeds(base)
-      .select(col("vec_id").as("ccid"), col("embedding").as("cc_emb"),
-        col("norm").as("cc_norm"))
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("ccos").desc, col("ccid"))
-    val ranked = base.crossJoin(broadcast(coarse))
-      .withColumn("ccos",
-        dot(col("embedding"), col("cc_emb")) / (col("norm") * col("cc_norm")))
-      .withColumn("crn", row_number().over(wAssign))
+    val ranked = coarseRanked(base, base)
     val assigned = ranked.filter(col("crn") === 1)
-      .select(col("vec_id"), col("ccid").as("cluster"))
+      .select(col("vec_id"), col("cid").as("cluster"))
     val probes = ranked.filter(col("crn") <= 2 && col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("ccid").as("cluster"))
+      .select(col("vec_id").as("query_id"), col("cid").as("cluster"))
     // stage 2 — PQ codes (ss13's codebook, deterministic argmin)
     val codes = codesFor(base, pqCentroids(base))
     (base, assigned, codes, probes)
@@ -1706,7 +1672,6 @@ object Similarity {
     * frozen-codebook pipeline with a per-(query, segment) ADC window.
     */
   val ss34DeltaIndex: Q = (s, d) => {
-    import org.apache.spark.sql.expressions.Window
     // (a repartition(32) spread of this pool was A/B'd in r13 and
     // REVERTED like ivfPqBuild's: it changed the PROBE plan's size
     // estimates enough to flip AQE's auto-bucketed-scan / stage-reuse
@@ -1718,21 +1683,12 @@ object Similarity {
       .persist() // lazy-ok: cheap norm projection over the embedding pool (category A/B'd: eager +0.3 s at the ss18 site)
     val baseSeg = all.filter(col("vec_id") % 10 =!= 7)
     val deltaSeg = all.filter(col("vec_id") % 10 === 7)
-    val coarse = coarseSeeds(baseSeg)
-      .select(col("vec_id").as("ccid"), col("embedding").as("cc_emb"),
-        col("norm").as("cc_norm"))
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("ccos").desc, col("ccid"))
-    def ranked(seg: DataFrame): DataFrame = seg.crossJoin(broadcast(coarse))
-      .withColumn("ccos",
-        dot(col("embedding"), col("cc_emb")) / (col("norm") * col("cc_norm")))
-      .withColumn("crn", row_number().over(wAssign))
-    def assign(seg: DataFrame): DataFrame = ranked(seg)
+    def assign(seg: DataFrame): DataFrame = coarseRanked(seg, baseSeg)
       .filter(col("crn") === 1)
-      .select(col("vec_id"), col("ccid").as("cluster"))
-    val probes = ranked(all.filter(col("vec_id") < 10))
+      .select(col("vec_id"), col("cid").as("cluster"))
+    val probes = coarseRanked(all.filter(col("vec_id") < 10), baseSeg)
       .filter(col("crn") <= 2)
-      .select(col("vec_id").as("query_id"), col("ccid").as("cluster"))
+      .select(col("vec_id").as("query_id"), col("cid").as("cluster"))
     val cents = pqCentroids(baseSeg)
     val tbls = Bucketing.publish(s, "ss34",
       ivfSegment("graft_ivf_base", "graft_pq_base", assign(baseSeg),
@@ -1885,20 +1841,11 @@ object Similarity {
     * but 32 list counters.
     */
   def ss37CompactionReport(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val all = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
       .withColumn("norm", l2norm(col("embedding")))
       .withColumn("is_new", (col("vec_id") % 10 === 7).cast("int"))
-    def cents(seg: DataFrame): DataFrame = coarseSeeds(seg)
-      .select(col("vec_id").as("cid"), col("embedding").as("c_emb"),
-        col("norm").as("c_norm"))
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("ccos").desc, col("cid"))
-    def lists(cs: DataFrame, phase: String, newFlag: Column): DataFrame =
-      all.crossJoin(broadcast(cs))
-        .withColumn("ccos",
-          dot(col("embedding"), col("c_emb")) / (col("norm") * col("c_norm")))
-        .withColumn("crn", row_number().over(wAssign))
+    def lists(seg: DataFrame, phase: String, newFlag: Column): DataFrame =
+      coarseRanked(all, seg)
         .filter(col("crn") === 1)
         .select(col("vec_id"), newFlag.as("nf"), col("cid").as("cluster"))
         .groupBy("cluster")
@@ -1906,9 +1853,9 @@ object Similarity {
           count(when(col("nf") === 1, 1)).as("n_new"))
         .withColumn("n_total", col("n_base") + col("n_new"))
         .withColumn("phase", lit(phase))
-    val frozen = lists(cents(all.filter(col("is_new") === 0)),
-      "frozen", col("is_new"))
-    val compacted = lists(cents(all), "compacted", lit(0))
+    val frozen = lists(all.filter(col("is_new") === 0), "frozen",
+      col("is_new"))
+    val compacted = lists(all, "compacted", lit(0))
     val tot = all.agg(count(lit(1)).cast("long").as("corpus_n"),
       sum(col("is_new")).cast("long").as("delta_n"))
     frozen.unionByName(compacted).crossJoin(broadcast(tot))
@@ -1951,15 +1898,7 @@ object Similarity {
     val live = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
       .filter(col("vec_id") % 10 =!= 3)
       .withColumn("norm", l2norm(col("embedding")))
-    val cents = coarseSeeds(live)
-      .select(col("vec_id").as("cid"), col("embedding").as("c_emb"),
-        col("norm").as("c_norm"))
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("ccos").desc, col("cid"))
-    val ranked = live.crossJoin(broadcast(cents))
-      .withColumn("ccos",
-        dot(col("embedding"), col("c_emb")) / (col("norm") * col("c_norm")))
-      .withColumn("crn", row_number().over(wAssign))
+    val ranked = coarseRanked(live, live)
     val lists = ranked.filter(col("crn") === 1)
       .select(col("vec_id"), col("cid").as("cluster"),
         col("embedding"), col("norm"))
@@ -2031,7 +1970,7 @@ object Similarity {
     * (16-way parallelism cap) — salting src%4 with a ×4 dst replication
     * spread it to 64 key-groups, 4.9 → 3.9 s. The remaining stage
     * profile is FLAT (largest stage 0.53 s, ~20 stages of 0.1-0.5 s
-    * across build/seeds/expansion/truth/rollup — graft.Scratch table),
+    * across build/seeds/expansion/truth/rollup, per-stage timings),
     * so there is no dominant stage left to cut: ~3.9 s is the
     * documented bound for one full index build + expansion + sampled
     * exact-truth evaluation in a single query.
@@ -2044,11 +1983,7 @@ object Similarity {
     */
   private[graft] def ss20Corpus(s: SparkSession, d: String): DataFrame = {
     val raw = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-    val twins = raw.select((col("vec_id") + lit(10000000L)).as("vec_id"),
-      expr("""transform(embedding, (x, i) -> CAST(x + 0.05 *
-             |  ((((vec_id * 131071) + (i * 524287)) % 1000) / 500.0 - 1.0)
-             |  AS FLOAT))""".stripMargin).as("embedding"))
-    raw.unionAll(twins)
+    raw.unionAll(plantTwins(raw, "0.05"))
       // spread FIRST: the parquet corpus is 1-2 input splits, so every
       // downstream crossJoin/dot stage would run at parallelism 2 on a
       // 32-core session (measured: the dominant ss20 cost). All
@@ -2389,16 +2324,10 @@ object Similarity {
   def annRecall(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val base = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-    // ~0.1%-per-dimension noise from a fixed LCG-ish stream of the
-    // (base id, dimension) pair — replayed verbatim by the oracle
-    val twins = base.select((col("vec_id") + lit(10000000L)).as("vec_id"),
-      expr("""transform(embedding, (x, i) -> CAST(x + 0.001 *
-             |  ((((vec_id * 131071) + (i * 524287)) % 1000) / 500.0 - 1.0)
-             |  AS FLOAT))""".stripMargin).as("embedding"))
-    // One materialization feeding the exact side, the band self-join and
-    // two vector rejoins (the dd07 lesson: without it Spark recomputes
-    // scan+signature per branch).
-    val corpus = base.unionAll(twins)
+    // ~0.1%-per-dimension twin noise. One materialization feeding the
+    // exact side, the band self-join and two vector rejoins (the dd07
+    // lesson: without it Spark recomputes scan+signature per branch).
+    val corpus = base.unionAll(plantTwins(base, "0.001"))
       .withColumn("norm", l2norm(col("embedding")))
       .withColumn("sig", signBucket(col("embedding")))
       .persist() // lazy-ok: cheap norm+sig projection; exact side + band join + rejoins (see 138)
@@ -2720,15 +2649,7 @@ object Similarity {
       .withColumn("norm", l2norm(col("embedding")))
       .transform(graft.Par.spread)
       .localCheckpoint() // consumed by seeds, assignment, truth, probes
-    val cents = coarseSeeds(all)
-      .select(col("vec_id").as("cid"), col("embedding").as("c_emb"),
-        col("norm").as("c_norm"))
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("ccos").desc, col("cid"))
-    val rankedA = all.crossJoin(broadcast(cents))
-      .withColumn("ccos",
-        dot(col("embedding"), col("c_emb")) / (col("norm") * col("c_norm")))
-      .withColumn("crn", row_number().over(wAssign))
+    val rankedA = coarseRanked(all, all)
     val assigned = rankedA.filter(col("crn") === 1)
       .select(col("vec_id"), col("cid").as("cluster"),
         col("embedding"), col("norm"), col("source"))

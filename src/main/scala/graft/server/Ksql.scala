@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import graft.dialect.KsqlDialect
 import graft.sinks.Render
 import graft.sources.K8sSnapshot
+import graft.sources.v2.K8sSnapshotTable
 
 /** Main entry point — the Spark-native equivalent of `node ksql.js [www]`
   * (SURVEY §3): load the snapshot, register the four tables, then serve a
@@ -120,7 +121,7 @@ object Ksql {
     */
   def refreshOnce(spark: SparkSession, source: Source): Unit = {
     val before = K8sSnapshot.reading(
-      Seq("pods", "nodes", "services").map(t => t -> spark.table(t)))
+      K8sSnapshotTable.kinds.map(t => t -> spark.table(t)))
     val after = K8sSnapshot.load(spark, source.refetch())
     before.foreach { case (name, old) =>
       val counts = graft.sources.SnapshotDiff.summary(old, after(name))

@@ -6,6 +6,7 @@ import java.nio.file.{Files, Path}
 import java.util.Base64
 import scala.jdk.CollectionConverters._
 import org.yaml.snakeyaml.Yaml
+import graft.sources.v2.K8sSnapshotTable
 
 /** Live K8s API connection layer (SURVEY §2.1 S1-S3): kubeconfig
   * resolution and authenticated list fetches, mirroring the reference's
@@ -143,7 +144,7 @@ object K8sApi {
     val http = client(cfg)
     Files.createDirectories(outDir)
     // parallel like the reference's q.all (ksql.js:249-255)
-    Seq("pods", "nodes", "services").asJava.parallelStream.forEach { kind =>
+    K8sSnapshotTable.kinds.asJava.parallelStream.forEach { kind =>
       Files.writeString(outDir.resolve(s"$kind.json"),
         fetchList(cfg, http, kind))
     }

@@ -5,7 +5,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.GraftShim
-import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import graft.sources.v2.K8sSnapshotTable
 
@@ -22,46 +21,6 @@ import graft.sources.v2.K8sSnapshotTable
   * SQL engine's scope — SURVEY §2.1).
   */
 object K8sSnapshot {
-
-  /** Read one K8s list file into rows of its `items` array, with the full
-    * item JSON kept in `_raw` (SURVEY §1.6 escape hatch). multiLine: list
-    * responses are single pretty-printed JSON docs, not JSONL.
-    */
-  private def readItems(spark: SparkSession, path: String,
-      schema: StructType): DataFrame = {
-    import org.apache.spark.sql.types._
-    val listSchema = StructType(Seq(
-      StructField("items", ArrayType(StringType))))
-    // Two-phase read: first pull each item out as raw JSON text (escape
-    // hatch column), then parse the modeled subset with the explicit
-    // schema. Keeps unmodeled fields queryable via get_json_object(_raw).
-    spark.read.option("multiLine", "true")
-      .schema(listSchema).json(path)
-      .select(explode(col("items")).as("_raw"))
-      .withColumn("parsed", from_json(col("_raw"), schema))
-      .select(col("parsed.*"), col("_raw"))
-  }
-
-  /** Stamp T2 keys (ksql.js:200-201): pods get uid + node. */
-  def pods(spark: SparkSession, path: String): DataFrame =
-    readItems(spark, path, K8sSchemas.pod)
-      .withColumn("uid", col("metadata.uid"))
-      .withColumn("node", col("spec.nodeName"))
-      .select("uid", "node", "metadata", "spec", "status", "_raw")
-
-  /** Stamp T2 keys (ksql.js:230-234): nodes/services get uid + name. */
-  private def named(spark: SparkSession, path: String,
-      schema: StructType): DataFrame =
-    readItems(spark, path, schema)
-      .withColumn("uid", col("metadata.uid"))
-      .withColumn("name", col("metadata.name"))
-      .select("name", "uid", "metadata", "spec", "status", "_raw")
-
-  def nodes(spark: SparkSession, path: String): DataFrame =
-    named(spark, path, K8sSchemas.node)
-
-  def services(spark: SparkSession, path: String): DataFrame =
-    named(spark, path, K8sSchemas.service)
 
   /** T1: pod → containers flatten (ksql.js:197-214). Index alignment —
     * `spec.containers[j]` pairs with `status.containerStatuses[j]` — is
@@ -115,15 +74,12 @@ object K8sSnapshot {
     * views are replaced together under the generation write lock, so a
     * query analysed under `reading` never sees some of them swapped and
     * others not. A replaced generation is freed once no plan uses it.
-    *
-    * The `from_json` readers above are the independent implementation
-    * the specs cross-check this path against.
     */
   def load(spark: SparkSession, dir: String): Map[String, DataFrame] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
-    val tables = Seq("pods", "nodes", "services")
+    val tables = K8sSnapshotTable.kinds
       .map(k => k -> new K8sSnapshotTable(k, s"$dir/$k.json")).toMap
     // materialize the three files now, side by side, not in the first
     // query; the frames over them are built meanwhile

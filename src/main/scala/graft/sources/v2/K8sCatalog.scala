@@ -50,11 +50,12 @@ class K8sCatalog extends TableCatalog with SupportsNamespaces {
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     if (!known(namespace)) throw new RuntimeException(
       s"unknown namespace ${namespace.mkString(".")}")
-    KINDS.map(Identifier.of(Array(NAMESPACE), _))
+    K8sSnapshotTable.kinds.map(Identifier.of(Array(NAMESPACE), _)).toArray
   }
 
   override def loadTable(ident: Identifier): Table = {
-    if (!known(ident.namespace()) || !KINDS.contains(ident.name()))
+    if (!known(ident.namespace()) ||
+        !K8sSnapshotTable.kinds.contains(ident.name()))
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
         Seq(catalogName) ++ ident.namespace() :+ ident.name())
     new K8sSnapshotTable(ident.name(), s"$dir/${ident.name()}.json")
@@ -95,5 +96,4 @@ class K8sCatalog extends TableCatalog with SupportsNamespaces {
 
 object K8sCatalog {
   val NAMESPACE = "snapshot"
-  val KINDS: Array[String] = Array("pods", "nodes", "services")
 }

@@ -60,29 +60,30 @@ class K8sSnapshotSource extends TableProvider with DataSourceRegister {
 }
 
 object K8sSnapshotTable {
-  /** Full table schemas — modeled structs + stamped keys + _raw escape
+  /** The snapshot kinds, in load order: each one's modeled item schema
+    * (metadata, spec, status) and its stamped key columns in column
+    * order (ksql.js:200-201 for pods, :230-234 for nodes and services).
+    */
+  private val KINDS: Seq[(String, StructType, Seq[String])] = Seq(
+    ("pods", K8sSchemas.pod, Seq("uid", "node")),
+    ("nodes", K8sSchemas.node, Seq("name", "uid")),
+    ("services", K8sSchemas.service, Seq("name", "uid")))
+
+  private[graft] val kinds: Seq[String] = KINDS.map(_._1)
+
+  /** Each stamped key column and the item field it is read from. */
+  private[v2] val stampedFrom: Map[String, (String, String)] = Map(
+    "uid" -> ("metadata", "uid"), "name" -> ("metadata", "name"),
+    "node" -> ("spec", "nodeName"))
+
+  /** Full table schemas — stamped keys + modeled structs + _raw escape
     * hatch, identical to the view-based loader so queries are portable.
     */
-  def schemaFor(kind: String): StructType = kind match {
-    case "pods" => new StructType()
-      .add("uid", StringType).add("node", StringType)
-      .add("metadata", K8sSchemas.metadata)
-      .add("spec", K8sSchemas.pod("spec").dataType)
-      .add("status", K8sSchemas.pod("status").dataType)
-      .add("_raw", StringType)
-    case "nodes" => new StructType()
-      .add("name", StringType).add("uid", StringType)
-      .add("metadata", K8sSchemas.metadata)
-      .add("spec", K8sSchemas.node("spec").dataType)
-      .add("status", K8sSchemas.node("status").dataType)
-      .add("_raw", StringType)
-    case "services" => new StructType()
-      .add("name", StringType).add("uid", StringType)
-      .add("metadata", K8sSchemas.metadata)
-      .add("spec", K8sSchemas.service("spec").dataType)
-      .add("status", K8sSchemas.service("status").dataType)
-      .add("_raw", StringType)
-    case other => sys.error(s"k8s-snapshot: unknown kind '$other'")
+  def schemaFor(kind: String): StructType = KINDS.find(_._1 == kind) match {
+    case Some((_, item, keys)) =>
+      StructType(keys.map(StructField(_, StringType)) ++ item.fields :+
+        StructField("_raw", StringType))
+    case None => sys.error(s"k8s-snapshot: unknown kind '$kind'")
   }
 }
 
@@ -132,7 +133,7 @@ class K8sScanBuilder(table: K8sSnapshotTable)
     */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     val stampedCols = full.fieldNames.toSet
-      .intersect(Set("uid", "name", "node"))
+      .intersect(K8sSnapshotTable.stampedFrom.keySet)
     def supported(f: Filter): Boolean = f match {
       case EqualTo(a, v) => stampedCols(a) && v.isInstanceOf[String]
       case In(a, vs) => stampedCols(a) && vs.forall(_.isInstanceOf[String])
@@ -413,14 +414,6 @@ object K8sItems {
   /** Compact JSON, the bytes of `JsonNode.toString` in UTF-8. */
   private val json = new ObjectMapper().writer()
 
-  /** The stamped key columns, read from the item JSON. */
-  private def stamped(item: JsonNode, field: String): String = field match {
-    case "uid" => textAt(item, "metadata", "uid")
-    case "name" => textAt(item, "metadata", "name")
-    case "node" => textAt(item, "spec", "nodeName")
-    case _ => null
-  }
-
   private def textAt(n: JsonNode, p1: String, p2: String): String = {
     val a = n.get(p1)
     if (a == null) null
@@ -429,11 +422,12 @@ object K8sItems {
 
   def toRow(item: JsonNode, schema: StructType): InternalRow = {
     val values = schema.fields.map { f =>
-      f.name match {
-        case "uid" | "name" | "node" =>
-          Option(stamped(item, f.name)).map(UTF8String.fromString).orNull
-        case "_raw" => UTF8String.fromBytes(json.writeValueAsBytes(item))
-        case other => convert(item.get(other), f.dataType)
+      K8sSnapshotTable.stampedFrom.get(f.name) match {
+        case Some((p1, p2)) =>
+          Option(textAt(item, p1, p2)).map(UTF8String.fromString).orNull
+        case None if f.name == "_raw" =>
+          UTF8String.fromBytes(json.writeValueAsBytes(item))
+        case None => convert(item.get(f.name), f.dataType)
       }
     }
     InternalRow.fromSeq(values.toIndexedSeq)

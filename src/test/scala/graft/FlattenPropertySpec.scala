@@ -62,7 +62,7 @@ class FlattenPropertySpec extends SparkSpec {
       val pods =
         if (useV2) spark.read.format("k8s-snapshot").option("kind", "pods")
           .load(file.getPath)
-        else K8sSnapshot.pods(spark, file.getPath)
+        else FromJsonSnapshot.pods(spark, file.getPath)
       val containers = K8sSnapshot.containers(pods)
 
       val expectedCount = samples.map(_.nContainers).sum
@@ -87,7 +87,7 @@ class FlattenPropertySpec extends SparkSpec {
     // scan its compact form
     val blocks = spark.read.format("k8s-snapshot").option("kind", "pods")
       .load(file.getPath)
-    val fromJson = K8sSnapshot.pods(spark, file.getPath)
+    val fromJson = FromJsonSnapshot.pods(spark, file.getPath)
     assert(blocks.schema == fromJson.schema)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.map { r =>

@@ -20,7 +20,7 @@ class K8sDsv2Spec extends SparkSpec {
     val v2 = dsv2("pods")
       .select("uid", "node", "metadata.name", "status.phase")
       .collect().map(_.toSeq).toSet
-    val v1 = K8sSnapshot.pods(spark, s"$fixtureDir/pods.json")
+    val v1 = FromJsonSnapshot.pods(spark, s"$fixtureDir/pods.json")
       .select("uid", "node", "metadata.name", "status.phase")
       .collect().map(_.toSeq).toSet
     assert(v2 == v1)
@@ -58,7 +58,7 @@ class K8sDsv2Spec extends SparkSpec {
     assert(plan.contains("filters=") && plan.contains("EqualTo(node,node-a)"),
       plan)
     assert(df.collect().map(_.getString(0)).sorted.toSeq ==
-      K8sSnapshot.pods(spark, s"$fixtureDir/pods.json")
+      FromJsonSnapshot.pods(spark, s"$fixtureDir/pods.json")
         .filter(col("node") === "node-a")
         .collect().map(_.getString(0)).sorted.toSeq)
 
@@ -90,7 +90,7 @@ class K8sDsv2Spec extends SparkSpec {
     val got = spark.sql(
       "SELECT uid FROM k8s.snapshot.pods WHERE node = 'node-a' ORDER BY uid")
       .collect().map(_.getString(0)).toSeq
-    val want = K8sSnapshot.pods(spark, s"$fixtureDir/pods.json")
+    val want = FromJsonSnapshot.pods(spark, s"$fixtureDir/pods.json")
       .filter(col("node") === "node-a")
       .select("uid").collect().map(_.getString(0)).sorted.toSeq
     assert(got == want && got.nonEmpty)

@@ -122,22 +122,26 @@ class RanksSpec extends SparkSpec {
       "the metric, zero weights, desc order via negation (q88's shape)") {
     // metric: 97 distinct values (boundaries land inside equal-metric
     // groups → the phase-2 tiebreak search); weight: 0..4 with zeros
-    // (the boundary key must still carry weight); -k: descending
-    val df = corpus(1000)
-    val want = df.select(col("id"), (-col("k")).as("m"), col("v"))
-      .withColumn("cum", sum(col("v")).over(Window.orderBy(col("m"),
-        col("id")).rowsBetween(Window.unboundedPreceding, 0)))
-      .orderBy("m", "id").collect()
-    val totW = want.map(_.getLong(2)).sum
-    val targets = Seq(1L, totW / 5, totW / 2, (totW * 4) / 5, totW)
-    val (gotTot, got) = Ranks.keysAtWeightedRanks(df, -col("k"),
-      col("id"), col("v"), _ => targets)
-    assert(gotTot == totW)
-    targets.foreach { t =>
-      val first = want.find(_.getLong(3) >= t).get
-      assert(got(t) == (first.getLong(1), first.getLong(0)),
-        s"boundary at weighted rank $t: got ${got(t)}, want " +
-          s"(${first.getLong(1)}, ${first.getLong(0)})")
+    // (the boundary key must still carry weight); -k: descending.
+    // w spans ~1e10 values, so its search refines over several rounds.
+    val df = corpus(1000).withColumn("w",
+      xxhash64(col("id"), lit(7L)) % lit(5000000000L))
+    for ((name, metric) <- Seq("-k" -> -col("k"), "w" -> col("w"))) {
+      val want = df.select(col("id"), metric.as("m"), col("v"))
+        .withColumn("cum", sum(col("v")).over(Window.orderBy(col("m"),
+          col("id")).rowsBetween(Window.unboundedPreceding, 0)))
+        .orderBy("m", "id").collect()
+      val totW = want.map(_.getLong(2)).sum
+      val targets = Seq(1L, totW / 5, totW / 2, (totW * 4) / 5, totW)
+      val (gotTot, got) = Ranks.keysAtWeightedRanks(df, metric,
+        col("id"), col("v"), _ => targets)
+      assert(gotTot == totW, name)
+      targets.foreach { t =>
+        val first = want.find(_.getLong(3) >= t).get
+        assert(got(t) == (first.getLong(1), first.getLong(0)),
+          s"$name: boundary at weighted rank $t: got ${got(t)}, want " +
+            s"(${first.getLong(1)}, ${first.getLong(0)})")
+      }
     }
   }
 

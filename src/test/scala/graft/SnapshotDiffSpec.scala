@@ -1,12 +1,12 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.sources.{K8sSnapshot, SnapshotDiff}
+import graft.sources.SnapshotDiff
 
 /** Snapshot diffing between two loads (the refresh-delta query). */
 class SnapshotDiffSpec extends SparkSpec {
 
-  private lazy val pods = K8sSnapshot.pods(spark, s"$fixtureDir/pods.json")
+  private lazy val pods = FromJsonSnapshot.pods(spark, s"$fixtureDir/pods.json")
 
   test("identical snapshots diff to all-unchanged") {
     val d = SnapshotDiff.diff(pods, pods).collect()
