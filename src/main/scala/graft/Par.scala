@@ -18,17 +18,33 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * cluster get THEIR width instead of an 8-core box juggling 32 tasks.
   *
   * On a cluster master `defaultParallelism` counts only the executors
-  * registered so far: read right after session start it can be 2. A
-  * `spark.default.parallelism` setting is therefore a floor (Spark's own
-  * local and cluster schedulers already answer with it; the floor holds
-  * for any scheduler). It is read from the context's conf: the session's
-  * would build the whole session state on first use (~0.6 s), before
-  * the server can take requests.
+  * registered so far: read right after session start it can be 2. Two
+  * floors therefore apply. A `spark.default.parallelism` setting is one
+  * (Spark's own local and cluster schedulers already answer with it; the
+  * floor holds for any scheduler). On `local-cluster[n,c,m]` the master
+  * string itself names the cores that will register, n·c, and that is
+  * the other. Both are read from the context: the session's conf would
+  * build the whole session state on first use (~0.6 s), before the
+  * server can take requests.
   */
 object Par {
-  def width(s: SparkSession): Int = math.max(s.sparkContext.defaultParallelism,
-    s.sparkContext.getConf.getInt("spark.default.parallelism", 0))
+  def width(s: SparkSession): Int = {
+    val sc = s.sparkContext
+    Seq(sc.defaultParallelism, sc.getConf.getInt("spark.default.parallelism", 0),
+      masterCores(sc.master)).max
+  }
   def width(df: Dataset[_]): Int = width(df.sparkSession)
+
+  /** Spark's own pattern for a `local-cluster[n,c,m]` master. */
+  private val LocalCluster =
+    """local-cluster\[\s*([0-9]+)\s*,\s*([0-9]+)\s*,\s*([0-9]+)\s*]""".r
+
+  /** The executor cores a `local-cluster[n,c,m]` master starts, n·c; 0
+    * for any other master, whose cores its string does not name. */
+  def masterCores(master: String): Int = master match {
+    case LocalCluster(n, c, _) => n.toInt * c.toInt
+    case _ => 0
+  }
 
   /** Round-robin spread to machine width — `.transform(Par.spread)`
     * replaces the literal `.repartition(32)`. */

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.graftshim.GraftShim
 
@@ -77,15 +77,6 @@ case class TopKPerGroupExec(groupExprs: Seq[Expression],
 
   override protected def withNewChildInternal(newChild: SparkPlan)
       : SparkPlan = copy(child = newChild)
-}
-
-/** Planner strategy mapping the logical node to its physical operator. */
-object GraftStrategy extends SparkStrategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case TopKPerGroup(g, o, k, child) =>
-      TopKPerGroupExec(g, o, k, planLater(child)) :: Nil
-    case _ => Nil
-  }
 }
 
 object TopKPerGroup {

@@ -2,6 +2,7 @@ package graft.server
 
 import org.apache.spark.sql.SparkSession
 import graft.dialect.KsqlDialect
+import graft.plans.LocalCollect
 import graft.sinks.Render
 import graft.sources.K8sSnapshot
 import graft.sources.v2.K8sSnapshotTable
@@ -117,15 +118,17 @@ object Ksql {
     *
     * The "before" frames are the old views as analysed: each is bound to
     * its own immutable generation, so after the swap they still read the
-    * pre-refresh rows, with no copy pinned.
+    * pre-refresh rows, with no copy pinned. The diffs are collected as
+    * `/api` answers are (`LocalCollect`): over snapshot-sized generations
+    * they run no Spark job.
     */
   def refreshOnce(spark: SparkSession, source: Source): Unit = {
     val before = K8sSnapshot.reading(
       K8sSnapshotTable.kinds.map(t => t -> spark.table(t)))
     val after = K8sSnapshot.load(spark, source.refetch())
     before.foreach { case (name, old) =>
-      val counts = graft.sources.SnapshotDiff.summary(old, after(name))
-        .collect().map(r => s"${r.getString(0)}=${r.getLong(1)}")
+      val counts = LocalCollect(graft.sources.SnapshotDiff.summary(old, after(name)))
+        .map(r => s"${r.getString(0)}=${r.getLong(1)}")
       println(s"refreshed $name: ${counts.mkString(" ")}")
     }
   }
@@ -171,8 +174,10 @@ object Ksql {
     * snapshot generation (the read lock is held for analysis only, so a
     * refresh never waits for an execution), then collect and `render`
     * outside the lock. The request runs in its own Spark job group
-    * `ksql-<n>` with `interruptOnCancel`, so `cancelJobGroup` stops it
-    * as a unit; the group is cleared on exit, as pool threads are reused.
+    * `ksql-<n>` with `interruptOnCancel`, so `cancelJobGroup` stops the
+    * jobs it runs as a unit; the group is cleared on exit, as pool
+    * threads are reused. A request answered in-thread (see
+    * `graft.plans.LocalCollect`) runs no job for the group to cancel.
     */
   def answer(spark: SparkSession, query: String)(
       render: Render.Result => String): String = {

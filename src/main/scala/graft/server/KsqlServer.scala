@@ -24,11 +24,13 @@ import graft.sinks.Render
   * Documented divergence, identical answers: the reference serves one
   * request at a time on Node's event loop; here requests run concurrently
   * on a fixed pool of one thread per core of the session (`Par.width`).
-  * A request's time is mostly driver-side latency (job scheduling,
-  * collect), not core time, so requests overlap well. Each one analyses
-  * its query under `K8sSnapshot.reading` (see `Ksql.answer`), so it
-  * answers from one snapshot generation, as a serial server would
-  * between two refreshes.
+  * A query over snapshot-sized tables runs on its request thread with no
+  * Spark job (`graft.plans.LocalCollect`), so a request's time is its
+  * analysis, planning and row work on that one core; a larger query
+  * runs Spark jobs, whose tasks use the session's cores while the
+  * request thread waits. Each request analyses its query under
+  * `K8sSnapshot.reading` (see `Ksql.answer`), so it answers from one
+  * snapshot generation, as a serial server would between two refreshes.
   */
 class KsqlServer(spark: SparkSession, port: Int = 8090) {
   private val server = HttpServer.create(new InetSocketAddress(port), 0)

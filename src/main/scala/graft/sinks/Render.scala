@@ -1,6 +1,7 @@
 package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, Row}
+import graft.plans.LocalCollect
 
 /** Result sinks (SURVEY §2.3): the `{headers, data}` wire shape
   * (`/root/reference/ksql.js:137-154`), the ASCII table with `[]` on
@@ -9,9 +10,12 @@ import org.apache.spark.sql.{DataFrame, Row}
   * reference's first-row-only header quirk disappears (documented
   * superset behavior, SURVEY §2.3 K1).
   *
-  * These sinks `collect()` by design — they are terminal REPL/HTTP
+  * `process` collects the whole result: these are terminal REPL/HTTP
   * renderers for human-sized results, not operators; large results
-  * belong in `df.write` paths.
+  * belong in `df.write` paths. It collects through
+  * `graft.plans.LocalCollect`, so a query over snapshot-sized tables is
+  * answered on the calling thread with no Spark job, and any other query
+  * by `df.collect()`.
   */
 object Render {
 
@@ -19,7 +23,7 @@ object Render {
 
   /** K1: result → headers + row matrix. */
   def process(df: DataFrame): Result =
-    Result(df.columns.toSeq, df.collect().toSeq.map(_.toSeq))
+    Result(df.columns.toSeq, LocalCollect(df).toSeq.map(_.toSeq))
 
   /** JSON value rendering for rows — handles nested structs, maps,
     * arrays, null, numerics, booleans; everything else as a string.
@@ -56,16 +60,25 @@ object Render {
 
   /** JSON string literal: escapes the quote, the backslash and every
     * control character (< 0x20). */
-  private[graft] def jsonString(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  private[graft] def jsonString(s: String): String = {
+    val b = new java.lang.StringBuilder(s.length + 2).append('"')
+    var i = 0
+    while (i < s.length) {
+      s.charAt(i) match {
+        case '"' => b.append("\\\"")
+        case '\\' => b.append("\\\\")
+        case '\n' => b.append("\\n")
+        case '\r' => b.append("\\r")
+        case '\t' => b.append("\\t")
+        case c if c < ' ' => b.append("\\u00")
+          .append(Character.forDigit(c >> 4, 16))
+          .append(Character.forDigit(c & 0xf, 16))
+        case c => b.append(c)
+      }
+      i += 1
+    }
+    b.append('"').toString
+  }
 
   /** K3: the `{headers, data}` JSON wire shape, 2-space pretty like the
     * reference (`JSON.stringify(..., null, 2)`-compatible consumers only

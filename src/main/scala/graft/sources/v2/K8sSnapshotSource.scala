@@ -6,12 +6,15 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.core.JsonToken
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import net.jpountz.lz4.LZ4Factory
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedUnsafeProjection, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BoundReference, Expression, InterpretedUnsafeProjection, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceRDD, DataSourceV2ScanExecBase}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -39,8 +42,15 @@ import graft.sources.K8sSchemas
   * as the reader walks a decompressed block: the filters are checked on
   * the stored row, and only matching rows are projected. The scan
   * reports the generation's exact row count and in-memory byte size
-  * (`SupportsReportStatistics`), so joins over snapshot-sized tables
-  * plan as broadcast joins.
+  * (`SupportsReportStatistics`).
+  *
+  * A generation within `spark.sql.autoBroadcastJoinThreshold` (the size
+  * under which Spark would broadcast it) scans as one partition
+  * ([[K8sSnapshotScanExec]]): aggregates and sorts over it plan no
+  * exchange, and an equi-join of two such scans plans as a hash join of
+  * their single partitions, with no exchange and no broadcast job. A
+  * larger generation scans one block per task, and its joins plan as
+  * Spark chooses from the statistics.
   */
 class K8sSnapshotSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "k8s-snapshot"
@@ -113,7 +123,6 @@ class K8sScanBuilder(table: K8sSnapshotTable)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters {
   import org.apache.spark.sql.sources._
-  import table.{kind, path}
   private val full = table.schema()
   private var required: StructType = full
   private var pushed: Array[Filter] = Array.empty
@@ -150,34 +159,74 @@ class K8sScanBuilder(table: K8sSnapshotTable)
 
   override def pushedFilters(): Array[Filter] = pushed
 
-  override def build(): Scan = new Scan with Batch
-      with SupportsReportStatistics {
-    override def readSchema(): StructType = required
-    override def toBatch: Batch = this
-    override def planInputPartitions(): Array[InputPartition] =
-      table.generation.partitions
-    override def createReaderFactory(): PartitionReaderFactory =
-      new K8sReaderFactory(full, required, pushed)
-    /** The generation's exact size. A stream's table names a directory
-      * of generations, not one snapshot, and reports none.
-      */
-    override def estimateStatistics(): Statistics = {
-      val g = if (new java.io.File(path).isDirectory) None
-        else Some(table.generation)
-      new Statistics {
-        override def sizeInBytes(): OptionalLong =
-          g.fold(OptionalLong.empty())(x => OptionalLong.of(x.sizeInBytes))
-        override def numRows(): OptionalLong =
-          g.fold(OptionalLong.empty())(x => OptionalLong.of(x.numRows))
-      }
+  override def build(): Scan = new K8sScan(table, required, pushed)
+}
+
+/** One scan of a snapshot table: its pruned columns and its pushed
+  * stamped-key filters. As a `Batch` it plans one input partition per
+  * block of the generation; `K8sSnapshotScanExec` reads the same blocks
+  * as one partition.
+  */
+class K8sScan(val table: K8sSnapshotTable, required: StructType,
+    val pushed: Array[org.apache.spark.sql.sources.Filter])
+    extends Scan with Batch with SupportsReportStatistics {
+  import table.{kind, path}
+  private val full = table.schema()
+
+  /** The generation the scan reads. A stream's table names a directory
+    * of generations, not one snapshot, and has none.
+    */
+  def snapshot: Option[K8sGeneration] =
+    if (new java.io.File(path).isDirectory) None else Some(table.generation)
+
+  override def readSchema(): StructType = required
+  override def toBatch: Batch = this
+  override def planInputPartitions(): Array[InputPartition] =
+    table.generation.partitions
+  override def createReaderFactory(): PartitionReaderFactory =
+    new K8sReaderFactory(full, required, pushed)
+  /** The generation's exact size; none for a stream's table. */
+  override def estimateStatistics(): Statistics = {
+    val g = snapshot
+    new Statistics {
+      override def sizeInBytes(): OptionalLong =
+        g.fold(OptionalLong.empty())(x => OptionalLong.of(x.sizeInBytes))
+      override def numRows(): OptionalLong =
+        g.fold(OptionalLong.empty())(x => OptionalLong.of(x.numRows))
     }
-    override def toMicroBatchStream(checkpointLocation: String)
-        : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-      new K8sMicroBatchStream(kind, path, full, required, pushed)
-    override def description(): String =
-      s"k8s-snapshot kind=$kind path=$path cols=${required.fieldNames.mkString(",")}" +
-        s" filters=${pushed.mkString(",")}"
   }
+  override def toMicroBatchStream(checkpointLocation: String)
+      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
+    new K8sMicroBatchStream(kind, path, full, required, pushed)
+  override def description(): String =
+    s"k8s-snapshot kind=$kind path=$path cols=${required.fieldNames.mkString(",")}" +
+      s" filters=${pushed.mkString(",")}"
+}
+
+/** A snapshot scan as ONE partition that reads every block of the
+  * generation in order: a `BatchScanExec` of one task. It reports
+  * `SinglePartition`, so the aggregates, sorts and hash joins above it
+  * need no exchange, and a plan whose leaves are all such scans can be
+  * computed on the calling thread with no Spark job
+  * (`graft.plans.LocalCollect`). `graft.plans.GraftStrategy` plans it for
+  * a generation within `spark.sql.autoBroadcastJoinThreshold`; a larger
+  * one keeps the `BatchScanExec` of one task per block.
+  *
+  * Its rows are views over the stored rows, as a `BatchScanExec`'s are,
+  * so the strategy puts the projection that makes unsafe rows above it.
+  * The scan is transient, as `BatchScanExec`'s is: a task ships the RDD,
+  * not the scan.
+  */
+case class K8sSnapshotScanExec(output: Seq[AttributeReference],
+    @transient scan: K8sScan) extends DataSourceV2ScanExecBase {
+  override def outputPartitioning: Partitioning = SinglePartition
+  override def keyGroupedPartitioning: Option[Seq[Expression]] = None
+  override def ordering: Option[Seq[SortOrder]] = None
+  override def readerFactory: PartitionReaderFactory = scan.createReaderFactory()
+  override def inputPartitions: Seq[InputPartition] =
+    scan.planInputPartitions().toSeq
+  override lazy val inputRDD: RDD[InternalRow] = new DataSourceRDD(
+    sparkContext, Seq(inputPartitions), readerFactory, false, customMetrics)
 }
 
 /** Streaming face of the connector — the reference's snapshot REFRESH
@@ -317,10 +366,15 @@ object K8sGeneration {
     */
   val ChunkBytes: Int = 1 << 16
 
-  /** Most compressed bytes per block. A block rides inside its task, so
-    * this is Spark's recommended maximum task size (the scheduler warns
-    * above 1000 KiB): a snapshot under it scans as one task, a larger
-    * one in as many tasks as its compressed size needs.
+  /** Most compressed bytes per block: Spark's recommended maximum task
+    * size (the scheduler warns above 1000 KiB). A jobbed scan's tasks
+    * share one serialized RDD, and a `DataSourceRDD` holds every input
+    * partition, so each task binary carries every block of the
+    * generation, not only its own: a snapshot under this size scans as
+    * one task, a larger one as one task per block, each shipping the
+    * whole generation. A generation within
+    * `spark.sql.autoBroadcastJoinThreshold` is instead read as one
+    * partition ([[K8sSnapshotScanExec]]), usually with no job at all.
     */
   val MaxBlockBytes: Int = 1000 * 1024
 

@@ -206,17 +206,28 @@ class HttpServerSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      val q = "/api?query=" + URLEncoder.encode(
-        "select node, count(*) from pods group by node", "UTF-8")
-      assert(get(s"http://localhost:$port$q")._1 == 200)
-      assert(get(s"http://localhost:$port$q")._1 == 200)
-      // the listener bus is asynchronous: wait for both requests' jobs
+      def api(sql: String) = "/api?query=" + URLEncoder.encode(sql, "UTF-8")
+      // a query over a non-snapshot relation runs Spark jobs; one over
+      // the snapshot tables is answered in-thread and runs none
+      val jobbed = api("select id % 3 as k, count(*) from range(100) group by k")
+      val inThread = api("select node, count(*) from pods group by node")
+      assert(get(s"http://localhost:$port$jobbed")._1 == 200)
+      assert(get(s"http://localhost:$port$inThread")._1 == 200)
+      assert(get(s"http://localhost:$port$jobbed")._1 == 200)
+      // the listener bus is asynchronous but ordered: once the second
+      // jobbed request's jobs have arrived, the in-thread one's would have.
+      // Requests number their groups in order, so the three are ksql-n,
+      // ksql-(n+1) and ksql-(n+2).
       val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(30)
       def ids = groups.asScala.map(_._1).filter(g =>
         g != null && g.matches("ksql-\\d+")).toSet
-      while (ids.size < 2 && System.nanoTime() < deadline) Thread.sleep(50)
-      val requests = ids
-      assert(requests.size >= 2, groups)
+      def nums = ids.map(_.stripPrefix("ksql-").toLong)
+      while (!nums.exists(n => nums(n + 2)) && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      val seen = nums
+      val first = seen.filter(n => seen(n + 2)).max
+      assert(!seen(first + 1), groups)
+      val requests = Set(first, first + 2).map(n => s"ksql-$n")
       assert(groups.asScala.filter(g => requests(g._1)).forall(_._2 == "true"))
     } finally spark.sparkContext.removeSparkListener(listener)
   }

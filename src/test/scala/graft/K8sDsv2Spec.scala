@@ -1,11 +1,18 @@
 package graft
 
 import org.apache.spark.sql.connector.read.{SupportsPushDownFilters, SupportsReportStatistics}
+import org.apache.spark.sql.execution.FilterExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.sources.EqualTo
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import graft.dialect.KsqlDialect
 import graft.sources.K8sSnapshot
-import graft.sources.v2.K8sSnapshotTable
+import graft.plans.LocalCollect
+import graft.sources.v2.{K8sSnapshotScanExec, K8sSnapshotTable}
 
 /** DataSource V2 connector spec: same rows as the view-based loader,
   * column pruning reaches the reader, short name registered.
@@ -64,7 +71,6 @@ class K8sDsv2Spec extends SparkSpec {
 
     // the reader itself projects only matching rows — the pushdown
     // saves the per-row work, not just the downstream filter
-    import org.apache.spark.sql.sources.EqualTo
     val builder = new K8sSnapshotTable("pods", s"$fixtureDir/pods.json")
       .newScanBuilder(CaseInsensitiveStringMap.empty())
       .asInstanceOf[SupportsPushDownFilters]
@@ -112,7 +118,7 @@ class K8sDsv2Spec extends SparkSpec {
       spark.sql("SELECT * FROM k8s.snapshot.deployments").collect())
   }
 
-  test("the scan reports the generation's exact row count; joins broadcast") {
+  test("the scan reports the generation's exact row count; joins hash-join, no exchange") {
     for ((kind, items) <- Seq("pods" -> 4, "nodes" -> 3, "services" -> 2)) {
       val table = new K8sSnapshotTable(kind, s"$fixtureDir/$kind.json")
       val stats = table.newScanBuilder(CaseInsensitiveStringMap.empty())
@@ -120,15 +126,60 @@ class K8sDsv2Spec extends SparkSpec {
       assert(stats.numRows().getAsLong == items, kind)
       assert(stats.sizeInBytes().getAsLong == table.generation.sizeInBytes)
     }
-    // README query 3 over the loaded views: with exact statistics the
-    // join plans as a broadcast hash join, not a sort-merge join
+    // README query 3 over the loaded views: both sides are one-partition
+    // scans of a generation within the broadcast bound, so the join is a
+    // hash join of the two partitions, with no exchange of any kind (no
+    // shuffle and no broadcast) and no sort-merge join
     K8sSnapshot.load(spark, fixtureDir)
-    val plan = KsqlDialect.sql(spark,
+    val executed = KsqlDialect.sql(spark,
       "select pods.metadata->name,pods.metadata->annotations->email,image " +
         "from pods join containers using uid where image like 'mysql:5.5%'")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin") && !plan.contains("SortMergeJoin"),
-      plan)
+      .queryExecution.executedPlan
+    val plan = executed match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    assert(plan.collect { case j: ShuffledHashJoinExec => j }.size == 1, plan)
+    assert(plan.collect { case s: K8sSnapshotScanExec => s }.size == 2, plan)
+    assert(plan.collect {
+      case e: Exchange => e
+      case j: SortMergeJoinExec => j
+      case j: BroadcastHashJoinExec => j
+    }.isEmpty, plan)
+    assert(!executed.toString.contains("Exchange"), executed)
+  }
+
+  test("stamped-key pushdown and column pruning hold through the one-partition scan") {
+    val df = dsv2("pods").filter(col("uid") === "pod-uid-3").select("uid", "node")
+    val Seq(scan) = df.queryExecution.executedPlan
+      .collect { case s: K8sSnapshotScanExec => s }
+    val desc = scan.scan.description()
+    assert(desc.contains("cols=uid,node ") && desc.contains("EqualTo(uid,pod-uid-3)"),
+      desc)
+    assert(scan.scan.pushed.contains(EqualTo("uid", "pod-uid-3")))
+    assert(!df.queryExecution.executedPlan.exists(_.isInstanceOf[FilterExec]),
+      df.queryExecution.executedPlan)
+    assert(LocalCollect(df).map(_.toSeq).toSeq == Seq(Seq("pod-uid-3", "node-a")))
+    // the scan produced the one matching row of four: the reader checked
+    // the filter on each stored row and projected (converted) only that one
+    assert(scan.metrics("numOutputRows").value == 1)
+  }
+
+  test("a generation above the bound keeps the multi-block jobbed scan") {
+    val table = new K8sSnapshotTable("pods", s"$fixtureDir/pods.json")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, table.generation.sizeInBytes - 1)
+    try {
+      val df = dsv2("pods").filter(col("uid") === "pod-uid-3").select("uid", "node")
+      val plan = df.queryExecution.executedPlan
+      assert(plan.collect { case s: K8sSnapshotScanExec => s }.isEmpty, plan)
+      val Seq(batch) = plan.collect { case b: BatchScanExec => b }
+      assert(batch.inputRDD.getNumPartitions == table.generation.blocks.length)
+      assert(batch.toString.contains("EqualTo(uid,pod-uid-3)"), batch)
+      assert(LocalCollect.localPlan(df).isEmpty)
+      assert(LocalCollect(df).map(_.toSeq).toSeq == Seq(Seq("pod-uid-3", "node-a")))
+    } finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("_raw escape hatch carries the full item") {

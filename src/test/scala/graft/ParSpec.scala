@@ -24,4 +24,13 @@ class ParSpec extends SparkSpec {
     } finally conf.remove("spark.default.parallelism")
     assert(Par.width(spark) == cores)
   }
+
+  test("a local-cluster[n,c,m] master floors the width at n·c") {
+    assert(Par.masterCores("local-cluster[2,8,4096]") == 16)
+    assert(Par.masterCores("local-cluster[ 3 , 2 , 1024 ]") == 6)
+    assert(Par.masterCores("local[4]") == 0)
+    assert(Par.masterCores("local[*]") == 0)
+    assert(Par.masterCores("spark://host:7077") == 0)
+    assert(Par.width(spark) >= Par.masterCores(spark.sparkContext.master))
+  }
 }

@@ -42,4 +42,24 @@ class RenderSpec extends SparkSpec {
     assert(Render.toJson(r).contains("[\"yv4=\"]"))
     assert(Render.toAscii(r).contains("| yv4= |"))
   }
+
+  test("json strings escape quote, backslash and control characters; keep non-ASCII") {
+    val in = "a\"b\\c\nd\re\tf\u0001g\u001fh é 日"
+    assert(Render.jsonString(in) ==
+      "\"a\\\"b\\\\c\\nd\\re\\tf\\u0001g\\u001fh é 日\"")
+    val json = Render.toJson(Render.process(Seq(in).toDF("s")))
+    assert(json.contains("[\"a\\\"b\\\\c\\nd\\re\\tf\\u0001g\\u001fh é 日\"]"), json)
+    // every UTF-16 unit escapes as the per-character mapping always did
+    def perChar(c: Char): String = c match {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    }
+    for (c <- Char.MinValue to Char.MaxValue)
+      assert(Render.jsonString(c.toString) == "\"" + perChar(c) + "\"", c.toInt)
+  }
 }
