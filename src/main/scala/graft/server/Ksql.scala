@@ -1,6 +1,7 @@
 package graft.server
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.Command
 import graft.dialect.KsqlDialect
 import graft.plans.LocalCollect
 import graft.sinks.Render
@@ -120,17 +121,20 @@ object Ksql {
     * its own immutable generation, so after the swap they still read the
     * pre-refresh rows, with no copy pinned. The diffs are collected as
     * `/api` answers are (`LocalCollect`): over snapshot-sized generations
-    * they run no Spark job.
+    * they run no Spark job. Last, it prints what the replaced
+    * generation's [[graft.plans.PlanCache]] held and served.
     */
   def refreshOnce(spark: SparkSession, source: Source): Unit = {
-    val before = K8sSnapshot.reading(
-      K8sSnapshotTable.kinds.map(t => t -> spark.table(t)))
+    val (before, plans) = K8sSnapshot.reading(
+      (K8sSnapshotTable.kinds.map(t => t -> spark.table(t)), K8sSnapshot.plans(spark)))
     val after = K8sSnapshot.load(spark, source.refetch())
     before.foreach { case (name, old) =>
       val counts = LocalCollect(graft.sources.SnapshotDiff.summary(old, after(name)))
         .map(r => s"${r.getString(0)}=${r.getLong(1)}")
       println(s"refreshed $name: ${counts.mkString(" ")}")
     }
+    plans.foreach(c => println(s"prepared plans of the replaced generation: " +
+      s"${c.entries} texts, ${c.instances} idle, ${c.hits} hits, ${c.misses} misses"))
   }
 
   /** REPL loop (ksql.js:156-188): print ASCII table, `[]` on empty,
@@ -170,14 +174,23 @@ object Ksql {
 
   private val requests = new java.util.concurrent.atomic.AtomicLong
 
-  /** One request, REPL line or `GET /api`: analyse `query` against one
-    * snapshot generation (the read lock is held for analysis only, so a
-    * refresh never waits for an execution), then collect and `render`
-    * outside the lock. The request runs in its own Spark job group
-    * `ksql-<n>` with `interruptOnCancel`, so `cancelJobGroup` stops the
-    * jobs it runs as a unit; the group is cleared on exit, as pool
-    * threads are reused. A request answered in-thread (see
-    * `graft.plans.LocalCollect`) runs no job for the group to cancel.
+  /** One request, REPL line or `GET /api`, answered from one snapshot
+    * generation. The request runs in its own Spark job group `ksql-<n>`
+    * with `interruptOnCancel`, so `cancelJobGroup` stops the jobs it runs
+    * as a unit; the group is cleared on exit, as pool threads are reused.
+    *
+    * Under `K8sSnapshot.reading` (held for this step only, so a refresh
+    * never waits for an execution) the request either takes an idle
+    * prepared plan of `query` from the generation's `PlanCache`, or
+    * analyses `query` against that generation. A query analysed here is
+    * prepared (`LocalCollect.prepare`) when it qualifies for the
+    * in-thread path; then, either way, the prepared plan runs on this
+    * thread with no Spark job, and after a clean run goes back to the
+    * cache it came from or was missed in, which keeps it only if it is
+    * repeatable and reads that generation. A cache hit thus skips
+    * parsing, analysis, planning and code generation. Any other query is
+    * collected with its jobs, and a command (`SET`, `CREATE VIEW`, ...)
+    * starts the generation's prepared plans afresh.
     */
   def answer(spark: SparkSession, query: String)(
       render: Render.Result => String): String = {
@@ -185,8 +198,22 @@ object Ksql {
     sc.setJobGroup(s"ksql-${requests.incrementAndGet()}", query,
       interruptOnCancel = true)
     try {
-      val df = K8sSnapshot.reading(KsqlDialect.sql(spark, query))
-      render(Render.process(df))
+      val (plans, found) = K8sSnapshot.reading {
+        val plans = K8sSnapshot.plans(spark)
+        plans -> plans.flatMap(_.take(query)).toRight(KsqlDialect.sql(spark, query))
+      }
+      def run(p: LocalCollect.Prepared): Render.Result = {
+        val rows = p.run()
+        plans.foreach(_.give(query, p))
+        Render.process(p.columns, rows)
+      }
+      render(found match {
+        case Right(p) => run(p)
+        case Left(df) =>
+          if (df.queryExecution.analyzed.exists(_.isInstanceOf[Command]))
+            K8sSnapshot.forgetPlans()
+          LocalCollect.prepare(df).fold(Render.process(df.columns.toSeq, df.collect()))(run)
+      })
     } finally sc.clearJobGroup()
   }
 }

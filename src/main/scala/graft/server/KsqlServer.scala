@@ -25,12 +25,15 @@ import graft.sinks.Render
   * request at a time on Node's event loop; here requests run concurrently
   * on a fixed pool of one thread per core of the session (`Par.width`).
   * A query over snapshot-sized tables runs on its request thread with no
-  * Spark job (`graft.plans.LocalCollect`), so a request's time is its
-  * analysis, planning and row work on that one core; a larger query
-  * runs Spark jobs, whose tasks use the session's cores while the
-  * request thread waits. Each request analyses its query under
-  * `K8sSnapshot.reading` (see `Ksql.answer`), so it answers from one
-  * snapshot generation, as a serial server would between two refreshes.
+  * Spark job (`graft.plans.LocalCollect`), from a plan prepared once per
+  * snapshot generation and text (`graft.plans.PlanCache`): a repeated
+  * request's time is its row work on that one core, and only the first
+  * of a text, or one the cache does not keep, also analyses, plans and
+  * generates code. A larger query runs Spark jobs, whose tasks use the
+  * session's cores while the request thread waits. Each request finds its
+  * prepared plan or analyses its query under `K8sSnapshot.reading` (see
+  * `Ksql.answer`), so it answers from one snapshot generation, as a
+  * serial server would between two refreshes.
   */
 class KsqlServer(spark: SparkSession, port: Int = 8090) {
   private val server = HttpServer.create(new InetSocketAddress(port), 0)

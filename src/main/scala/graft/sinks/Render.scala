@@ -12,18 +12,22 @@ import graft.plans.LocalCollect
   *
   * `process` collects the whole result: these are terminal REPL/HTTP
   * renderers for human-sized results, not operators; large results
-  * belong in `df.write` paths. It collects through
-  * `graft.plans.LocalCollect`, so a query over snapshot-sized tables is
-  * answered on the calling thread with no Spark job, and any other query
-  * by `df.collect()`.
+  * belong in `df.write` paths. `process(df)` collects through
+  * `graft.plans.LocalCollect`: a query over snapshot-sized tables is
+  * prepared and run on the calling thread with no Spark job, and any
+  * other query is `df.collect()`. It keeps no prepared plan; the server
+  * (`graft.server.Ksql.answer`) keeps them per snapshot generation, and
+  * renders what it collects with `process(columns, rows)`.
   */
 object Render {
 
   case class Result(headers: Seq[String], data: Seq[Seq[Any]])
 
   /** K1: result → headers + row matrix. */
-  def process(df: DataFrame): Result =
-    Result(df.columns.toSeq, LocalCollect(df).toSeq.map(_.toSeq))
+  def process(df: DataFrame): Result = process(df.columns.toSeq, LocalCollect(df))
+
+  def process(columns: Seq[String], rows: Array[Row]): Result =
+    Result(columns, rows.toSeq.map(_.toSeq))
 
   /** JSON value rendering for rows — handles nested structs, maps,
     * arrays, null, numerics, booleans; everything else as a string.

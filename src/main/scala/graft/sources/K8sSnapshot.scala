@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import graft.plans.PlanCache
 import graft.sources.v2.K8sSnapshotTable
 
 /** Snapshot loader: K8s list responses → the four reference tables
@@ -51,17 +52,39 @@ object K8sSnapshot {
     */
   private val generation = new ReentrantReadWriteLock(true)
 
-  /** Run `body` (the analysis of a query over the views) against one
-    * snapshot generation: no `load` can swap the views meanwhile.
-    * Analysis binds a query to the views it names, so the query then
-    * reads that generation only, however long it executes. Keep
-    * execution out of `body`, or a refresh waits for it.
+  /** The prepared plans of the current generation (see [[PlanCache]]),
+    * swapped with the views; none before the first load.
+    */
+  @volatile private var cache: Option[PlanCache] = None
+
+  /** Run `body` (the analysis of a query over the views, or the lookup of
+    * its prepared plan in `plans`) against one snapshot generation: no
+    * `load` can swap the views meanwhile. Analysis binds a query to the
+    * views it names, so the query then reads that generation only,
+    * however long it executes. Keep execution out of `body`, or a refresh
+    * waits for it.
     */
   def reading[T](body: => T): T = {
     val lock = generation.readLock()
     lock.lock()
     try body finally lock.unlock()
   }
+
+  private def writing(body: => Unit): Unit = {
+    val lock = generation.writeLock()
+    lock.lock()
+    try body finally lock.unlock()
+  }
+
+  /** The current generation's prepared plans, when `spark` loaded it.
+    * Read it under `reading`, with the analysis it stands in for.
+    */
+  def plans(spark: SparkSession): Option[PlanCache] = cache.filter(_.owner eq spark)
+
+  /** Starts the current generation's prepared plans afresh: a command
+    * (`SET`, `CREATE VIEW`, ...) may have changed what a text means.
+    */
+  def forgetPlans(): Unit = writing { cache = cache.map(_.emptied) }
 
   /** Load all four tables and register temp views — the equivalent of
     * create_tables + load + .data assignment (ksql.js:249-265). Returns
@@ -73,7 +96,9 @@ object K8sSnapshot {
     * the files again, until the next `load` swaps the views. The four
     * views are replaced together under the generation write lock, so a
     * query analysed under `reading` never sees some of them swapped and
-    * others not. A replaced generation is freed once no plan uses it.
+    * others not. The generation's [[PlanCache]] starts empty and is
+    * swapped with them, so a replaced generation is freed, prepared plans
+    * and all, once no request in flight uses it.
     */
   def load(spark: SparkSession, dir: String): Map[String, DataFrame] = {
     import scala.concurrent.{Await, Future}
@@ -89,10 +114,11 @@ object K8sSnapshot {
     }
     val all = read + ("containers" -> containers(read("pods")))
     Await.result(parsed, Duration.Inf)
-    val lock = generation.writeLock()
-    lock.lock()
-    try all.foreach { case (n, df) => df.createOrReplaceTempView(n) }
-    finally lock.unlock()
+    val plans = new PlanCache(spark, tables.values.toSet)
+    writing {
+      all.foreach { case (n, df) => df.createOrReplaceTempView(n) }
+      cache = Some(plans)
+    }
     all
   }
 }

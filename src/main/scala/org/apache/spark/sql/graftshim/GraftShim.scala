@@ -4,6 +4,7 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.{SparkEnv, TaskContext, TaskContextImpl}
 import org.apache.spark.executor.TaskMetrics
 import org.apache.spark.memory.TaskMemoryManager
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -46,21 +47,22 @@ object GraftShim {
 
   private val localTasks = new AtomicLong
 
-  /** Computes the one partition of `plan` on the calling thread, with no
-    * Spark job, and hands its rows to `consume`.
+  /** Computes the one partition of `rdd` on the calling thread, with no
+    * Spark job, and hands its rows to `consume`. `rdd` is a physical
+    * plan's, already built (`SparkPlan.execute()`), so it can be computed
+    * again by a later call: each call is a task of its own.
     *
-    * The partition runs as a task of its own, set up as an executor sets
-    * one up: a `TaskContextImpl` with its own `TaskMemoryManager`, and the
-    * task registered for block locks. Its attempt id is negative (the
+    * The partition runs as a task set up as an executor sets one up: a
+    * `TaskContextImpl` with its own `TaskMemoryManager`, and the task
+    * registered for block locks. Its attempt id is negative (the
     * scheduler's are not) and unique per call: the execution memory pool
     * books memory per attempt id, so a shared id would let one call
     * release another's memory. On every exit the failure listeners (on a
     * failure) and the completion listeners run, and whatever execution
     * memory and block locks the task still holds are released.
     */
-  def runLocally[U](spark: org.apache.spark.sql.SparkSession, plan: SparkPlan)(
+  def runLocally[U](spark: org.apache.spark.sql.SparkSession, rdd: RDD[InternalRow])(
       consume: Iterator[InternalRow] => U): U = spark.withActive {
-    val rdd = plan.execute()
     require(rdd.getNumPartitions == 1,
       s"runLocally: ${rdd.getNumPartitions} partitions, not one")
     val env = SparkEnv.get
@@ -88,4 +90,9 @@ object GraftShim {
       } finally TaskContext.unset()
     }
   }
+
+  /** `runLocally` of `plan`, built here. */
+  def runLocally[U](spark: org.apache.spark.sql.SparkSession, plan: SparkPlan)(
+      consume: Iterator[InternalRow] => U): U =
+    runLocally(spark, spark.withActive(plan.execute()))(consume)
 }

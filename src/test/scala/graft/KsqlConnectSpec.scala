@@ -144,6 +144,38 @@ class KsqlConnectSpec extends SparkSpec {
     assert(old.get == null, "the pre-refresh generation is still reachable")
   }
 
+  test("a replaced generation is freed with its prepared plans warm") {
+    // the six bench queries, each answered twice, so the generation's
+    // plan cache holds a prepared plan of each when the refresh lands
+    val queries = Seq(
+      "select count(*) from containers where containers.image like 'mysql%'",
+      "select count(*),image from containers where containers.image like " +
+        "'mysql%' group by image",
+      "select pods.metadata->name,pods.metadata->annotations->email,image " +
+        "from pods join containers using uid where image like 'mysql:5.5%'",
+      "select pods.metadata->name,image from pods left join containers " +
+        "using uid where image like 'mysql%' and not " +
+        "pods.metadata->annotations->email",
+      "select node, count(*) from pods group by node",
+      "select metadata->name, node from pods where uid = 'pod-uid-1'")
+    def loadWarmAndWatch(): java.lang.ref.WeakReference[AnyRef] = {
+      val pods = K8sSnapshot.load(spark, fixtureDir)("pods")
+      for (q <- queries; _ <- 1 to 2) Ksql.answer(spark, q)(Render.toJson)
+      val plans = K8sSnapshot.plans(spark).get
+      assert(plans.entries == queries.size && plans.hits.get == queries.size)
+      val table = pods.queryExecution.analyzed.collectFirst {
+        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
+          r.table.asInstanceOf[graft.sources.v2.K8sSnapshotTable]
+      }.get
+      new java.lang.ref.WeakReference(table.generation)
+    }
+    val old = loadWarmAndWatch()
+    Ksql.refreshOnce(spark, Ksql.Source(fixtureDir, () => fixtureDir))
+    var i = 0
+    while (old.get != null && i < 20) { System.gc(); Thread.sleep(50); i += 1 }
+    assert(old.get == null, "the pre-refresh generation is still reachable")
+  }
+
   test("refreshes landing mid-query never answer from two generations") {
     val dirs = Seq(fixtureDir, droppedPodCopy().toString)
     // README query 4 joins pods and containers. The dropped pod is not in
