@@ -2,12 +2,13 @@ package graft.sources
 
 import java.util.concurrent.locks.ReentrantReadWriteLock
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import graft.plans.PlanCache
-import graft.sources.v2.K8sSnapshotTable
+import graft.plans.{LocalCollect, PlanCache}
+import graft.sources.v2.{K8sGeneration, K8sSnapshotTable}
 
 /** Snapshot loader: K8s list responses → the four reference tables
   * (`pods`, `nodes`, `services`, derived `containers`), registered as
@@ -93,28 +94,43 @@ object K8sSnapshot {
     * Each list file is parsed once, here, into the compressed in-memory
     * rows of a new [[K8sSnapshotTable]] (see `graft.sources.v2`), and the
     * views are bound to those tables: queries read that generation, never
-    * the files again, until the next `load` swaps the views. The four
-    * views are replaced together under the generation write lock, so a
-    * query analysed under `reading` never sees some of them swapped and
-    * others not. The generation's [[PlanCache]] starts empty and is
-    * swapped with them, so a replaced generation is freed, prepared plans
-    * and all, once no request in flight uses it.
+    * the files again, until the next `load` swaps the views.
+    *
+    * `containers` is flattened once per load too, as the reference fills
+    * its containers array while loading the pods and then assigns it as
+    * the table's data (ksql.js:197-215): [[containers]] runs here over the
+    * new pods table, collected as a query is (`LocalCollect`: in-thread
+    * for a snapshot-sized generation) while nodes and services still
+    * parse, and its rows become a table of their own
+    * (`K8sSnapshotTable.derived`). A query naming `containers` reads
+    * those rows, not the pods again.
+    *
+    * The four views are replaced together under the generation write
+    * lock, so a query analysed under `reading` never sees some of them
+    * swapped and others not. The generation's [[PlanCache]] starts empty
+    * and is swapped with them, so a replaced generation is freed,
+    * prepared plans and all, once no request in flight uses it.
     */
   def load(spark: SparkSession, dir: String): Map[String, DataFrame] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
-    val tables = K8sSnapshotTable.kinds
+    val files = K8sSnapshotTable.kinds
       .map(k => k -> new K8sSnapshotTable(k, s"$dir/$k.json")).toMap
     // materialize the three files now, side by side, not in the first
     // query; the frames over them are built meanwhile
-    val parsed = Future.traverse(tables.values)(t => Future(t.generation))
-    val read = tables.map { case (k, t) => k -> GraftShim.ofRows(spark,
+    val parsed = files.map { case (k, t) => k -> Future(t.generation) }
+    def frame(t: K8sSnapshotTable) = GraftShim.ofRows(spark,
       DataSourceV2Relation.create(t, None, None, CaseInsensitiveStringMap.empty()))
-    }
-    val all = read + ("containers" -> containers(read("pods")))
-    Await.result(parsed, Duration.Inf)
-    val plans = new PlanCache(spark, tables.values.toSet)
+    val read = files.map { case (k, t) => k -> frame(t) }
+    Await.result(parsed("pods"), Duration.Inf)
+    val flat = containers(read("pods"))
+    val toRow = ExpressionEncoder(flat.schema).createSerializer()
+    val flattened = K8sSnapshotTable.derived("containers", files("pods").path,
+      flat.schema, K8sGeneration.of(flat.schema, LocalCollect(flat).iterator.map(toRow)))
+    Await.result(Future.sequence(parsed.values), Duration.Inf)
+    val all = read + ("containers" -> frame(flattened))
+    val plans = new PlanCache(spark, files.values.toSet + flattened)
     writing {
       all.foreach { case (n, df) => df.createOrReplaceTempView(n) }
       cache = Some(plans)

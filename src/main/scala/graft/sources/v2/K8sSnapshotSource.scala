@@ -8,7 +8,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import net.jpountz.lz4.LZ4Factory
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BoundReference, Expression, InterpretedUnsafeProjection, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BoundReference, Expression, InterpretedUnsafeProjection, SortOrder, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -95,15 +95,27 @@ object K8sSnapshotTable {
         StructField("_raw", StringType))
     case None => sys.error(s"k8s-snapshot: unknown kind '$kind'")
   }
+
+  /** A table `kind` of `schema` whose rows, `generation`, were computed
+    * from the table of the list file at `from`. */
+  def derived(kind: String, from: String, schema: StructType,
+      generation: K8sGeneration): K8sSnapshotTable =
+    new K8sSnapshotTable(kind, from, schema, () => generation)
 }
 
 /** One list file as a table. `path` names a list file for batch reads,
-  * or a directory of generation files for the micro-batch stream.
+  * or a directory of generation files for the micro-batch stream. A
+  * table derived from a list file (`K8sSnapshotTable.derived`) holds rows
+  * computed from that file's table instead, and `path` names that file.
   */
-class K8sSnapshotTable(val kind: String, val path: String)
+class K8sSnapshotTable private (val kind: String, val path: String,
+    tableSchema: StructType, materialize: () => K8sGeneration)
     extends Table with SupportsRead {
+  def this(kind: String, path: String) = this(kind, path,
+    K8sSnapshotTable.schemaFor(kind), () => K8sGeneration.read(kind, path))
+
   override def name(): String = s"k8s-snapshot:$kind:$path"
-  override def schema(): StructType = K8sSnapshotTable.schemaFor(kind)
+  override def schema(): StructType = tableSchema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ,
       TableCapability.MICRO_BATCH_READ)
@@ -113,7 +125,7 @@ class K8sSnapshotTable(val kind: String, val path: String)
     * last plan bound to it is gone). Never re-read, so a file rewritten
     * meanwhile is seen only by a new table.
     */
-  lazy val generation: K8sGeneration = K8sGeneration.read(kind, path)
+  lazy val generation: K8sGeneration = materialize()
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new K8sScanBuilder(this)
@@ -389,34 +401,59 @@ object K8sGeneration {
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
     val full = K8sSnapshotTable.schemaFor(kind)
-    // interpreted: generating code for these nested schemas compiles for
-    // seconds, far longer than converting a large snapshot takes
-    val fields = full.fields.toSeq.zipWithIndex
-      .map { case (f, i) => BoundReference(i, f.dataType, f.nullable) }
-    val toUnsafe = ThreadLocal.withInitial(() =>
-      InterpretedUnsafeProjection.createProjection(fields))
     val inFlight = 2 * Runtime.getRuntime.availableProcessors
     val chunks = scala.collection.mutable.ArrayBuffer.empty[Future[K8sChunk]]
     K8sItems.foreachChunk(path, ChunkBytes) { items =>
       if (chunks.size >= inFlight) Await.ready(chunks(chunks.size - inFlight), Duration.Inf)
-      chunks += Future(chunk(items, full, toUnsafe.get))
+      chunks += Future {
+        val w = new ChunkWriter(full)
+        items.foreach(item => w.add(K8sItems.toRow(item, full)))
+        w.result()
+      }
     }
     new K8sGeneration(pack(chunks.map(Await.result(_, Duration.Inf)).toSeq))
   }
 
-  private def chunk(items: Array[JsonNode], full: StructType,
-      toUnsafe: UnsafeProjection): K8sChunk = {
-    val raw = new java.io.ByteArrayOutputStream(4 * ChunkBytes)
-    val out = new java.io.DataOutputStream(raw)
-    val scratch = new Array[Byte](1 << 12)
-    items.foreach { item =>
-      val row = toUnsafe(K8sItems.toRow(item, full))
-      out.writeInt(row.getSizeInBytes)
-      row.writeToStream(out, scratch)
+  /** The rows of a derived table, in order, cut into chunks of about
+    * [[ChunkBytes]] of rows. */
+  def of(schema: StructType, rows: Iterator[InternalRow]): K8sGeneration = {
+    val chunks = Seq.newBuilder[K8sChunk]
+    var w = new ChunkWriter(schema)
+    rows.foreach { r =>
+      w.add(r)
+      if (w.bytes >= ChunkBytes) { chunks += w.result(); w = new ChunkWriter(schema) }
     }
-    val bytes = raw.toByteArray
-    K8sChunk(items.length, bytes.length,
-      LZ4Factory.fastestInstance().fastCompressor().compress(bytes))
+    if (w.rows > 0) chunks += w.result()
+    new K8sGeneration(pack(chunks.result()))
+  }
+
+  /** Rows of `schema` written as one chunk: each as a full-schema
+    * `UnsafeRow` after its length, the whole LZ4-compressed at `result`.
+    */
+  private final class ChunkWriter(schema: StructType) {
+    // interpreted: generating code for the nested snapshot schemas
+    // compiles for seconds, far longer than converting a large snapshot
+    private val toUnsafe = InterpretedUnsafeProjection.createProjection(
+      schema.fields.toSeq.zipWithIndex
+        .map { case (f, i) => BoundReference(i, f.dataType, f.nullable) })
+    private val raw = new java.io.ByteArrayOutputStream(4 * ChunkBytes)
+    private val out = new java.io.DataOutputStream(raw)
+    private val scratch = new Array[Byte](1 << 12)
+    var rows = 0
+
+    def add(row: InternalRow): Unit = {
+      val r = toUnsafe(row)
+      out.writeInt(r.getSizeInBytes)
+      r.writeToStream(out, scratch)
+      rows += 1
+    }
+
+    def bytes: Int = raw.size
+
+    def result(): K8sChunk = {
+      val b = raw.toByteArray
+      K8sChunk(rows, b.length, LZ4Factory.fastestInstance().fastCompressor().compress(b))
+    }
   }
 
   /** Consecutive chunks into blocks of at most [[MaxBlockBytes]]. */

@@ -51,12 +51,20 @@ class FlattenPropertySpec extends SparkSpec {
        |}""".stripMargin
   }
 
+  /** A snapshot directory of `samples` as pods, with no nodes or
+    * services. */
+  private def snapshotOf(samples: Seq[GenPod]): java.io.File = {
+    val dir = Files.createTempDirectory("flatten-prop").toFile
+    Files.writeString(new java.io.File(dir, "pods.json").toPath,
+      s"""{"items": [${samples.map(podJson).mkString(",")}]}""")
+    Seq("nodes", "services").foreach(k =>
+      Files.writeString(new java.io.File(dir, s"$k.json").toPath, """{"items": []}"""))
+    dir
+  }
+
   test("flatten invariants hold for generated pod lists on both loaders") {
     val samples = Gen.listOfN(8, podGen).sample.get
-    val dir = Files.createTempDirectory("flatten-prop").toFile
-    val file = new java.io.File(dir, "pods.json")
-    Files.writeString(file.toPath,
-      s"""{"items": [${samples.map(podJson).mkString(",")}]}""")
+    val file = new java.io.File(snapshotOf(samples), "pods.json")
 
     for (useV2 <- Seq(true, false)) {
       val pods =
@@ -95,5 +103,18 @@ class FlattenPropertySpec extends SparkSpec {
     }
     assert(rows(blocks).size == samples.size)
     assert(rows(blocks) == rows(fromJson))
+  }
+
+  test("the containers table flattened at load equals the flatten of the loaded pods") {
+    def multiset(df: org.apache.spark.sql.DataFrame) =
+      df.collect().toSeq.groupBy(_.toSeq).map { case (k, v) => k -> v.size }
+    val random = Gen.listOfN(24, podGen).sample.get
+    for (dir <- Seq(fixtureDir, snapshotOf(random).getPath)) {
+      val tables = K8sSnapshot.load(spark, dir)
+      val flat = K8sSnapshot.containers(tables("pods"))
+      assert(tables("containers").schema == flat.schema, dir)
+      assert(multiset(tables("containers")) == multiset(flat), dir)
+      assert(multiset(spark.table("containers")) == multiset(flat), dir)
+    }
   }
 }

@@ -126,22 +126,27 @@ class KsqlConnectSpec extends SparkSpec {
   }
 
   test("a replaced generation is freed once no plan uses it") {
-    // the table owns its rows: after a refresh swaps the views, nothing
-    // JVM-wide keeps the old generation reachable
-    def loadAndWatch(): java.lang.ref.WeakReference[AnyRef] = {
-      val pods = K8sSnapshot.load(spark, fixtureDir)("pods")
-      pods.count()
-      val table = pods.queryExecution.analyzed.collectFirst {
-        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
-          r.table.asInstanceOf[graft.sources.v2.K8sSnapshotTable]
-      }.get
-      new java.lang.ref.WeakReference(table.generation)
+    // the tables own their rows: after a refresh swaps the views, nothing
+    // JVM-wide keeps the old generation reachable, the pods parsed from
+    // the file nor the containers flattened from them
+    def loadAndWatch(): Seq[java.lang.ref.WeakReference[AnyRef]] = {
+      val tables = K8sSnapshot.load(spark, fixtureDir)
+      Seq("pods", "containers").map { name =>
+        val df = tables(name)
+        df.count()
+        val table = df.queryExecution.analyzed.collectFirst {
+          case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
+            r.table.asInstanceOf[graft.sources.v2.K8sSnapshotTable]
+        }.get
+        assert(table.kind == name)
+        new java.lang.ref.WeakReference[AnyRef](table.generation)
+      }
     }
     val old = loadAndWatch()
     Ksql.refreshOnce(spark, Ksql.Source(fixtureDir, () => fixtureDir))
     var i = 0
-    while (old.get != null && i < 20) { System.gc(); Thread.sleep(50); i += 1 }
-    assert(old.get == null, "the pre-refresh generation is still reachable")
+    while (old.exists(_.get != null) && i < 20) { System.gc(); Thread.sleep(50); i += 1 }
+    assert(old.forall(_.get == null), "the pre-refresh generation is still reachable")
   }
 
   test("a replaced generation is freed with its prepared plans warm") {

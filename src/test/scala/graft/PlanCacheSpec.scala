@@ -101,6 +101,19 @@ class PlanCacheSpec extends SparkSpec {
     } finally K8sGen.rm(dir)
   }
 
+  test("README query 1 reads the loaded containers table and is a hit the second time") {
+    K8sSnapshot.load(spark, fixtureDir)
+    val q = queries(0)
+    val first = ask(q)
+    assert(plans.misses.get == 1 && plans.hits.get == 0)
+    assert(ask(q) == first && first.data == Seq(Seq(3L)))
+    assert(plans.misses.get == 1 && plans.hits.get == 1 && plans.instances == 1)
+    // its one leaf is the containers table of this generation: the pods
+    // are not scanned and flattened again
+    val Some(p) = LocalCollect.prepare(KsqlDialect.sql(spark, q))
+    assert(p.reads.map(_.kind) == Seq("containers"))
+  }
+
   test("a text answered N times is prepared once per generation") {
     K8sSnapshot.load(spark, fixtureDir)
     val q = queries(4)
