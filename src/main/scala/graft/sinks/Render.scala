@@ -39,7 +39,10 @@ object Render {
     case n @ (_: Int | _: Long | _: Short | _: Byte) => n.toString
     case d: Double => if (d.isNaN || d.isInfinite) jsonString(d.toString)
       else d.toString
-    case f: Float => jsonValue(f.toDouble)
+    // Float's own shortest form, as the ASCII sink prints it: widened
+    // to a double, 1.1f would print as 1.100000023841858
+    case f: Float => if (f.isNaN || f.isInfinite) jsonString(f.toString)
+      else f.toString
     case d: java.math.BigDecimal => d.toPlainString
     case r: Row => r.schema match {
       case null => r.toSeq.map(jsonValue).mkString("[", ",", "]")

@@ -5,12 +5,13 @@ import java.util.OptionalLong
 import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.core.JsonToken
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import net.jpountz.lz4.LZ4Factory
+import net.jpountz.lz4.{LZ4Factory, LZ4SafeDecompressor}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BoundReference, Expression, InterpretedUnsafeProjection, SortOrder, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition}
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -19,7 +20,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.Platform
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.unsafe.types.{CalendarInterval, GeographyVal, GeometryVal, UTF8String, VariantVal}
 import graft.sources.K8sSchemas
 
 /** DataSource V2 connector for K8s snapshot lists (SURVEY §4 / §7.3
@@ -31,18 +32,25 @@ import graft.sources.K8sSchemas
   *
   * Like the reference, which loads its snapshot into arrays once and
   * answers every query from them (`ksql.js:249-265`), a table parses its
-  * list file once, on first use, into a [[K8sGeneration]]: full-schema
-  * `UnsafeRow`s in LZ4-compressed blocks that the table keeps for its
-  * lifetime. Every scan of the table reads those blocks, so a DataFrame
+  * list file once, on first use, into a [[K8sGeneration]] that the table
+  * keeps for its lifetime: chunks of rows stored column by column, each
+  * top-level column's values LZ4-compressed on their own, packed into
+  * blocks. Every scan of the table reads those blocks, so a DataFrame
   * over it answers from one point-in-time snapshot however often the
-  * file changes. The JSON→row conversion runs only at that step.
+  * file changes. The JSON→row conversion runs only at that step. A table
+  * derived from one (`containers`, flattened from `pods` at
+  * `graft.sources.K8sSnapshot.load`) stores its rows the same way.
   *
-  * Top-level column pruning (`SupportsPushDownRequiredColumns`) and the
-  * stamped-key filter pushdown (`SupportsPushDownFilters`) apply per row
-  * as the reader walks a decompressed block: the filters are checked on
-  * the stored row, and only matching rows are projected. The scan
-  * reports the generation's exact row count and in-memory byte size
-  * (`SupportsReportStatistics`).
+  * As Dremel reads only the columns a query touches, a scan decompresses
+  * only its columns: top-level column pruning
+  * (`SupportsPushDownRequiredColumns`) picks them, and `count(*)` reads
+  * none. The stamped-key filters (`SupportsPushDownFilters`) are checked
+  * on each stored row after only their own columns are decompressed, and
+  * a chunk's other columns are decompressed only when one of its rows
+  * passes; only matching rows are projected. The scan reports the
+  * generation's exact row count and compressed size
+  * (`SupportsReportStatistics`), and the compressed bytes it decompressed
+  * as the custom metric `bytesDecompressed` ([[K8sBytesDecompressed]]).
   *
   * A generation within `spark.sql.autoBroadcastJoinThreshold` (the size
   * under which Spark would broadcast it) scans as one partition
@@ -139,18 +147,19 @@ class K8sScanBuilder(table: K8sSnapshotTable)
   private var required: StructType = full
   private var pushed: Array[Filter] = Array.empty
 
-  /** Top-level pruning: a requested column keeps its full type, since the
-    * stored rows are full-schema and the projection copies whole columns.
+  /** Top-level pruning: a requested column keeps its full type, since
+    * each top-level column is stored, and decompressed, whole.
     */
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = StructType(requiredSchema.fieldNames.map(full(_)))
 
   /** Push simple predicates on the STAMPED key columns (uid/name/node)
-    * down to the reader: each stored row is checked before it is
-    * projected, so on a large cluster snapshot a `WHERE node = 'x'`
-    * projects only x's pods, not the fleet (SURVEY §4 checklist). The
-    * evaluation is exact, so accepted filters produce no residual for
-    * Spark to re-check.
+    * down to the reader: each stored row is checked on those columns
+    * alone before anything else is decompressed or projected, so on a
+    * large cluster snapshot a `WHERE node = 'x'` projects only x's pods,
+    * not the fleet (SURVEY §4 checklist), and decompresses the other
+    * columns only of the chunks holding them. The evaluation is exact,
+    * so accepted filters produce no residual for Spark to re-check.
     */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     val stampedCols = full.fieldNames.toSet
@@ -197,6 +206,8 @@ class K8sScan(val table: K8sSnapshotTable, required: StructType,
     table.generation.partitions
   override def createReaderFactory(): PartitionReaderFactory =
     new K8sReaderFactory(full, required, pushed)
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    Array(new K8sBytesDecompressed)
   /** The generation's exact size; none for a stream's table. */
   override def estimateStatistics(): Statistics = {
     val g = snapshot
@@ -324,57 +335,138 @@ case class K8sGenOffset(gen: Long)
   override def json(): String = gen.toString
 }
 
-/** The items of about [[K8sGeneration.ChunkBytes]] of list JSON as
-  * full-schema `UnsafeRow`s, each stored as a 4-byte length and its
-  * bytes, LZ4-compressed as a whole.
+/** One top-level column of a chunk: each row's value as a one-field
+  * `UnsafeRow` after a 4-byte length, `rawBytes` in all, LZ4-compressed
+  * as a whole.
   */
-final case class K8sChunk(rows: Int, rawBytes: Int, lz4: Array[Byte])
+final case class K8sColumn(rawBytes: Int, lz4: Array[Byte])
+
+/** The rows of about [[K8sGeneration.ChunkBytes]] of list JSON (of rows,
+  * for a derived table), stored column by column: `columns(i)` holds
+  * column i of the table schema for all `rows` rows, in row order. A
+  * reader decompresses only the columns it reads.
+  */
+final case class K8sChunk(rows: Int, columns: Array[K8sColumn]) {
+  def lz4Bytes: Long = columns.iterator.map(_.lz4.length.toLong).sum
+}
 
 /** The chunks one task reads. */
 final case class K8sRowBlock(chunks: Array[K8sChunk]) {
   def rows: Int = chunks.iterator.map(_.rows).sum
-  def sizeInBytes: Long = chunks.iterator.map(_.lz4.length.toLong).sum
+  def sizeInBytes: Long = chunks.iterator.map(_.lz4Bytes).sum
 
-  /** The rows in order. Each chunk is decompressed into one buffer, and
-    * one `UnsafeRow` is re-pointed at each row in turn: copy a row to
-    * keep it past the next call.
+  /** The rows of the block that `keep` accepts, in order, as one row of
+    * `numFields` fields re-pointed at each in turn: copy a row to keep it
+    * past the next call. Only the columns `first` and `rest` are read;
+    * the others are never decompressed, and must not be read.
+    *
+    * Per chunk, the `first` columns are decompressed and `keep` is asked
+    * of every row with only those set; the `rest` are decompressed only
+    * when at least one of the chunk's rows passed. With no `first`
+    * columns every row passes. `inflated` is told the compressed size of
+    * each column it decompresses.
     */
-  def iterator(numFields: Int): Iterator[UnsafeRow] = {
+  def iterator(numFields: Int, first: Array[Int], rest: Array[Int],
+      keep: InternalRow => Boolean, inflated: Int => Unit): Iterator[InternalRow] = {
     val lz4 = LZ4Factory.fastestInstance().safeDecompressor()
-    val raw = new Array[Byte](chunks.iterator.map(_.rawBytes).maxOption.getOrElse(0))
-    val buf = java.nio.ByteBuffer.wrap(raw)
-    val row = new UnsafeRow(numFields)
+    val cursors = new Array[K8sColumnCursor](numFields)
+    (first ++ rest).foreach(i => cursors(i) = new K8sColumnCursor(
+      chunks.iterator.map(_.columns(i).rawBytes).maxOption.getOrElse(0)))
+    val row = new K8sColumnsRow(cursors.map(c => if (c == null) null else c.row))
+    val firsts = first.map(cursors)
+    val all = (first ++ rest).map(cursors)
+    def load(c: K8sChunk, cols: Array[Int]): Unit = cols.foreach { i =>
+      cursors(i).load(c.columns(i), lz4)
+      inflated(c.columns(i).lz4.length)
+    }
     chunks.iterator.flatMap { c =>
-      lz4.decompress(c.lz4, 0, c.lz4.length, raw, 0, c.rawBytes)
-      var off = 0
-      Iterator.fill(c.rows) {
-        val n = buf.getInt(off)
-        row.pointTo(raw, Platform.BYTE_ARRAY_OFFSET + off + 4, n)
-        off += 4 + n
-        row
+      load(c, first)
+      val pass = if (first.isEmpty) null
+        else Array.tabulate(c.rows) { _ => firsts.foreach(_.next()); keep(row) }
+      if (pass != null && !pass.contains(true)) Iterator.empty
+      else {
+        firsts.foreach(_.rewind())
+        load(c, rest)
+        Iterator.range(0, c.rows)
+          .filter { r => all.foreach(_.next()); pass == null || pass(r) }
+          .map(_ => row)
       }
     }
   }
+}
+
+/** One column of the chunk being read: its decompressed values, and a
+  * one-field `UnsafeRow` pointed at each value in turn by `next`. */
+private[v2] final class K8sColumnCursor(capacity: Int) {
+  private val raw = new Array[Byte](capacity)
+  private val buf = java.nio.ByteBuffer.wrap(raw)
+  private var off = 0
+  val row = new UnsafeRow(1)
+
+  def load(c: K8sColumn, lz4: LZ4SafeDecompressor): Unit = {
+    lz4.decompress(c.lz4, 0, c.lz4.length, raw, 0, c.rawBytes)
+    off = 0
+  }
+  def rewind(): Unit = off = 0
+  def next(): Unit = {
+    val n = buf.getInt(off)
+    row.pointTo(raw, Platform.BYTE_ARRAY_OFFSET + off + 4, n)
+    off += 4 + n
+  }
+}
+
+/** A row of a chunk as a view over its columns: field i is the value
+  * `cols(i)` points at. A column not read has no `UnsafeRow`, and its
+  * field must not be read. Read-only. */
+private[v2] final class K8sColumnsRow(cols: Array[UnsafeRow]) extends InternalRow {
+  override def numFields: Int = cols.length
+  override def setNullAt(i: Int): Unit = throw new UnsupportedOperationException
+  override def update(i: Int, value: Any): Unit = throw new UnsupportedOperationException
+  override def copy(): InternalRow =
+    new K8sColumnsRow(cols.map(c => if (c == null) null else c.copy()))
+  override def isNullAt(i: Int): Boolean = cols(i).isNullAt(0)
+  override def getBoolean(i: Int): Boolean = cols(i).getBoolean(0)
+  override def getByte(i: Int): Byte = cols(i).getByte(0)
+  override def getShort(i: Int): Short = cols(i).getShort(0)
+  override def getInt(i: Int): Int = cols(i).getInt(0)
+  override def getLong(i: Int): Long = cols(i).getLong(0)
+  override def getFloat(i: Int): Float = cols(i).getFloat(0)
+  override def getDouble(i: Int): Double = cols(i).getDouble(0)
+  override def getDecimal(i: Int, precision: Int, scale: Int): Decimal =
+    cols(i).getDecimal(0, precision, scale)
+  override def getUTF8String(i: Int): UTF8String = cols(i).getUTF8String(0)
+  override def getBinary(i: Int): Array[Byte] = cols(i).getBinary(0)
+  override def getGeography(i: Int): GeographyVal = cols(i).getGeography(0)
+  override def getGeometry(i: Int): GeometryVal = cols(i).getGeometry(0)
+  override def getInterval(i: Int): CalendarInterval = cols(i).getInterval(0)
+  override def getVariant(i: Int): VariantVal = cols(i).getVariant(0)
+  override def getStruct(i: Int, numFields: Int): InternalRow = cols(i).getStruct(0, numFields)
+  override def getArray(i: Int): ArrayData = cols(i).getArray(0)
+  override def getMap(i: Int): MapData = cols(i).getMap(0)
+  override def get(i: Int, dataType: DataType): AnyRef = cols(i).get(0, dataType)
 }
 
 /** One input partition per block: the task carries the rows it reads. */
 case class K8sInputPartition(block: K8sRowBlock) extends InputPartition
 
 /** One list file, materialized: its items as full-schema rows in
-  * compressed blocks. Immutable; it lives as long as its owner (a
+  * column-compressed chunks, packed into blocks (or a derived table's
+  * rows, the same way). Immutable; it lives as long as its owner (a
   * [[K8sSnapshotTable]], or one micro-batch's partitions).
   */
 final class K8sGeneration(val blocks: Array[K8sRowBlock]) {
   def numRows: Long = blocks.iterator.map(_.rows.toLong).sum
-  /** Bytes held in memory: the compressed chunks. */
+  /** Bytes held in memory: the compressed columns of every chunk. */
   def sizeInBytes: Long = blocks.iterator.map(_.sizeInBytes).sum
   def partitions: Array[InputPartition] = blocks.map(K8sInputPartition(_))
 }
 
 object K8sGeneration {
   /** List JSON per chunk: lz4-java's own stream block size. A chunk's
-    * rows take about twice that, which LZ4 compresses well and a reader
-    * decompresses into a buffer that stays in cache.
+    * rows take about twice that, split over its columns, which LZ4
+    * compresses well and a reader decompresses into buffers that stay in
+    * cache. It is also the unit a pushed filter skips: a chunk with no
+    * matching row decompresses only the filter's columns.
     */
   val ChunkBytes: Int = 1 << 16
 
@@ -427,32 +519,41 @@ object K8sGeneration {
     new K8sGeneration(pack(chunks.result()))
   }
 
-  /** Rows of `schema` written as one chunk: each as a full-schema
-    * `UnsafeRow` after its length, the whole LZ4-compressed at `result`.
+  /** Rows of `schema` written as one chunk, column by column: each
+    * row's value of column i as a one-field `UnsafeRow` after its length
+    * in column i's buffer, each buffer LZ4-compressed at `result`.
     */
   private final class ChunkWriter(schema: StructType) {
     // interpreted: generating code for the nested snapshot schemas
     // compiles for seconds, far longer than converting a large snapshot
-    private val toUnsafe = InterpretedUnsafeProjection.createProjection(
-      schema.fields.toSeq.zipWithIndex
-        .map { case (f, i) => BoundReference(i, f.dataType, f.nullable) })
-    private val raw = new java.io.ByteArrayOutputStream(4 * ChunkBytes)
-    private val out = new java.io.DataOutputStream(raw)
+    private val columns = schema.fields.zipWithIndex.map { case (f, i) =>
+      InterpretedUnsafeProjection.createProjection(
+        Seq(BoundReference(i, f.dataType, f.nullable)))
+    }
+    private val raw = columns.map(_ => new java.io.ByteArrayOutputStream(ChunkBytes))
+    private val out = raw.map(new java.io.DataOutputStream(_))
     private val scratch = new Array[Byte](1 << 12)
     var rows = 0
 
     def add(row: InternalRow): Unit = {
-      val r = toUnsafe(row)
-      out.writeInt(r.getSizeInBytes)
-      r.writeToStream(out, scratch)
+      var i = 0
+      while (i < columns.length) {
+        val v = columns(i)(row)
+        out(i).writeInt(v.getSizeInBytes)
+        v.writeToStream(out(i), scratch)
+        i += 1
+      }
       rows += 1
     }
 
-    def bytes: Int = raw.size
+    def bytes: Int = raw.iterator.map(_.size).sum
 
     def result(): K8sChunk = {
-      val b = raw.toByteArray
-      K8sChunk(rows, b.length, LZ4Factory.fastestInstance().fastCompressor().compress(b))
+      val lz4 = LZ4Factory.fastestInstance().fastCompressor()
+      K8sChunk(rows, raw.map { r =>
+        val b = r.toByteArray
+        K8sColumn(b.length, lz4.compress(b))
+      })
     }
   }
 
@@ -462,10 +563,10 @@ object K8sGeneration {
     var cur = Vector.empty[K8sChunk]
     var bytes = 0L
     chunks.foreach { c =>
-      if (cur.nonEmpty && bytes + c.lz4.length > MaxBlockBytes) {
+      if (cur.nonEmpty && bytes + c.lz4Bytes > MaxBlockBytes) {
         blocks += K8sRowBlock(cur.toArray); cur = Vector.empty; bytes = 0L
       }
-      cur :+= c; bytes += c.lz4.length
+      cur :+= c; bytes += c.lz4Bytes
     }
     if (cur.nonEmpty) blocks += K8sRowBlock(cur.toArray)
     blocks.result()
@@ -560,24 +661,35 @@ class K8sReaderFactory(full: StructType, required: StructType,
       full, required, filters)
 }
 
-/** Reads one block: decompresses it, checks the pushed stamped-key
-  * filters against each stored row, and projects the matching rows to
-  * the required columns (a view over the stored row, no copy).
+/** Reads one block: decompresses the columns of the pushed stamped-key
+  * filters, checks the filters on each stored row, decompresses the
+  * other required columns of the chunks where a row passed, and projects
+  * the matching rows to the required columns (a view over the stored
+  * columns, no copy). A scan with no filters and no required columns
+  * (`count(*)`) decompresses nothing.
   */
 class K8sPartitionReader(block: K8sRowBlock, full: StructType,
     required: StructType,
     filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
     extends PartitionReader[InternalRow] {
   import org.apache.spark.sql.sources._
-  private val rows = block.iterator(full.length)
-  private val out = ProjectingInternalRow(required,
-    required.fieldNames.toIndexedSeq.map(full.fieldIndex))
-  private val checks: Array[InternalRow => Boolean] = filters.map(check)
 
   /** Rows that passed the filters and were projected — observable from
     * K8sDsv2Spec to prove the pushdown skips rows, not just post-filters.
     */
   var converted: Long = 0L
+
+  /** Compressed bytes of the columns decompressed so far, with those of
+    * the readers before this one in the same task (`initMetricsValues`).
+    */
+  var bytesDecompressed: Long = 0L
+
+  private val checks: Array[InternalRow => Boolean] = filters.map(check)
+  private val wanted = required.fieldNames.map(full.fieldIndex)
+  private val first = filters.flatMap(_.references).distinct.map(full.fieldIndex)
+  private val rows = block.iterator(full.length, first, wanted.filterNot(first.contains),
+    r => checks.forall(_(r)), bytesDecompressed += _)
+  private val out = ProjectingInternalRow(required, wanted.toIndexedSeq)
 
   private def check(f: Filter): InternalRow => Boolean = {
     def key(a: String): InternalRow => UTF8String = {
@@ -601,16 +713,33 @@ class K8sPartitionReader(block: K8sRowBlock, full: StructType,
     }
   }
 
-  override def next(): Boolean = {
-    while (rows.hasNext) {
-      val row = rows.next()
-      if (checks.forall(_(row))) {
-        out.project(row); converted += 1
-        return true
-      }
-    }
-    false
+  override def next(): Boolean = rows.hasNext && {
+    out.project(rows.next()); converted += 1
+    true
   }
   override def get(): InternalRow = out
   override def close(): Unit = ()
+
+  override def currentMetricsValues(): Array[CustomTaskMetric] =
+    Array(K8sBytesDecompressed.value(bytesDecompressed))
+  override def initMetricsValues(metrics: Array[CustomTaskMetric]): Unit =
+    metrics.find(_.name == K8sBytesDecompressed.Name)
+      .foreach(m => bytesDecompressed += m.value)
+}
+
+/** The scan's "bytes decompressed" metric: the compressed bytes of every
+  * column a scan decompressed, summed over its tasks. Spark creates it by
+  * class name, so it keeps a no-argument constructor. */
+class K8sBytesDecompressed extends CustomSumMetric {
+  override def name(): String = K8sBytesDecompressed.Name
+  override def description(): String = "bytes decompressed"
+}
+
+object K8sBytesDecompressed {
+  val Name = "bytesDecompressed"
+
+  def value(bytes: Long): CustomTaskMetric = new CustomTaskMetric {
+    override def name(): String = Name
+    override def value(): Long = bytes
+  }
 }

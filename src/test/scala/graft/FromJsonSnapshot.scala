@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 import graft.sources.K8sSchemas
 
-/** An independent `from_json` reader of a pods list file: the reference
-  * the block-backed `k8s-snapshot` source is checked against, with the
-  * same stamped columns (ksql.js:200-201) and `_raw` escape hatch.
+/** An independent `from_json` reader of a list file of each kind: the
+  * reference the block-backed `k8s-snapshot` source is checked against,
+  * with the same stamped columns (ksql.js:200-201,230-234) and `_raw`
+  * escape hatch.
   */
 object FromJsonSnapshot {
 
@@ -29,10 +30,25 @@ object FromJsonSnapshot {
       .select(col("parsed.*"), col("_raw"))
   }
 
+  /** The table schema's column order: stamped keys, item fields, `_raw`. */
+  private def stamped(spark: SparkSession, path: String, item: StructType,
+      keys: (String, String)*): DataFrame = {
+    val df = readItems(spark, path, item)
+    keys.foldLeft(df) { case (d, (k, from)) => d.withColumn(k, col(from)) }
+      .select((keys.map(_._1) ++ item.fieldNames :+ "_raw").map(col): _*)
+  }
+
   /** Stamp T2 keys (ksql.js:200-201): pods get uid + node. */
   def pods(spark: SparkSession, path: String): DataFrame =
-    readItems(spark, path, K8sSchemas.pod)
-      .withColumn("uid", col("metadata.uid"))
-      .withColumn("node", col("spec.nodeName"))
-      .select("uid", "node", "metadata", "spec", "status", "_raw")
+    stamped(spark, path, K8sSchemas.pod,
+      "uid" -> "metadata.uid", "node" -> "spec.nodeName")
+
+  /** Nodes and services get name + uid (ksql.js:230-234). */
+  def nodes(spark: SparkSession, path: String): DataFrame =
+    stamped(spark, path, K8sSchemas.node,
+      "name" -> "metadata.name", "uid" -> "metadata.uid")
+
+  def services(spark: SparkSession, path: String): DataFrame =
+    stamped(spark, path, K8sSchemas.service,
+      "name" -> "metadata.name", "uid" -> "metadata.uid")
 }

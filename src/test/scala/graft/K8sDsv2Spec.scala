@@ -12,7 +12,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import graft.dialect.KsqlDialect
 import graft.sources.K8sSnapshot
 import graft.plans.LocalCollect
-import graft.sources.v2.{K8sSnapshotScanExec, K8sSnapshotTable}
+import graft.sources.v2.{K8sBytesDecompressed, K8sSnapshotScanExec, K8sSnapshotTable}
 
 /** DataSource V2 connector spec: same rows as the view-based loader,
   * column pruning reaches the reader, short name registered.
@@ -180,6 +180,122 @@ class K8sDsv2Spec extends SparkSpec {
       assert(LocalCollect.localPlan(df).isEmpty)
       assert(LocalCollect(df).map(_.toSeq).toSeq == Seq(Seq("pod-uid-3", "node-a")))
     } finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** A snapshot of one item per edge of the converter, per kind: null
+    * values, absent and empty maps, structs and arrays, short and absent
+    * status arrays, and a missing restartCount. */
+  private def edgeSnapshot(): java.nio.file.Path = {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("k8s-edges")
+    def list(items: String*) = items.mkString("""{"kind": "List", "items": [""", ",", "]}")
+    Files.writeString(dir.resolve("pods.json"), list(
+      """{"metadata": {"name": "p1", "uid": "u1", "labels": {}, "annotations": {"a": null}},
+        | "spec": {"nodeName": null, "containers": []},
+        | "status": {"phase": "Pending", "containerStatuses": []}}""".stripMargin,
+      """{"metadata": {"name": "p2", "uid": "u2", "labels": {"app": "x", "tier": ""}},
+        | "spec": {"nodeName": "n1", "containers": [{"name": "c0", "image": "i0"},
+        |   {"name": "c1"}, {"image": null}]},
+        | "status": {"containerStatuses": [{"name": "c0"}, {"restartCount": 3, "ready": false}]}}""".stripMargin,
+      """{"metadata": {"uid": null}}""",
+      """{"metadata": {"name": "p4", "uid": "u4", "namespace": "ns"}, "status": null, "extra": [1, {"b": 2}]}"""))
+    Files.writeString(dir.resolve("nodes.json"), list(
+      """{"metadata": {"name": "n1", "uid": "nu1", "labels": {"zone": "z"}},
+        | "spec": {"podCIDR": "10.0.0.0/24", "unschedulable": true},
+        | "status": {"capacity": {"cpu": "4"}, "allocatable": {},
+        |   "conditions": [{"type": "Ready", "status": "True"}, {"type": "Disk"}],
+        |   "nodeInfo": {"kubeletVersion": "v1"}}}""".stripMargin,
+      """{"metadata": {"name": "n2"}, "spec": {}, "status": {"conditions": []}}""",
+      """{"metadata": {"name": null, "uid": "nu3"}}"""))
+    Files.writeString(dir.resolve("services.json"), list(
+      """{"metadata": {"name": "s1", "uid": "su1"},
+        | "spec": {"type": "ClusterIP", "selector": {}, "ports": []},
+        | "status": {"loadBalancer": {}}}""".stripMargin,
+      """{"metadata": {"name": "s2", "uid": "su2", "annotations": {}},
+        | "spec": {"type": "LoadBalancer", "clusterIP": "None", "selector": {"app": "web"},
+        |   "ports": [{"name": "http", "port": 80, "targetPort": "8080"}, {"port": 443}]},
+        | "status": {"loadBalancer": {"ingress": [{"ip": "1.2.3.4"}, {}]}}}""".stripMargin,
+      """{"metadata": {"name": "s3"}}"""))
+    dir
+  }
+
+  test("every column of all three kinds reads back equal to the from_json reader") {
+    val edges = edgeSnapshot()
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper
+    // `_raw` holds the same JSON value: the from_json reader keeps the
+    // item's source text, the block-backed scan its compact form
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.map(r =>
+      r.schema.fieldNames.toSeq.zip(r.toSeq).map {
+        case ("_raw", v) => mapper.readTree(v.asInstanceOf[String])
+        case (_, v) => v
+      })
+    try for (dir <- Seq(fixtureDir, edges.toString);
+        (kind, reference) <- Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
+          org.apache.spark.sql.DataFrame)](
+          "pods" -> FromJsonSnapshot.pods, "nodes" -> FromJsonSnapshot.nodes,
+          "services" -> FromJsonSnapshot.services)) {
+      val path = s"$dir/$kind.json"
+      val blocks = spark.read.format("k8s-snapshot").option("kind", kind).load(path)
+      val want = reference(spark, path)
+      assert(blocks.schema == want.schema, path)
+      assert(rows(blocks) == rows(want) && rows(want).nonEmpty, path)
+      // each column alone (one column decompressed), and two out of order
+      for (c <- blocks.columns)
+        assert(rows(blocks.select(c)) == rows(want.select(c)), s"$path $c")
+      val two = Seq("_raw", blocks.columns(1)).map(col)
+      assert(rows(blocks.select(two: _*)) == rows(want.select(two: _*)), path)
+    } finally K8sGen.rm(edges)
+  }
+
+  /** The one-partition snapshot scans of `df`'s plan, as `LocalCollect`
+    * runs them. */
+  private def scans(df: org.apache.spark.sql.DataFrame): Seq[K8sSnapshotScanExec] =
+    (df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }).collect { case s: K8sSnapshotScanExec => s }
+
+  /** `q` answered in-thread: its rows and its scans' bytes decompressed. */
+  private def decompressing(q: String): (Array[org.apache.spark.sql.Row], Long) = {
+    val df = KsqlDialect.sql(spark, q)
+    assert(LocalCollect.localPlan(df).isDefined, q)
+    val rows = LocalCollect(df)
+    (rows, scans(df).map(_.metrics(K8sBytesDecompressed.Name).value).sum)
+  }
+
+  test("a scan decompresses only the columns it reads, and for a pushed uid filter only the matching chunk's") {
+    val dir = java.nio.file.Files.createTempDirectory("k8s-10k-columns")
+    try {
+      K8sGen.write(dir, 10000, seed = 7)
+      val tables = K8sSnapshot.load(spark, dir.toString)
+      val pods = tables("pods").queryExecution.analyzed.collectFirst {
+        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
+          r.table.asInstanceOf[K8sSnapshotTable]
+      }.get
+      val chunks = pods.generation.blocks.flatMap(_.chunks)
+      assert(chunks.length > 1)
+      def column(name: String): Seq[Long] = {
+        val i = pods.schema().fieldIndex(name)
+        chunks.toSeq.map(_.columns(i).lz4.length.toLong)
+      }
+      // count(*): no column at all
+      val (counted, none) = decompressing("select count(*) from pods")
+      assert(counted.map(_.getLong(0)).toSeq == Seq(10000L) && none == 0)
+      // group by node: the node column of every chunk, nothing else
+      val (byNode, nodeBytes) = decompressing("select node, count(*) from pods group by node")
+      assert(byNode.map(_.getLong(1)).sum == 10000L && nodeBytes == column("node").sum)
+      // a uid lookup: the uid column of every chunk, then metadata and
+      // node of the one chunk holding that pod (item 4242 of the file)
+      val (found, lookupBytes) = decompressing(
+        "select metadata->name, node from pods where uid = 'pod-uid-7-004242'")
+      assert(found.map(_.getString(0)).toSeq == Seq("pod-004242"))
+      val at = chunks.scanLeft(0)(_ + _.rows).indexWhere(_ > 4242) - 1
+      assert(lookupBytes == column("uid").sum + column("metadata")(at) + column("node")(at))
+      // a uid nobody has: the uid column only
+      val (missing, missBytes) = decompressing(
+        "select metadata->name, node from pods where uid = 'pod-uid-none'")
+      assert(missing.isEmpty && missBytes == column("uid").sum)
+    } finally K8sGen.rm(dir)
   }
 
   test("_raw escape hatch carries the full item") {

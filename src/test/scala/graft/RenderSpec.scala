@@ -43,6 +43,14 @@ class RenderSpec extends SparkSpec {
     assert(Render.toAscii(r).contains("| yv4= |"))
   }
 
+  test("floats print in their own shortest form in the JSON and the ASCII table") {
+    val r = Render.process(spark.sql(
+      "select cast(1.1 as float) as a, cast(0.1 as float) as b, " +
+        "cast('NaN' as float) as c, cast('-Infinity' as float) as d"))
+    assert(Render.toJson(r).contains("[1.1, 0.1, \"NaN\", \"-Infinity\"]"), Render.toJson(r))
+    assert(Render.toAscii(r).contains("| 1.1 | 0.1 | NaN | -Infinity |"), Render.toAscii(r))
+  }
+
   test("json strings escape quote, backslash and control characters; keep non-ASCII") {
     val in = "a\"b\\c\nd\re\tf\u0001g\u001fh é 日"
     assert(Render.jsonString(in) ==

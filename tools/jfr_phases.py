@@ -26,6 +26,15 @@ JFR cut short (its default depth is 64; record with
 `-XX:FlightRecorderOptions=stackdepth=256`) are counted and reported,
 as their phase may be missing.
 
+Time a thread spends in native code (a JNI call such as lz4-java's
+`LZ4JNI.LZ4_decompress_safe`) is not among the execution samples. JFR
+records it as `jdk.NativeMethodSample` events, which are printed on
+lines of their own, counted by top frame, under each pattern's shares.
+They are not merged into the shares: JFR takes at most one native
+sample per period (20 ms in the `profile` settings) across all threads,
+where it takes execution samples of several threads per period (10 ms),
+so the two counts are on different scales.
+
 Recording a benchmark run (the harness JVM inherits JAVA_TOOL_OPTIONS):
 
     JAVA_TOOL_OPTIONS="-XX:StartFlightRecording=filename=/tmp/k8s.jfr,settings=profile \\
@@ -93,6 +102,10 @@ PHASES = [
 ORDER = [p for p, _ in PHASES] + ["other"]
 
 THREAD = re.compile(r'^\s*sampledThread = "(.*)" \(')
+EVENT = re.compile(r'^(jdk\.\w+) \{$')
+LINE = re.compile(r' line: \d+.*$')
+EVENTS = ("jdk.ExecutionSample", "jdk.NativeMethodSample")
+NATIVE_TOP = 10  # native top frames listed per pattern
 
 
 def phase_of(frames):
@@ -105,16 +118,20 @@ def phase_of(frames):
 
 
 def samples(path, depth):
-    """(thread name, frames innermost first, truncated) per sample."""
-    cmd = ["jfr", "print", "--events", "jdk.ExecutionSample",
+    """(event, thread name, frames innermost first, truncated) per
+    execution or native-method sample."""
+    cmd = ["jfr", "print", "--events", ",".join(EVENTS),
            "--stack-depth", str(depth), path]
     proc = subprocess.Popen(cmd, stdout=subprocess.PIPE, text=True,
                             bufsize=1 << 20)
-    thread, frames, in_stack, truncated = None, [], False, False
+    event, thread, frames, in_stack, truncated = None, None, [], False, False
     for line in proc.stdout:
         s = line.strip()
         m = THREAD.match(line)
-        if m:
+        e = EVENT.match(line)
+        if e:
+            event = e.group(1)
+        elif m:
             thread = m.group(1)
         elif s == "stackTrace = [":
             in_stack, frames, truncated = True, [], False
@@ -126,8 +143,8 @@ def samples(path, depth):
             else:
                 frames.append(s)
         elif s == "}" and thread is not None:
-            yield thread, frames, truncated
-            thread, frames = None, []
+            yield event, thread, frames, truncated
+            event, thread, frames = None, None, []
     if proc.wait() != 0:
         sys.exit(f"jfr print failed on {path}")
 
@@ -143,11 +160,18 @@ def main():
     args = ap.parse_args()
     patterns = [(p, re.compile(p)) for p in (args.threads or ["ksql-http"])]
     counts = {p: dict.fromkeys(ORDER, 0) for p, _ in patterns}
+    native = {p: {} for p in counts}
     cut = dict.fromkeys(counts, 0)
-    for thread, frames, truncated in samples(args.recording, args.stack_depth):
+    for event, thread, frames, truncated in samples(args.recording,
+                                                    args.stack_depth):
         phase = None
         for p, rx in patterns:
-            if rx.search(thread):
+            if not rx.search(thread):
+                continue
+            if event == "jdk.NativeMethodSample":
+                top = LINE.sub("", frames[0]) if frames else "(no stack)"
+                native[p][top] = native[p].get(top, 0) + 1
+            else:
                 phase = phase or phase_of(frames)
                 counts[p][phase] += 1
                 cut[p] += truncated
@@ -158,6 +182,14 @@ def main():
             k = counts[p][phase]
             share = 100.0 * k / n if n else 0.0
             print(f"  {phase:<14} {k:>7}  {share:5.1f} %")
+        tops = sorted(native[p].items(), key=lambda kv: (-kv[1], kv[0]))
+        print(f"  native samples (not in the shares above): "
+              f"{sum(native[p].values())}, by top frame")
+        for top, k in tops[:NATIVE_TOP]:
+            print(f"  {k:>7}  {top}")
+        if len(tops) > NATIVE_TOP:
+            rest = sum(k for _, k in tops[NATIVE_TOP:])
+            print(f"  {rest:>7}  ({len(tops) - NATIVE_TOP} other frames)")
 
 
 if __name__ == "__main__":
