@@ -53,24 +53,11 @@ case class KmvSketch(
   override def createAggregationBuffer(): mutable.TreeSet[String] =
     mutable.TreeSet.empty
 
-  private def md5Hex(s: String): String = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8"))
-    val sb = new java.lang.StringBuilder(32)
-    var i = 0
-    while (i < d.length) {
-      sb.append(Character.forDigit((d(i) >> 4) & 0xf, 16))
-      sb.append(Character.forDigit(d(i) & 0xf, 16))
-      i += 1
-    }
-    sb.toString
-  }
-
   override def update(buf: mutable.TreeSet[String],
       input: InternalRow): mutable.TreeSet[String] = {
     val v = child.eval(input)
     if (v == null) return buf
-    val h = md5Hex(v.toString)
+    val h = KmvSketch.md5Hex(v.toString)
     if (buf.size < k) buf += h
     else if (h < buf.last && !buf.contains(h)) {
       buf -= buf.last
@@ -117,6 +104,25 @@ case class KmvSketch(
 }
 
 object KmvSketch {
+  /** Lowercase hex of the MD5 digest of `bytes` (the `md5()` SQL text).
+    * One StringBuilder per call: it runs per row in [[KmvSketch]]'s
+    * update, per event in the ledger/cms stream faces and per image in
+    * the multimodal fingerprints. */
+  def md5Hex(bytes: Array[Byte]): String = {
+    val d = java.security.MessageDigest.getInstance("MD5").digest(bytes)
+    val sb = new java.lang.StringBuilder(32)
+    var i = 0
+    while (i < d.length) {
+      sb.append(Character.forDigit((d(i) >> 4) & 0xf, 16))
+      sb.append(Character.forDigit(d(i) & 0xf, 16))
+      i += 1
+    }
+    sb.toString
+  }
+
+  /** [[md5Hex]] of the UTF-8 bytes of `s`. */
+  def md5Hex(s: String): String = md5Hex(s.getBytes("UTF-8"))
+
   /** KMV distinct sketch with k minima (mergeable, deterministic state —
     * see [[KmvSketch]]).
     */

@@ -438,15 +438,14 @@ object Curation {
     */
   val ss09KmeansConverged: Q = (s, d) => {
     import org.apache.spark.sql.expressions.Window
-    // DoubleDot: bit-identical to the aggregate(zip_with(...)) fold (and
+    // double_dot: bit-identical to the aggregate(zip_with(...)) fold (and
     // to the oracle's list_reduce) but codegen'd — the HOF pipeline is
     // CodegenFallback and was the query's hot spot (1.8 s -> ~0.8 s)
-    def fold(a: String, b: String): Column =
-      graft.functions.GraftFunctions.double_dot(col(a), col(b))
+    import graft.functions.GraftFunctions.double_dot
     val corpus = t(s, d, "embeddings")
       .select(col("vec_id"), col("embedding"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("e"))
-      .withColumn("nrm", sqrt(fold("e", "e")))
+      .withColumn("nrm", sqrt(double_dot(col("e"), col("e"))))
       // lazy persist: A/B'd vs eager checkpoint (r7) — round 1
       // materializes it once, later rounds hit the cache; the eager job
       // measured +0.3 s
@@ -458,7 +457,8 @@ object Curation {
       .orderBy(col("cos_raw").desc, col("cluster"))
     for (_ <- 1 to 3) {
       val assigned = corpus.crossJoin(broadcast(cents.drop("n_members")))
-        .withColumn("cos_raw", fold("e", "c") / (col("nrm") * col("cnrm")))
+        .withColumn("cos_raw",
+          double_dot(col("e"), col("c")) / (col("nrm") * col("cnrm")))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select(col("vec_id"), col("embedding"), col("cluster"))
@@ -466,7 +466,7 @@ object Curation {
         .agg(graft.functions.VectorAgg.vector_avg(col("embedding")).as("avg"),
           count(lit(1)).as("n_members"))
         .withColumn("c", expr("transform(avg, x -> round(x, 6))"))
-        .withColumn("cnrm", sqrt(fold("c", "c")))
+        .withColumn("cnrm", sqrt(double_dot(col("c"), col("c"))))
         .select(col("cluster"), col("c"), col("cnrm"), col("n_members"))
     }
     cents

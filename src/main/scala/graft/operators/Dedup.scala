@@ -1677,7 +1677,7 @@ object Dedup {
       .withColumn("c1", expr("forall(m, x -> x)"))
       .join(truth.withColumn("hit", lit(1L)), Seq("doc_a", "doc_b"), "left")
       .withColumn("ht", coalesce(col("hit"), lit(0L)))
-    def cnt(flag: Column): Column = sum(when(flag, 1L).otherwise(0L))
+    import Similarity.cnt
     val wide = verified.agg(
       count(lit(1)).as("nc8"), cnt(col("c4")).as("nc4"),
       cnt(col("c2")).as("nc2"), cnt(col("c1")).as("nc1"),

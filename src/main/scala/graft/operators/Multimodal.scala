@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables.t
+import graft.functions.KmvSketch.md5Hex
 
 /** Multimodal-column plumbing (builder mandate; no reference counterpart).
   *
@@ -129,6 +130,82 @@ object Multimodal {
     (w, h, out)
   }
 
+  /** (media_id, w, h) of every [[pngTable]] image, read off its
+    * `javax.imageio` decode — the dims pass of mm11, mm16 and mm17. */
+  private def imageDims(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    pngTable(s, d).select(col("media_id"), col("content"))
+      .as[(Long, Array[Byte])]
+      .mapPartitions { it =>
+        it.map { case (id, png) =>
+          val (w, h, _) = decodeGray(png)
+          (id, w.toLong, h.toLong)
+        }
+      }.toDF("media_id", "w", "h")
+  }
+
+  /** The payload as 32-byte frames: (media_id, content, fi) for every
+    * `every`-th frame index fi of each non-empty media row. The
+    * zero-byte guard keeps sequence(0, -1), which descends in Spark and
+    * is empty in DuckDB's generate_series, out of the explode. */
+  private def frames(s: SparkSession, d: String, every: Int): DataFrame =
+    mediaTable(s, d)
+      .filter(col("meta.nbytes") > 0)
+      .withColumn("n_frames",
+        ceil(col("meta.nbytes").cast("double") / 32.0).cast("int"))
+      .select(col("media_id"), col("content"),
+        explode(sequence(lit(0), col("n_frames") - 1, lit(every))).as("fi"))
+
+  /** mm06/mm09's per-frame (media_id, fi BIGINT, energy): the STUB
+    * decode, a byte sum standing in for frame RMS energy (ASCII payload
+    * — char ords ARE the bytes; empty split artifacts dropped). */
+  private def frameEnergy(s: SparkSession, d: String): DataFrame =
+    frames(s, d, 1)
+      .withColumn("frame",
+        substring(col("content"), col("fi") * 32 + 1, lit(32)))
+      .withColumn("energy", expr(
+        """aggregate(transform(
+          |  filter(split(CAST(frame AS STRING), ''), c -> c <> ''),
+          |  c -> CAST(ascii(c) AS BIGINT)), 0L, (a, x) -> a + x)""".stripMargin))
+      .select(col("media_id"), col("fi").cast("bigint").as("fi"),
+        col("energy"))
+
+  /** The planted-twin image pass of mm07, mm13 and pp20: each
+    * document's bytes as a 16-wide grayscale image (media_id = doc_id)
+    * plus its perturbed re-encode (every 7th pixel +1, media_id + 10⁶),
+    * both genuinely PNG-encoded and decoded; `perImage(media_id, w, h,
+    * pixels)` maps each decoded raster to one output row.
+    *
+    * Spread FIRST: the documents scan is 1-2 input splits (AQE
+    * coalesces the small text input), so the encode→decode kernel —
+    * the priciest per-row work in this file — would otherwise run at
+    * input parallelism.
+    */
+  private def twinImages[T: Encoder](s: SparkSession, d: String)(
+      perImage: (Long, Int, Int, Array[Byte]) => T): Dataset[T] = {
+    import s.implicits._
+    t(s, d, "documents").select(col("doc_id"), col("text"))
+      .transform(graft.Par.spread)
+      .as[(Long, String)]
+      .mapPartitions { it =>
+        it.flatMap { case (id, text) =>
+          val bytes = text.getBytes("UTF-8")
+          val h = bytes.length / 16
+          if (h == 0) Iterator.empty
+          else {
+            val px = bytes.take(16 * h)
+            val pert = px.zipWithIndex.map { case (b, i) =>
+              if (i % 7 == 0) (b + 1).toByte else b }
+            Seq((id, px), (id + 1000000L, pert)).iterator.map {
+              case (mid, p) =>
+                val (w, hh, dec) = decodeGray(encodeGrayPng(p))
+                perImage(mid, w, hh, dec)
+            }
+          }
+        }
+      }
+  }
+
   /** Uppercase hex of raw bytes — DuckDB's hex(BLOB) form. The
     * mm05/mm08/mm15 fingerprints hash THIS string rather than the raw
     * slice: this DuckDB build has no BLOB md5/substring, so hex is the
@@ -144,11 +221,6 @@ object Multimodal {
   /** md5 of the hex form — the byte-true fingerprint. */
   private def md5HexOfHex(bytes: Array[Byte]): String =
     md5Hex(hexUpper(bytes).getBytes("UTF-8"))
-
-  private def md5Hex(bytes: Array[Byte]): String = {
-    val d = java.security.MessageDigest.getInstance("MD5").digest(bytes)
-    d.map(b => f"$b%02x").mkString
-  }
 
   /** Difference hash (dHash) of a w×h grayscale raster on the 9×8
     * floor-boundary block grid: bit (gx, gy) = mean(cell gx) >
@@ -284,15 +356,7 @@ object Multimodal {
     * posexplode keeps frame index; substring on binary is codegen'd.
     */
   private val mm02FrameSample: Q = (s, d) =>
-    mediaTable(s, d)
-      // zero-byte payloads make sequence(0,-1) descend ([0,-1]) where
-      // DuckDB's generate_series is empty — same guard as mm06 (r6 ADVICE)
-      .filter(col("meta.nbytes") > 0)
-      .withColumn("n_frames",
-        ceil(col("meta.nbytes").cast("double") / 32.0).cast("int"))
-      .select(col("media_id"), col("content"),
-        explode(sequence(lit(0), col("n_frames") - 1, lit(4)))
-          .as("fi"))
+    frames(s, d, 4)
       .select(
         col("media_id"), col("fi").cast("bigint").as("frame_idx"),
         octet_length(substring(col("content"), col("fi") * 32 + 1,
@@ -347,11 +411,7 @@ object Multimodal {
     val media = mediaTable(s, d)
       // zero-byte guard: sequence(0,-1) descends in Spark, empty in DuckDB
       .filter(col("meta.nbytes") > 0)
-    val video = media
-      .withColumn("n_frames",
-        ceil(col("meta.nbytes").cast("double") / 32.0).cast("int"))
-      .select(col("media_id"), col("content"),
-        explode(sequence(lit(0), col("n_frames") - 1, lit(4))).as("fi"))
+    val video = frames(s, d, 4)
       .select(col("media_id"),
         (col("fi").cast("bigint") * 40).as("ts"),
         col("fi").cast("bigint").as("frame_idx"),
@@ -400,25 +460,8 @@ object Multimodal {
     // lazy persist re-ran the PNG encode/decode per reference, and
     // AQE's byte-based advisory coalesces the small text input to ~2
     // partitions without the explicit repartition
-    val hashes = t(s, d, "documents").select(col("doc_id"), col("text"))
-      .transform(graft.Par.spread)
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.flatMap { case (id, text) =>
-          val bytes = text.getBytes("UTF-8")
-          val h = bytes.length / 16
-          if (h == 0) Iterator.empty
-          else {
-            val px = bytes.take(16 * h)
-            val pert = px.zipWithIndex.map { case (b, i) =>
-              if (i % 7 == 0) (b + 1).toByte else b }
-            Seq((id, px), (id + 1000000L, pert)).iterator.map {
-              case (mid, p) =>
-                val (w, hh, dec) = decodeGray(encodeGrayPng(p))
-                (mid, dHash(w, hh, dec))
-            }
-          }
-        }
+    val hashes = twinImages(s, d) { (mid, w, hh, dec) =>
+        (mid, dHash(w, hh, dec))
       }.toDF("media_id", "dhash")
       .localCheckpoint() // eager: twin AND control joins consume both sides
     val a = hashes.filter(col("media_id") < 1000000L)
@@ -466,29 +509,8 @@ object Multimodal {
     // the verify is bit_count(xor) — whole-stage codegen, where the
     // 64-step substring HOF per pair evaluated interpreted (the dd18
     // rule) and cost 20 s at sf0.1 over the ~6M raw band candidates
-    val hashes = t(s, d, "documents").select(col("doc_id"), col("text"))
-      // spread FIRST: the documents scan is 1-2 input splits, so the
-      // PNG encode→decode→dHash kernel (the priciest per-row work in
-      // this file) would run 2-way on a 32-core session
-      .transform(graft.Par.spread)
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.flatMap { case (id, text) =>
-          val bytes = text.getBytes("UTF-8")
-          val h = bytes.length / 16
-          if (h == 0) Iterator.empty
-          else {
-            val px = bytes.take(16 * h)
-            val pert = px.zipWithIndex.map { case (b, i) =>
-              if (i % 7 == 0) (b + 1).toByte else b }
-            Seq((id, px), (id + 1000000L, pert)).iterator.map {
-              case (mid, p) =>
-                val (w, hh, dec) = decodeGray(encodeGrayPng(p))
-                (mid, java.lang.Long.parseUnsignedLong(
-                  dHash(w, hh, dec), 2))
-            }
-          }
-        }
+    val hashes = twinImages(s, d) { (mid, w, hh, dec) =>
+        (mid, java.lang.Long.parseUnsignedLong(dHash(w, hh, dec), 2))
       }.toDF("media_id", "dh")
       // EAGER, not lazy persist: three consumers (band explode + two
       // verify rejoins) race the cache fill and each re-ran the decode
@@ -576,35 +598,15 @@ object Multimodal {
     import s.implicits._
     val src = t(s, d, "documents").select(
       col("doc_id").as("base_id"), col("source"))
-    val stats = t(s, d, "documents").select(col("doc_id"), col("text"))
-      // spread the decode (AQE coalesces the small text scan to ~2
-      // partitions; the PNG pass is CPU-bound over few bytes)
-      .transform(graft.Par.spread)
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.flatMap { case (id, text) =>
-          val bytes = text.getBytes("UTF-8")
-          val h = bytes.length / 16
-          if (h == 0) Iterator.empty
-          else {
-            val px = bytes.take(16 * h)
-            val pert = px.zipWithIndex.map { case (b, i) =>
-              if (i % 7 == 0) (b + 1).toByte else b }
-            Seq((id, px), (id + 1000000L, pert)).iterator.map {
-              case (mid, p) =>
-                val (w, hh, dec) = decodeGray(encodeGrayPng(p))
-                var s1 = 0L
-                var s2 = 0L
-                var i = 0
-                while (i < dec.length) {
-                  val v = (dec(i) & 0xff).toLong
-                  s1 += v; s2 += v * v; i += 1
-                }
-                (mid, hh.toLong, dec.length.toLong, s1, s2,
-                  dHash(w, hh, dec))
-            }
-          }
+    val stats = twinImages(s, d) { (mid, w, hh, dec) =>
+        var s1 = 0L
+        var s2 = 0L
+        var i = 0
+        while (i < dec.length) {
+          val v = (dec(i) & 0xff).toLong
+          s1 += v; s2 += v * v; i += 1
         }
+        (mid, hh.toLong, dec.length.toLong, s1, s2, dHash(w, hh, dec))
       }.toDF("media_id", "h", "n", "luma_sum", "sq_sum", "dhash")
       // src is one row per media item (corpus-sized at scale) — plain
       // shuffle join on the derived base id; AQE broadcasts at small SF
@@ -753,14 +755,7 @@ object Multimodal {
     */
   private def mm11AspectBuckets: Q = (s, d) => {
     import s.implicits._
-    val dims = pngTable(s, d).select(col("media_id"), col("content"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, png) =>
-          val (w, h, _) = decodeGray(png)
-          (id, w.toLong, h.toLong)
-        }
-      }.toDF("media_id", "w", "h")
+    val dims = imageDims(s, d)
     dims
       .withColumn("band", expr("h div w"))
       .withColumn("padded_h", expr("((h + 7) div 8) * 8"))
@@ -796,14 +791,7 @@ object Multimodal {
   private val mm16PatchBatches: Q = (s, d) => {
     import s.implicits._
     val budget = 128L
-    val dims = pngTable(s, d).select(col("media_id"), col("content"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, png) =>
-          val (w, h, _) = decodeGray(png)
-          (id, w.toLong, h.toLong)
-        }
-      }.toDF("media_id", "w", "h")
+    val dims = imageDims(s, d)
       .withColumn("band", expr("h div 16"))
       .withColumn("patches", expr("((h + 7) div 8) * ((w + 7) div 8)"))
       .repartition(col("band"))
@@ -864,14 +852,7 @@ object Multimodal {
     import s.implicits._
     val budget = 512L
     val spec = graft.operators.TextAnalysis.bpeSpecFor(s, d)
-    val dims = pngTable(s, d).select(col("media_id"), col("content"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, png) =>
-          val (w, h, _) = decodeGray(png)
-          (id, w.toLong, h.toLong)
-        }
-      }.toDF("media_id", "w", "h")
+    val dims = imageDims(s, d)
       .withColumn("patches", expr("((h + 7) div 8) * ((w + 7) div 8)"))
     val sized = t(s, d, "documents")
       .select(col("doc_id"), col("source"),
@@ -940,20 +921,14 @@ object Multimodal {
   private val mm12FrameRunCollapse: Q = (s, d) => {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("media_id").orderBy("fi")
-    val frames = mediaTable(s, d)
-      // zero-byte guard: sequence(0,-1) descends in Spark, empty in DuckDB
-      .filter(col("meta.nbytes") > 0)
-      .withColumn("n_frames",
-        ceil(col("meta.nbytes").cast("double") / 32.0).cast("int"))
-      .select(col("media_id"), col("content"),
-        explode(sequence(lit(0), col("n_frames") - 1)).as("fi"))
+    val fps = frames(s, d, 1)
       .withColumn("src_fi",
         when(col("media_id") % 5 === 0, expr("(fi div 3) * 3"))
           .otherwise(col("fi")))
       .select(col("media_id"), col("fi"),
         md5(substring(col("content"), col("src_fi") * 32 + 1, lit(32)))
           .as("fp"))
-    val runs = frames
+    val runs = fps
       .withColumn("is_new",
         when(lag("fp", 1).over(w).isNull ||
           lag("fp", 1).over(w) =!= col("fp"), 1L).otherwise(0L))
@@ -1043,24 +1018,7 @@ object Multimodal {
     */
   private def mm06EnergySegments: Q = (s, d) => {
     import org.apache.spark.sql.expressions.Window
-    val frames = mediaTable(s, d)
-      // same zero-byte sequence(0,-1) guard as mm05 (ADVICE r4)
-      .filter(col("meta.nbytes") > 0)
-      .withColumn("n_frames",
-        ceil(col("meta.nbytes").cast("double") / 32.0).cast("int"))
-      .select(col("media_id"), col("content"),
-        explode(sequence(lit(0), col("n_frames") - 1)).as("fi"))
-      .withColumn("frame",
-        substring(col("content"), col("fi") * 32 + 1, lit(32)))
-      // STUB decode: byte-sum stands in for frame RMS energy (ASCII
-      // payload — char ords ARE the bytes; empty split artifacts dropped)
-      .withColumn("energy", expr(
-        """aggregate(transform(
-          |  filter(split(CAST(frame AS STRING), ''), c -> c <> ''),
-          |  c -> CAST(ascii(c) AS BIGINT)), 0L, (a, x) -> a + x)""".stripMargin))
-      .select(col("media_id"), col("fi").cast("bigint").as("fi"),
-        col("energy"))
-    val active = frames.filter(col("energy") >= 2400) // ~ASCII avg * 32 * 0.8
+    val active = frameEnergy(s, d).filter(col("energy") >= 2400) // ~ASCII avg * 32 * 0.8
     val wRun = Window.partitionBy("media_id").orderBy("fi")
     active
       .withColumn("grp", col("fi") - row_number().over(wRun))
@@ -1088,24 +1046,10 @@ object Multimodal {
     */
   private def mm09Keyframes: Q = (s, d) => {
     import org.apache.spark.sql.expressions.Window
-    val frames = mediaTable(s, d)
-      .filter(col("meta.nbytes") > 0)
-      .withColumn("n_frames",
-        ceil(col("meta.nbytes").cast("double") / 32.0).cast("int"))
-      .select(col("media_id"), col("content"),
-        explode(sequence(lit(0), col("n_frames") - 1)).as("fi"))
-      .withColumn("frame",
-        substring(col("content"), col("fi") * 32 + 1, lit(32)))
-      .withColumn("energy", expr(
-        """aggregate(transform(
-          |  filter(split(CAST(frame AS STRING), ''), c -> c <> ''),
-          |  c -> CAST(ascii(c) AS BIGINT)), 0L, (a, x) -> a + x)""".stripMargin))
-      .select(col("media_id"), col("fi").cast("bigint").as("fi"),
-        col("energy"))
     val wLag = Window.partitionBy("media_id").orderBy("fi")
     val wArg = Window.partitionBy("media_id", "win")
       .orderBy(col("delta").desc, col("fi"))
-    frames
+    frameEnergy(s, d)
       .withColumn("delta",
         abs(col("energy") - coalesce(lag("energy", 1).over(wLag),
           col("energy"))))

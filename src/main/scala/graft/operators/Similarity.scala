@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables.t
+import graft.functions.GraftFunctions.double_dot
 
 /** Approximate-nearest-neighbor similarity search over the `embeddings`
   * table (builder mandate; no reference counterpart).
@@ -31,6 +32,62 @@ object Similarity {
 
   def l2norm(c: Column): Column =
     sqrt(graft.functions.GraftFunctions.float_dot(c, c))
+
+  /** Rows where `flag` holds, as a BIGINT sum (NULL over no rows). */
+  def cnt(flag: Column): Column = sum(when(flag, 1L).otherwise(0L))
+
+  /** The sampled query side of the exact-cosine family: the rows of
+    * `corpus` (vec_id, embedding, norm) with vec_id < `n`, as
+    * (query_id, q_emb, q_norm) plus whatever `extra` columns the
+    * caller carries along (an IVF probe's cluster, ss22's int8 codes).
+    */
+  private def querySide(corpus: DataFrame, n: Int,
+      extra: Column*): DataFrame =
+    corpus.filter(col("vec_id") < n)
+      .select(Seq(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
+        col("norm").as("q_norm")) ++ extra: _*)
+
+  /** Exact cosine of candidate rows. Each row of `cand` pairs a corpus
+    * vector (vec_id, embedding, norm) with a query from [[querySide]]
+    * (query_id, q_emb, q_norm): a brute-force cross join, an IVF list
+    * join or a rejoin of ANN candidate ids. Drops the query itself,
+    * names the candidate `neighbor_id` (= vec_id) and scores
+    * `cos_raw = dot(embedding, q_emb) / (norm * q_norm)`.
+    *
+    * The evaluation order is part of the answer: FloatDot's sequential
+    * double fold, then ONE division by the product of the norms — the
+    * IEEE operation sequence the DuckDB oracle replays (`normCte`,
+    * `dotSql`), so scores agree bit-for-bit and even unrounded rank
+    * comparisons match. Any re-association (dividing by each norm in
+    * turn, a different fold order) moves last bits and can reorder
+    * near-ties.
+    *
+    * `dotOf` is that fold: [[dot]] over the FLOAT embeddings, or
+    * `double_dot` where the caller cast them to DOUBLE (ss29/ss31) —
+    * the same sequential double sum over the same exact values.
+    */
+  private def cosineScored(cand: DataFrame,
+      dotOf: (Column, Column) => Column = dot): DataFrame =
+    cand.filter(col("vec_id") =!= col("query_id"))
+      .withColumn("neighbor_id", col("vec_id"))
+      .withColumn("cos_raw",
+        dotOf(col("embedding"), col("q_emb")) / (col("norm") * col("q_norm")))
+
+  /** Exact cosine top-k per query: the [[cosineScored]] rows of `cand`
+    * ranked `rn` = row_number over query_id by cos_raw desc, then
+    * neighbor_id (the total tie order every oracle replays), keeping
+    * rn ≤ k. It is the recall denominator of the family (k = 3 for
+    * ss19/ss35/ss36, 5 for ss01/ss07/ss11/ss16/ss17) and the rerank of
+    * every IVF, LSH and ADC candidate set.
+    */
+  private def cosineTopK(cand: DataFrame, k: Int,
+      dotOf: (Column, Column) => Column = dot): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    cosineScored(cand, dotOf)
+      .withColumn("rn", row_number().over(Window.partitionBy("query_id")
+        .orderBy(col("cos_raw").desc, col("neighbor_id"))))
+      .filter(col("rn") <= k)
+  }
 
   /** 32-bit sign-LSH signature of an embedding column — the custom
     * single-pass codegen expression (graft.functions.SignLsh32): the
@@ -108,11 +165,9 @@ object Similarity {
   def coarseCentroids(corpus: DataFrame, k: Int = 16,
       seedStep: Long = 97L, rounds: Int = 0): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def dd(a: String, b: String) =
-      graft.functions.GraftFunctions.double_dot(col(a), col(b))
     val base = corpus.select(col("vec_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("e"))
-      .withColumn("nrm", sqrt(dd("e", "e")))
+      .withColumn("nrm", sqrt(double_dot(col("e"), col("e"))))
     var cents = coarseSeeds(base, k, seedStep)
       .select(col("vec_id").as("cid"), col("e").as("c_emb"),
         col("nrm").as("c_norm"))
@@ -120,13 +175,14 @@ object Similarity {
       .orderBy(col("ccos").desc, col("cid"))
     for (_ <- 1 to rounds) {
       cents = base.crossJoin(broadcast(cents))
-        .withColumn("ccos", dd("e", "c_emb") / (col("nrm") * col("c_norm")))
+        .withColumn("ccos", double_dot(col("e"), col("c_emb")) /
+          (col("nrm") * col("c_norm")))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .groupBy("cid")
         .agg(graft.functions.VectorAgg.vector_avg(col("e")).as("avg"))
         .withColumn("c_emb", expr("transform(avg, x -> round(x, 6))"))
-        .withColumn("c_norm", sqrt(dd("c_emb", "c_emb")))
+        .withColumn("c_norm", sqrt(double_dot(col("c_emb"), col("c_emb"))))
         .select("cid", "c_emb", "c_norm")
     }
     if (rounds > 0) cents.localCheckpoint() else cents
@@ -149,19 +205,18 @@ object Similarity {
     * sizing rules live on [[coarseSeeds]].
     */
   def coarseTrainAudit(s: SparkSession, d: String): DataFrame = {
-    def dd(a: String, b: String) =
-      graft.functions.GraftFunctions.double_dot(col(a), col(b))
     val corpus = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
     val base = corpus.select(col("vec_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("e"))
-      .withColumn("nrm", sqrt(dd("e", "e")))
+      .withColumn("nrm", sqrt(double_dot(col("e"), col("e"))))
       .persist() // lazy-ok: cheap norm projection over the embedding pool (category A/B'd: eager +0.3 s at the ss18 site)
     def assignStats(cents: DataFrame): DataFrame = {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("vec_id")
         .orderBy(col("ccos").desc, col("cid"))
       base.crossJoin(broadcast(cents))
-        .withColumn("ccos", dd("e", "c_emb") / (col("nrm") * col("c_norm")))
+        .withColumn("ccos", double_dot(col("e"), col("c_emb")) /
+          (col("nrm") * col("c_norm")))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .groupBy("cid")
@@ -244,17 +299,15 @@ object Similarity {
 
   def jlRecall(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def dd(a: String, b: String) =
-      graft.functions.GraftFunctions.double_dot(col(a), col(b))
     val raw = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
     val base = raw.unionAll(plantTwins(raw, "0.001"))
       .select(col("vec_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("e"))
-      .withColumn("nrm", sqrt(dd("e", "e")))
+      .withColumn("nrm", sqrt(double_dot(col("e"), col("e"))))
       .withColumn("p", expr((0 until 6)
         .map(jlProjTerm(_, oneBased = false))
         .mkString("array(", ", ", ")")))
-      .withColumn("pnrm", sqrt(dd("p", "p")))
+      .withColumn("pnrm", sqrt(double_dot(col("p"), col("p"))))
       .persist() // lazy-ok: cheap norm projection over the embedding pool (category A/B'd: eager +0.3 s at the ss18 site)
     val qs = base.filter(col("vec_id") < 50)
       .select(col("vec_id").as("query_id"), col("e").as("q_e"),
@@ -262,8 +315,10 @@ object Similarity {
         col("pnrm").as("q_pnrm"))
     val pairs = base.crossJoin(broadcast(qs))
       .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cos_x", dd("e", "q_e") / (col("nrm") * col("q_nrm")))
-      .withColumn("cos_p", dd("p", "q_p") / (col("pnrm") * col("q_pnrm")))
+      .withColumn("cos_x",
+        double_dot(col("e"), col("q_e")) / (col("nrm") * col("q_nrm")))
+      .withColumn("cos_p",
+        double_dot(col("p"), col("q_p")) / (col("pnrm") * col("q_pnrm")))
       .select("query_id", "vec_id", "cos_x", "cos_p")
     val wx = Window.partitionBy("query_id")
       .orderBy(col("cos_x").desc, col("vec_id"))
@@ -418,32 +473,23 @@ object Similarity {
 
   def trainedBenefit(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def dd2(a: Column, b: Column) =
-      graft.functions.GraftFunctions.double_dot(a, b)
     val corpus = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
     val withN = corpus.select(col("vec_id"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("e"))
-      .withColumn("nrm", sqrt(dd2(col("e"), col("e"))))
+        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("embedding"))
+      .withColumn("norm",
+        sqrt(double_dot(col("embedding"), col("embedding"))))
       .persist() // lazy-ok: cheap norm projection (see 138)
-    val queriesDf = withN.filter(col("vec_id") < 50)
-      .select(col("vec_id").as("query_id"), col("e").as("qe"),
-        col("nrm").as("qn"))
-    val wq = Window.partitionBy("query_id")
-      .orderBy(col("qcos").desc, col("vec_id"))
-    val exact5 = withN.crossJoin(broadcast(queriesDf))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("qcos",
-        dd2(col("e"), col("qe")) / (col("nrm") * col("qn")))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= 5)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"))
+    val queriesDf = querySide(withN, 50)
+    val exact5 = cosineTopK(withN.crossJoin(broadcast(queriesDf)), 5,
+        double_dot)
+      .select("query_id", "neighbor_id")
       .localCheckpoint() // shared truth: one exact pass, two consumers
     def variantRow(cents: DataFrame, variant: String): DataFrame = {
       val wAssign = Window.partitionBy("vec_id")
         .orderBy(col("ccos").desc, col("cid"))
       val assigned = withN.crossJoin(broadcast(cents))
-        .withColumn("ccos",
-          dd2(col("e"), col("c_emb")) / (col("nrm") * col("c_norm")))
+        .withColumn("ccos", double_dot(col("embedding"), col("c_emb")) /
+          (col("norm") * col("c_norm")))
         .withColumn("crn", row_number().over(wAssign))
         .filter(col("crn") === 1)
         .select(col("vec_id"), col("cid").as("cluster"))
@@ -496,25 +542,24 @@ object Similarity {
     */
   def derivedKIvf(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def dd2(a: Column, b: Column) =
-      graft.functions.GraftFunctions.double_dot(a, b)
     val corpus = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
     // the ONE driver action: the corpus count that sizes the quantizer
     val n = corpus.count()
     val k = math.sqrt(n.toDouble).toLong // floor; sqrt is IEEE-exact
     val step = math.max(1L, n / k)
     val base = corpus.select(col("vec_id"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("e"))
-      .withColumn("nrm", sqrt(dd2(col("e"), col("e"))))
+        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("embedding"))
+      .withColumn("norm",
+        sqrt(double_dot(col("embedding"), col("embedding"))))
       .persist() // lazy-ok: cheap norm projection (see 138)
     val cents = coarseSeeds(base, k.toInt, step)
-      .select(col("vec_id").as("cid"), col("e").as("c_emb"),
-        col("nrm").as("c_norm"))
+      .select(col("vec_id").as("cid"), col("embedding").as("c_emb"),
+        col("norm").as("c_norm"))
     val wA = Window.partitionBy("vec_id")
       .orderBy(col("ccos").desc, col("cid"))
     val asg = base.crossJoin(broadcast(cents))
-      .withColumn("ccos",
-        dd2(col("e"), col("c_emb")) / (col("nrm") * col("c_norm")))
+      .withColumn("ccos", double_dot(col("embedding"), col("c_emb")) /
+        (col("norm") * col("c_norm")))
       .withColumn("rn", row_number().over(wA))
       .filter(col("rn") === 1)
       .select(col("vec_id"), col("cid"))
@@ -523,17 +568,10 @@ object Similarity {
     val listStats = lists.agg(count(lit(1)).as("n_cells"),
       max("sz").as("max_list"),
       sum(col("sz") * col("sz")).as("sum_sq_lists"))
-    val queriesDf = base.filter(col("vec_id") < 50)
-      .select(col("vec_id").as("query_id"), col("e").as("qe"),
-        col("nrm").as("qn"))
-    val wq = Window.partitionBy("query_id")
-      .orderBy(col("qcos").desc, col("vec_id"))
-    val exact5 = base.crossJoin(broadcast(queriesDf))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("qcos", dd2(col("e"), col("qe")) / (col("nrm") * col("qn")))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= 5)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"))
+    val queriesDf = querySide(base, 50)
+    val exact5 = cosineTopK(base.crossJoin(broadcast(queriesDf)), 5,
+        double_dot)
+      .select("query_id", "neighbor_id")
     val cand = asg.join(asg.filter(col("vec_id") < 50)
         .select(col("vec_id").as("query_id"), col("cid")), Seq("cid"))
       .filter(col("vec_id") =!= col("query_id"))
@@ -572,24 +610,22 @@ object Similarity {
     */
   def centroidEval(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def dd2(a: Column, b: Column) =
-      graft.functions.GraftFunctions.double_dot(a, b)
     val base = t(s, d, "embeddings")
       .select(col("vec_id"), col("label"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("e"))
-      .withColumn("nrm", sqrt(dd2(col("e"), col("e"))))
+      .withColumn("nrm", sqrt(double_dot(col("e"), col("e"))))
     val cents = base.filter(col("vec_id") % 5 =!= 0)
       .groupBy(col("label").as("clabel"))
       .agg(graft.functions.VectorAgg.vector_avg(col("e")).as("avg"))
       .withColumn("c_emb", expr("transform(avg, x -> round(x, 6))"))
-      .withColumn("c_norm", sqrt(dd2(col("c_emb"), col("c_emb"))))
+      .withColumn("c_norm", sqrt(double_dot(col("c_emb"), col("c_emb"))))
       .select("clabel", "c_emb", "c_norm")
     val w = Window.partitionBy("vec_id")
       .orderBy(col("ccos").desc, col("clabel"))
     base.filter(col("vec_id") % 5 === 0)
       .crossJoin(broadcast(cents))
       .withColumn("ccos",
-        dd2(col("e"), col("c_emb")) / (col("nrm") * col("c_norm")))
+        double_dot(col("e"), col("c_emb")) / (col("nrm") * col("c_norm")))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .groupBy(col("label").as("true_label"),
@@ -664,7 +700,7 @@ object Similarity {
     val base = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
     val corpus = base.unionAll(plantTwins(base, "0.001"))
       .withColumn("e", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-      .withColumn("nrm", l2norm(col("embedding")))
+      .withColumn("norm", l2norm(col("embedding")))
       .withColumn("amax", expr("array_max(transform(e, x -> abs(x)))"))
       .withColumn("qv", expr(
         """CASE WHEN amax = 0D THEN transform(e, x -> 0L)
@@ -672,26 +708,20 @@ object Similarity {
           |                             AS BIGINT)) END""".stripMargin))
       .withColumn("scale", col("amax") / lit(127.0))
       .persist() // lazy-ok: exact+quantized+query consumers; cheap scale projection (see 138)
-    val queries = corpus.filter(col("vec_id") < 50)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"), col("qv").as("q_qv"),
-        col("scale").as("q_scale"))
+    val pairs = corpus.crossJoin(broadcast(querySide(corpus, 50,
+      col("qv").as("q_qv"), col("scale").as("q_scale"))))
+    val exact3 = cosineTopK(pairs, 3)
+      .select("query_id", "rn", "neighbor_id")
     val wq = Window.partitionBy("query_id")
       .orderBy(col("score").desc, col("neighbor_id"))
-    val pairs = corpus.crossJoin(broadcast(queries))
+    val sq3 = pairs
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("neighbor_id", col("vec_id"))
-    val exact3 = pairs
-      .withColumn("score",
-        dot(col("embedding"), col("q_emb")) / (col("nrm") * col("q_nrm")))
-      .withColumn("rn", row_number().over(wq)).filter(col("rn") <= 3)
-      .select("query_id", "rn", "neighbor_id")
-    val sq3 = pairs
       .withColumn("qdot", expr(
         "aggregate(zip_with(qv, q_qv, (x, y) -> x * y), 0L, (a, x) -> a + x)"))
       .withColumn("score",
         (col("qdot").cast("double") * (col("scale") * col("q_scale"))) /
-          (col("nrm") * col("q_nrm")))
+          (col("norm") * col("q_norm")))
       .withColumn("rn", row_number().over(wq)).filter(col("rn") <= 3)
       .select(col("query_id"), col("rn").as("qrn"), col("neighbor_id"))
     val hits = exact3.join(sq3.select("query_id", "neighbor_id"),
@@ -815,8 +845,6 @@ object Similarity {
     import org.apache.spark.sql.expressions.Window
     val m = 8
     val corpus = pqTwinCorpus(s, d)
-    def dd(a: String, b: String) =
-      graft.functions.GraftFunctions.double_dot(col(a), col(b))
     // (vec_id, k, sub DOUBLE[8], xx) — double subvectors so the trained
     // centroids (per-dim averages) and distances live in one type both
     // engines share; the float→double cast is exact.
@@ -826,7 +854,7 @@ object Similarity {
            |  transform(slice(embedding, k * 8 + 1, 8),
            |    x -> CAST(x AS DOUBLE)) AS sub))""".stripMargin)).as("x"))
       .select(col("vec_id"), col("x.k").as("k"), col("x.sub").as("sub"))
-      .withColumn("xx", dd("sub", "sub"))
+      .withColumn("xx", double_dot(col("sub"), col("sub")))
       // lazy persist, NOT eager checkpoint: A/B'd (r7) — the loop's
       // first round materializes this once anyway, and the extra eager
       // job measured +0.3 s
@@ -843,9 +871,11 @@ object Similarity {
     val wAssign = Window.partitionBy("vec_id", "k")
       .orderBy(col("dist"), col("cid"))
     def assign(c: DataFrame): DataFrame = subs
-      .join(broadcast(c.withColumn("cc", dd("c_sub", "c_sub"))), Seq("k"))
+      .join(broadcast(c.withColumn("cc",
+        double_dot(col("c_sub"), col("c_sub")))), Seq("k"))
       .withColumn("dist",
-        col("xx") + col("cc") - lit(2.0) * dd("sub", "c_sub"))
+        col("xx") + col("cc") -
+          lit(2.0) * double_dot(col("sub"), col("c_sub")))
       .withColumn("rn", row_number().over(wAssign))
       .filter(col("rn") === 1)
     for (_ <- 1 to rounds) {
@@ -866,7 +896,7 @@ object Similarity {
     // materialize it so the Lloyd-round subplan executes once, not once
     // per consumer (measured ~2× on the whole query at sf0.1)
     if (rounds > 0) cents = cents.localCheckpoint()
-    val withcc = cents.withColumn("cc", dd("c_sub", "c_sub"))
+    val withcc = cents.withColumn("cc", double_dot(col("c_sub"), col("c_sub")))
     val codes = assign(cents)
       .select(col("vec_id"), col("k"), col("cid").as("code"))
     val dt = subs.filter(col("vec_id") < 10)
@@ -875,7 +905,7 @@ object Similarity {
       .join(broadcast(withcc), Seq("k"))
       .select(col("query_id"), col("k"), col("cid"),
         (col("q_xx") + col("cc") -
-          lit(2.0) * dd("q_sub", "c_sub")).as("d"))
+          lit(2.0) * double_dot(col("q_sub"), col("c_sub"))).as("d"))
     val wRank = Window.partitionBy("query_id")
       .orderBy(col("adc"), col("neighbor_id"))
     // fixed left-to-right addition chain over the 8 per-subspace sums —
@@ -893,19 +923,8 @@ object Similarity {
       .withColumn("rank", row_number().over(wRank))
       .filter(col("rank") <= 3)
       .select(col("query_id"), col("neighbor_id"))
-    val cbase = corpus.withColumn("nrm", l2norm(col("embedding")))
-    val queries = cbase.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"))
-    val wq = Window.partitionBy("query_id")
-      .orderBy(col("cos_raw").desc, col("neighbor_id"))
-    val exact3 = cbase.crossJoin(broadcast(queries))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("neighbor_id", col("vec_id"))
-      .withColumn("cos_raw",
-        dot(col("embedding"), col("q_emb")) / (col("nrm") * col("q_nrm")))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= 3)
+    val cbase = corpus.withColumn("norm", l2norm(col("embedding")))
+    val exact3 = cosineTopK(cbase.crossJoin(broadcast(querySide(cbase, 10))), 3)
       .select(col("query_id"), col("rn"), col("neighbor_id"))
     val hits = exact3.join(pq3, Seq("query_id", "neighbor_id"), "left_semi")
       .groupBy("query_id").agg(count(lit(1)).as("n_hit"),
@@ -931,24 +950,13 @@ object Similarity {
     * inverted lists per label) drop in unchanged.
     */
   def filteredTopk(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val corpus = t(s, d, "embeddings")
       .select(col("vec_id"), col("embedding"), col("label"))
-      .withColumn("nrm", l2norm(col("embedding")))
-    val queries = corpus.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"), col("label"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos_raw").desc, col("neighbor_id"))
-    corpus.join(broadcast(queries), Seq("label"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("neighbor_id", col("vec_id"))
-      .withColumn("cos_raw",
-        dot(col("embedding"), col("q_emb")) / (col("nrm") * col("q_nrm")))
-      .withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= 3)
-      .select(col("query_id"), col("rank"), col("label").cast("bigint")
-          .as("label"),
+      .withColumn("norm", l2norm(col("embedding")))
+    cosineTopK(corpus.join(broadcast(querySide(corpus, 10, col("label"))),
+        Seq("label")), 3)
+      .select(col("query_id"), col("rn").cast("bigint").as("rank"),
+        col("label").cast("bigint").as("label"),
         col("neighbor_id"), round(col("cos_raw"), 4).as("cosine"))
       .orderBy("query_id", "rank")
   }
@@ -964,7 +972,6 @@ object Similarity {
     * recall denominator, not a production path.
     */
   def ivfRecall(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val corpus = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
       .withColumn("norm", l2norm(col("embedding")))
       .persist() // lazy-ok: cheap norm projection (see 138)
@@ -972,29 +979,11 @@ object Similarity {
     val assigned = ranked.filter(col("crn") === 1)
       .select(col("vec_id"), col("embedding"), col("norm"),
         col("cid").as("cluster"))
-    val probed = ranked.filter(col("crn") <= 2 && col("vec_id") < 50)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("norm").as("q_norm"), col("cid").as("cluster"))
-    val wq = Window.partitionBy("query_id")
-      .orderBy(col("cos_raw").desc, col("neighbor_id"))
-    val ivf5 = assigned.join(probed, Seq("cluster"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("neighbor_id", col("vec_id"))
-      .withColumn("cos_raw",
-        dot(col("embedding"), col("q_emb")) / (col("norm") * col("q_norm")))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= 5)
+    val probed = querySide(ranked.filter(col("crn") <= 2), 50,
+      col("cid").as("cluster"))
+    val ivf5 = cosineTopK(assigned.join(probed, Seq("cluster")), 5)
       .select("query_id", "neighbor_id")
-    val queriesDf = corpus.filter(col("vec_id") < 50)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("norm").as("q_norm"))
-    val exact5 = corpus.crossJoin(broadcast(queriesDf))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("neighbor_id", col("vec_id"))
-      .withColumn("cos_raw",
-        dot(col("embedding"), col("q_emb")) / (col("norm") * col("q_norm")))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= 5)
+    val exact5 = cosineTopK(corpus.crossJoin(broadcast(querySide(corpus, 50))), 5)
       .select(col("query_id"), col("rn"), col("neighbor_id"))
     val hits = exact5.join(ivf5, Seq("query_id", "neighbor_id"), "left_semi")
       .groupBy("query_id").agg(count(lit(1)).as("n_hit"),
@@ -1061,32 +1050,23 @@ object Similarity {
   def mmrRerank(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val corpus = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", l2norm(col("embedding")))
-    val qs = corpus.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"))
-    val wq = Window.partitionBy("query_id")
-      .orderBy(col("rel").desc, col("vec_id"))
-    val pool = corpus.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("rel",
-        dot(col("embedding"), col("q_emb")) / (col("nrm") * col("q_nrm")))
-      .withColumn("prn", row_number().over(wq))
-      .filter(col("prn") <= 20)
-      .select("query_id", "vec_id", "rel", "embedding", "nrm")
+      .withColumn("norm", l2norm(col("embedding")))
+    val pool = cosineTopK(corpus.crossJoin(broadcast(querySide(corpus, 10))),
+        20)
+      .select(col("query_id"), col("vec_id"), col("cos_raw").as("rel"),
+        col("embedding"), col("norm"), col("rn"))
       .persist() // lazy-ok: constant-size pool (<=20 rows per query)
-    var sel = pool.withColumn("rn", row_number().over(wq))
-      .filter(col("rn") === 1)
+    var sel = pool.filter(col("rn") === 1)
       .select(col("query_id"), lit(1L).as("rank"), col("vec_id"),
         col("rel"), (col("rel") * 0.5).as("mmr"),
-        col("embedding"), col("nrm"))
+        col("embedding"), col("norm"))
     for (r <- 2 to 3) {
       val selSlim = sel.select(col("query_id"), col("vec_id").as("s_id"),
-        col("embedding").as("s_emb"), col("nrm").as("s_nrm"))
+        col("embedding").as("s_emb"), col("norm").as("s_nrm"))
       val ms = pool.join(selSlim, Seq("query_id"))
         .withColumn("sim",
           dot(col("embedding"), col("s_emb")) /
-            (col("nrm") * col("s_nrm")))
+            (col("norm") * col("s_nrm")))
         .groupBy("query_id", "vec_id").agg(max("sim").as("ms"))
       val wS = Window.partitionBy("query_id")
         .orderBy(col("score").desc, col("vec_id"))
@@ -1099,7 +1079,7 @@ object Similarity {
         .filter(col("rn") === 1)
         .select(col("query_id"), lit(r.toLong).as("rank"), col("vec_id"),
           col("rel"), col("score").as("mmr"),
-          col("embedding"), col("nrm"))
+          col("embedding"), col("norm"))
       sel = sel.unionAll(pick)
     }
     sel.select(col("query_id"), col("rank"), col("vec_id"),
@@ -1138,35 +1118,26 @@ object Similarity {
       .withColumn("in_adapt", col("ccos") >= col("c1") - 0.1)
       .withColumn("in_fix", col("crn") <= 2)
       .filter(col("in_adapt") || col("in_fix"))
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("norm").as("q_norm"), col("cid").as("cluster"),
-        col("in_adapt"), col("in_fix"))
-    val cand = assigned.join(qcent, Seq("cluster"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cos_raw",
-        dot(col("embedding"), col("q_emb")) / (col("norm") * col("q_norm")))
+    val qprobes = querySide(qcent, 50, col("cid").as("cluster"),
+      col("in_adapt"), col("in_fix"))
+    val cand = cosineScored(assigned.join(qprobes, Seq("cluster")))
       .select("query_id", "vec_id", "in_adapt", "in_fix", "cos_raw")
       .persist() // lazy-ok: constant-size scored pool; both rankings + both counters
+    // each config's top-3 re-ranks the shared scored pool, in
+    // cosineTopK's order (neighbor_id = vec_id)
     val wq = Window.partitionBy("query_id")
       .orderBy(col("cos_raw").desc, col("vec_id"))
     def top3(flag: String) = cand.filter(col(flag))
       .withColumn("rn", row_number().over(wq))
       .filter(col("rn") <= 3)
       .select(col("query_id"), col("vec_id"))
-    val queriesDf = corpus.filter(col("vec_id") < 50)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("norm").as("q_norm"))
-    val exact3 = corpus.crossJoin(broadcast(queriesDf))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cos_raw",
-        dot(col("embedding"), col("q_emb")) / (col("norm") * col("q_norm")))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= 3)
+    val exact3 = cosineTopK(corpus.crossJoin(broadcast(querySide(corpus, 50))),
+        3)
       .select(col("query_id"), col("vec_id"))
     def hits(df: org.apache.spark.sql.DataFrame, name: String) =
       exact3.join(df, Seq("query_id", "vec_id"), "left_semi")
         .groupBy("query_id").agg(count(lit(1)).as(name))
-    val probes = qcent.groupBy("query_id").agg(
+    val probes = qprobes.groupBy("query_id").agg(
       sum(when(col("in_adapt"), 1L).otherwise(0L)).as("n_probe_adapt"))
     val cands = cand.groupBy("query_id").agg(
       sum(when(col("in_adapt"), 1L).otherwise(0L)).as("n_cand_adapt"),
@@ -1201,7 +1172,6 @@ object Similarity {
     * Bloom/bitmap keyed the same way.
     */
   def tombstoneSearch(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val corpus = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
       .withColumn("norm", l2norm(col("embedding")))
       .withColumn("dead", (col("vec_id") % 10 === 3).cast("int"))
@@ -1210,25 +1180,14 @@ object Similarity {
     val assigned = ranked.filter(col("crn") === 1)
       .select(col("vec_id"), col("embedding"), col("norm"), col("dead"),
         col("cid").as("cluster"))
-    val probed = ranked.filter(col("crn") <= 2 && col("vec_id") < 10 &&
-        col("dead") === 0)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("norm").as("q_norm"), col("cid").as("cluster"))
+    val probed = querySide(ranked.filter(col("crn") <= 2 &&
+        col("dead") === 0), 10, col("cid").as("cluster"))
     val cand = assigned.join(probed, Seq("cluster"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("neighbor_id", col("vec_id"))
-      .withColumn("cos_raw",
-        dot(col("embedding"), col("q_emb")) / (col("norm") * col("q_norm")))
-      .select("query_id", "neighbor_id", "dead", "cos_raw")
-    val wq = Window.partitionBy("query_id")
-      .orderBy(col("cos_raw").desc, col("neighbor_id"))
-    val naive = cand.withColumn("rank", row_number().over(wq))
-      .filter(col("rank") <= 3)
-      .select(col("query_id"), col("rank"), col("neighbor_id").as("stale_id"))
-    val live = cand.filter(col("dead") === 0)
-      .withColumn("rank", row_number().over(wq))
-      .filter(col("rank") <= 3)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
+    val naive = cosineTopK(cand, 3)
+      .select(col("query_id"), col("rn").as("rank"),
+        col("neighbor_id").as("stale_id"))
+    val live = cosineTopK(cand.filter(col("dead") === 0), 3)
+      .select(col("query_id"), col("rn").as("rank"), col("neighbor_id"),
         round(col("cos_raw"), 4).as("cosine"))
     live.join(naive, Seq("query_id", "rank"))
       .select(col("query_id"), col("rank").cast("bigint").as("rank"),
@@ -1300,17 +1259,11 @@ object Similarity {
     val assigned = ranked.filter(col("crn") === 1)
       .select(col("vec_id"), col("embedding"), col("norm"),
         col("cid").as("cluster"))
-    val probed = ranked.filter(col("crn") <= 8 && col("vec_id") < 50)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("norm").as("q_norm"), col("crn").as("probe_rank"),
-        col("cid").as("cluster"))
+    val probed = querySide(ranked.filter(col("crn") <= 8), 50,
+      col("crn").as("probe_rank"), col("cid").as("cluster"))
     // each corpus vector lives in exactly one list → at most one row per
     // (query, neighbor); probe_rank says which nprobe admits it
-    val cand = assigned.join(probed, Seq("cluster"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("neighbor_id", col("vec_id"))
-      .withColumn("cos_raw",
-        dot(col("embedding"), col("q_emb")) / (col("norm") * col("q_norm")))
+    val cand = cosineScored(assigned.join(probed, Seq("cluster")))
       .select("query_id", "neighbor_id", "probe_rank", "cos_raw")
     val wq = Window.partitionBy("query_id")
       .orderBy(col("cos_raw").desc, col("neighbor_id"))
@@ -1322,22 +1275,11 @@ object Similarity {
     val flagged = cand.select(col("*"), rkn(1).as("rk1"), rkn(2).as("rk2"),
         rkn(4).as("rk4"), rkn(8).as("rk8"))
       .persist() // lazy-ok: constant-size flagged candidate set
-    def cnt(flag: Column): Column = sum(when(flag, 1L).otherwise(0L))
     val candAgg = flagged.agg(
       cnt(col("probe_rank") <= 1).as("c1"), cnt(col("probe_rank") <= 2).as("c2"),
       cnt(col("probe_rank") <= 4).as("c4"), count(lit(1)).as("c8"))
-    val queriesDf = corpus.filter(col("vec_id") < 50)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("norm").as("q_norm"))
-    val wx = Window.partitionBy("query_id")
-      .orderBy(col("cos_raw").desc, col("neighbor_id"))
-    val exact5 = corpus.crossJoin(broadcast(queriesDf))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("neighbor_id", col("vec_id"))
-      .withColumn("cos_raw",
-        dot(col("embedding"), col("q_emb")) / (col("norm") * col("q_norm")))
-      .withColumn("rn", row_number().over(wx))
-      .filter(col("rn") <= 5)
+    val exact5 = cosineTopK(corpus.crossJoin(broadcast(querySide(corpus, 50))),
+        5)
       .select("query_id", "neighbor_id")
     def hit(n: Int): Column =
       cnt(col("probe_rank") <= n && col(s"rk$n") <= 5)
@@ -1402,37 +1344,22 @@ object Similarity {
         when(col("j") < 0, 1).otherwise(0).as("home"))
     val cand = corpusBands.join(qprobes, Seq("band", "bval"))
       .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
+      .groupBy(col("query_id"), col("vec_id"))
       .agg(max(col("home")).as("home_hit"))
-    val queriesDf = corpus.filter(col("vec_id") < 50)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("norm").as("q_norm"))
+    val qs = querySide(corpus, 50)
     val wq = Window.partitionBy("query_id")
       .orderBy(col("cos_raw").desc, col("neighbor_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val flagged = cand
-      .join(corpus.select(col("vec_id").as("neighbor_id"), col("embedding"),
-        col("norm")), Seq("neighbor_id"))
-      .join(broadcast(queriesDf), Seq("query_id"))
-      .withColumn("cos_raw",
-        dot(col("embedding"), col("q_emb")) / (col("norm") * col("q_norm")))
+    val flagged = cosineScored(cand
+        .join(corpus.select("vec_id", "embedding", "norm"), Seq("vec_id"))
+        .join(broadcast(qs), Seq("query_id")))
       .select(col("query_id"), col("neighbor_id"), col("home_hit"),
         col("cos_raw"),
-        sum(when(col("home_hit") === 1, 1L).otherwise(0L)).over(wq)
-          .as("rk_home"),
+        cnt(col("home_hit") === 1).over(wq).as("rk_home"),
         sum(lit(1L)).over(wq).as("rk_all"))
       .persist() // lazy-ok: constant-size window-ranked pool
-    val wx = Window.partitionBy("query_id")
-      .orderBy(col("cos_raw").desc, col("neighbor_id"))
-    val exact5 = corpus.crossJoin(broadcast(queriesDf))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("neighbor_id", col("vec_id"))
-      .withColumn("cos_raw",
-        dot(col("embedding"), col("q_emb")) / (col("norm") * col("q_norm")))
-      .withColumn("rn", row_number().over(wx))
-      .filter(col("rn") <= 5)
+    val exact5 = cosineTopK(corpus.crossJoin(broadcast(qs)), 5)
       .select("query_id", "neighbor_id")
-    def cnt(flag: Column): Column = sum(when(flag, 1L).otherwise(0L))
     val candAgg = flagged.agg(
       cnt(col("home_hit") === 1).as("c_home"), count(lit(1)).as("c_multi"))
     val hitAgg = exact5
@@ -1600,24 +1527,13 @@ object Similarity {
 
   /** Exact-cosine refine of an ADC candidate set → global top-3:
     * float vectors touched only for the candidates. */
-  private def refineTop3(corpus: DataFrame, adc: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wFinal = Window.partitionBy("query_id")
-      .orderBy(col("cosine_raw").desc, col("neighbor_id"))
-    adc
-      .join(corpus.select(col("vec_id").as("neighbor_id"), col("embedding"),
-        col("norm")), Seq("neighbor_id"))
-      .join(broadcast(corpus.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-          col("norm").as("q_norm"))), Seq("query_id"))
-      .withColumn("cosine_raw",
-        dot(col("embedding"), col("q_emb")) / (col("norm") * col("q_norm")))
-      .withColumn("rank", row_number().over(wFinal).cast("bigint"))
-      .filter(col("rank") <= 3)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cosine_raw"), 4).as("cosine"))
+  private def refineTop3(corpus: DataFrame, adc: DataFrame): DataFrame =
+    cosineTopK(adc.withColumnRenamed("neighbor_id", "vec_id")
+        .join(corpus.select("vec_id", "embedding", "norm"), Seq("vec_id"))
+        .join(broadcast(querySide(corpus, 10)), Seq("query_id")), 3)
+      .select(col("query_id"), col("rn").cast("bigint").as("rank"),
+        col("neighbor_id"), round(col("cos_raw"), 4).as("cosine"))
       .orderBy("query_id", "rank")
-  }
 
   /** ss33: INDEX PERSISTENCE — the lifecycle gap between ss18 (builds
     * its inverted lists and PQ codes in-plan every run) and ss23
@@ -1717,37 +1633,16 @@ object Similarity {
   def ivfPqRecall(s: SparkSession, d: String): DataFrame =
     recallAt3(s, d, ivfPqSearch(s, d))
 
-  /** The exact cosine top-3 (query_id, neighbor_id) of the 10 sampled
-    * queries (vec_id < 10) over `base` (vec_id, embedding, norm): the
-    * recall denominator of ss19, ss35 and ss36, one 10-query broadcast
-    * brute-force pass. */
-  private def exactTop3(base: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val qs = base.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("norm").as("q_norm"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos_raw").desc, col("neighbor_id"))
-    base.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("neighbor_id", col("vec_id"))
-      .withColumn("cos_raw",
-        dot(col("embedding"), col("q_emb")) / (col("norm") * col("q_norm")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .select(col("query_id"), col("neighbor_id"))
-  }
-
   /** ss19's and ss35's per-query rollup (n_exact, n_hit, recall@3) of
-    * the answers `got` (query_id, neighbor_id) against [[exactTop3]]
-    * over the embeddings. */
+    * the answers `got` (query_id, neighbor_id) against the exact cosine
+    * top-3 of the 10 sampled queries over the embeddings. */
   private def recallAt3(s: SparkSession, d: String, got: DataFrame)
       : DataFrame = {
     val base = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
       .withColumn("norm", l2norm(col("embedding")))
     val got3 = got
       .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-    exactTop3(base)
+    cosineTopK(base.crossJoin(broadcast(querySide(base, 10))), 3)
       .join(broadcast(got3), Seq("query_id", "neighbor_id"), "left")
       .groupBy("query_id")
       .agg(count(lit(1)).as("n_exact"),
@@ -1807,7 +1702,7 @@ object Similarity {
     val compact3 = ivfServe(s, tbls, all, pqCentroids(all), probes,
         "graft_ivf_compact", "graft_pq_compact")
       .select(col("query_id"), col("neighbor_id"), lit(1).as("chit"))
-    exactTop3(all)
+    cosineTopK(all.crossJoin(broadcast(querySide(all, 10))), 3)
       .join(broadcast(frozen3), Seq("query_id", "neighbor_id"), "left")
       .join(broadcast(compact3), Seq("query_id", "neighbor_id"), "left")
       .groupBy("query_id")
@@ -1890,7 +1785,6 @@ object Similarity {
     * partition-pruned anti-join against the tombstone ledger.
     */
   def ss38PurgeCompaction(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // ss24's filtered-at-rerank answers (tombstones still in lists)
     val filtered = tombstoneSearch(s, d)
       .select(col("query_id"), col("rank"), col("neighbor_id").as("ss24_id"))
@@ -1904,19 +1798,11 @@ object Similarity {
         col("embedding"), col("norm"))
     val tbls = Bucketing.publish(s, "ss38", Seq(
       Bucketing.Part("graft_ivf_purged", lists, Some("cluster"))))
-    val probes = ranked.filter(col("crn") <= 2 && col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("norm").as("q_norm"), col("cid").as("cluster"))
-    val cand = s.table(tbls("graft_ivf_purged")).join(probes, Seq("cluster"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("neighbor_id", col("vec_id"))
-      .withColumn("cos_raw",
-        dot(col("embedding"), col("q_emb")) / (col("norm") * col("q_norm")))
-    val wq = Window.partitionBy("query_id")
-      .orderBy(col("cos_raw").desc, col("neighbor_id"))
-    val purged3 = cand.withColumn("rank", row_number().over(wq))
-      .filter(col("rank") <= 3)
-      .select(col("query_id"), col("rank").cast("bigint").as("rank"),
+    val probes = querySide(ranked.filter(col("crn") <= 2), 10,
+      col("cid").as("cluster"))
+    val purged3 = cosineTopK(
+        s.table(tbls("graft_ivf_purged")).join(probes, Seq("cluster")), 3)
+      .select(col("query_id"), col("rn").cast("bigint").as("rank"),
         col("neighbor_id"), round(col("cos_raw"), 4).as("cosine"))
     purged3.join(filtered, Seq("query_id", "rank"))
       .select(col("query_id"), col("rank"), col("neighbor_id"),
@@ -2322,7 +2208,6 @@ object Similarity {
     * produce identical recall values.
     */
   def annRecall(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val base = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
     // ~0.1%-per-dimension twin noise. One materialization feeding the
     // exact side, the band self-join and two vector rejoins (the dd07
@@ -2331,18 +2216,8 @@ object Similarity {
       .withColumn("norm", l2norm(col("embedding")))
       .withColumn("sig", signBucket(col("embedding")))
       .persist() // lazy-ok: cheap norm+sig projection; exact side + band join + rejoins (see 138)
-    val queries = corpus.filter(col("vec_id") < 50)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("norm").as("q_norm"))
-    val wq = Window.partitionBy("query_id")
-      .orderBy(col("cos_raw").desc, col("neighbor_id"))
-    val exact = corpus.crossJoin(broadcast(queries))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("neighbor_id", col("vec_id"))
-      .withColumn("cos_raw",
-        dot(col("embedding"), col("q_emb")) / (col("norm") * col("q_norm")))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= 5)
+    val queries = querySide(corpus, 50)
+    val exact = cosineTopK(corpus.crossJoin(broadcast(queries)), 5)
       .select(col("query_id"), col("rn"), col("neighbor_id"))
     val bands = corpus.select(col("vec_id"), posexplode(expr(
       "transform(sequence(0, 3), b -> (sig div shiftleft(1, 8*b)) % 256)")))
@@ -2353,15 +2228,10 @@ object Similarity {
         Seq("band", "bval"))
       .filter(col("vec_id") =!= col("query_id"))
       .select("query_id", "vec_id").distinct()
-    val lsh = cand
-      .join(corpus.select(col("vec_id"), col("embedding"), col("norm")),
-        Seq("vec_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .withColumn("neighbor_id", col("vec_id"))
-      .withColumn("cos_raw",
-        dot(col("embedding"), col("q_emb")) / (col("norm") * col("q_norm")))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= 5)
+    val lsh = cosineTopK(cand
+        .join(corpus.select(col("vec_id"), col("embedding"), col("norm")),
+          Seq("vec_id"))
+        .join(broadcast(queries), Seq("query_id")), 5)
       .select(col("query_id"), col("neighbor_id"))
     val hits = exact.join(lsh, Seq("query_id", "neighbor_id"), "left_semi")
       .groupBy("query_id").agg(count(lit(1)).as("n_hit"),
@@ -2491,16 +2361,10 @@ object Similarity {
     val corpus = t(s, d, "embeddings")
       .select(col("vec_id"), col("embedding"))
       .withColumn("norm", l2norm(col("embedding")))
-    val queriesDf = corpus.filter(col("vec_id") < 50)
-      .select(col("vec_id").as("query_id"),
-        col("embedding").as("q_emb"), col("norm").as("q_norm"))
-    corpus.crossJoin(broadcast(queriesDf))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine_raw",
-        dot(col("embedding"), col("q_emb")) / (col("norm") * col("q_norm")))
-      .filter(col("cosine_raw") >= 0.3)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(col("cosine_raw"), 4).as("cosine"))
+    cosineScored(corpus.crossJoin(broadcast(querySide(corpus, 50))))
+      .filter(col("cos_raw") >= 0.3)
+      .select(col("query_id"), col("neighbor_id"),
+        round(col("cos_raw"), 4).as("cosine"))
       .orderBy("query_id", "neighbor_id")
   }
 
@@ -2533,24 +2397,12 @@ object Similarity {
 
   /** ss01: exact cosine top-5 neighbors for the first 10 vectors. */
   def topkBrute(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val corpus = t(s, d, "embeddings")
       .select(col("vec_id"), col("embedding"))
       .withColumn("norm", l2norm(col("embedding")))
-    val queriesDf = corpus.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"),
-        col("embedding").as("q_emb"), col("norm").as("q_norm"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine_raw").desc, col("neighbor_id"))
-    corpus.crossJoin(broadcast(queriesDf))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine_raw",
-        dot(col("embedding"), col("q_emb")) / (col("norm") * col("q_norm")))
-      .withColumn("neighbor_id", col("vec_id"))
-      .withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cosine_raw"), 4).as("cosine"))
+    cosineTopK(corpus.crossJoin(broadcast(querySide(corpus, 10))), 5)
+      .select(col("query_id"), col("rn").cast("bigint").as("rank"),
+        col("neighbor_id"), round(col("cos_raw"), 4).as("cosine"))
       .orderBy("query_id", "rank")
   }
 
@@ -2562,7 +2414,6 @@ object Similarity {
     * 100× scale-up (4-bit bands degenerate to near-brute-force).
     */
   def topkLsh(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val sigged = t(s, d, "embeddings")
       .select(col("vec_id"), col("embedding"))
       .withColumn("norm", l2norm(col("embedding")))
@@ -2582,22 +2433,12 @@ object Similarity {
         .select(col("band"), col("bval"), col("vec_id").as("query_id")),
         Seq("band", "bval"))
       .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"))
+      .select("query_id", "vec_id")
       .distinct()
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine_raw").desc, col("neighbor_id"))
-    candPairs
-      .join(vecs.select(col("vec_id").as("neighbor_id"), col("embedding"),
-        col("norm")), Seq("neighbor_id"))
-      .join(broadcast(vecs.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-          col("norm").as("q_norm"))), Seq("query_id"))
-      .withColumn("cosine_raw",
-        dot(col("embedding"), col("q_emb")) / (col("norm") * col("q_norm")))
-      .withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cosine_raw"), 4).as("cosine"))
+    cosineTopK(candPairs.join(vecs, Seq("vec_id"))
+        .join(broadcast(querySide(vecs, 10)), Seq("query_id")), 5)
+      .select(col("query_id"), col("rn").cast("bigint").as("rank"),
+        col("neighbor_id"), round(col("cos_raw"), 4).as("cosine"))
       .orderBy("query_id", "rank")
   }
 
@@ -2656,43 +2497,27 @@ object Similarity {
       .localCheckpoint() // consumed by both strategies × both filters
     val probes = rankedA.filter(col("crn") <= 2 && col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("cid").as("cluster"))
-    val qv = all.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("norm").as("q_norm"))
+    val qv = querySide(all, 10)
     val queries = qv.select("query_id")
-    def cos = dot(col("embedding"), col("q_emb")) /
-      (col("norm") * col("q_norm"))
-    val wq = Window.partitionBy("query_id")
-      .orderBy(col("cos_raw").desc, col("vec_id"))
     // plain IVF top-10 (shared by both filters' post strategy)
-    val top10 = assigned.join(probes, Seq("cluster"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .join(broadcast(qv), Seq("query_id"))
-      .withColumn("cos_raw", cos)
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= 10)
+    val top10 = cosineTopK(assigned.join(probes, Seq("cluster"))
+        .join(broadcast(qv), Seq("query_id")), 10)
       .select("query_id", "vec_id", "source", "rn")
       .localCheckpoint() // consumed per filter
     def strategyReport(label: String, pred: Column): DataFrame = {
       val matching = assigned.filter(pred)
       val nMatch = matching.agg(count(lit(1)).as("n_match"))
       // exact filtered truth: brute over the matching universe
-      val exact3 = matching.crossJoin(broadcast(qv))
-        .filter(col("vec_id") =!= col("query_id"))
-        .withColumn("cos_raw", cos)
-        .withColumn("rn", row_number().over(wq))
-        .filter(col("rn") <= 3)
+      val exact3 = cosineTopK(matching.crossJoin(broadcast(qv)), 3)
         .select("query_id", "vec_id")
         .localCheckpoint() // joined by both strategies' hit counts
       // PRE: candidates restricted to matching docs before ranking
       val pre = matching.join(probes, Seq("cluster"))
         .filter(col("vec_id") =!= col("query_id"))
         .join(broadcast(qv), Seq("query_id"))
-        .withColumn("cos_raw", cos)
-        .withColumn("rn", row_number().over(wq))
       val preCand = pre.groupBy("query_id")
         .agg(count(lit(1)).as("n_pre_cand"))
-      val preHits = pre.filter(col("rn") <= 3)
+      val preHits = cosineTopK(pre, 3)
         .select("query_id", "vec_id")
         .join(exact3, Seq("query_id", "vec_id"), "left_semi")
         .groupBy("query_id").agg(count(lit(1)).as("pre_hits"))
@@ -2725,7 +2550,6 @@ object Similarity {
   }
 
   def topkIvf(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import graft.functions.NearestCentroids
     import org.apache.spark.sql.graftshim.GraftShim
     val corpus = t(s, d, "embeddings").select("vec_id", "embedding")
@@ -2738,21 +2562,11 @@ object Similarity {
     val assigned = corpus
       .withColumn("norm", l2norm(col("embedding")))
       .withColumn("cluster", nearest(col("embedding"), 1)(0))
-    val probed = assigned.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"),
-        col("embedding").as("q_emb"), col("norm").as("q_norm"),
-        explode(nearest(col("embedding"), 2)).as("cluster"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine_raw").desc, col("neighbor_id"))
-    assigned.join(probed, Seq("cluster"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("neighbor_id", col("vec_id"))
-      .withColumn("cosine_raw",
-        dot(col("embedding"), col("q_emb")) / (col("norm") * col("q_norm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cosine_raw"), 4).as("cosine"))
+    val probed = querySide(assigned, 10,
+      explode(nearest(col("embedding"), 2)).as("cluster"))
+    cosineTopK(assigned.join(probed, Seq("cluster")), 5)
+      .select(col("query_id"), col("rn").as("rank"), col("neighbor_id"),
+        round(col("cos_raw"), 4).as("cosine"))
       .orderBy("query_id", "rank")
   }
 

@@ -102,13 +102,11 @@ class KsqlServer(spark: SparkSession, port: Int = 8090) {
         }.toMap
       params.get("query").filter(_.nonEmpty) match {
         case None => respond(ex, 400, "query parameter is required")
+        // a failure goes to the handler's one 500: "error: " + the
+        // exception itself (ksql.js's 'error: ' + ex), class included
         case Some(q) =>
-          try {
-            val json = Ksql.answer(spark, q)(Render.toJson)
-            respond(ex, 200, json, "application/json")
-          } catch {
-            case e: Exception => respond(ex, 500, "error: " + e.getMessage)
-          }
+          respond(ex, 200, Ksql.answer(spark, q)(Render.toJson),
+            "application/json")
       }
     }
 

@@ -1,9 +1,32 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
+import scala.collection.mutable.ArrayBuffer
+import graft.functions.KmvSketch.md5Hex
+import EventTime.{hourLabel, tsu}
+
+/** The event-time clock of the stream faces. An object of its own, so a
+  * fold step that calls it captures nothing: [[EventsStreaming]] is not
+  * serializable. */
+private[streaming] object EventTime {
+  /** Exact event-time micros of a Timestamp. Timestamp carries sub-ms in
+    * nanos; getTime alone would floor to ms and drift vs the batch faces,
+    * which order by the full timestamp (`unix_micros(ts)`). */
+  def tsu(ts: Timestamp): Long =
+    math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
+
+  private val HourFmt =
+    java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm")
+
+  /** The `window_start` label of hour window `w` (= micros div 3.6e9),
+    * as the batch faces' `date_format(timestamp_seconds(w * 3600))`. */
+  def hourLabel(w: Long): String =
+    java.time.LocalDateTime.ofEpochSecond(w * 3600L, 0,
+      java.time.ZoneOffset.UTC).format(HourFmt)
+}
 
 /** Structured Streaming operators over the `events` stream shape
   * (builder mandate; the reference is strictly batch-snapshot — SURVEY
@@ -34,6 +57,35 @@ object EventsStreaming {
   case class SessionOut(user_id: Long, session_start: Timestamp,
       session_end: Timestamp, n_events: Long)
   case class SessionState(start: Long, last: Long, n: Long)
+
+  /** The per-key event-time fold every NoTimeout stream face runs:
+    * group by `key`, sort each micro-batch's rows of a key by `order`,
+    * fold them through `step` from the key's stored state (`init` when
+    * the key has none yet) while `step` emits output rows, then store
+    * the final state.
+    *
+    * The sort makes the fold deterministic under in-batch disorder, so
+    * feeding batches in the order key's order reproduces the batch face
+    * exactly, including state carried across micro-batch boundaries.
+    * Each face keeps its own order key (ms vs µs, doc_id vs event_id,
+    * arrival vs event time): two keys that tie differently can fold the
+    * same rows in a different order and change the answer.
+    *
+    * `init` is by-name: the array-celled states (cms, hist) are mutated
+    * in place, so each key must start from a fresh one.
+    */
+  private def foldByKey[R, K: Encoder, T: Ordering, S: Encoder, O: Encoder](
+      rows: Dataset[R])(key: R => K, order: R => T, init: => S)(
+      step: (K, S, R, ArrayBuffer[O]) => S): Dataset[O] =
+    rows.groupByKey(key)
+      .flatMapGroupsWithState[S, O](
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (k: K, it: Iterator[R], state: GroupState[S]) =>
+          val out = ArrayBuffer[O]()
+          state.update(it.toSeq.sortBy(order)
+            .foldLeft(state.getOption.getOrElse(init))(step(k, _, _, out)))
+          out.iterator
+      }
 
   /** Sessionization: per-user sessions closed after a 30-minute event-time
     * gap, via flatMapGroupsWithState (event-time timeout). State per key is
@@ -752,20 +804,13 @@ object EventsStreaming {
     */
   def tokenBudgetStream(docs: DataFrame, budget: Long): Dataset[BudgetOut] = {
     import docs.sparkSession.implicits._
-    docs.withWatermark("ts", "10 minutes")
-      .as[BudgetDoc]
-      .groupByKey(_.source)
-      .flatMapGroupsWithState[Long, BudgetOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (src: String, rows: Iterator[BudgetDoc], state: GroupState[Long]) =>
-          var cum = state.getOption.getOrElse(0L)
-          val out = rows.toSeq.sortBy(r => (r.ts.getTime, r.doc_id)).map { r =>
-            cum += r.n_tokens
-            BudgetOut(r.doc_id, src, r.n_tokens, cum <= budget)
-          }
-          state.update(cum)
-          out.iterator
-      }
+    foldByKey(docs.withWatermark("ts", "10 minutes").as[BudgetDoc])(
+        _.source, r => (r.ts.getTime, r.doc_id), 0L) {
+        (src, cum0, r, out: ArrayBuffer[BudgetOut]) =>
+      val cum = cum0 + r.n_tokens
+      out += BudgetOut(r.doc_id, src, r.n_tokens, cum <= budget)
+      cum
+    }
   }
 
   /** Deterministic batch face of the same gate: per-source running token
@@ -910,20 +955,14 @@ object EventsStreaming {
     */
   def erasureFlagStream(events: Dataset[EraEv]): Dataset[EraFlag] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[Long, EraFlag](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[EraEv], state: GroupState[Long]) =>
-          var erasedAt = state.getOption.getOrElse(Long.MaxValue)
-          val out = rows.toSeq.sortBy(e => (e.tsu, e.event_id)).map { e =>
-            val req = e.event_id % 97 == 0
-            val sup = e.tsu > erasedAt
-            if (req) erasedAt = math.min(erasedAt, e.tsu)
-            EraFlag(e.event_id, uid, e.tsu, req, sup)
-          }
-          if (erasedAt != Long.MaxValue) state.update(erasedAt)
-          out.iterator
-      }
+    // a user with no request yet stores Long.MaxValue, which reads back
+    // exactly as an absent state: nothing is later than it
+    foldByKey(events)(_.user_id, e => (e.tsu, e.event_id), Long.MaxValue) {
+      (uid, erasedAt, e, out: ArrayBuffer[EraFlag]) =>
+        val req = e.event_id % 97 == 0
+        out += EraFlag(e.event_id, uid, e.tsu, req, e.tsu > erasedAt)
+        if (req) math.min(erasedAt, e.tsu) else erasedAt
+    }
   }
 
   /** st25: STREAMING ERASURE LEDGER — the compliance monitor that ties
@@ -1022,25 +1061,14 @@ object EventsStreaming {
   def lateAuditStream(events: DataFrame,
       allowanceMs: Long): Dataset[LateOut] = {
     import events.sparkSession.implicits._
-    events.as[LateEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Long, LateOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, rows: Iterator[LateEvent], state: GroupState[Long]) =>
-          var hwm = state.getOption.getOrElse(Long.MinValue)
-          val out = rows.toSeq.sortBy(r => (r.arr, r.event_id)).map { r =>
-            // exact micros: Timestamp carries sub-ms in nanos, getTime
-            // alone would floor to ms and drift vs the batch face
-            val tsu = math.floorDiv(r.ts.getTime, 1000L) * 1000000L +
-              r.ts.getNanos / 1000L
-            val lateMs = math.max(0L,
-              (if (hwm == Long.MinValue) tsu else hwm) - tsu) / 1000L
-            hwm = math.max(hwm, tsu)
-            LateOut(r.event_id, r.user_id, lateMs > allowanceMs, lateMs)
-          }
-          state.update(hwm)
-          out.iterator
-      }
+    foldByKey(events.as[LateEvent])(_.user_id, r => (r.arr, r.event_id),
+        Long.MinValue) { (_, hwm, r, out: ArrayBuffer[LateOut]) =>
+      val t = tsu(r.ts)
+      val lateMs =
+        math.max(0L, (if (hwm == Long.MinValue) t else hwm) - t) / 1000L
+      out += LateOut(r.event_id, r.user_id, lateMs > allowanceMs, lateMs)
+      math.max(hwm, t)
+    }
   }
 
   /** st11: per-user lateness rollup under a 1 h allowance. */
@@ -1095,26 +1123,13 @@ object EventsStreaming {
     * SPAN a micro-batch boundary (the carried state's whole job). */
   def transitionsStream(events: DataFrame): Dataset[TransOut] = {
     import events.sparkSession.implicits._
-    events.as[TransEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[TransState, TransOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, rows: Iterator[TransEvent], state: GroupState[TransState]) =>
-          var prev = state.getOption
-          val out = scala.collection.mutable.ArrayBuffer[TransOut]()
-          rows.toSeq.sortBy { r =>
-            val tsu = math.floorDiv(r.ts.getTime, 1000L) * 1000000L +
-              r.ts.getNanos / 1000L
-            (tsu, r.event_id)
-          }.foreach { r =>
-            val tsu = math.floorDiv(r.ts.getTime, 1000L) * 1000000L +
-              r.ts.getNanos / 1000L
-            prev.foreach(p => out += TransOut(r.user_id, p.etype, r.event_type))
-            prev = Some(TransState(tsu, r.event_id, r.event_type))
-          }
-          prev.foreach(state.update)
-          out.iterator
-      }
+    // the initial state's null etype stands for "no event seen yet"
+    foldByKey(events.as[TransEvent])(_.user_id, r => (tsu(r.ts), r.event_id),
+        TransState(0L, 0L, null)) { (_, prev, r, out: ArrayBuffer[TransOut]) =>
+      if (prev.etype != null)
+        out += TransOut(r.user_id, prev.etype, r.event_type)
+      TransState(tsu(r.ts), r.event_id, r.event_type)
+    }
   }
 
   case class FunnelState(tv: Long, tc: Long, tp: Long)
@@ -1142,54 +1157,39 @@ object EventsStreaming {
     */
   def attributionStream(events: DataFrame): Dataset[AttrOut] = {
     import events.sparkSession.implicits._
-    events.filter(col("event_type")
-        .isin("view", "click", "purchase"))
-      .as[Event]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[AttrState, AttrOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Event], state: GroupState[AttrState]) =>
-          def tsu(r: Event): Long =
-            math.floorDiv(r.ts.getTime, 1000L) * 1000000L +
-              r.ts.getNanos / 1000L
-          var st = state.getOption.getOrElse(AttrState(0L, 0L, 0L, "", ""))
-          val out = scala.collection.mutable.ArrayBuffer[AttrOut]()
-          rows.toSeq.sortBy(r => (tsu(r), r.event_id)).foreach { r =>
-            if (r.event_type == "purchase") {
-              val cents = math.floor(r.value * 100 + 0.5).toLong
-              if (st.nTouch == 0L) {
-                out += AttrOut(uid, st.journey, "first_touch", "direct",
-                  cents)
-                out += AttrOut(uid, st.journey, "last_touch", "direct",
-                  cents)
-                out += AttrOut(uid, st.journey, "linear", "direct", cents)
-              } else {
-                out += AttrOut(uid, st.journey, "first_touch",
-                  st.firstType, cents)
-                out += AttrOut(uid, st.journey, "last_touch",
-                  st.lastType, cents)
-                val nClick = st.nTouch - st.nView
-                val lv = cents * st.nView / st.nTouch
-                val lc = cents * nClick / st.nTouch
-                val rem = cents - lv - lc
-                if (st.nView > 0L)
-                  out += AttrOut(uid, st.journey, "linear", "view",
-                    lv + (if (st.lastType == "view") rem else 0L))
-                if (nClick > 0L)
-                  out += AttrOut(uid, st.journey, "linear", "click",
-                    lc + (if (st.lastType == "click") rem else 0L))
-              }
-              st = AttrState(st.journey + 1L, 0L, 0L, "", "")
-            } else {
-              st = AttrState(st.journey, st.nTouch + 1L,
-                st.nView + (if (r.event_type == "view") 1L else 0L),
-                if (st.nTouch == 0L) r.event_type else st.firstType,
-                r.event_type)
-            }
-          }
-          state.update(st)
-          out.iterator
+    foldByKey(events.filter(col("event_type")
+        .isin("view", "click", "purchase")).as[Event])(
+        _.user_id, r => (tsu(r.ts), r.event_id),
+        AttrState(0L, 0L, 0L, "", "")) {
+        (uid, st, r, out: ArrayBuffer[AttrOut]) =>
+      if (r.event_type == "purchase") {
+        val cents = math.floor(r.value * 100 + 0.5).toLong
+        if (st.nTouch == 0L) {
+          out += AttrOut(uid, st.journey, "first_touch", "direct", cents)
+          out += AttrOut(uid, st.journey, "last_touch", "direct", cents)
+          out += AttrOut(uid, st.journey, "linear", "direct", cents)
+        } else {
+          out += AttrOut(uid, st.journey, "first_touch", st.firstType, cents)
+          out += AttrOut(uid, st.journey, "last_touch", st.lastType, cents)
+          val nClick = st.nTouch - st.nView
+          val lv = cents * st.nView / st.nTouch
+          val lc = cents * nClick / st.nTouch
+          val rem = cents - lv - lc
+          if (st.nView > 0L)
+            out += AttrOut(uid, st.journey, "linear", "view",
+              lv + (if (st.lastType == "view") rem else 0L))
+          if (nClick > 0L)
+            out += AttrOut(uid, st.journey, "linear", "click",
+              lc + (if (st.lastType == "click") rem else 0L))
+        }
+        AttrState(st.journey + 1L, 0L, 0L, "", "")
+      } else {
+        AttrState(st.journey, st.nTouch + 1L,
+          st.nView + (if (r.event_type == "view") 1L else 0L),
+          if (st.nTouch == 0L) r.event_type else st.firstType,
+          r.event_type)
       }
+    }
   }
 
   /** st18 driver face: q87's journey-level attribution rows (the
@@ -1219,31 +1219,18 @@ object EventsStreaming {
     */
   def anomalyStream(events: DataFrame): Dataset[AnomOut] = {
     import events.sparkSession.implicits._
-    events.as[Event]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[AnomState, AnomOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Event], state: GroupState[AnomState]) =>
-          var st = state.getOption.getOrElse(AnomState(0L, 0L, 0L))
-          val out = scala.collection.mutable.ArrayBuffer[AnomOut]()
-          // exact micros, not getTime (ms): the batch face orders by the
-          // full timestamp and events carry sub-ms components — a same-ms
-          // pair whose event_id order inverts micros order would score in
-          // a different order than st15's window (the st09/st13 rule)
-          def tsu(r: Event): Long =
-            math.floorDiv(r.ts.getTime, 1000L) * 1000000L +
-              r.ts.getNanos / 1000L
-          rows.toSeq.sortBy(r => (tsu(r), r.event_id)).foreach { r =>
-            val x = math.floor(r.value * 100 + 0.5).toLong
-            val dev = st.n * x - st.sx
-            if (st.n >= 8L &&
-                dev * dev > 9L * (st.n * st.sx2 - st.sx * st.sx))
-              out += AnomOut(uid, r.event_id)
-            st = AnomState(st.n + 1L, st.sx + x, st.sx2 + x * x)
-          }
-          state.update(st)
-          out.iterator
-      }
+    // exact micros, not getTime (ms): the batch face orders by the
+    // full timestamp and events carry sub-ms components — a same-ms
+    // pair whose event_id order inverts micros order would score in
+    // a different order than st15's window (the st09/st13 rule)
+    foldByKey(events.as[Event])(_.user_id, r => (tsu(r.ts), r.event_id),
+        AnomState(0L, 0L, 0L)) { (uid, st, r, out: ArrayBuffer[AnomOut]) =>
+      val x = math.floor(r.value * 100 + 0.5).toLong
+      val dev = st.n * x - st.sx
+      if (st.n >= 8L && dev * dev > 9L * (st.n * st.sx2 - st.sx * st.sx))
+        out += AnomOut(uid, r.event_id)
+      AnomState(st.n + 1L, st.sx + x, st.sx2 + x * x)
+    }
   }
 
   /** st15 driver face: prior-only expanding-window replay per user. */
@@ -1294,34 +1281,20 @@ object EventsStreaming {
     */
   def decayStream(events: DataFrame): Dataset[DecayOut] = {
     import events.sparkSession.implicits._
-    def tsu(r: Event): Long =
-      math.floorDiv(r.ts.getTime, 1000L) * 1000000L + r.ts.getNanos / 1000L
-    def fmt(w: Long): String =
-      java.time.LocalDateTime.ofEpochSecond(w * 3600L, 0,
-        java.time.ZoneOffset.UTC).format(
-        java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm"))
-    events.as[Event]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[DecayState, DecayOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Event], state: GroupState[DecayState]) =>
-          var st = state.getOption.getOrElse(DecayState(0L, -1L, -1L, 0L))
-          val out = scala.collection.mutable.ArrayBuffer[DecayOut]()
-          rows.toSeq.sortBy(r => (tsu(r), r.event_id)).foreach { r =>
-            val w = tsu(r) / 3600000000L
-            if (st.curW < 0L) st = st.copy(curW = w, curC = 1L)
-            else if (w == st.curW) st = st.copy(curC = st.curC + 1L)
-            else {
-              val s = if (st.lastW < 0L) st.curC
-                else (st.lastS >> math.min(63L, st.curW - st.lastW).toInt) +
-                  st.curC
-              out += DecayOut(uid, fmt(st.curW), st.curC, s)
-              st = DecayState(s, st.curW, w, 1L)
-            }
-          }
-          state.update(st)
-          out.iterator
+    foldByKey(events.as[Event])(_.user_id, r => (tsu(r.ts), r.event_id),
+        DecayState(0L, -1L, -1L, 0L)) {
+        (uid, st, r, out: ArrayBuffer[DecayOut]) =>
+      val w = tsu(r.ts) / 3600000000L
+      if (st.curW < 0L) st.copy(curW = w, curC = 1L)
+      else if (w == st.curW) st.copy(curC = st.curC + 1L)
+      else {
+        val s = if (st.lastW < 0L) st.curC
+          else (st.lastS >> math.min(63L, st.curW - st.lastW).toInt) +
+            st.curC
+        out += DecayOut(uid, hourLabel(st.curW), st.curC, s)
+        DecayState(s, st.curW, w, 1L)
       }
+    }
   }
 
   /** st20 driver face: per-user sequential fold over window cells. */
@@ -1382,39 +1355,19 @@ object EventsStreaming {
     */
   def ledgerStream(events: DataFrame): Dataset[LedgerOut] = {
     import events.sparkSession.implicits._
-    def tsu(r: Event): Long =
-      math.floorDiv(r.ts.getTime, 1000L) * 1000000L + r.ts.getNanos / 1000L
-    def md5hex(s: String): String =
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
-    def fmt(w: Long): String =
-      java.time.LocalDateTime.ofEpochSecond(w * 3600L, 0,
-        java.time.ZoneOffset.UTC).format(
-        java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm"))
-    events.as[Event]
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[LedgerState, LedgerOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (etype: String, rows: Iterator[Event],
-            state: GroupState[LedgerState]) =>
-          var st = state.getOption.getOrElse(
-            LedgerState("GENESIS", -1L, Nil))
-          val out = scala.collection.mutable.ArrayBuffer[LedgerOut]()
-          rows.toSeq.sortBy(r => (tsu(r), r.event_id)).foreach { r =>
-            val w = tsu(r) / 3600000000L
-            if (st.curW >= 0L && w != st.curW) {
-              val dg = md5hex(st.buf.sorted.mkString(","))
-              val chain = md5hex(st.chain + "|" + dg)
-              out += LedgerOut(etype, fmt(st.curW), st.buf.length.toLong,
-                dg, chain)
-              st = LedgerState(chain, w, List(r.event_id))
-            } else if (st.curW < 0L) st = st.copy(curW = w,
-              buf = List(r.event_id))
-            else st = st.copy(buf = r.event_id :: st.buf)
-          }
-          state.update(st)
-          out.iterator
-      }
+    foldByKey(events.as[Event])(_.event_type, r => (tsu(r.ts), r.event_id),
+        LedgerState("GENESIS", -1L, Nil)) {
+        (etype, st, r, out: ArrayBuffer[LedgerOut]) =>
+      val w = tsu(r.ts) / 3600000000L
+      if (st.curW >= 0L && w != st.curW) {
+        val dg = md5Hex(st.buf.sorted.mkString(","))
+        val chain = md5Hex(st.chain + "|" + dg)
+        out += LedgerOut(etype, hourLabel(st.curW), st.buf.length.toLong,
+          dg, chain)
+        LedgerState(chain, w, List(r.event_id))
+      } else if (st.curW < 0L) st.copy(curW = w, buf = List(r.event_id))
+      else st.copy(buf = r.event_id :: st.buf)
+    }
   }
 
   /** st21 driver face: window digests + per-window prefix chain fold.
@@ -1502,47 +1455,31 @@ object EventsStreaming {
     */
   def cmsStream(events: DataFrame, width: Int): Dataset[CmsOut] = {
     import events.sparkSession.implicits._
-    def tsu(r: Event): Long =
-      math.floorDiv(r.ts.getTime, 1000L) * 1000000L + r.ts.getNanos / 1000L
-    def fmt(w: Long): String =
-      java.time.LocalDateTime.ofEpochSecond(w * 3600L, 0,
-        java.time.ZoneOffset.UTC).format(
-        java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm"))
-    def md5hex(s: String): String =
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
     def cell(seed: Int, user: Long): Int =
       (java.lang.Long.parseLong(
-        md5hex(s"$seed#$user").substring(0, 8), 16) % width.toLong).toInt
+        md5Hex(s"$seed#$user").substring(0, 8), 16) % width.toLong).toInt
     def close(etype: String, st: CmsState): Seq[CmsOut] =
       (0L until 10L).map { p =>
         val probe = p * 50L
         val est = (0 until 4).map(sd =>
           st.cells(sd * width + cell(sd, probe))).min
-        CmsOut(etype, fmt(st.curW), probe, est)
+        CmsOut(etype, hourLabel(st.curW), probe, est)
       }
-    events.as[Event]
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[CmsState, CmsOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (etype: String, rows: Iterator[Event],
-            state: GroupState[CmsState]) =>
-          var st = state.getOption.getOrElse(
-            CmsState(-1L, Array.fill(4 * width)(0L)))
-          val out = scala.collection.mutable.ArrayBuffer[CmsOut]()
-          rows.toSeq.sortBy(r => (tsu(r), r.event_id)).foreach { r =>
-            val w = tsu(r) / 3600000000L
-            if (st.curW >= 0L && w != st.curW) {
-              out ++= close(etype, st)
-              st = CmsState(w, Array.fill(4 * width)(0L))
-            } else if (st.curW < 0L) st = CmsState(w, st.cells)
-            (0 until 4).foreach { sd =>
-              st.cells(sd * width + cell(sd, r.user_id)) += 1L
-            }
-          }
-          state.update(st)
-          out.iterator
+    foldByKey(events.as[Event])(_.event_type, r => (tsu(r.ts), r.event_id),
+        CmsState(-1L, Array.fill(4 * width)(0L))) {
+        (etype, st0, r, out: ArrayBuffer[CmsOut]) =>
+      val w = tsu(r.ts) / 3600000000L
+      val st =
+        if (st0.curW >= 0L && w != st0.curW) {
+          out ++= close(etype, st0)
+          CmsState(w, Array.fill(4 * width)(0L))
+        } else if (st0.curW < 0L) CmsState(w, st0.cells)
+        else st0
+      (0 until 4).foreach { sd =>
+        st.cells(sd * width + cell(sd, r.user_id)) += 1L
       }
+      st
+    }
   }
 
   /** The st22 width rule, shared by the driver face, the stream spec
@@ -1585,12 +1522,6 @@ object EventsStreaming {
       : Dataset[HistOut] = {
     import events.sparkSession.implicits._
     val span = vmax - vmin
-    def tsu(r: Event): Long =
-      math.floorDiv(r.ts.getTime, 1000L) * 1000000L + r.ts.getNanos / 1000L
-    def fmt(w: Long): String =
-      java.time.LocalDateTime.ofEpochSecond(w * 3600L, 0,
-        java.time.ZoneOffset.UTC).format(
-        java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm"))
     def bucket(v: Double): Int =
       math.min(127L, math.max(0L,
         math.floor((v - vmin) * 128.0 / span).toLong)).toInt
@@ -1606,29 +1537,22 @@ object EventsStreaming {
         }
         127L
       }
-      HistOut(etype, fmt(st.curW), n,
+      HistOut(etype, hourLabel(st.curW), n,
         pick(kq(n, 1, 2)), pick(kq(n, 9, 10)), pick(kq(n, 99, 100)))
     }
-    events.as[Event]
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[HistState, HistOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (etype: String, rows: Iterator[Event],
-            state: GroupState[HistState]) =>
-          var st = state.getOption.getOrElse(
-            HistState(-1L, Array.fill(128)(0L)))
-          val out = scala.collection.mutable.ArrayBuffer[HistOut]()
-          rows.toSeq.sortBy(r => (tsu(r), r.event_id)).foreach { r =>
-            val w = tsu(r) / 3600000000L
-            if (st.curW >= 0L && w != st.curW) {
-              out += close(etype, st)
-              st = HistState(w, Array.fill(128)(0L))
-            } else if (st.curW < 0L) st = HistState(w, st.cells)
-            st.cells(bucket(r.value)) += 1L
-          }
-          state.update(st)
-          out.iterator
-      }
+    foldByKey(events.as[Event])(_.event_type, r => (tsu(r.ts), r.event_id),
+        HistState(-1L, Array.fill(128)(0L))) {
+        (etype, st0, r, out: ArrayBuffer[HistOut]) =>
+      val w = tsu(r.ts) / 3600000000L
+      val st =
+        if (st0.curW >= 0L && w != st0.curW) {
+          out += close(etype, st0)
+          HistState(w, Array.fill(128)(0L))
+        } else if (st0.curW < 0L) HistState(w, st0.cells)
+        else st0
+      st.cells(bucket(r.value)) += 1L
+      st
+    }
   }
 
   /** st23 driver face: histogram rebuilt relationally, quantile picks
@@ -1739,41 +1663,33 @@ object EventsStreaming {
     */
   def seasonalStream(events: DataFrame): Dataset[SeasonalOut] = {
     import events.sparkSession.implicits._
-    def tsu(r: Event): Long =
-      math.floorDiv(r.ts.getTime, 1000L) * 1000000L + r.ts.getNanos / 1000L
-    events.as[Event]
-      .groupByKey(r => (r.event_type, (tsu(r) % 86400000000L) / 3600000000L))
-      .flatMapGroupsWithState[SeasonalState, SeasonalOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: (String, Long), rows: Iterator[Event],
-            state: GroupState[SeasonalState]) =>
-          var st = state.getOption
-            .getOrElse(SeasonalState(0L, 0L, -1L, 0L, alerted = false))
-          val out = scala.collection.mutable.ArrayBuffer[SeasonalOut]()
-          rows.toSeq.sortBy(r => (tsu(r), r.event_id)).foreach { r =>
-            val day = math.floorDiv(tsu(r), 86400000000L)
-            if (day != st.curDay) {
-              // fold the completed day into the baseline (active days
-              // only — matching the batch face's per-key day window)
-              if (st.curDay >= 0L)
-                st = SeasonalState(st.np + 1L, st.sp + st.curCnt,
-                  day, 0L, alerted = false)
-              else st = st.copy(curDay = day, curCnt = 0L, alerted = false)
-            }
-            st = st.copy(curCnt = st.curCnt + 1L)
-            if (!st.alerted && st.np >= 7L) {
-              val cstar = math.max(3L, 2L * st.sp / st.np + 1L)
-              if (st.curCnt == cstar) {
-                out += SeasonalOut(key._1,
-                  java.time.LocalDate.ofEpochDay(day).toString,
-                  key._2, r.event_id)
-                st = st.copy(alerted = true)
-              }
-            }
-          }
-          state.update(st)
-          out.iterator
+    foldByKey(events.as[Event])(
+        r => (r.event_type, (tsu(r.ts) % 86400000000L) / 3600000000L),
+        r => (tsu(r.ts), r.event_id),
+        SeasonalState(0L, 0L, -1L, 0L, alerted = false)) {
+        (key, st0, r, out: ArrayBuffer[SeasonalOut]) =>
+      var st = st0
+      val day = math.floorDiv(tsu(r.ts), 86400000000L)
+      if (day != st.curDay) {
+        // fold the completed day into the baseline (active days
+        // only — matching the batch face's per-key day window)
+        if (st.curDay >= 0L)
+          st = SeasonalState(st.np + 1L, st.sp + st.curCnt,
+            day, 0L, alerted = false)
+        else st = st.copy(curDay = day, curCnt = 0L, alerted = false)
       }
+      st = st.copy(curCnt = st.curCnt + 1L)
+      if (!st.alerted && st.np >= 7L) {
+        val cstar = math.max(3L, 2L * st.sp / st.np + 1L)
+        if (st.curCnt == cstar) {
+          out += SeasonalOut(key._1,
+            java.time.LocalDate.ofEpochDay(day).toString,
+            key._2, r.event_id)
+          st = st.copy(alerted = true)
+        }
+      }
+      st
+    }
   }
 
   /** st19 driver face: causal day window + crossing-rank event join. */
@@ -1830,49 +1746,37 @@ object EventsStreaming {
     */
   def funnelStream(events: DataFrame): Dataset[FunnelOut] = {
     import events.sparkSession.implicits._
-    events.as[TransEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelState, FunnelOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[TransEvent],
-            state: GroupState[FunnelState]) =>
-          def tsu(r: TransEvent): Long =
-            math.floorDiv(r.ts.getTime, 1000L) * 1000000L +
-              r.ts.getNanos / 1000L
-          var st = state.getOption.getOrElse(FunnelState(-1L, -1L, -1L))
-          val out = scala.collection.mutable.ArrayBuffer[FunnelOut]()
-          // STAGED passes (view, then click, then purchase), not one
-          // greedy sweep: the batch face's conditional-min admits a
-          // click whose ts EQUALS t_view even when its event_id sorts
-          // it before the view — a single in-order pass would skip it
-          // (tv still unset) and silently report a lower stage on
-          // tied-timestamp corpora. Each pass is the conditional min
-          // over the batch given the stage set by the previous pass,
-          // which is exactly q71's chained-min semantics.
-          val sorted = rows.toSeq.sortBy(r => (tsu(r), r.event_id))
-          sorted.foreach { r =>
-            val t = tsu(r)
-            if (r.event_type == "view" && st.tv < 0L) {
-              st = st.copy(tv = t); out += FunnelOut(uid, "view", t)
-            }
-          }
-          sorted.foreach { r =>
-            val t = tsu(r)
-            if (r.event_type == "click" && st.tv >= 0L && st.tc < 0L &&
-                t >= st.tv && t <= st.tv + DayUs) {
-              st = st.copy(tc = t); out += FunnelOut(uid, "click", t)
-            }
-          }
-          sorted.foreach { r =>
-            val t = tsu(r)
-            if (r.event_type == "purchase" && st.tc >= 0L && st.tp < 0L &&
-                t >= st.tc && t <= st.tc + DayUs) {
-              st = st.copy(tp = t); out += FunnelOut(uid, "purchase", t)
-            }
-          }
-          state.update(st)
-          out.iterator
-      }
+    // STAGED passes (view, then click, then purchase), not one greedy
+    // sweep in (ts, event_id) order: the batch face's conditional-min
+    // admits a click whose ts EQUALS t_view even when its event_id sorts
+    // it before the view — a single in-order pass would skip it (tv
+    // still unset) and silently report a lower stage on tied-timestamp
+    // corpora. Each pass is the conditional min over the batch given the
+    // stage set by the previous pass, which is exactly q71's chained-min
+    // semantics. A pass acts only on its own event type, so the three
+    // passes are ONE fold over the batch sorted by (stage, ts, event_id);
+    // other types sort last and change nothing.
+    def stage(etype: String): Int = etype match {
+      case "view" => 0
+      case "click" => 1
+      case "purchase" => 2
+      case _ => 3
+    }
+    foldByKey(events.as[TransEvent])(_.user_id,
+        r => (stage(r.event_type), tsu(r.ts), r.event_id),
+        FunnelState(-1L, -1L, -1L)) {
+        (uid, st, r, out: ArrayBuffer[FunnelOut]) =>
+      val t = tsu(r.ts)
+      if (r.event_type == "view" && st.tv < 0L) {
+        out += FunnelOut(uid, "view", t); st.copy(tv = t)
+      } else if (r.event_type == "click" && st.tv >= 0L && st.tc < 0L &&
+          t >= st.tv && t <= st.tv + DayUs) {
+        out += FunnelOut(uid, "click", t); st.copy(tc = t)
+      } else if (r.event_type == "purchase" && st.tc >= 0L &&
+          st.tp < 0L && t >= st.tc && t <= st.tc + DayUs) {
+        out += FunnelOut(uid, "purchase", t); st.copy(tp = t)
+      } else st
+    }
   }
 
   /** st14 driver face: per-user funnel stage via q71's chained

@@ -51,6 +51,15 @@ class HttpServerSpec extends SparkSpec {
     assert(body.startsWith("error: "))
   }
 
+  test("bad SQL → 500 body names the exception, as the REPL prints it") {
+    // ksql.js:306-309 sends 'error: ' + ex, i.e. the exception itself
+    val (code, body) = get(s"http://localhost:$port/api?query=definitely+not+sql")
+    assert(code == 500 && body.contains("ParseException"), body)
+    val (code2, body2) = get(s"http://localhost:$port/api?query=" +
+      URLEncoder.encode("select * from no_such_table", "UTF-8"))
+    assert(code2 == 500 && body2.contains("AnalysisException"), body2)
+  }
+
   test("pipeline operators are SQL-addressable over HTTP: dedup") {
     // round-4 verdict item 9: the reference UX is "type SQL, get a
     // table" — a dedup operator must run as plain SQL text end to end

@@ -8,7 +8,6 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.{SparkEnv, TaskContext}
 import org.apache.spark.memory.GraftTaskMemory
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.util.{TaskCompletionListener, TaskFailureListener}
@@ -41,32 +40,14 @@ class LocalCollectSpec extends SparkSpec {
   private val groups = new AtomicInteger
 
   /** `body`'s result and the Spark jobs it started, counted on a job
-    * group of its own. A marker job closes the group: a listener gets
-    * events in order, so once the marker's start has arrived every job
-    * `body` started has been counted.
-    */
+    * group of its own. */
   private def jobsOf[T](body: => T): (T, Int) = {
     val sc = spark.sparkContext
     val group = s"local-collect-${groups.incrementAndGet()}"
-    val started = new ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group)
-          started.add(e.properties.getProperty("spark.job.description"))
-    }
-    sc.addSparkListener(listener)
-    try {
+    jobsWhere(_.getProperty("spark.jobGroup.id") == group) {
       sc.setJobGroup(group, "body")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(group, "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(60)
-      while (!started.contains("marker") && System.nanoTime() < deadline)
-        Thread.sleep(5)
-      assert(started.contains("marker"), "marker job never reached the listener")
-      (out, started.size - 1)
-    } finally sc.removeSparkListener(listener)
+      try body finally sc.clearJobGroup()
+    }
   }
 
   private def multiset(rows: Array[Row]): Map[String, Int] =

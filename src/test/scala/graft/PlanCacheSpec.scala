@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, Executors, TimeUnit}
-import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import graft.dialect.KsqlDialect
 import graft.plans.{LocalCollect, PlanCache}
 import graft.server.Ksql
@@ -45,29 +43,9 @@ class PlanCacheSpec extends SparkSpec {
     r.data.groupBy(identity).map { case (k, v) => k -> v.size }
 
   /** Jobs started by `answer` requests for `q` while `body` runs: a
-    * request's jobs carry its text as description. A marker job closes
-    * the count, as listener events arrive in order.
-    */
-  private def jobsFor[T](q: String)(body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val seen = new ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-          .foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      val marker = s"plan-cache-marker-${System.nanoTime()}"
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(60)
-      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(5)
-      assert(seen.contains(marker), "marker job never reached the listener")
-      (out, seen.asScala.count(_ == q))
-    } finally sc.removeSparkListener(listener)
-  }
+    * request's jobs carry its text as description. */
+  private def jobsFor[T](q: String)(body: => T): (T, Int) =
+    jobsWhere(_.getProperty("spark.job.description") == q)(body)
 
   /** Each query cold (a miss, prepared), then cached (a hit), equal as
     * multisets to each other and to `df.collect()`. */
